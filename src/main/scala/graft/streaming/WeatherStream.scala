@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.weather.Weather
@@ -17,44 +16,66 @@ import graft.weather.Weather
   * bounded micro-batches, exactly-once via the checkpoint, then stop —
   * i.e. each scheduler tick IS one run of this stream. Late files landing
   * in an old `data/{date}/` dir are picked up by the next tick and
-  * idempotently rewrite just that date's partition (dynamic partition
-  * overwrite), matching the reference's rerun-a-day semantics.
+  * rewrite just that date's partition from all of that date's documents,
+  * matching the reference's rerun-a-day semantics.
   *
-  * At scale: the file source lists incrementally (maxFilesPerTrigger
-  * bounds a micro-batch), flatten is a pure projection, and the sink
-  * writes `partitionBy(date)` so each batch touches only the date
-  * partitions it contains — no global state, no shuffle.
+  * What a tick lists: the file source walks the whole feed from its one
+  * root directory (`Weather.streamRaw`) on the driver, with no Spark job
+  * — Spark would otherwise list a level holding more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) date
+  * directories in a job with one task per directory, so a tick's job
+  * count would grow with the number of landed days. The walk still
+  * visits every landed file; the checkpoint's seen-file log then leaves
+  * only the new files to the micro-batches. Each micro-batch costs two
+  * jobs: one over its new files, collecting the dates they fall in, and
+  * one `partitionBy(date)` write of all those dates' documents — no
+  * global state, no shuffle.
   */
 object WeatherStream {
 
+  private val ListingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
   /** One scheduler tick: stream all currently-available raw weather docs
     * into the date-partitioned parquet layout at `outPath`. Blocks until
-    * the AvailableNow drain completes. */
+    * the AvailableNow drain completes. The feed listing runs on the
+    * driver for the length of the tick (the listing threshold is raised
+    * on `spark` and restored afterwards). */
   def runOnce(spark: SparkSession, dataDir: String, outPath: String,
               filesPerBatch: Int = 9): Unit = {
-    val raw = spark.readStream
-      .schema(Weather.weatherSchema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .json(s"$dataDir/*/*.txt")
-      .withColumn("date",
-        regexp_extract(input_file_name(), "/(\\d{4}-\\d{2}-\\d{2})/[^/]*$", 1))
-    val flat = Weather.flatten(raw)
-    val query = flat.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outPath/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        publishBatch(batch, outPath)
-      }
-      .start()
-    query.awaitTermination()
+    val conf = spark.conf
+    val prior = conf.getOption(ListingThreshold)
+    conf.set(ListingThreshold, Int.MaxValue.toLong)
+    try {
+      // the stream only tells which dates received files; publishBatch
+      // reads those dates' documents itself
+      val dates = Weather.streamRaw(spark, dataDir, filesPerBatch).select("date")
+      dates.writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", s"$outPath/_checkpoint")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          publishBatch(batch, dataDir, outPath)
+        }
+        .start()
+        .awaitTermination()
+    } finally prior.fold(conf.unset(ListingThreshold))(conf.set(ListingThreshold, _))
   }
 
-  /** Idempotent per-batch publish: overwrite exactly the date partitions
-    * present in this batch (dynamic partition overwrite), leaving every
-    * other date untouched — a replayed batch rewrites the same bytes. */
-  private[streaming] def publishBatch(batch: DataFrame, outPath: String): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch.write.mode("overwrite").partitionBy("date").parquet(outPath)
+  /** Idempotent per-batch publish: every date this batch touches is
+    * rewritten from ALL documents under its `dataDir/<date>/` directory
+    * (dynamic partition overwrite), leaving every other date untouched.
+    * So a day spread over several micro-batches, or a late file for an
+    * old date, never drops the rows earlier batches wrote, and a replayed
+    * batch rewrites the same bytes. */
+  private[streaming] def publishBatch(batch: DataFrame, dataDir: String,
+                                      outPath: String): Unit = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    // one job, no shuffle: dedup within each partition, then on the driver
+    val dates = batch.as[String].mapPartitions(_.distinct).collect().distinct
+    if (dates.nonEmpty) {
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      Weather.flatten(Weather.readRaw(spark, dataDir, dates.toSeq))
+        .write.mode("overwrite").partitionBy("date").parquet(outPath)
+    }
   }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   *
   * Unlike the reference (per-file json.loads + O(n²) pandas concat,
   * weather_etl.py:63-83), the scan is ONE declarative `read.json` over
-  * the date-partitioned directory tree: Spark lists and reads all files
-  * in parallel, the explicit schema skips inference, and the per-day
+  * the date-partitioned directory tree: Spark reads all files in
+  * parallel, the explicit schema skips inference, and the per-day
   * directory layout becomes a `date` column derived from the file path —
   * so at scale, date predicates prune whole directories instead of the
   * reference's table-per-day naming hack (weather_etl.py:105).
@@ -65,14 +65,35 @@ object Weather {
     StructField("location", locationSchema),
     StructField("current", currentSchema)))
 
+  /** The raw feed layout, defined once for the batch scan and the stream:
+    * one root directory, read recursively, keeping only `*.txt` files; the
+    * partition date comes from the file's parent directory name, not from
+    * file contents. Reading the single root, instead of a
+    * `<root>/<any>/<any>.txt` glob that expands to one root path per landed
+    * file, keeps the file listing one recursive walk from the root. */
+  private val feedOptions = Map("pathGlobFilter" -> "*.txt", "recursiveFileLookup" -> "true")
+
+  /** Rows of files whose parent directory is not a `yyyy-MM-dd` date get
+    * an empty date and are dropped: only `<root>/<date>/<city>.txt` docs
+    * are feed documents. */
+  private def withFeedDate(raw: DataFrame): DataFrame =
+    raw.withColumn("date",
+        regexp_extract(input_file_name(), "/(\\d{4}-\\d{2}-\\d{2})/[^/]*$", 1))
+      .filter(col("date") =!= "")
+
   /** S2: schema'd JSON scan over `dataDir/<date>/<city>.txt` (each file is
     * one single-line JSON doc, so the default JSON-lines reader applies).
-    * The partition date comes from the file path, not file contents. */
-  def readRaw(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.schema(weatherSchema)
-      .json(s"$dataDir/*/*.txt")
-      .withColumn("date",
-        regexp_extract(input_file_name(), "/(\\d{4}-\\d{2}-\\d{2})/[^/]*$", 1))
+    * `dates`, when given, restricts the scan to those date directories. */
+  def readRaw(spark: SparkSession, dataDir: String, dates: Seq[String] = Nil): DataFrame = {
+    val paths = if (dates.isEmpty) Seq(dataDir) else dates.map(d => s"$dataDir/$d")
+    withFeedDate(spark.read.schema(weatherSchema).options(feedOptions).json(paths: _*))
+  }
+
+  /** The streaming form of [[readRaw]] over the whole feed, at most
+    * `filesPerBatch` files per micro-batch. */
+  def streamRaw(spark: SparkSession, dataDir: String, filesPerBatch: Int): DataFrame =
+    withFeedDate(spark.readStream.schema(weatherSchema).options(feedOptions)
+      .option("maxFilesPerTrigger", filesPerBatch).json(dataDir))
 
   /** S1: the REST API source (reference weather_etl.py:35-37 — one HTTP
     * GET per city, one JSON doc per response). The transport is a plain

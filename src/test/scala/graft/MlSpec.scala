@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.NextDayTemp
 import graft.weather.Weather
@@ -51,5 +53,35 @@ class MlSpec extends AnyFunSuite {
       val expected = latestEpochs(r.getString(0)) + 86400L
       assert(r.getTimestamp(1).getTime / 1000 === expected)
     }
+  }
+
+  test("M4 fused scoring equals RegressionEvaluator(r2) and count() over the same splits") {
+    val (train, test) = NextDayTemp.split(flat)
+    val eval = new RegressionEvaluator()
+      .setLabelCol(NextDayTemp.labelCol).setPredictionCol("prediction").setMetricName("r2")
+    def close(got: Double, want: Double) =
+      assert(got == want || (got.isNaN && want.isNaN) || math.abs(got - want) <= 1e-9,
+        s"fused R² $got, evaluator R² $want")
+    assert(fit.nTrain === train.count())
+    assert(fit.nTest === test.count())
+    close(fit.r2Train, eval.evaluate(fit.model.transform(train)))
+    if (fit.nTest == 0) assert(fit.r2Test.isNaN)
+    else close(fit.r2Test, eval.evaluate(fit.model.transform(test)))
+  }
+
+  test("M2 fit with 40 cities: maxBins covers the city index, one prediction per city") {
+    // 9 fixture cities, each under 4 labels, plus a 5th label for 4 of them
+    val noFifthLabel = flat.select("city").distinct().orderBy("city").limit(5)
+      .collect().map(_.getString(0))
+    val cities40 = flat.crossJoin(spark.range(5).toDF("k"))
+      .filter(col("k") < 4 || !col("city").isin(noFifthLabel: _*))
+      .withColumn("city", concat(col("city"), lit("_"), col("k")))
+      .drop("k")
+    assert(cities40.select("city").distinct().count() === 40)
+    val fit40 = NextDayTemp.fit(cities40)
+    val preds = NextDayTemp.predictNextDay(spark, fit40.model, cities40).collect()
+    assert(preds.length === 40)
+    assert(preds.map(_.getAs[String]("city")).distinct.length === 40)
+    assert(preds.forall(r => !r.getAs[Double]("predicted_temp_c").isNaN))
   }
 }

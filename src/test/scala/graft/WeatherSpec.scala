@@ -85,4 +85,22 @@ class WeatherSpec extends AnyFunSuite {
     // every city's surviving row is from the latest day
     assert(latest.filter("date <> '2023-08-11'").count() === 0)
   }
+
+  test("S2 scan keeps only docs directly under a yyyy-MM-dd directory") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("weather_layout")
+    val day = Files.createDirectories(tmp.resolve("2023-08-11"))
+    val london = new java.io.File(s"$dataDir/2023-08-11/London.txt").toPath
+    Files.copy(london, day.resolve("London.txt"))
+    // strays: a root-level doc, a non-date directory, a nested directory
+    // inside a date, and a non-.txt file in a date directory
+    Files.copy(london, tmp.resolve("Root.txt"))
+    Files.copy(london, Files.createDirectories(tmp.resolve("misc")).resolve("Misc.txt"))
+    Files.copy(london, Files.createDirectories(day.resolve("old")).resolve("Old.txt"))
+    Files.copy(london, day.resolve("London.json"))
+    val raw = Weather.readRaw(spark, tmp.toString)
+    assert(raw.count() === 1)
+    assert(raw.select("date").head().getString(0) === "2023-08-11")
+    assert(Weather.readRaw(spark, tmp.toString, Seq("2023-08-11")).count() === 1)
+  }
 }
