@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1,
+  * naming the failed queries, when any query throws. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,6 +17,19 @@ object Verify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    val failed = try dump(spark, sfDir, outDir) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  /** Dump every query's result and oracle_sql.json; returns the names of
+    * the queries that threw. */
+  private def dump(spark: SparkSession, sfDir: String,
+                   outDir: String): Seq[String] = {
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     spark.sparkContext.setLogLevel("WARN")
     // The STATIC oracle SQL pins the IVF/kmeans defaults (q46/q58/q110/
     // q118 interpolate them at compile time) while the DataFrame paths
@@ -51,7 +66,8 @@ object Verify {
           df.write.mode("overwrite").parquet(s"$outDir/$name")
         else
           df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -70,6 +86,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed.toSeq
   }
 }

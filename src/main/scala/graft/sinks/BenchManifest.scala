@@ -67,9 +67,9 @@ object BenchManifest {
 
     val files = (0 until n).map(entry)
     val (_, commitSec) = sec {
-      TxnTable.commit(spark, root, 1L, "overwrite", files,
+      TxnTable.commit(spark, root, TxnTable.Snapshot(1L, "overwrite", files,
         statsOf(files), Seq("id"),
-        rowCounts = countsOf(files), nullCounts = nullsOf(files))
+        rowCounts = countsOf(files), nullCounts = nullsOf(files)))
     }
     val manifestBytes = fs.listStatus(new Path(s"$root/_txn"))
       .filter(_.getPath.getName.startsWith("v")).map(_.getLen).max
@@ -90,11 +90,11 @@ object BenchManifest {
       val fl = entry(n + i)
       val all = head.files :+ fl
       sec {
-        TxnTable.commit(spark, root, v, "append", all,
-          head.stats ++ Map(fl -> Map("id" -> (-10L * i - 9, -10L * i))),
-          head.statsCols,
+        TxnTable.commit(spark, root, head.copy(version = v, op = "append",
+          files = all,
+          stats = head.stats ++ Map(fl -> Map("id" -> (-10L * i - 9, -10L * i))),
           rowCounts = head.rowCounts ++ Map(fl -> 10L),
-          nullCounts = head.nullCounts ++ Map(fl -> Map("id" -> 0L)))
+          nullCounts = head.nullCounts ++ Map(fl -> Map("id" -> 0L))))
       }._2
     }
     val append1 = appendOnce(2L, 1)

@@ -45,6 +45,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    lock. Two writers racing to commit version N both stage, but
   *    `create(vN, overwrite = false)` succeeds for exactly one; the
   *    loser gets [[TxnConflictException]] and must re-resolve + retry.
+  *    Every writer runs that retry through ONE loop, [[retrying]], and
+  *    builds its next snapshot from the head it resolved
+  *    (`head.copy(...)`), so the fields it does not change carry over.
   *    (On HDFS/ABFS atomic-create-no-overwrite is a filesystem
   *    guarantee; on S3 production systems delegate this one primitive
   *    to a coordinator — same architecture, different lock.)
@@ -62,7 +65,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TxnTable {
 
-  final class TxnConflictException(msg: String) extends RuntimeException(msg)
+  /** A commit that cannot land on the current head. `retry = false`
+    * marks a verdict that re-resolving the head cannot change (a refused
+    * row-level rebase): [[retrying]] rethrows it on the first throw. */
+  final class TxnConflictException(msg: String, val retry: Boolean = true)
+      extends RuntimeException(msg)
 
   /** One committed snapshot: `files` are table-root-relative; `stats`
     * optionally carries per-file per-COLUMN (min, max) of the recorded
@@ -782,10 +789,11 @@ object TxnTable {
     * does NOT store — derived, never materialized), so every staged
     * file holds exactly ONE value per transform and its value is
     * recoverable from the path with zero data reads
-    * ([[transformStats]]). */
+    * ([[transformStats]]). `rel` is the staging dir, fresh by default
+    * ([[withStagingDir]] passes its own). */
   private def stage(s: SparkSession, root: String, df: DataFrame,
-                    transforms: Seq[Transform] = Nil): Seq[String] = {
-    val rel = s"data/${java.util.UUID.randomUUID().toString.take(8)}"
+                    transforms: Seq[Transform] = Nil,
+                    rel: String = newStagingDir()): Seq[String] = {
     val dir = s"${root.stripSuffix("/")}/$rel"
     val f = fs(s, root)
     if (transforms.isEmpty) {
@@ -812,6 +820,10 @@ object TxnTable {
     }
   }
 
+  /** A fresh root-relative staging dir name, `data/<uuid>`. */
+  private def newStagingDir(): String =
+    s"data/${java.util.UUID.randomUUID().toString.take(8)}"
+
   /** Per-file transform stats from the staged PATHS alone: each
     * `name=value` segment a [[stage]] fan-out produced becomes a
     * `(value, value)` range entry under the transform's derived name —
@@ -832,6 +844,55 @@ object TxnTable {
       }.toMap
       if (entries.isEmpty) None else Some(file -> entries)
     }.toMap
+
+  /** Per-file metadata a commit records for the files it adds: range
+    * stats and blooms. */
+  private type FileMeta = (Map[String, Map[String, (Long, Long)]],
+    Map[String, Map[String, Array[Byte]]])
+
+  /** [[fileMeta]] of freshly staged files plus their path-derived
+    * [[transformStats]]. */
+  private def stagedMeta(s: SparkSession, root: String, staged: Seq[String],
+                         statsCols: Seq[String], bloomCols: Seq[String],
+                         transforms: Seq[Transform]): FileMeta = {
+    val (st, bl) = fileMeta(s, root, staged, statsCols, bloomCols)
+    (mergeStats(st, transformStats(staged, transforms)), bl)
+  }
+
+  /** The head an append builds on when the table has no commit yet. */
+  private val EmptyHead = Snapshot(0L, "", Nil)
+
+  /** The next version of `head` with `files` added — the append shape;
+    * every other field carries over. */
+  private def appended(head: Snapshot, op: String, files: Seq[String],
+                       meta: FileMeta,
+                       rowCounts: Map[String, Long] = Map.empty): Snapshot =
+    head.copy(version = head.version + 1, op = op, files = head.files ++ files,
+      stats = head.stats ++ meta._1, blooms = head.blooms ++ meta._2,
+      rowCounts = head.rowCounts ++ rowCounts)
+
+  /** The next version of `head` keeping only its `carry` files, plus the
+    * rewritten `files` — the copy-on-write shape; every other field
+    * carries over. */
+  private def partialRewrite(head: Snapshot, op: String, carry: Seq[String],
+                             files: Seq[String], meta: FileMeta): Snapshot = {
+    val keep = carry.toSet
+    head.copy(version = head.version + 1, op = op, files = carry ++ files,
+      stats = head.stats.view.filterKeys(keep).toMap ++ meta._1,
+      blooms = head.blooms.view.filterKeys(keep).toMap ++ meta._2)
+  }
+
+  /** The next version after `head` whose content is `staged` alone — the
+    * full-rewrite shape (compaction, delete fold): a FRESH snapshot, so
+    * nothing of the old content (delete files, provenance) survives. */
+  private def fullRewrite(s: SparkSession, root: String, head: Snapshot,
+      op: String, staged: Seq[String], statsCols: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType]): Snapshot = {
+    val (st, bl) = stagedMeta(s, root, staged, statsCols, head.bloomCols,
+      head.transforms)
+    Snapshot(head.version + 1, op, staged, st, statsCols, schema, bl,
+      head.bloomCols, transforms = head.transforms)
+  }
 
   /** Deep per-file merge of two stats maps (column maps union per file). */
   private def mergeStats(a: Map[String, Map[String, (Long, Long)]],
@@ -862,8 +923,7 @@ object TxnTable {
     * always sound. */
   private def fileMeta(s: SparkSession, root: String, staged: Seq[String],
                        statsCols: Seq[String], bloomCols: Seq[String])
-      : (Map[String, Map[String, (Long, Long)]],
-         Map[String, Map[String, Array[Byte]]]) = {
+      : FileMeta = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min, xxhash64}
     if (staged.isEmpty || (statsCols.isEmpty && bloomCols.isEmpty))
       return (Map.empty, Map.empty)
@@ -1052,23 +1112,44 @@ object TxnTable {
     }.toMap
     }
 
-  /** Publish a manifest as version `v` — tmp write + atomic rename into
-    * the create-no-overwrite slot. Throws [[TxnConflictException]] if a
-    * concurrent writer took `v` first. */
-  private[sinks] def commit(s: SparkSession, root: String, v: Long, op: String,
-                            files: Seq[String],
-                            stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-                            statsCols: Seq[String] = Nil,
-                            schema: Option[org.apache.spark.sql.types.StructType] = None,
-                            blooms: Map[String, Map[String, Array[Byte]]] = Map.empty,
-                            bloomCols: Seq[String] = Nil,
-                            deletes: Seq[String] = Seq.empty,
-                            deleteCols: Seq[String] = Nil,
-                            transforms: Seq[Transform] = Nil,
-                            rowCounts: Map[String, Long] = Map.empty,
-                            branch: Option[String] = None,
-                            nullCounts: Map[String, Map[String, Long]] = Map.empty,
-                            delProv: Map[String, Seq[String]] = Map.empty): Snapshot = {
+  /** The optimistic-retry loop every writer runs around [[commit]]:
+    * re-runs `body` only when it loses a commit race
+    * ([[TxnConflictException]] with `retry`), at most `attempts` runs in
+    * all, then rethrows the last conflict. Any other exception — a
+    * refused rebase included — propagates on its first throw. `body`
+    * re-resolves the head itself; work staged once lives outside it. */
+  private[sinks] def retrying[A](attempts: Int)(body: => A): A = {
+    require(attempts >= 1, "need at least one attempt")
+    @scala.annotation.tailrec
+    def run(attempt: Int): A = {
+      val out =
+        try Some(body)
+        catch { case e: TxnConflictException if e.retry && attempt < attempts => None }
+      out match {
+        case Some(a) => a
+        case None    => run(attempt + 1)
+      }
+    }
+    run(1)
+  }
+
+  /** Attempt budget of the writer paths: metadata commits, appends,
+    * MoR deletes and delete-file maintenance. */
+  private val WriterAttempts = 5
+
+  /** Attempt budget of a row-level commit under snapshot isolation (a
+    * rebase re-validates per attempt); serializable isolation gets 1. */
+  private val RowLevelAttempts = 12
+
+  /** Publish `next` as version `next.version` — tmp write + atomic rename
+    * into the create-no-overwrite slot. Throws [[TxnConflictException]]
+    * if a concurrent writer took the slot first. Writers build `next`
+    * from the head they resolved (`head.copy(version = head.version + 1,
+    * op = ..., <the fields that change>)`), so every field they leave
+    * alone carries forward; `tsMs` and `segs` are this commit's own. */
+  private[sinks] def commit(s: SparkSession, root: String, next: Snapshot,
+                            branch: Option[String] = None): Snapshot = {
+    val v = next.version
     val f = fs(s, root)
     val dst = branch.fold(manifestPath(root, v))(branchManifestPath(root, _, v))
     f.mkdirs(dst.getParent)
@@ -1076,18 +1157,22 @@ object TxnTable {
       throw new TxnConflictException(s"version $v already committed at $root")
     val tmp = new Path(dst.getParent,
       s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val now = System.currentTimeMillis()
-    // every commit carries a complete per-file row-count map (passed-in
-    // counts first, cached footer reads for the rest) — the metadata
-    // COUNT(*) ([[metaCount]]) then works on any table from its next
-    // commit onward, including tables whose older manifests predate
-    // row-count recording
-    val counts = completeCounts(s, root, files, rowCounts)
-    // per-file null counts of the stats columns ride the same cached
-    // footer reads — [[metaGroupCount]] needs them to attribute a
-    // point-range file's rows exactly (min/max exclude nulls, so a
-    // point range alone cannot certify "single-valued file")
-    val nulls = completeNulls(s, root, files, statsCols, nullCounts)
+    val snap = next.copy(tsMs = Some(System.currentTimeMillis()),
+      // every commit carries a complete per-file row-count map (passed-in
+      // counts first, cached footer reads for the rest) — the metadata
+      // COUNT(*) ([[metaCount]]) then works on any table from its next
+      // commit onward, including tables whose older manifests predate
+      // row-count recording
+      rowCounts = completeCounts(s, root, next.files, next.rowCounts),
+      // per-file null counts of the stats columns ride the same cached
+      // footer reads — [[metaGroupCount]] needs them to attribute a
+      // point-range file's rows exactly (min/max exclude nulls, so a
+      // point range alone cannot certify "single-valued file")
+      nullCounts = completeNulls(s, root, next.files, next.statsCols,
+        next.nullCounts),
+      // provenance lives only while its sidecar is in the delete set
+      delProv = next.delProv.view.filterKeys(next.deletes.toSet).toMap,
+      segs = Nil)
     // at or under the segment threshold the single-file inline manifest
     // is written byte-identically to every prior round — INCLUDING a
     // table that SHRANK back under it (a segmented parent never forces
@@ -1095,13 +1180,8 @@ object TxnTable {
     // parent-ref reuse
     val segTarget = segmentEntries(s)
     val (text, segNames) =
-      if (files.size <= segTarget)
-        (serializeManifest(op, files, stats, statsCols, schema,
-          blooms, bloomCols, deletes, deleteCols, transforms, now, counts,
-          nulls, delProv), Nil)
-      else segmentedManifest(s, root, op, files, stats, statsCols, schema,
-        blooms, bloomCols, deletes, deleteCols, transforms, now, counts,
-        nulls, segTarget, delProv)
+      if (snap.files.size <= segTarget) (serializeManifest(snap), Nil)
+      else segmentedManifest(s, root, snap, segTarget)
     val out = f.create(tmp, false)
     try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -1133,43 +1213,35 @@ object TxnTable {
       throw new TxnConflictException(s"lost commit race for version $v at $root")
     }
     lastSegs.put(rootKey(root), segNames)
-    Snapshot(v, op, files, stats, statsCols, schema, blooms, bloomCols, Some(now),
-      deletes, deleteCols, transforms, counts, nulls, segs = segNames,
-      delProv = delProv.view.filterKeys(deletes.toSet).toMap)
+    snap.copy(segs = segNames)
   }
 
-  private def serializeManifest(op: String, files: Seq[String],
-      stats: Map[String, Map[String, (Long, Long)]], statsCols: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      blooms: Map[String, Map[String, Array[Byte]]], bloomCols: Seq[String],
-      deletes: Seq[String], deleteCols: Seq[String],
-      transforms: Seq[Transform], now: Long,
-      rowCounts: Map[String, Long] = Map.empty,
-      nullCounts: Map[String, Map[String, Long]] = Map.empty,
-      delProv: Map[String, Seq[String]] = Map.empty): String = {
-    require(deletes.isEmpty || deleteCols.nonEmpty,
+  /** Refuse a snapshot the manifest encoding cannot carry — commit (and
+    * the staged-append envelope) is the choke point. */
+  private def requireEncodable(snap: Snapshot): Unit = {
+    require(snap.deletes.isEmpty || snap.deleteCols.nonEmpty,
       "merge-on-read delete files need recorded delete column(s)")
-    (statsCols ++ bloomCols ++ deleteCols).foreach(c => require(
+    (snap.statsCols ++ snap.bloomCols ++ snap.deleteCols).foreach(c => require(
       !c.contains("\t") && !c.contains(":") && !c.contains("\n"),
       s"metadata column name '$c' collides with the manifest encoding"))
     // "nulls" is reserved: a stats column so named would serialize as
     // `nulls:<lo>:<hi>`, indistinguishable from the per-file null-count
     // field `nulls:<col>:<n>`
-    require(!statsCols.contains("nulls"),
+    require(!snap.statsCols.contains("nulls"),
       "'nulls' is a reserved stats-column name in the manifest encoding")
     // refuse-or-record: a declared metadata column whose type the
-    // manifest encoding cannot represent refuses HERE (commit is the
-    // choke point) instead of silently recording nothing — the silent
-    // no-op made every probe on such a column a full-manifest scan
-    // while looking indexed. Representable: integral/boolean/date/
-    // timestamp (exact long casts), float/double/decimal (truncated
-    // casts, sound for integral probes — see [[fileMeta]]), and string
-    // (truncated prefix bounds / hashed blooms). Transform-derived
-    // names (day_x / bucketN_x) are long by construction and absent
-    // from the schema; columns a schema-less legacy manifest can't type
-    // pass (absent metadata never skips).
-    schema.foreach { sc =>
-      (statsCols ++ bloomCols).distinct.foreach { c =>
+    // manifest encoding cannot represent refuses HERE instead of
+    // silently recording nothing — the silent no-op made every probe on
+    // such a column a full-manifest scan while looking indexed.
+    // Representable: integral/boolean/date/timestamp (exact long
+    // casts), float/double/decimal (truncated casts, sound for integral
+    // probes — see [[fileMeta]]), and string (truncated prefix bounds /
+    // hashed blooms). Transform-derived names (day_x / bucketN_x) are
+    // long by construction and absent from the schema; columns a
+    // schema-less legacy manifest can't type pass (absent metadata
+    // never skips).
+    snap.schema.foreach { sc =>
+      (snap.statsCols ++ snap.bloomCols).distinct.foreach { c =>
         sc.fields.find(f => ColumnMapping.physOf(f) == c).foreach(f =>
           require(metaRepresentable(f.dataType),
             s"stats/bloom column '$c' has type ${f.dataType.sql}, which " +
@@ -1177,23 +1249,34 @@ object TxnTable {
               "numeric, boolean, date/timestamp, or string column instead"))
       }
     }
-    val delLines = (if (deletes.nonEmpty)
-        Seq(DelColTag + deleteCols.mkString("\t")) else Seq.empty) ++
-      deletes.map(DeleteTag + _) ++
-      deletes.flatMap(d => delProv.get(d).filter(_.nonEmpty)
+  }
+
+  /** Manifest text: header, the `#`-tagged metadata lines, then `items`
+    * (inline entry lines and/or segment refs) in file order. */
+  private def manifestText(snap: Snapshot, items: Seq[String]): String = {
+    val delLines = (if (snap.deletes.nonEmpty)
+        Seq(DelColTag + snap.deleteCols.mkString("\t")) else Seq.empty) ++
+      snap.deletes.map(DeleteTag + _) ++
+      snap.deletes.flatMap(d => snap.delProv.get(d).filter(_.nonEmpty)
         .map(from => DelProvTag + d + "\t" + from.mkString("\t")))
     val colLines =
-      (if (statsCols.nonEmpty) Seq(StatsColsTag + statsCols.mkString("\t"))
+      (if (snap.statsCols.nonEmpty) Seq(StatsColsTag + snap.statsCols.mkString("\t"))
        else Seq.empty) ++
-      (if (bloomCols.nonEmpty) Seq(BloomColsTag + bloomCols.mkString("\t"))
+      (if (snap.bloomCols.nonEmpty) Seq(BloomColsTag + snap.bloomCols.mkString("\t"))
        else Seq.empty) ++
-      (if (transforms.nonEmpty) Seq(TransformsTag + transforms
+      (if (snap.transforms.nonEmpty) Seq(TransformsTag + snap.transforms
         .map(t => s"${t.kind}:${t.param}:${t.src}").mkString("\t"))
        else Seq.empty)
-    val lines = Seq(TsTag + now) ++ schema.map(sc => SchemaTag + sc.json).toSeq ++
-      colLines ++ delLines ++ files.map(file => entryLine(file, stats, blooms,
-        rowCounts, nullCounts, statsCols, bloomCols))
-    s"$Header $op\n" + lines.mkString("\n") + "\n"
+    val lines = snap.tsMs.map(TsTag + _).toSeq ++
+      snap.schema.map(sc => SchemaTag + sc.json).toSeq ++
+      colLines ++ delLines ++ items
+    s"$Header ${snap.op}\n" + lines.mkString("\n") + "\n"
+  }
+
+  /** The single-file inline manifest of `snap`. */
+  private def serializeManifest(snap: Snapshot): String = {
+    requireEncodable(snap)
+    manifestText(snap, snap.files.map(entryLine(snap, _)))
   }
 
   /** Serialize ONE per-file entry line ([[parseEntry]]'s inverse).
@@ -1205,54 +1288,51 @@ object TxnTable {
     * column lists say what NEW writes record; the per-file fields say
     * what IS recorded. Current columns first (reader-friendly), then
     * any carried extras in sorted order for byte-stable manifests. */
-  private def entryLine(file: String,
-      stats: Map[String, Map[String, (Long, Long)]],
-      blooms: Map[String, Map[String, Array[Byte]]],
-      rowCounts: Map[String, Long],
-      nullCounts: Map[String, Map[String, Long]],
-      statsCols: Seq[String], bloomCols: Seq[String]): String = {
-    val fileStats = stats.getOrElse(file, Map.empty)
-    val fileBlooms = blooms.getOrElse(file, Map.empty)
-    val fileNulls = nullCounts.getOrElse(file, Map.empty)
+  private def entryLine(snap: Snapshot, file: String): String = {
+    val fileStats = snap.stats.getOrElse(file, Map.empty)
+    val fileBlooms = snap.blooms.getOrElse(file, Map.empty)
+    val fileNulls = snap.nullCounts.getOrElse(file, Map.empty)
     (fileStats.keys ++ fileBlooms.keys ++ fileNulls.keys).foreach(c => require(
       !c.contains("\t") && !c.contains(":") && !c.contains("\n") && c != "nulls",
       s"metadata column name '$c' collides with the manifest encoding"))
     def ordered(recorded: Seq[String], present: Iterable[String]): Seq[String] =
       recorded.filter(present.toSet) ++
         present.toSeq.filterNot(recorded.toSet).sorted
-    val statF = ordered(statsCols, fileStats.keys).map { c =>
+    val statF = ordered(snap.statsCols, fileStats.keys).map { c =>
       val (lo, hi) = fileStats(c); s"$c:$lo:$hi" }
-    val bloomF = ordered(bloomCols, fileBlooms.keys).map(c =>
+    val bloomF = ordered(snap.bloomCols, fileBlooms.keys).map(c =>
       s"bloom:$c:${java.util.Base64.getEncoder.encodeToString(fileBlooms(c))}")
     // per-file row count first (reader-friendly: fixed position when
     // present); absent for legacy files — metadata aggregates then
     // answer None rather than guess ([[metaCount]])
-    val rowsF = rowCounts.get(file).map(n => s"rows:$n").toSeq
-    val nullsF = ordered(statsCols, fileNulls.keys).map(c =>
+    val rowsF = snap.rowCounts.get(file).map(n => s"rows:$n").toSeq
+    val nullsF = ordered(snap.statsCols, fileNulls.keys).map(c =>
       s"nulls:$c:${fileNulls(c)}")
     (file +: (rowsF ++ statF ++ nullsF ++ bloomF)).mkString("\t")
   }
 
-  /** Does segment entry `e` record EXACTLY the metadata this commit
-    * was asked to persist for its file? The correctness anchor of
-    * segment reuse: a ref is emitted only when the parsed segment
-    * round-trips to the intended entries. */
-  private def entryMatches(e: Entry,
-      stats: Map[String, Map[String, (Long, Long)]],
-      blooms: Map[String, Map[String, Array[Byte]]],
-      rowCounts: Map[String, Long],
-      nullCounts: Map[String, Map[String, Long]]): Boolean = {
+  /** The parsed form of `file`'s entry in `snap`. */
+  private def entryOf(snap: Snapshot, file: String): Entry =
+    (file, snap.stats.getOrElse(file, Map.empty),
+      snap.blooms.getOrElse(file, Map.empty), snap.rowCounts.get(file),
+      snap.nullCounts.getOrElse(file, Map.empty))
+
+  /** Does segment entry `e` record EXACTLY the metadata `snap` asks to
+    * persist for its file? The correctness anchor of segment reuse: a
+    * ref is emitted only when the parsed segment round-trips to the
+    * intended entries. */
+  private def entryMatches(e: Entry, snap: Snapshot): Boolean = {
     val (f, st, bl, rw, nu) = e
-    st == stats.getOrElse(f, Map.empty) &&
-      rw == rowCounts.get(f) &&
-      nu == nullCounts.getOrElse(f, Map.empty) && {
-        val b2 = blooms.getOrElse(f, Map.empty)
+    st == snap.stats.getOrElse(f, Map.empty) &&
+      rw == snap.rowCounts.get(f) &&
+      nu == snap.nullCounts.getOrElse(f, Map.empty) && {
+        val b2 = snap.blooms.getOrElse(f, Map.empty)
         bl.keySet == b2.keySet &&
           bl.forall { case (c, v) => java.util.Arrays.equals(v, b2(c)) }
       }
   }
 
-  /** Build the SEGMENTED manifest text for `files`: reuse every parent
+  /** Build the SEGMENTED manifest text for `snap`: reuse every parent
     * segment whose file list survives as a contiguous run of the new
     * file order with entry-identical metadata; the uncovered remainder
     * is written as fresh right-sized segments (large runs) or inline
@@ -1260,33 +1340,10 @@ object TxnTable {
     * Side effect: writes the new segment files (immutable,
     * create-no-overwrite) — orphaned by a lost commit race, they are
     * collected by [[vacuum]]'s grace-guarded segment sweep. */
-  private def segmentedManifest(s: SparkSession, root: String, op: String,
-      files: Seq[String],
-      stats: Map[String, Map[String, (Long, Long)]], statsCols: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      blooms: Map[String, Map[String, Array[Byte]]], bloomCols: Seq[String],
-      deletes: Seq[String], deleteCols: Seq[String],
-      transforms: Seq[Transform], now: Long,
-      rowCounts: Map[String, Long],
-      nullCounts: Map[String, Map[String, Long]],
-      segTarget: Int,
-      delProv: Map[String, Seq[String]] = Map.empty): (String, Seq[String]) = {
-    require(deletes.isEmpty || deleteCols.nonEmpty,
-      "merge-on-read delete files need recorded delete column(s)")
-    (statsCols ++ bloomCols ++ deleteCols).foreach(c => require(
-      !c.contains("\t") && !c.contains(":") && !c.contains("\n"),
-      s"metadata column name '$c' collides with the manifest encoding"))
-    require(!statsCols.contains("nulls"),
-      "'nulls' is a reserved stats-column name in the manifest encoding")
-    schema.foreach { sc =>
-      (statsCols ++ bloomCols).distinct.foreach { c =>
-        sc.fields.find(f => ColumnMapping.physOf(f) == c).foreach(f =>
-          require(metaRepresentable(f.dataType),
-            s"stats/bloom column '$c' has type ${f.dataType.sql}, which " +
-              "manifest range/bloom metadata cannot represent — declare a " +
-              "numeric, boolean, date/timestamp, or string column instead"))
-      }
-    }
+  private def segmentedManifest(s: SparkSession, root: String,
+      snap: Snapshot, segTarget: Int): (String, Seq[String]) = {
+    requireEncodable(snap)
+    val files = snap.files
     val idx: Map[String, Int] = files.iterator.zipWithIndex.toMap
     // a duplicate path would make run-mapping ambiguous; the commit
     // validation refuses it upstream, so just disable reuse then
@@ -1312,8 +1369,7 @@ object TxnTable {
         val start = pos.head
         val contiguous = start >= 0 &&
           pos.iterator.zipWithIndex.forall { case (p, k) => p == start + k }
-        if (contiguous &&
-            es.forall(entryMatches(_, stats, blooms, rowCounts, nullCounts)))
+        if (contiguous && es.forall(entryMatches(_, snap)))
           Some(Run(start, es.size, name))
         else None
       }
@@ -1335,29 +1391,24 @@ object TxnTable {
     // the full O(N) rewrite (the amortization this feature exists for)
     val chunk = math.max(segTarget.toLong,
       2L * files.size / MaxSegRefs + 1).toInt
-    val f = fsys
     val newSegs = Seq.newBuilder[String]
     val items = Seq.newBuilder[String]
     def writeSegment(range: Range): Unit = {
       val name = "m_" + java.util.UUID.randomUUID().toString
         .replace("-", "").take(16) + ".txt"
-      val lines = range.map(i => entryLine(files(i), stats, blooms,
-        rowCounts, nullCounts, statsCols, bloomCols))
-      val out = f.create(segPath(root, name), false)
+      val lines = range.map(i => entryLine(snap, files(i)))
+      val out = fsys.create(segPath(root, name), false)
       try out.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
       finally out.close()
       SegCache.put(segPath(root, name).toString,
-        range.map(i => (files(i), stats.getOrElse(files(i), Map.empty),
-          blooms.getOrElse(files(i), Map.empty), rowCounts.get(files(i)),
-          nullCounts.getOrElse(files(i), Map.empty))).toIndexedSeq)
+        range.map(i => entryOf(snap, files(i))).toIndexedSeq)
       newSegs += name
       items += s"$SegTag$name\t${range.size}"
     }
     def emitGap(from: Int, until: Int): Unit = if (until > from) {
       val len = until - from
       if (len <= segTarget / 2)
-        (from until until).foreach(i => items += entryLine(files(i), stats,
-          blooms, rowCounts, nullCounts, statsCols, bloomCols))
+        (from until until).foreach(i => items += entryLine(snap, files(i)))
       else (from until until by chunk).foreach(a =>
         writeSegment(a until math.min(a + chunk, until)))
     }
@@ -1369,23 +1420,7 @@ object TxnTable {
       pos = r.start + r.len
     }
     emitGap(pos, files.size)
-    val delLines = (if (deletes.nonEmpty)
-        Seq(DelColTag + deleteCols.mkString("\t")) else Seq.empty) ++
-      deletes.map(DeleteTag + _) ++
-      deletes.flatMap(d => delProv.get(d).filter(_.nonEmpty)
-        .map(from => DelProvTag + d + "\t" + from.mkString("\t")))
-    val colLines =
-      (if (statsCols.nonEmpty) Seq(StatsColsTag + statsCols.mkString("\t"))
-       else Seq.empty) ++
-      (if (bloomCols.nonEmpty) Seq(BloomColsTag + bloomCols.mkString("\t"))
-       else Seq.empty) ++
-      (if (transforms.nonEmpty) Seq(TransformsTag + transforms
-        .map(t => s"${t.kind}:${t.param}:${t.src}").mkString("\t"))
-       else Seq.empty)
-    val head = Seq(TsTag + now) ++ schema.map(sc => SchemaTag + sc.json).toSeq ++
-      colLines ++ delLines
-    (s"$Header $op\n" + (head ++ items.result()).mkString("\n") + "\n",
-      newSegs.result())
+    (manifestText(snap, items.result()), newSegs.result())
   }
 
   private def nextVersion(s: SparkSession, root: String): Long =
@@ -1407,9 +1442,8 @@ object TxnTable {
     require(latest(s, root).isEmpty, s"table already exists at $root")
     transforms.foreach(t => require(schema.fieldNames.contains(t.src),
       s"transform ${t.name} needs source column '${t.src}'"))
-    commit(s, root, 1L, "create", Seq.empty,
-      statsCols = statsCols, schema = Some(schema),
-      bloomCols = bloomCols, transforms = transforms)
+    commit(s, root, Snapshot(1L, "create", Seq.empty, statsCols = statsCols,
+      schema = Some(schema), bloomCols = bloomCols, transforms = transforms))
   }
 
   /** ALTER TABLE: commit a METADATA-ONLY new version — same files, same
@@ -1432,15 +1466,14 @@ object TxnTable {
     * pruning on a newly-added column simply cannot skip old files —
     * absent metadata never skips, the standing soundness rule.
     *
-    * Metadata-only, optimistic-retry like every writer loop. */
+    * Metadata-only, optimistic-retry through [[retrying]]. */
   def alterTable(s: SparkSession, root: String,
                  newSchema: Option[org.apache.spark.sql.types.StructType] = None,
                  newStatsCols: Option[Seq[String]] = None,
                  newBloomCols: Option[Seq[String]] = None,
-                 maxAttempts: Int = 5,
                  renames: Seq[(String, String)] = Nil,
-                 drops: Seq[String] = Nil): Snapshot = {
-    for (attempt <- 1 to maxAttempts) {
+                 drops: Seq[String] = Nil): Snapshot =
+    retrying(WriterAttempts) {
       val cur = latestRequired(s, root)
       var storage = cur.schema
       if (renames.nonEmpty || drops.nonEmpty) {
@@ -1551,17 +1584,9 @@ object TxnTable {
           cur.transforms.map(_.name))
       (cols ++ bcols).foreach(c => require(tableCols.forall(_.contains(c)),
         s"metadata column '$c' is not a table column"))
-      try {
-        return commit(s, root, cur.version + 1, "alter", cur.files,
-          cur.stats, cols, storage, cur.blooms, bcols,
-          cur.deletes, cur.deleteCols, cur.transforms, cur.rowCounts,
-          nullCounts = cur.nullCounts)
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => // re-resolve
-      }
+      commit(s, root, cur.copy(version = cur.version + 1, op = "alter",
+        statsCols = cols, schema = storage, bloomCols = bcols))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Append `df` to the table (creates it at v1 if absent). With
     * `statsCols` (LONG columns, first = primary clustering column),
@@ -1574,80 +1599,67 @@ object TxnTable {
              statsCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil,
              transforms: Seq[Transform] = Nil): Snapshot = {
-    val prior = latest(s, root)
+    val head = latest(s, root).getOrElse(EmptyHead)
     // transforms are a TABLE property (like Iceberg's partition spec):
     // set at creation or via the explicit-arg first use, inherited by
     // every later append — an append cannot silently change them
-    val trs = {
-      val priorT = prior.map(_.transforms).getOrElse(Nil)
-      if (transforms.isEmpty) priorT
-      else { require(priorT.isEmpty || priorT == transforms,
-        s"table already partitions by ${priorT.map(_.name).mkString(",")}; " +
+    val trs =
+      if (transforms.isEmpty) head.transforms
+      else { require(head.transforms.isEmpty || head.transforms == transforms,
+        s"table already partitions by ${head.transforms.map(_.name).mkString(",")}; " +
           "appends inherit the transform spec")
         transforms }
-    }
     enforceConstraints(s, root, df, "append")
     // schema first, stage second: the evolved schema carries the column
     // mapping (incl. fresh physical names for reborn columns), and the
     // staged parquet must be written under the PHYSICAL names
-    val evolved = evolveM(prior.flatMap(_.schema), df.schema)
+    val evolved = evolveM(head.schema, df.schema)
     val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved), trs)
-    // caller-passed metadata columns are LOGICAL and translate; the
-    // inherited prior sets are already physical and must NOT re-translate
-    // (a reborn column's logical name may equal an old physical name)
-    val cols = if (statsCols.nonEmpty)
-      statsCols.map(ColumnMapping.physName(evolved, _))
-      else prior.map(_.statsCols).getOrElse(Nil)
-    val bcols = if (bloomCols.nonEmpty)
-      bloomCols.map(ColumnMapping.physName(evolved, _))
-      else prior.map(_.bloomCols).getOrElse(Nil)
-    val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cols, bcols)
-    commit(s, root, prior.map(_.version).getOrElse(0L) + 1, "append",
-      prior.map(_.files).getOrElse(Seq.empty) ++ staged,
-      prior.map(_.stats).getOrElse(Map.empty) ++
-        mergeStats(stagedStats, transformStats(staged, trs)), cols,
-      Some(evolved),
-      prior.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms, bcols,
-      prior.map(_.deletes).getOrElse(Seq.empty),
-      prior.map(_.deleteCols).getOrElse(Nil), trs,
-      prior.map(_.rowCounts).getOrElse(Map.empty),
-      nullCounts = prior.map(_.nullCounts).getOrElse(Map.empty))
+    val cols = appendMetaCols(statsCols, head.statsCols, evolved)
+    val bcols = appendMetaCols(bloomCols, head.bloomCols, evolved)
+    commit(s, root, appended(head, "append", staged,
+        stagedMeta(s, root, staged, cols, bcols, trs))
+      .copy(statsCols = cols, schema = Some(evolved), bloomCols = bcols,
+        transforms = trs))
   }
 
-  /** [[append]] with bounded optimistic-concurrency retries — the loop
-    * every real writer runs around the commit race: data files are
-    * staged ONCE (they are version-independent — nothing references
-    * them until a manifest does), then each lost [[TxnConflictException]]
-    * re-resolves the new head and re-commits the same staged files on
-    * top of it. The loser of a race never re-reads or re-writes data;
-    * it pays one small-file manifest write per attempt. */
+  /** An append's metadata columns: the caller's (LOGICAL, translated to
+    * physical) or else the table's inherited set — already physical, and
+    * never re-translated (a reborn column's logical name may equal an
+    * old physical name). */
+  private def appendMetaCols(asked: Seq[String], inherited: Seq[String],
+      evolved: org.apache.spark.sql.types.StructType): Seq[String] =
+    if (asked.nonEmpty) asked.map(ColumnMapping.physName(evolved, _))
+    else inherited
+
+  /** [[append]] with bounded optimistic-concurrency retries through
+    * [[retrying]], the one loop every writer runs around the commit
+    * race: data files are staged ONCE (they are version-independent —
+    * nothing references them until a manifest does), then each lost
+    * [[TxnConflictException]] re-resolves the new head and re-commits
+    * the same staged files on top of it. The loser of a race never
+    * re-reads or re-writes data; it pays one small-file manifest write
+    * per attempt. `maxAttempts` is the one settable attempt budget. */
   def appendWithRetry(s: SparkSession, root: String, df: DataFrame,
                       statsCols: Seq[String] = Nil,
                       bloomCols: Seq[String] = Nil,
-                      maxAttempts: Int = 5): Snapshot = {
-    require(maxAttempts >= 1, "need at least one attempt")
+                      maxAttempts: Int = WriterAttempts): Snapshot = {
     // metadata columns + transforms resolve against the FIRST head seen;
     // staged file metadata is computed ONCE (it depends only on the
     // staged files, not the version we land on) — a retry re-reads
     // manifests, never data
-    val first = latest(s, root)
+    val first = latest(s, root).getOrElse(EmptyHead)
     enforceConstraints(s, root, df, "append")
-    val trs = first.map(_.transforms).getOrElse(Nil)
-    val evolved0 = evolveM(first.flatMap(_.schema), df.schema)
-    val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved0), trs)
-    val cols = if (statsCols.nonEmpty)
-      statsCols.map(ColumnMapping.physName(evolved0, _))
-      else first.map(_.statsCols).getOrElse(Nil)
-    val bcols = if (bloomCols.nonEmpty)
-      bloomCols.map(ColumnMapping.physName(evolved0, _))
-      else first.map(_.bloomCols).getOrElse(Nil)
-    val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cols, bcols)
-    val stagedAll = mergeStats(stagedStats, transformStats(staged, trs))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prior = latest(s, root)
-      val evolved = evolveM(prior.flatMap(_.schema), df.schema)
+    val evolved0 = evolveM(first.schema, df.schema)
+    val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved0),
+      first.transforms)
+    val cols = appendMetaCols(statsCols, first.statsCols, evolved0)
+    val bcols = appendMetaCols(bloomCols, first.bloomCols, evolved0)
+    val meta = stagedMeta(s, root, staged, cols, bcols, first.transforms)
+    retrying(maxAttempts) {
+      val head = latest(s, root)
+        .getOrElse(EmptyHead.copy(transforms = first.transforms))
+      val evolved = evolveM(head.schema, df.schema)
       // the staged parquet was written under evolved0's physical names;
       // a concurrent rename/drop that remaps any of this frame's
       // columns makes the staged bytes wrong for the new head — refuse
@@ -1656,21 +1668,9 @@ object TxnTable {
           ColumnMapping.physName(evolved0, c)),
         "concurrent RENAME/DROP COLUMN moved this append's columns " +
           "between stage and commit — re-run the append")
-      try {
-        return commit(s, root, prior.map(_.version).getOrElse(0L) + 1, "append",
-          prior.map(_.files).getOrElse(Seq.empty) ++ staged,
-          prior.map(_.stats).getOrElse(Map.empty) ++ stagedAll, cols,
-          Some(evolved),
-          prior.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms, bcols,
-          prior.map(_.deletes).getOrElse(Seq.empty),
-          prior.map(_.deleteCols).getOrElse(Nil),
-          prior.map(_.transforms).getOrElse(trs),
-          prior.map(_.rowCounts).getOrElse(Map.empty))
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => // re-resolve
-      }
+      commit(s, root, appended(head, "append", staged, meta)
+        .copy(statsCols = cols, schema = Some(evolved), bloomCols = bcols))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Exactly-once streaming append: the op field carries the micro-batch
@@ -1699,25 +1699,15 @@ object TxnTable {
     val vs = versions(s, root)
     if (vs.exists(v => snapshot(s, root, v).op == opTag)) None
     else {
-      val prior = vs.lastOption.map(snapshot(s, root, _))
+      val head = vs.lastOption.map(snapshot(s, root, _)).getOrElse(EmptyHead)
       enforceConstraints(s, root, df, s"streaming $opTag")
-      val trs = prior.map(_.transforms).getOrElse(Nil)
-      val evolved = evolveM(prior.flatMap(_.schema), df.schema)
-      val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved), trs)
-      val cols = if (statsCols.nonEmpty)
-        statsCols.map(ColumnMapping.physName(evolved, _))
-        else prior.map(_.statsCols).getOrElse(Nil)
-      val bcols = prior.map(_.bloomCols).getOrElse(Nil)
-      val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cols, bcols)
-      Some(commit(s, root, vs.lastOption.getOrElse(0L) + 1, opTag,
-        prior.map(_.files).getOrElse(Seq.empty) ++ staged,
-        prior.map(_.stats).getOrElse(Map.empty) ++
-          mergeStats(stagedStats, transformStats(staged, trs)), cols,
-        Some(evolved),
-        prior.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms, bcols,
-        prior.map(_.deletes).getOrElse(Seq.empty),
-        prior.map(_.deleteCols).getOrElse(Nil), trs,
-        prior.map(_.rowCounts).getOrElse(Map.empty)))
+      val evolved = evolveM(head.schema, df.schema)
+      val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved),
+        head.transforms)
+      val cols = appendMetaCols(statsCols, head.statsCols, evolved)
+      Some(commit(s, root, appended(head, opTag, staged,
+          stagedMeta(s, root, staged, cols, head.bloomCols, head.transforms))
+        .copy(statsCols = cols, schema = Some(evolved))))
     }
   }
 
@@ -1765,10 +1755,9 @@ object TxnTable {
       val cols = if (statsCols.nonEmpty) statsCols
         else replaceMetaCols(prior, prior.map(_.statsCols).getOrElse(Nil), df.schema)
       val bcols = replaceMetaCols(prior, prior.map(_.bloomCols).getOrElse(Nil), df.schema)
-      val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cols, bcols)
-      Some(commit(s, root, vs.lastOption.getOrElse(0L) + 1, opTag,
-        staged, mergeStats(stagedStats, transformStats(staged, trs)), cols,
-        Some(df.schema), stagedBlooms, bcols, transforms = trs))
+      val (st, bl) = stagedMeta(s, root, staged, cols, bcols, trs)
+      Some(commit(s, root, Snapshot(vs.lastOption.getOrElse(0L) + 1, opTag,
+        staged, st, cols, Some(df.schema), bl, bcols, transforms = trs)))
     }
   }
 
@@ -1787,64 +1776,52 @@ object TxnTable {
   private[graft] def commitStagedBatch(s: SparkSession, root: String,
       staged: Seq[String], batchId: Long, streamId: String,
       stagedSchema: org.apache.spark.sql.types.StructType,
-      replace: Boolean, maxAttempts: Int = 5,
+      replace: Boolean,
       stagedPhys: Option[Seq[String]] = None): Option[Snapshot] = {
     require(streamId.nonEmpty, "streaming-write commits need a stream id")
     val opTag = (if (replace) "replace-batch" else "append-batch") +
       s":$streamId:$batchId"
-    for (attempt <- 1 to maxAttempts) {
+    retrying(WriterAttempts) {
       val vs = versions(s, root)
-      if (vs.exists(v => snapshot(s, root, v).op == opTag)) return None
-      val prior = vs.lastOption.map(snapshot(s, root, _))
-      val trs = prior.map(_.transforms).getOrElse(Nil)
-      // the replace path resets the mapping, so inherited metadata
-      // columns must be translated off the prior physical names
-      val cols =
-        if (replace) replaceMetaCols(prior, prior.map(_.statsCols).getOrElse(Nil), stagedSchema)
-        else prior.map(_.statsCols).getOrElse(Nil)
-      val bcols =
-        if (replace) replaceMetaCols(prior, prior.map(_.bloomCols).getOrElse(Nil), stagedSchema)
-        else prior.map(_.bloomCols).getOrElse(Nil)
-      val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cols, bcols)
-      // appends: evolve under the column mapping; the executors staged
-      // the files under `stagedPhys` (the stream-start physical names —
-      // frozen, so a mid-stream RENAME is harmless), and a drop/re-add
-      // that MOVED one of this stream's columns must refuse rather than
-      // land rows in a dead physical column
-      val evolved =
-        if (replace) stagedSchema else evolveM(prior.flatMap(_.schema), stagedSchema)
-      stagedPhys.filter(_ => !replace).foreach { sp =>
-        require(stagedSchema.fieldNames.toSeq
-            .map(c => ColumnMapping.physName(evolved, c)) == sp,
-          "a concurrent DROP/re-ADD moved this stream's columns — restart " +
-            "the streaming query to re-pin the mapping")
-      }
-      // a caller that did NOT declare its staged names keeps the old
-      // protection: its files carry logical names, unsound once mapped
-      if (!replace && stagedPhys.isEmpty)
-        prior.foreach(requireUnmapped(_, "the DSv2 streaming append"))
-      try {
-        return Some(
-          if (replace)
-            commit(s, root, vs.lastOption.getOrElse(0L) + 1, opTag,
-              staged, mergeStats(stagedStats, transformStats(staged, trs)),
-              cols, Some(stagedSchema), stagedBlooms, bcols, transforms = trs)
-          else
-            commit(s, root, vs.lastOption.getOrElse(0L) + 1, opTag,
-              prior.map(_.files).getOrElse(Seq.empty) ++ staged,
-              prior.map(_.stats).getOrElse(Map.empty) ++
-                mergeStats(stagedStats, transformStats(staged, trs)),
-              cols,
-              Some(evolved),
-              prior.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms, bcols,
-              prior.map(_.deletes).getOrElse(Seq.empty),
-              prior.map(_.deleteCols).getOrElse(Nil), trs,
-              prior.map(_.rowCounts).getOrElse(Map.empty)))
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => // re-resolve
+      if (vs.exists(v => snapshot(s, root, v).op == opTag)) None
+      else {
+        val prior = vs.lastOption.map(snapshot(s, root, _))
+        val head = prior.getOrElse(EmptyHead)
+        // the replace path resets the mapping, so inherited metadata
+        // columns must be translated off the prior physical names
+        val cols =
+          if (replace) replaceMetaCols(prior, head.statsCols, stagedSchema)
+          else head.statsCols
+        val bcols =
+          if (replace) replaceMetaCols(prior, head.bloomCols, stagedSchema)
+          else head.bloomCols
+        val meta = stagedMeta(s, root, staged, cols, bcols, head.transforms)
+        if (replace)
+          Some(commit(s, root, Snapshot(head.version + 1, opTag, staged,
+            meta._1, cols, Some(stagedSchema), meta._2, bcols,
+            transforms = head.transforms)))
+        else {
+          // appends: evolve under the column mapping; the executors
+          // staged the files under `stagedPhys` (the stream-start
+          // physical names — frozen, so a mid-stream RENAME is harmless),
+          // and a drop/re-add that MOVED one of this stream's columns
+          // must refuse rather than land rows in a dead physical column
+          val evolved = evolveM(head.schema, stagedSchema)
+          stagedPhys.foreach { sp =>
+            require(stagedSchema.fieldNames.toSeq
+                .map(c => ColumnMapping.physName(evolved, c)) == sp,
+              "a concurrent DROP/re-ADD moved this stream's columns — restart " +
+                "the streaming query to re-pin the mapping")
+          }
+          // a caller that did NOT declare its staged names keeps the old
+          // protection: its files carry logical names, unsound once mapped
+          if (stagedPhys.isEmpty)
+            prior.foreach(requireUnmapped(_, "the DSv2 streaming append"))
+          Some(commit(s, root, appended(head, opTag, staged, meta)
+            .copy(schema = Some(evolved))))
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Replace the table content with `df`. Old snapshots stay readable
@@ -1853,8 +1830,7 @@ object TxnTable {
   def overwrite(s: SparkSession, root: String, df: DataFrame,
                 statsCols: Seq[String] = Nil,
                 bloomCols: Seq[String] = Nil): Snapshot = {
-    val prior = latest(s, root)
-    val trs = prior.map(_.transforms).getOrElse(Nil)
+    val head = latest(s, root).getOrElse(EmptyHead)
     // an overwrite REPLACES the table's content and its column-mapping
     // history with it: every new file is written under `df`'s own names
     // (they become the fresh physical names), and no old file survives
@@ -1862,11 +1838,11 @@ object TxnTable {
     // under their own recorded schemas
     ColumnMapping.requireNoReserved(df.schema)
     enforceConstraints(s, root, df, "overwrite")
-    val staged = stage(s, root, df, trs)
-    val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, statsCols, bloomCols)
-    commit(s, root, prior.map(_.version).getOrElse(0L) + 1, "overwrite", staged,
-      mergeStats(stagedStats, transformStats(staged, trs)), statsCols,
-      Some(df.schema), stagedBlooms, bloomCols, transforms = trs)
+    val staged = stage(s, root, df, head.transforms)
+    val (st, bl) = stagedMeta(s, root, staged, statsCols, bloomCols,
+      head.transforms)
+    commit(s, root, Snapshot(head.version + 1, "overwrite", staged, st,
+      statsCols, Some(df.schema), bl, bloomCols, transforms = head.transforms))
   }
 
   /** Record (or evolve to) a hidden-partitioning [[Transform]] spec on
@@ -1887,9 +1863,8 @@ object TxnTable {
     // transforms address file contents: record the PHYSICAL source name
     val trsP = cur.schema.fold(transforms)(sc =>
       transforms.map(t => t.copy(src = ColumnMapping.physName(sc, t.src))))
-    commit(s, root, cur.version + 1, "set-transforms", cur.files, cur.stats,
-      cur.statsCols, cur.schema, cur.blooms, cur.bloomCols,
-      cur.deletes, cur.deleteCols, trsP, cur.rowCounts)
+    commit(s, root, cur.copy(version = cur.version + 1, op = "set-transforms",
+      transforms = trsP))
   }
 
   // ---------------------------------------------------------------------
@@ -1940,14 +1915,14 @@ object TxnTable {
     val mapped = ColumnMapping.hasMapping(evolved)
     val staged = stage(s, root,
       if (mapped) ColumnMapping.toPhysical(df, evolved) else df, cur.transforms)
-    val (st, bl) = fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
+    val (st, bl) = stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols,
+      cur.transforms)
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val text = serializeManifest("staged-append", staged,
-      mergeStats(st, transformStats(staged, cur.transforms)), cur.statsCols,
-      Some(if (mapped) evolved else df.schema), bl, cur.bloomCols, Nil, Nil,
-      cur.transforms,
-      System.currentTimeMillis(),
-      completeCounts(s, root, staged, Map.empty))
+    val text = serializeManifest(Snapshot(0L, "staged-append", staged, st,
+      cur.statsCols, Some(if (mapped) evolved else df.schema), bl,
+      cur.bloomCols, Some(System.currentTimeMillis()),
+      transforms = cur.transforms,
+      rowCounts = completeCounts(s, root, staged, Map.empty)))
     val f = fs(s, root)
     val out = f.create(stagedPath(root, id), false)
     try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -1994,13 +1969,9 @@ object TxnTable {
     * (bounded optimistic retries — staged files never restage), then
     * retire the stage marker. Refuses if the table's transform spec
     * changed since staging (the staged fan-out would no longer match). */
-  def publishStaged(s: SparkSession, root: String, id: String,
-                    maxAttempts: Int = 5): Snapshot = {
-    require(maxAttempts >= 1, "need at least one attempt")
+  def publishStaged(s: SparkSession, root: String, id: String): Snapshot = {
     val stg = stagedSnapshot(s, root, id)
-    var attempt = 0
-    var out: Snapshot = null
-    while (out == null) {
+    val out = retrying(WriterAttempts) {
       val head = latestRequired(s, root)
       require(head.transforms == stg.transforms,
         s"partition spec changed since stage '$id' - abort and restage")
@@ -2020,16 +1991,8 @@ object TxnTable {
         }
         Some(target)
       }
-      try out = commit(s, root, head.version + 1, s"publish-staged:$id",
-        head.files ++ stg.files, head.stats ++ stg.stats, head.statsCols,
-        sc, head.blooms ++ stg.blooms, head.bloomCols,
-        head.deletes, head.deleteCols, head.transforms,
-        head.rowCounts ++ stg.rowCounts)
-      catch {
-        case e: TxnConflictException =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw e
-      }
+      commit(s, root, appended(head, s"publish-staged:$id", stg.files,
+        (stg.stats, stg.blooms), stg.rowCounts).copy(schema = sc))
     }
     fs(s, root).delete(stagedPath(root, id), false)
     out
@@ -2177,15 +2140,9 @@ object TxnTable {
     val evolved = evolveM(head.schema, df.schema)
     val staged = stage(s, root, ColumnMapping.toPhysical(df, evolved),
       head.transforms)
-    val (stagedStats, stagedBlooms) =
-      fileMeta(s, root, staged, head.statsCols, head.bloomCols)
-    commit(s, root, head.version + 1, "branch-append",
-      head.files ++ staged,
-      head.stats ++ mergeStats(stagedStats, transformStats(staged, head.transforms)),
-      head.statsCols,
-      Some(evolved),
-      head.blooms ++ stagedBlooms, head.bloomCols,
-      head.deletes, head.deleteCols, head.transforms, head.rowCounts,
+    commit(s, root, appended(head, "branch-append", staged,
+        stagedMeta(s, root, staged, head.statsCols, head.bloomCols,
+          head.transforms)).copy(schema = Some(evolved)),
       branch = Some(name))
   }
 
@@ -2207,9 +2164,7 @@ object TxnTable {
         s"main advanced to v${head.version} since branch '$name' forked at " +
           s"v$fork - diverged; re-cut the branch and replay its commits")
     val bh = branchHead(s, root, name)
-    commit(s, root, head.version + 1, s"fast-forward:$name",
-      bh.files, bh.stats, bh.statsCols, bh.schema, bh.blooms, bh.bloomCols,
-      bh.deletes, bh.deleteCols, bh.transforms, bh.rowCounts)
+    commit(s, root, bh.copy(version = head.version + 1, op = s"fast-forward:$name"))
   }
 
   /** DIVERGENCE RECOVERY — re-apply the branch's own commits onto a
@@ -2234,7 +2189,7 @@ object TxnTable {
     *  - main carries live MoR deletes whose key columns the replayed
     *    schema would widen away (guarded by [[evolve]] itself).
     *
-    * Same optimistic-retry semantics as the writer loops: a lost
+    * Same optimistic retry as every writer ([[retrying]]): a lost
     * commit race re-resolves the new head and re-commits the SAME
     * delta on top of it — no data re-reads, one manifest write per
     * attempt. The branch ref stays for the audit trail; [[dropBranch]]
@@ -2244,9 +2199,7 @@ object TxnTable {
     * (main renamed/dropped since the fork) it composes by frozen
     * PHYSICAL identity ([[composeReplaySchema]]): main's logical names
     * win, drops of branch-written columns refuse. */
-  def replayBranch(s: SparkSession, root: String, name: String,
-                   maxAttempts: Int = 5): Snapshot = {
-    require(maxAttempts >= 1, "need at least one attempt")
+  def replayBranch(s: SparkSession, root: String, name: String): Snapshot = {
     val fork = branchFork(s, root, name)
     val vs = branchVersions(s, root, name)
     if (vs.isEmpty) return latestRequired(s, root) // nothing to replay
@@ -2265,47 +2218,32 @@ object TxnTable {
           s"branch '$name' v$v changed the MoR delete set — replay refuses")
         (cur, acc :+ (cur, cur.files.filterNot(prevSet)))
     }._2
-    var head = latestRequired(s, root)
-    require(head.version > fork,
+    val main = latestRequired(s, root)
+    require(main.version > fork,
       s"main still sits at fork v$fork — use fastForward, not replay")
     val allAdded = chain.flatMap(_._2)
-    val overlap = allAdded.filter(head.files.toSet)
+    val overlap = allAdded.filter(main.files.toSet)
     require(overlap.isEmpty,
       s"main already references ${overlap.size} branch file(s) " +
         s"(e.g. ${overlap.head}) — duplicated replay would double-count rows")
-    chain.foreach { case (bc, added) =>
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        attempt += 1
+    def ofAdded[V](m: Map[String, V], added: Seq[String]): Map[String, V] =
+      added.flatMap(f => m.get(f).map(f -> _)).toMap
+    chain.map { case (bc, added) =>
+      retrying(WriterAttempts) {
+        val head = latestRequired(s, root)
         // re-checked per attempt: a racing writer may have published
         // these very files (e.g. a concurrent replay of the same branch)
         val dup = added.filter(head.files.toSet)
         require(dup.isEmpty,
           s"main now references ${dup.size} branch file(s) (e.g. " +
             s"${dup.head}) — a concurrent replay/fast-forward won the race")
-        try {
-          head = commit(s, root, head.version + 1, s"replay:$name",
-            head.files ++ added,
-            mergeStats(head.stats,
-              added.flatMap(f => bc.stats.get(f).map(f -> _)).toMap),
-            head.statsCols,
-            bc.schema.map(sc => composeReplaySchema(head.schema, sc))
-              .orElse(head.schema),
-            head.blooms ++ added.flatMap(f => bc.blooms.get(f).map(f -> _)).toMap,
-            head.bloomCols,
-            head.deletes, head.deleteCols, head.transforms,
-            head.rowCounts ++ added.flatMap(f => bc.rowCounts.get(f).map(f -> _)).toMap,
-            nullCounts = head.nullCounts)
-          committed = true
-        } catch {
-          case e: TxnConflictException =>
-            if (attempt >= maxAttempts) throw e
-            head = latestRequired(s, root) // lost the race: re-resolve, re-commit
-        }
+        commit(s, root, appended(head, s"replay:$name", added,
+            (ofAdded(bc.stats, added), ofAdded(bc.blooms, added)),
+            ofAdded(bc.rowCounts, added))
+          .copy(schema = bc.schema.map(sc => composeReplaySchema(head.schema, sc))
+            .orElse(head.schema)))
       }
-    }
-    head
+    }.last
   }
 
   /** Schema composition for [[replayBranch]] when either line carries a
@@ -2403,11 +2341,8 @@ object TxnTable {
     // still hold one transform value for path-derived pruning to hold)
     val staged = stage(s, root, toPhys(arranged, cur), cur.transforms)
     // rewritten files get fresh stats/blooms under the table's columns
-    val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
-    commit(s, root, cur.version + 1, "compact", staged,
-      mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-      cur.statsCols, cur.schema.orElse(Some(arranged.schema)),
-      stagedBlooms, cur.bloomCols, transforms = cur.transforms)
+    commit(s, root, fullRewrite(s, root, cur, "compact", staged, cur.statsCols,
+      cur.schema.orElse(Some(arranged.schema))))
   }
 
   /** PARTIAL (scoped) compaction — the 100 TB form of [[compactTxn]]:
@@ -2510,19 +2445,9 @@ object TxnTable {
     // files simply lack the entries (absent metadata never skips)
     val statsCols =
       (cur.statsCols ++ zorderDims.map(physCol(cur, _))).distinct
-    val (stagedStats, stagedBlooms) =
-      fileMeta(s, root, staged, statsCols, cur.bloomCols)
-    commit(s, root, cur.version + 1, "compact", carry ++ staged,
-      cur.stats.view.filterKeys(carrySet).toMap ++
-        mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-      statsCols, cur.schema,
-      cur.blooms.view.filterKeys(carrySet).toMap ++ stagedBlooms,
-      cur.bloomCols,
-      deletes = cur.deletes, deleteCols = cur.deleteCols,
-      transforms = cur.transforms,
-      rowCounts = cur.rowCounts.view.filterKeys(carrySet).toMap,
-      nullCounts = cur.nullCounts.view.filterKeys(carrySet).toMap,
-      delProv = cur.delProv)
+    commit(s, root, partialRewrite(cur, "compact", carry, staged,
+        stagedMeta(s, root, staged, statsCols, cur.bloomCols, cur.transforms))
+      .copy(statsCols = statsCols))
   }
 
   /** OPTIMIZE ZORDER: transactional reclustering on TWO dimensions at
@@ -2566,11 +2491,8 @@ object TxnTable {
     val staged = stage(s, root, toPhys(arranged, cur), cur.transforms)
     // the z-dims join the recorded stats columns under their PHYSICAL names
     val statsCols = (cur.statsCols ++ dims.map(physCol(cur, _))).distinct
-    val (stagedStats, stagedBlooms) = fileMeta(s, root, staged, statsCols, cur.bloomCols)
-    commit(s, root, cur.version + 1, "zorder", staged,
-      mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-      statsCols, cur.schema.orElse(Some(arranged.schema)),
-      stagedBlooms, cur.bloomCols, transforms = cur.transforms)
+    commit(s, root, fullRewrite(s, root, cur, "zorder", staged, statsCols,
+      cur.schema.orElse(Some(arranged.schema))))
   }
 
   /** Targeted MERGE (upsert): apply `changes` by `keyCols` — a change
@@ -2642,8 +2564,8 @@ object TxnTable {
             metaRepresentable(df.schema(k).dataType))
         val staged = stage(s, root, df)
         val (st, bl) = fileMeta(s, root, staged, keyStats, Nil)
-        Some(commit(s, root, 1L, opTag, staged, st, keyStats,
-          Some(df.schema), bl))
+        Some(commit(s, root, Snapshot(1L, opTag, staged, st, keyStats,
+          Some(df.schema), bl)))
       case Some(cur) =>
         import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
         // EVERY merge key that is a recorded stats column contributes a
@@ -2725,15 +2647,9 @@ object TxnTable {
       if (rewritten.isEmpty) Seq.empty[String]
       else stage(s, root, ColumnMapping.toPhysical(rewritten, evolved),
         cur.transforms)
-    val (stagedStats, stagedBlooms) =
-      fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
-    commit(s, root, cur.version + 1, opTag, carry ++ staged,
-      cur.stats.view.filterKeys(carry.toSet).toMap ++
-        mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-      cur.statsCols,
-      Some(evolved),
-      cur.blooms.view.filterKeys(carry.toSet).toMap ++ stagedBlooms,
-      cur.bloomCols, transforms = cur.transforms)
+    commit(s, root, partialRewrite(cur, opTag, carry, staged,
+        stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms))
+      .copy(schema = Some(evolved)))
   }
 
   /** Raw-file code paths (pruned reads, copy-on-write rewrites) bypass
@@ -3413,15 +3329,8 @@ object TxnTable {
         if (rest.isEmpty) Seq.empty[String]
         else stage(s, root, toPhys(rest, cur), cur.transforms)
       }
-    val (stagedStats, stagedBlooms) =
-      fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
-    commit(s, root, cur.version + 1, "delete", carry ++ staged,
-      cur.stats.view.filterKeys(carry.toSet).toMap ++
-        mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-      cur.statsCols,
-      cur.schema,
-      cur.blooms.view.filterKeys(carry.toSet).toMap ++ stagedBlooms,
-      cur.bloomCols, transforms = cur.transforms)
+    commit(s, root, partialRewrite(cur, "delete", carry, staged,
+      stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms)))
   }
 
   /** Commit a ROW-LEVEL-OPERATION result (SQL UPDATE / MERGE INTO /
@@ -3542,11 +3451,16 @@ object TxnTable {
       s"row-level $opTag planned against v$expected but $root is at " +
         s"v$cur — $what; re-run the statement (pure-append and disjoint-file " +
         s"concurrency can rebase under $RowLevelIsolationKey=snapshot)" +
-        refusal.fold("")(r => s"; rebase refused because $r"))
+        refusal.fold("")(r => s"; rebase refused because $r"), retry = false)
+
+  /** A row-level commit's attempt budget: a lost slot race re-validates
+    * against the new head only where a rebase is allowed at all. */
+  private def rowLevelAttempts(rebase: Boolean): Int =
+    if (rebase) RowLevelAttempts else 1
 
   private[graft] def commitReplace(s: SparkSession, root: String,
       expectedVersion: Long, scanned: Set[String], staged: Seq[String],
-      opTag: String, maxAttempts: Int = 12): Snapshot = {
+      opTag: String): Snapshot = {
     val rebase = rowLevelIsolation(s, root) == "snapshot"
     // the PLANNED snapshot is only needed for the snapshot-isolation
     // rebase check; under the serializable default the head must still
@@ -3562,11 +3476,8 @@ object TxnTable {
     // pins them) — computed ONCE, so a lost slot race retries at
     // manifest-write speed instead of re-running a Spark job while the
     // appenders it is racing keep winning
-    var stagedMeta: Option[(Map[String, Map[String, (Long, Long)]],
-      Map[String, Map[String, Array[Byte]]])] = None
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    var meta: Option[FileMeta] = None
+    retrying(rowLevelAttempts(rebase)) {
       val cur = latestRequired(s, root)
       requireNoMor(cur, s"SQL $opTag (row-level rewrite)")
       // mapped tables are fine here: the row-level write physicalizes its
@@ -3580,26 +3491,11 @@ object TxnTable {
           staleConflict(root, opTag, expectedVersion, cur.version,
             "the rewrite was computed from a stale snapshot", refusal)
       }
-      val (stagedStats, stagedBlooms) = stagedMeta.getOrElse {
-        val m = fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
-        stagedMeta = Some(m); m
-      }
-      val carry = cur.files.filterNot(scanned)
-      try {
-        return commit(s, root, cur.version + 1, opTag, carry ++ staged,
-          cur.stats.view.filterKeys(carry.toSet).toMap ++
-            mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-          cur.statsCols,
-          cur.schema,
-          cur.blooms.view.filterKeys(carry.toSet).toMap ++ stagedBlooms,
-          cur.bloomCols, transforms = cur.transforms)
-      } catch {
-        // lost the slot race mid-rebase: re-validate against the new head
-        case e: TxnConflictException =>
-          if (!rebase || attempt >= maxAttempts) throw e
-      }
+      if (meta.isEmpty) meta = Some(stagedMeta(s, root, staged, cur.statsCols,
+        cur.bloomCols, cur.transforms))
+      commit(s, root, partialRewrite(cur, opTag, cur.files.filterNot(scanned),
+        staged, meta.get))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Commit a POSITION-DELTA result (SQL UPDATE / MERGE / DELETE
@@ -3628,8 +3524,7 @@ object TxnTable {
     * `compactDeletes` first. */
   private[graft] def commitDelta(s: SparkSession, root: String,
       expectedVersion: Long, addedData: Seq[String],
-      posDeletes: Seq[String], opTag: String,
-      maxAttempts: Int = 12): Option[Snapshot] = {
+      posDeletes: Seq[String], opTag: String): Option[Snapshot] = {
     if (addedData.isEmpty && posDeletes.isEmpty) return None // matched 0 rows
     val rebase = rowLevelIsolation(s, root) == "snapshot"
     // planned loaded lazily and staged metadata memoized across slot-
@@ -3661,11 +3556,8 @@ object TxnTable {
         planned.files.filter(f => sm.exists(_.covers(f))).toSet
       }
     }
-    var stagedMeta: Option[(Map[String, Map[String, (Long, Long)]],
-      Map[String, Map[String, Array[Byte]]])] = None
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    var meta: Option[FileMeta] = None
+    retrying(rowLevelAttempts(rebase)) {
       val cur = latestRequired(s, root)
       require(cur.deletes.isEmpty || isPosShape(cur),
         s"SQL $opTag (merge-on-read): snapshot v${cur.version} carries " +
@@ -3680,26 +3572,11 @@ object TxnTable {
             "the tombstone positions were computed from a stale snapshot",
             refusal)
       }
-      val (stagedStats, stagedBlooms) = stagedMeta.getOrElse {
-        val m = fileMeta(s, root, addedData, cur.statsCols, cur.bloomCols)
-        stagedMeta = Some(m); m
-      }
-      try {
-        return Some(commit(s, root, cur.version + 1, opTag,
-          cur.files ++ addedData,
-          cur.stats ++ mergeStats(stagedStats, transformStats(addedData, cur.transforms)),
-          cur.statsCols, cur.schema,
-          cur.blooms ++ stagedBlooms, cur.bloomCols,
-          cur.deletes ++ posDeletes, PosDeleteCols, cur.transforms,
-          cur.rowCounts, nullCounts = cur.nullCounts,
-          delProv = cur.delProv))
-      } catch {
-        // lost the slot race mid-rebase: re-validate against the new head
-        case e: TxnConflictException =>
-          if (!rebase || attempt >= maxAttempts) throw e
-      }
+      if (meta.isEmpty) meta = Some(stagedMeta(s, root, addedData,
+        cur.statsCols, cur.bloomCols, cur.transforms))
+      Some(commit(s, root, appended(cur, opTag, addedData, meta.get)
+        .copy(deletes = cur.deletes ++ posDeletes, deleteCols = PosDeleteCols)))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Live position-delete entries of `snap` restricted to `files`, as
@@ -3762,11 +3639,10 @@ object TxnTable {
     * out. Same refuse/fold semantics as the single-column form — the
     * key column LIST is fixed at first use. */
   def deleteKeysMor(s: SparkSession, root: String, keyCols: Seq[String],
-                    keys: DataFrame, maxAttempts: Int = 5): Snapshot = {
+                    keys: DataFrame): Snapshot = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
     require(keyCols.distinct == keyCols,
       s"duplicate delete key columns: $keyCols")
-    require(maxAttempts >= 1, "need at least one attempt")
     import org.apache.spark.sql.functions.col
     // delete-KEY files are not data files: no transform fan-out. Staged
     // ONCE — on a lost commit race they re-commit unchanged on the new
@@ -3779,13 +3655,9 @@ object TxnTable {
     // A racing MoR delete merges (both key files live); a racing
     // compactDeletes re-keys the table, so the key-list check re-runs
     // against every new head.
-    var staged: Seq[String] = null
-    var stagedKeyColsP: Seq[String] = null
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = latest(s, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $root"))
+    var staged: Option[(Seq[String], Seq[String])] = None // (files, key cols)
+    retrying(WriterAttempts) {
+      val cur = latestRequired(s, root)
       cur.schema.foreach(sc => keyCols.foreach(c =>
         require(ColumnMapping.logicalView(sc).fieldNames.contains(c),
           s"delete column '$c' is not a table column")))
@@ -3795,60 +3667,73 @@ object TxnTable {
       require(cur.deleteCols.isEmpty || cur.deleteCols == keyColsP,
         s"table already carries MoR deletes on '${cur.deleteCols.mkString(",")}'" +
           "; one equality-delete key per table")
-      if (staged == null) {
-        staged = stage(s, root,
-          keys.select(keyCols.map(col): _*).distinct().toDF(keyColsP: _*))
-        stagedKeyColsP = keyColsP
-      }
+      if (staged.isEmpty) staged = Some((stage(s, root,
+        keys.select(keyCols.map(col): _*).distinct().toDF(keyColsP: _*)), keyColsP))
+      val (files, stagedKeyColsP) = staged.get
       require(keyColsP == stagedKeyColsP,
         "concurrent RENAME/DROP COLUMN moved the delete key between stage " +
           "and commit — re-run the delete")
-      try {
-        return commit(s, root, cur.version + 1, "delete-mor", cur.files,
-          cur.stats, cur.statsCols, cur.schema, cur.blooms, cur.bloomCols,
-          cur.deletes ++ staged, keyColsP, cur.transforms,
-          delProv = cur.delProv)
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => // re-resolve
-      }
+      commit(s, root, cur.copy(version = cur.version + 1, op = "delete-mor",
+        deletes = cur.deletes ++ files, deleteCols = keyColsP))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Fold live merge-on-read delete files into the data: ONE rewrite of
     * the merged table, after which the snapshot carries no delete files
     * and every raw-file reader works again — the compaction bill CoW
     * would have paid per delete, paid once per maintenance window. */
-  def compactDeletes(s: SparkSession, root: String,
-                     maxAttempts: Int = 5): Snapshot = {
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = latest(s, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $root"))
-      if (cur.deletes.isEmpty) return cur
-      // the anti-joined view IS the new content — resolved against THIS
-      // head, so unlike append/delete-mor retries the staged result is
-      // STALE after a lost race (a racing append's rows would be
-      // silently dropped by re-committing it): every attempt re-reads
-      // and re-stages from the new head. The price of losing a race
-      // here is a full rewrite — which is the operation's own cost, and
-      // why maintenance compaction runs in a quiet window.
-      val merged = readAsOf(s, root, cur.version)
-      val staged = stage(s, root, toPhys(merged, cur), cur.transforms)
-      val (stagedStats, stagedBlooms) =
-        fileMeta(s, root, staged, cur.statsCols, cur.bloomCols)
-      try {
-        return commit(s, root, cur.version + 1, "compact-deletes", staged,
-          mergeStats(stagedStats, transformStats(staged, cur.transforms)),
-          cur.statsCols, cur.schema.orElse(Some(merged.schema)),
-          stagedBlooms, cur.bloomCols, transforms = cur.transforms)
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => // re-resolve
+  def compactDeletes(s: SparkSession, root: String): Snapshot =
+    retrying(WriterAttempts) {
+      val cur = latestRequired(s, root)
+      if (cur.deletes.isEmpty) cur
+      else withStagingDir(s, root) { rel =>
+        // the anti-joined view IS the new content — resolved against
+        // THIS head, so unlike append/delete-mor retries the staged
+        // result is STALE after a lost race (a racing append's rows
+        // would be silently dropped by re-committing it): every attempt
+        // re-reads and re-stages from the new head, and a lost
+        // attempt's rewrite is deleted with its staging dir. The price
+        // of losing a race here is a full rewrite — which is the
+        // operation's own cost, and why maintenance compaction runs in
+        // a quiet window.
+        val merged = readAsOf(s, root, cur.version)
+        val staged = stage(s, root, toPhys(merged, cur), cur.transforms, rel)
+        commit(s, root, fullRewrite(s, root, cur, "compact-deletes", staged,
+          cur.statsCols, cur.schema.orElse(Some(merged.schema))))
       }
     }
-    throw new IllegalStateException("unreachable")
+
+  /** Run one staging attempt in a fresh `data/<uuid>` dir — `body` gets
+    * its root-relative name and commits. If the attempt fails (a lost
+    * commit race included) the dir is deleted with everything staged in
+    * it: on a lost race its content is stale against the new head, on
+    * any other failure it would leak until [[orphanFiles]]. */
+  private[sinks] def withStagingDir[A](s: SparkSession, root: String)(
+      body: String => A): A = {
+    val rel = newStagingDir()
+    try body(rel)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        fs(s, root).delete(new Path(s"${root.stripSuffix("/")}/$rel"), true)
+        throw e
+    }
+  }
+
+  /** Write `df` under staging dir `rel` as delete files: parquet parts
+    * renamed `del-*`, the prefix that marks the sidecar shape in dir
+    * listings (the delta writer's own staging uses it too). */
+  private def stageDeleteFiles(s: SparkSession, root: String, rel: String,
+      df: DataFrame, options: Map[String, String] = Map.empty): Seq[String] = {
+    val dir = new Path(s"${root.stripSuffix("/")}/$rel")
+    val f = fs(s, root)
+    df.write.mode("errorifexists").options(options).parquet(dir.toString)
+    f.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val to = new Path(dir, s"del-${st.getPath.getName}")
+        require(f.rename(st.getPath, to), s"could not stage delete file ${st.getPath}")
+        s"$rel/${to.getName}"
+      }
   }
 
   /** Rewrite the POSITION-DELETE SIDECARS only — never a data file
@@ -3869,7 +3754,7 @@ object TxnTable {
     * counts untouched; visible content is unchanged, so the commit
     * classifies as maintenance (`compact-pos-deletes`) and the change
     * feed emits nothing. Retries on a lost commit race by re-resolving
-    * against the new head ([[compactDeletes]]'s loop — a consolidation
+    * against the new head ([[retrying]] — a consolidation
     * staged against a stale snapshot could resurrect a racing
     * statement's deletes). No-op on a tombstone-free table; refuses
     * equality shape (those are key-scale already — fold or keep). */
@@ -3884,107 +3769,76 @@ object TxnTable {
     * task's sidecar read file-sized on a consolidated sidecar. */
   val CompactBlockBytesKey = "spark.graft.posDeletes.compactBlockBytes"
 
-  def compactPosDeletes(s: SparkSession, root: String, targetFiles: Int = 0,
-                        maxAttempts: Int = 5): Snapshot = {
+  def compactPosDeletes(s: SparkSession, root: String,
+                        targetFiles: Int = 0): Snapshot = {
     require(targetFiles >= 0,
       s"targetFiles must be positive (or 0 = auto-size), got $targetFiles")
-    require(maxAttempts >= 1, "need at least one attempt")
     import org.apache.spark.sql.functions.{broadcast, col}
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    retrying(WriterAttempts) {
       val cur = latestRequired(s, root)
-      if (cur.deletes.isEmpty) return cur
-      require(isPosShape(cur),
-        s"snapshot v${cur.version} carries EQUALITY-shape delete files " +
-          s"on '${cur.deleteCols.mkString(",")}' — compactPosDeletes " +
-          "consolidates position sidecars; fold equality deletes with " +
-          "compactDeletes")
-      val base = root.stripSuffix("/")
-      // auto-size from the live entry count (footer metas — cached,
-      // no data pages) so per-sidecar coverage stays bounded however
-      // large the debt: maintenance must never produce a sidecar whose
-      // footer bounds force every masked task through the whole set
-      val nFiles =
-        if (targetFiles > 0) targetFiles
-        else {
-          val entries = graft.sources.GraftSidecars
-            .metas(s, base, cur.deletes).map(_.rows).sum
-          val budget = s.conf.getOption(CompactEntriesPerSidecarKey)
-            .map(_.toLong).getOrElse(4000000L)
-          require(budget > 0, s"$CompactEntriesPerSidecarKey must be positive")
-          math.max(1L, (entries + budget - 1) / budget).toInt
-        }
-      // live entries only: semi-join against the snapshot's file list
-      // (driver-held anyway; broadcast — file-count-scale)
-      val liveDf = s.createDataFrame(
-        s.sparkContext.parallelize(cur.files.map(org.apache.spark.sql.Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_live_file",
-            org.apache.spark.sql.types.StringType, nullable = false))))
-      val consolidated = s.read
-        .parquet(cur.deletes.map(f => s"$base/$f"): _*)
-        .select(col("_file"), col("_pos")).distinct()
-        .join(broadcast(liveDf), col("_file") === col("_live_file"),
-          "left_semi")
-        .repartitionByRange(nFiles, col("_file"), col("_pos"))
-        .sortWithinPartitions(col("_file"), col("_pos"))
-      val rel = s"data/${java.util.UUID.randomUUID().toString.take(8)}"
-      val dir = s"$base/$rel"
-      val f = fs(s, root)
-      try {
-        val staged: Seq[String] =
-          if (consolidated.isEmpty) Nil // every entry was dangling
+      if (cur.deletes.isEmpty) cur
+      else {
+        require(isPosShape(cur),
+          s"snapshot v${cur.version} carries EQUALITY-shape delete files " +
+            s"on '${cur.deleteCols.mkString(",")}' — compactPosDeletes " +
+            "consolidates position sidecars; fold equality deletes with " +
+            "compactDeletes")
+        val base = root.stripSuffix("/")
+        // auto-size from the live entry count (footer metas — cached,
+        // no data pages) so per-sidecar coverage stays bounded however
+        // large the debt: maintenance must never produce a sidecar whose
+        // footer bounds force every masked task through the whole set
+        val nFiles =
+          if (targetFiles > 0) targetFiles
           else {
-            // SMALL row groups (1 MiB buffered): the scan routes each
-            // masked task to the row-group runs whose footer `_file`
-            // bounds admit its file, so tight groups — a handful of
-            // data files each — are what keep a consolidated sidecar's
-            // per-task read file-sized, not debt-sized
-            val blockBytes = s.conf.getOption(CompactBlockBytesKey)
-              .map(_.toLong).getOrElse(1L << 20)
-            consolidated.write.mode("errorifexists")
-              .option("parquet.block.size", blockBytes.toString)
-              .parquet(dir)
-            // the del- prefix marks the sidecar shape in dir listings,
-            // as the delta writer's own staging does
-            f.listStatus(new Path(dir)).toSeq
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-              .map { st =>
-                val to = new Path(dir, s"del-${st.getPath.getName}")
-                require(f.rename(st.getPath, to),
-                  s"could not stage sidecar ${st.getPath}")
-                s"$rel/${to.getName}"
-              }
+            val entries = graft.sources.GraftSidecars
+              .metas(s, base, cur.deletes).map(_.rows).sum
+            val budget = s.conf.getOption(CompactEntriesPerSidecarKey)
+              .map(_.toLong).getOrElse(4000000L)
+            require(budget > 0, s"$CompactEntriesPerSidecarKey must be positive")
+            math.max(1L, (entries + budget - 1) / budget).toInt
           }
-        return commit(s, root, cur.version + 1, "compact-pos-deletes",
-          cur.files, cur.stats, cur.statsCols, cur.schema,
-          cur.blooms, cur.bloomCols,
-          deletes = staged,
-          deleteCols = if (staged.isEmpty) Nil else PosDeleteCols,
-          transforms = cur.transforms,
-          rowCounts = cur.rowCounts, nullCounts = cur.nullCounts,
-          // provenance: each consolidated sidecar records the delete
-          // files it folded — "the delete set was preserved" becomes a
-          // manifest fact, so a row-level statement planned against
-          // the pre-consolidation snapshot can REBASE over this
-          // maintenance commit instead of refusing on content
-          // equality it cannot re-derive ([[admissibleUnderSnapshot]])
-          delProv = staged.map(_ -> cur.deletes).toMap)
-      } catch {
-        // un-stage this attempt's WHOLE output dir (parquet files,
-        // _SUCCESS marker, the dir itself) — on a lost race its
-        // content is stale against the new head; on any other failure
-        // it would leak until orphan_files
-        case e: TxnConflictException =>
-          f.delete(new Path(dir), true)
-          if (attempt >= maxAttempts) throw e
-        case scala.util.control.NonFatal(e) =>
-          f.delete(new Path(dir), true)
-          throw e
+        // live entries only: semi-join against the snapshot's file list
+        // (driver-held anyway; broadcast — file-count-scale)
+        val liveDf = s.createDataFrame(
+          s.sparkContext.parallelize(cur.files.map(org.apache.spark.sql.Row(_)), 1),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("_live_file",
+              org.apache.spark.sql.types.StringType, nullable = false))))
+        val consolidated = s.read
+          .parquet(cur.deletes.map(f => s"$base/$f"): _*)
+          .select(col("_file"), col("_pos")).distinct()
+          .join(broadcast(liveDf), col("_file") === col("_live_file"),
+            "left_semi")
+          .repartitionByRange(nFiles, col("_file"), col("_pos"))
+          .sortWithinPartitions(col("_file"), col("_pos"))
+        withStagingDir(s, root) { rel =>
+          val staged: Seq[String] =
+            if (consolidated.isEmpty) Nil // every entry was dangling
+            else {
+              // SMALL row groups (1 MiB buffered): the scan routes each
+              // masked task to the row-group runs whose footer `_file`
+              // bounds admit its file, so tight groups — a handful of
+              // data files each — are what keep a consolidated sidecar's
+              // per-task read file-sized, not debt-sized
+              val blockBytes = s.conf.getOption(CompactBlockBytesKey)
+                .map(_.toLong).getOrElse(1L << 20)
+              stageDeleteFiles(s, root, rel, consolidated,
+                Map("parquet.block.size" -> blockBytes.toString))
+            }
+          commit(s, root, cur.copy(version = cur.version + 1,
+            op = "compact-pos-deletes", deletes = staged,
+            deleteCols = if (staged.isEmpty) Nil else PosDeleteCols,
+            // provenance: each consolidated sidecar records the delete
+            // files it folded — "the delete set was preserved" becomes a
+            // manifest fact, so a row-level statement planned against
+            // the pre-consolidation snapshot can REBASE over this
+            // maintenance commit instead of refusing on content
+            // equality it cannot re-derive ([[admissibleUnderSnapshot]])
+            delProv = staged.map(_ -> cur.deletes).toMap))
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The EQUALITY-shape sibling of [[compactPosDeletes]]: merge the
@@ -4000,57 +3854,31 @@ object TxnTable {
     * empty. Refuses position shape (that is [[compactPosDeletes]]);
     * no-op on a delete-free table. Same re-resolve-on-lost-race loop
     * as its sibling. */
-  def compactDeleteKeys(s: SparkSession, root: String, targetFiles: Int = 1,
-                        maxAttempts: Int = 5): Snapshot = {
+  def compactDeleteKeys(s: SparkSession, root: String,
+                        targetFiles: Int = 1): Snapshot = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    require(maxAttempts >= 1, "need at least one attempt")
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    retrying(WriterAttempts) {
       val cur = latestRequired(s, root)
-      if (cur.deletes.isEmpty) return cur
-      require(!isPosShape(cur),
-        s"snapshot v${cur.version} carries POSITION-shape delete files — " +
-          "compactDeleteKeys consolidates equality delete KEYS; use " +
-          "compactPosDeletes for position sidecars")
-      val base = root.stripSuffix("/")
-      val consolidated = s.read
-        .parquet(cur.deletes.map(f => s"$base/$f"): _*)
-        .select(cur.deleteCols.map(col): _*).distinct()
-        .repartitionByRange(targetFiles, cur.deleteCols.map(col): _*)
-        .sortWithinPartitions(cur.deleteCols.map(col): _*)
-      val rel = s"data/${java.util.UUID.randomUUID().toString.take(8)}"
-      val dir = s"$base/$rel"
-      val f = fs(s, root)
-      try {
-        consolidated.write.mode("errorifexists").parquet(dir)
-        val staged = f.listStatus(new Path(dir)).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val to = new Path(dir, s"del-${st.getPath.getName}")
-            require(f.rename(st.getPath, to),
-              s"could not stage delete-key file ${st.getPath}")
-            s"$rel/${to.getName}"
-          }
-        return commit(s, root, cur.version + 1, "compact-delete-keys",
-          cur.files, cur.stats, cur.statsCols, cur.schema,
-          cur.blooms, cur.bloomCols,
-          deletes = staged, deleteCols = cur.deleteCols,
-          transforms = cur.transforms,
-          rowCounts = cur.rowCounts, nullCounts = cur.nullCounts)
-      } catch {
-        // whole staging dir, not just the listed parquet — leave no
-        // _SUCCESS marker or empty dir behind (same as its sibling)
-        case e: TxnConflictException =>
-          f.delete(new Path(dir), true)
-          if (attempt >= maxAttempts) throw e
-        case scala.util.control.NonFatal(e) =>
-          f.delete(new Path(dir), true)
-          throw e
+      if (cur.deletes.isEmpty) cur
+      else {
+        require(!isPosShape(cur),
+          s"snapshot v${cur.version} carries POSITION-shape delete files — " +
+            "compactDeleteKeys consolidates equality delete KEYS; use " +
+            "compactPosDeletes for position sidecars")
+        val base = root.stripSuffix("/")
+        val consolidated = s.read
+          .parquet(cur.deletes.map(f => s"$base/$f"): _*)
+          .select(cur.deleteCols.map(col): _*).distinct()
+          .repartitionByRange(targetFiles, cur.deleteCols.map(col): _*)
+          .sortWithinPartitions(cur.deleteCols.map(col): _*)
+        withStagingDir(s, root) { rel =>
+          commit(s, root, cur.copy(version = cur.version + 1,
+            op = "compact-delete-keys",
+            deletes = stageDeleteFiles(s, root, rel, consolidated)))
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   // ---------------------------------------------------------------------
@@ -4389,10 +4217,8 @@ object TxnTable {
     * snapshot with dangling file references. */
   def restore(s: SparkSession, root: String, toVersion: Long): Snapshot = {
     val snap = snapshot(s, root, toVersion)
-    commit(s, root, nextVersion(s, root), s"restore:$toVersion",
-      snap.files, snap.stats, snap.statsCols, snap.schema,
-      snap.blooms, snap.bloomCols, snap.deletes, snap.deleteCols,
-      snap.transforms)
+    commit(s, root, snap.copy(version = nextVersion(s, root),
+      op = s"restore:$toVersion"))
   }
 
   /** Retention: keep the newest `retainVersions` manifests, drop older

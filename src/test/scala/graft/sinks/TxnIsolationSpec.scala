@@ -337,6 +337,43 @@ class TxnIsolationSpec extends AnyFunSuite {
     assert(err.getMessage.contains("rebase refused"))
   }
 
+  test("consolidation provenance survives ordinary commits: an append, " +
+      "appendWithRetry or alterTable between compactPosDeletes and the " +
+      "statement leaves the rebase admissible") {
+    val more = spark.range(201, 206).toDF("id").withColumn("v", col("id") * 10L)
+    val writers: Seq[(String, String => Any, Set[Long])] = Seq(
+      ("append", TxnTable.append(spark, _, more), (201L to 205L).toSet),
+      ("appendWithRetry", TxnTable.appendWithRetry(spark, _, more),
+        (201L to 205L).toSet),
+      ("alterTable", TxnTable.alterTable(spark, _,
+        newStatsCols = Some(Seq("id"))), Set.empty[Long]))
+    writers.zipWithIndex.foreach { case ((what, write, added), i) =>
+      val name = s"iso9$i"
+      val root = table(name, mor = true)
+      TxnTable.setTableProperty(spark, root, TxnTable.RowLevelIsolationKey,
+        "snapshot")
+      spark.sql(s"DELETE FROM $cat.db.$name WHERE id = 5") // sidecar S1
+      val planned = TxnTable.latest(spark, root).get
+      val (fileA, deadId) = firstRow(root, planned)
+      val tomb = stageManual(root,
+        spark.createDataFrame(java.util.List.of(Row(fileA, 0L)),
+          GraftMetaCols.posDeleteSchema),
+        s"data/manual/del-$name.parquet")
+      val consolidated = TxnTable.compactPosDeletes(spark, root)
+      assert(consolidated.delProv.nonEmpty)
+      write(root) // the ordinary commit between consolidation and statement
+      val head = TxnTable.latest(spark, root).get
+      assert(head.version === consolidated.version + 1)
+      assert(head.delProv === consolidated.delProv,
+        s"$what erased the consolidation provenance")
+      val out = TxnTable.commitDelta(spark, root, planned.version, Nil,
+        Seq(tomb), "delete-mor")
+      assert(out.exists(_.delProv === consolidated.delProv),
+        s"the statement did not rebase over $what")
+      assert(ids(root) === ((1L to 200L).toSet ++ added - 5L - deadId))
+    }
+  }
+
   test("the property validates and round-trips; unset restores the " +
       "serializable default") {
     val root = table("iso4", mor = false)

@@ -62,7 +62,7 @@ class TxnTableSpec extends AnyFunSuite {
     // our writer, still believing latest=v1, stages then tries v2 — the
     // create-no-overwrite slot must reject it
     val ex = intercept[TxnTable.TxnConflictException] {
-      TxnTable.commit(spark, root, 2L, "append", Seq.empty)
+      TxnTable.commit(spark, root, TxnTable.Snapshot(2L, "append", Seq.empty))
     }
     assert(ex.getMessage.contains("version 2"))
     // the loser's failed commit must not have corrupted the winner's
@@ -479,5 +479,73 @@ class TxnTableSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/data/orphan-stage")))
+  }
+
+  test("retrying: N-1 conflicts then a success returns the success; " +
+      "N conflicts rethrow the Nth") {
+    var runs = 0
+    val out = TxnTable.retrying(3) {
+      runs += 1
+      if (runs < 3) throw new TxnTable.TxnConflictException(s"conflict $runs")
+      "done"
+    }
+    assert(out === "done" && runs === 3)
+    runs = 0
+    val ex = intercept[TxnTable.TxnConflictException] {
+      TxnTable.retrying(3) {
+        runs += 1
+        throw new TxnTable.TxnConflictException(s"conflict $runs")
+      }
+    }
+    assert(runs === 3 && ex.getMessage === "conflict 3")
+  }
+
+  test("retrying: other exceptions and refused rebases are not retried") {
+    var runs = 0
+    intercept[IllegalStateException] {
+      TxnTable.retrying(5) { runs += 1; throw new IllegalStateException("boom") }
+    }
+    assert(runs === 1)
+    runs = 0
+    intercept[TxnTable.TxnConflictException] {
+      TxnTable.retrying(5) {
+        runs += 1
+        throw new TxnTable.TxnConflictException("refused", retry = false)
+      }
+    }
+    assert(runs === 1)
+  }
+
+  test("withStagingDir deletes a failed attempt's dir and keeps the " +
+      "committed attempt's") {
+    val root = freshRoot()
+    TxnTable.overwrite(spark, root, df(1))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(rel: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$root/$rel"))
+    val dirs = scala.collection.mutable.Buffer[String]()
+    // the first attempt stages, then loses the commit race
+    val kept = TxnTable.retrying(2) {
+      TxnTable.withStagingDir(spark, root) { rel =>
+        dirs += rel
+        df(2).write.parquet(s"$root/$rel")
+        assert(exists(rel))
+        if (dirs.size == 1) throw new TxnTable.TxnConflictException("lost race")
+        rel
+      }
+    }
+    assert(dirs.size === 2 && kept === dirs(1))
+    assert(!exists(dirs(0)), "the lost attempt's staging dir leaked")
+    assert(exists(kept))
+    // any other failure cleans up too
+    var failed = ""
+    intercept[IllegalStateException] {
+      TxnTable.withStagingDir(spark, root) { rel =>
+        failed = rel
+        df(3).write.parquet(s"$root/$rel")
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(failed.nonEmpty && !exists(failed))
   }
 }
