@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
   * three timed runs in fixed sorted name order — one-shot timing noise
   * (GC, page cache) can only inflate, so min-of-3 is the stable estimator.
   * Determinism-only global sorts are excluded via
-  * [[graft.queries.Relational.benchVariants]]; the verified (sorted)
+  * [[SparkEntry.benchQueries]]; the verified (sorted)
   * plans still run in graft.Verify. A failing query is reported as `-1`
   * with its error recorded and a nonzero exit code.
   *
@@ -129,8 +129,9 @@ object Bench {
     }.getOrElse(Map.empty)
 
   /** JSON string escape covering every control char — an exception
-    * message with \b or NUL must not break the one-line protocol. */
-  private def jstr(s: String): String = "\"" + s.flatMap {
+    * message with \b or NUL must not break the one-line protocol, and a
+    * tab or CR in oracle SQL must not break Verify's oracle_sql.json. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -140,16 +141,26 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** `body`'s result and its wall time in seconds. */
+  private[graft] def sec[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** `body`'s wall time in seconds. */
+  private[graft] def time(body: => Unit): Double = sec(body)._2
+
+  /** Heap in use after a full GC, in MB. */
+  private[graft] def usedMb(): Long = {
+    System.gc()
+    val r = Runtime.getRuntime
+    (r.totalMemory() - r.freeMemory()) >> 20
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local(
       // The sf10 full-sweep "transient cluster" (SCALE.md r12/r13; named
       // by the r14 instrumented sweep, diag_transient.py): NOT the JIT
       // code cache (peaked 145 of 240 MB) — accumulated STORAGE-memory
@@ -159,30 +170,19 @@ object Bench {
       // prior queries pin the unified pool (81 MemoryStore eviction
       // warnings; q104's cached-RDD rounds OOM'd in the diagnosis run).
       // A 60 s periodic GC keeps occupancy bounded to the live query.
-      .config("spark.cleaner.periodicGC.interval", "60s")
+      "spark.cleaner.periodicGC.interval" -> "60s",
       // Secondary mechanism: Spark's Janino cache holds 100 generated
       // classes — a 135-query sweep evicts every query between passes,
       // so each run1 pays recompiles (diag: janino_n deltas on run1,
       // zero on run2 — the ~2x run1-only bumps on sub-second queries).
       // Sized to hold the whole suite's stages.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+      "spark.sql.codegen.cache.maxEntries" -> "5000")
     spark.sparkContext.setLogLevel("WARN")
     // Dev loop: SPARK_GRAFT_ONLY=q25,q30 times just the named queries
     // (substring match). The driver sets no filter and benches everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val ordered = (SparkEntry.queries ++
-        graft.queries.Relational.benchVariants ++
-        graft.queries.LlmOps.benchVariants ++
-        graft.queries.TextOps.benchVariants ++
-        graft.queries.Sessions.benchVariants ++
-        graft.queries.ZOrder.benchVariants ++
-        graft.queries.Txn.benchVariants ++
-        graft.queries.Materialized.benchVariants ++
-        graft.multimodal.Multimodal.benchVariants ++
-        graft.ml.QualityFilter.benchVariants)
-      .toSeq.sortBy(_._1)
+    val ordered = SparkEntry.benchQueries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
     val (calCpu, calShuffle) = calibrate(spark)
     // Warmup: one untimed pass over every query (catches codegen + scan

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Bench.time
 
 /** Kappa-loop cost shape at scale ([[graft.queries.Materialized
   * .maintainFromFeed]]): seed a large raw txn table, maintain its daily
@@ -12,18 +12,15 @@ import org.apache.spark.sql.functions._
   * from-scratch recompute. Prints one JSON line.
   *
   * Usage: tools/run.sh graft.BenchKappa [sfDir] [batchRows] [batches]
-  *        (defaults /tmp/sf10, 20000, 5)
+  *        (defaults /root/testdata/sf0.1, 20000, 5; SPARK_GRAFT_CPUS
+  *        cores, else all of them)
   */
 object BenchKappa {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/tmp/sf10")
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batchRows = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
     val batches = args.drop(2).headOption.map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-bench-kappa").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.sinks.TxnTable
@@ -38,10 +35,6 @@ object BenchKappa {
       df.withColumn("day", date_format($"ts", "yyyy-MM-dd"))
         .groupBy($"day", $"event_type")
         .agg(count(lit(1)).as("n"), sum(graft.Det.cents($"value")).as("sum_cents"))
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
 
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select($"ts", $"event_type", $"value")

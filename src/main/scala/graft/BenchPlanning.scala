@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Bench.{sec, usedMb}
 
 /** Driver-side PLANNING cost at large file counts — every 100 TB claim
   * eventually meets a manifest with 10⁵–10⁶ entries, and nothing else
@@ -30,20 +30,16 @@ import org.apache.spark.sql.functions._
   * manifest load) but catch order-of-magnitude superlinearity.
   *
   * Usage: tools/run.sh graft.BenchPlanning [files] [sidecars]
-  * (default 100000, 1000; sf-independent — generates its own data)
+  * (default 100000, 1000; sf-independent — generates its own data;
+  * SPARK_GRAFT_CPUS cores, else all of them)
   */
 object BenchPlanning {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(100000)
     val nSidecars = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-bench-planning").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.catalog.graft_bpl",
-        classOf[graft.sources.GraftCatalog].getName)
-      .config("spark.sql.catalog.graft_bpl.warehouse", "/tmp/graft_bpl_wh")
-      .getOrCreate()
+    val spark = GraftSession.local(
+      "spark.sql.catalog.graft_bpl" -> classOf[graft.sources.GraftCatalog].getName,
+      "spark.sql.catalog.graft_bpl.warehouse" -> "/tmp/graft_bpl_wh")
     spark.sparkContext.setLogLevel("WARN")
     import graft.sinks.TxnTable
 
@@ -52,17 +48,6 @@ object BenchPlanning {
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_bpl.db")
-
-    def sec[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def usedMb(): Long = {
-      System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory() - r.freeMemory()) >> 20
-    }
 
     // ---- build: N files, 10 rows each, id-clustered ----
     val (_, commitSec) = sec {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-bench for the per-file position-delete masking claim
@@ -10,20 +9,16 @@ import org.apache.spark.sql.functions._
   * the untouched vectorized path. Prints one JSON line:
   * clean/masked/meta wall times (min of N) over the same aggregate.
   *
-  * Usage: tools/run.sh graft.BenchPosMask [rows] [runs]  (default 10M, 3)
+  * Usage: tools/run.sh graft.BenchPosMask [rows] [runs]  (default 10M, 3;
+  * SPARK_GRAFT_CPUS cores, else all of them)
   */
 object BenchPosMask {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
     val runs = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-bench-posmask").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.catalog.graft_bpm",
-        classOf[graft.sources.GraftCatalog].getName)
-      .config("spark.sql.catalog.graft_bpm.warehouse", "/tmp/graft_bpm_wh")
-      .getOrCreate()
+    val spark = GraftSession.local(
+      "spark.sql.catalog.graft_bpm" -> classOf[graft.sources.GraftCatalog].getName,
+      "spark.sql.catalog.graft_bpm.warehouse" -> "/tmp/graft_bpm_wh")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -44,29 +39,26 @@ object BenchPosMask {
     def scanAgg(df: org.apache.spark.sql.DataFrame): Unit =
       df.agg(sum($"v"), count(lit(1)), max(length($"s"))).collect()
 
-    def time(f: => Unit): Double =
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.min
+    def best(f: => Unit): Double = (1 to runs).map(_ => Bench.time(f)).min
 
     def tbl() = spark.read.format("graft-txn").load(root)
 
     scanAgg(tbl()) // warm (file listing, codegen)
-    val clean = time(scanAgg(tbl()))
+    val clean = best(scanAgg(tbl()))
 
     // ONE-row tombstone via SQL UPDATE in MoR mode
     spark.sql(s"UPDATE graft_bpm.db.posmask SET v = v + 1 WHERE id = ${rows / 2}")
     val snap = graft.sinks.TxnTable.latest(spark, root).get
     require(snap.deletes.nonEmpty, "expected a live position tombstone")
     scanAgg(tbl()) // warm the masked plan
-    val masked = time(scanAgg(tbl()))
+    val masked = best(scanAgg(tbl()))
 
     // SIDECAR mode (threshold 0): the driver resolves nothing; the one
     // masked task reads its own sidecar at open time — must cost ~the
     // exact mode (the sidecar is a kilobyte)
     spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
     scanAgg(tbl())
-    val sidecarMode = time(scanAgg(tbl()))
+    val sidecarMode = best(scanAgg(tbl()))
     spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
 
     // the ordinal-exact ROW regime (what every file paid before
@@ -76,7 +68,7 @@ object BenchPosMask {
       .agg(sum($"v"), count(lit(1)), max(length($"s")),
         countDistinct(expr("_file"))).collect()
     metaAgg()
-    val rowRegime = time(metaAgg())
+    val rowRegime = best(metaAgg())
 
     // WIDESPREAD debt then CONSOLIDATION: tombstones on EVERY file
     // (1% of rows), compactPosDeletes to ONE sidecar. Row-group
@@ -87,10 +79,10 @@ object BenchPosMask {
     spark.sql(s"DELETE FROM graft_bpm.db.posmask WHERE id % 100 = 50")
     spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
     scanAgg(tbl())
-    val spreadPre = time(scanAgg(tbl()))
+    val spreadPre = best(scanAgg(tbl()))
     graft.sinks.TxnTable.compactPosDeletes(spark, root, targetFiles = 1)
     scanAgg(tbl())
-    val spreadCompacted = time(scanAgg(tbl()))
+    val spreadCompacted = best(scanAgg(tbl()))
     spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
 
     println(s"""{"metric":"posmask","rows":$rows,"files":${snap.files.size},""" +

@@ -20,15 +20,10 @@ object Explain {
     val rest = args.filterNot(a => a == "--bench" || a == "--exec")
     val name = rest.headOption.getOrElse("all")
     val sfDir = if (rest.length > 1) rest(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val base: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (bench) PlanSig.benchPlans else SparkEntry.queries.toSeq.sortBy(_._1)
+      if (bench) SparkEntry.benchQueries else SparkEntry.queries.toSeq.sortBy(_._1)
     val qs =
       if (name == "all") base
       else base.filter(_._1 == name)

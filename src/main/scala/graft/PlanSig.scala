@@ -46,45 +46,22 @@ object PlanSig {
 
   def render(sig: Seq[(String, Int)]): String =
     sig.map { case (k, v) => s"$k=$v" }.mkString(",")
-
-  /** The plan each query actually runs in the bench (variant if one
-    * exists — the semantic plan without determinism-only sorts). */
-  def benchPlans: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] = {
-    val variants =
-      graft.queries.Relational.benchVariants ++
-        graft.queries.LlmOps.benchVariants ++
-        graft.queries.TextOps.benchVariants ++
-        graft.queries.Sessions.benchVariants ++
-        graft.queries.ZOrder.benchVariants ++
-        graft.queries.Txn.benchVariants ++
-        graft.queries.Materialized.benchVariants ++
-        graft.multimodal.Multimodal.benchVariants
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> variants.getOrElse(name, fn)
-    }.toSeq.sortBy(_._1)
-  }
 }
 
 /** Regenerate the committed snapshot after an INTENTIONAL plan change:
   * `sbt "runMain graft.PlanSnapshot"` rewrites
-  * src/test/resources/plan_signatures.txt (session confs mirror
-  * SparkTestSession so the spec compares like with like). */
+  * src/test/resources/plan_signatures.txt. The session comes from
+  * [[GraftSession.local]] at 4 cores, the same factory and core count
+  * as SparkTestSession, so the spec compares like with like. */
 object PlanSnapshot {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0)
       else "src/test/resources/plan_signatures.txt"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = "/root/testdata/sf0.001"
     ArtifactCaches.reset(spark) // cold-start shapes (see PlanSnapshotSpec)
-    val lines = PlanSig.benchPlans.map { case (name, fn) =>
+    val lines = SparkEntry.benchQueries.map { case (name, fn) =>
       s"$name ${PlanSig.render(PlanSig.signature(fn(spark, sfDir)))}"
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop utility: run ONE named query (same session config as
   * [[Verify]]) and write its parquet to `<outDir>/<name>/` for a
   * DuckDB compare — the per-query inner loop of tools/check.py. */
@@ -10,15 +8,7 @@ object VerifyOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/verify_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for graft's custom expressions through the PUBLIC
-  * extension hook: build a session with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` — or set
+  * extension hook: call `withExtensions(new GraftExtensions)` on a
+  * session builder — or set
   * `spark.sql.extensions=graft.functions.GraftExtensions` — and
   * `long_array_dot(a, b)` / `md5_chunks(s)` / `shingles3(tk)` /
   * `json_get_long(s, 'field')` / `count_in_set(tk, array(...))` /

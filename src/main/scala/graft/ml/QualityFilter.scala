@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * above [[FitCap]] docs, and [[ensureModel]] fits once per source
   * snapshot (stamp-keyed) so repeated runs pay scoring only.
   */
-object QualityFilter {
+object QualityFilter extends graft.QueryModule {
 
   /** Fixed hashed-feature dimensionality. 2^12 is ~137x the synthetic
     * vocabulary — collision-sparse — while keeping the model (and its
@@ -187,16 +187,15 @@ object QualityFilter {
       .orderBy(col("doc_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q120_quality_filter" -> q120)
+  val queries: Map[String, Q] = Map("q120_quality_filter" -> q120)
 
   /** No oracle — driver records the weaker rows-only check by omission. */
-  def oracles: Map[String, String] = Map.empty
+  val oracles: Map[String, String] = Map.empty
 
   /** Bench form: cached fit + score, no verify-only global sort — what
     * the bench times is the per-run scoring cost, as in production
     * (the fit amortizes across runs via [[ensureModel]]). */
-  def benchVariants: Map[String, (SparkSession, String) => DataFrame] =
+  override val benchVariants: Map[String, Q] =
     Map("q120_quality_filter" -> ((s: SparkSession, dir: String) => {
       val docs = docsOf(s, dir)
       val f = ensureModel(s, dir)

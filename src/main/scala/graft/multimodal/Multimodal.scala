@@ -31,9 +31,7 @@ import graft.Tables.t
   * a Generate (no shuffle); the per-kind rollup shuffles 18 longs per
   * asset, never bytes.
   */
-object Multimodal {
-
-  type Q = (SparkSession, String) => DataFrame
+object Multimodal extends graft.QueryModule {
 
   /** Synthetic asset corpus derived deterministically from `documents`:
     * 32 content bytes per asset (two md5 digests, domain-separated),
@@ -451,7 +449,7 @@ object Multimodal {
 
   /** Bench-time override minus the determinism-only global sort (see
     * [[graft.queries.Relational.benchVariants]]). */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q84_audio_decode" -> q84Bench,
     "q102_video_demux" -> q102Bench,
     "q109_image_resize" -> q109Bench,

@@ -40,9 +40,7 @@ import graft.Det._
   * deliberately NOT part of the benched query cost beyond its first run
   * — exactly how a production warehouse amortizes bucketing.
   */
-object Bucketed {
-
-  type Q = (SparkSession, String) => DataFrame
+object Bucketed extends graft.QueryModule {
 
   private val Buckets = 16
   private val Db = "graft_bucketed"

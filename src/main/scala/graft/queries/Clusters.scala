@@ -35,9 +35,7 @@ import org.apache.spark.sql.functions._
   * corpus — edges exist only where ≥1 band collided — so the iteration
   * runs on the residue of the LSH stage, not the data.
   */
-object Clusters {
-
-  type Q = (SparkSession, String) => DataFrame
+object Clusters extends graft.QueryModule {
 
   /** Connected components of the undirected graph given as (doc_a,
     * doc_b) pairs. Returns (id, label) for every node, label = min node

@@ -27,9 +27,7 @@ import graft.Det._
   * at least one real [[applyDay]] merge) hash-matches a from-scratch
   * DuckDB aggregate over the full source.
   */
-object Incremental {
-
-  type Q = (SparkSession, String) => DataFrame
+object Incremental extends graft.QueryModule {
 
   private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
 

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Production-K IVF measurement: build the trained-centroid index at a
   * caller-chosen K (default 256) over a caller-chosen corpus (default
   * the 10x /tmp/sf1 set), then measure the recall@5 / probe-cost curve
@@ -12,21 +10,14 @@ import org.apache.spark.sql.SparkSession
   * implementation. Prints ONE JSON line.
   *
   * Usage: tools/run.sh graft.queries.IvfAtScale [sfDir] [K] [iters]
+  * (SPARK_GRAFT_CPUS cores, else all of them)
   */
 object IvfAtScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val k = if (args.length > 1) args(1).toInt else 256
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     spark.conf.set("graft.ivf.k", k.toString)

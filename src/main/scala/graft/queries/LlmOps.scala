@@ -20,9 +20,7 @@ import graft.Tables.t
   * Scale notes are per-query; the design rule is: never all-pairs, never
   * collect — candidate generation is always a bucketed shuffle.
   */
-object LlmOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object LlmOps extends graft.QueryModule {
 
   // ---------------------------------------------------------------------
   // q22: EXACT dedup — one row per distinct text, keeping the min doc_id.
@@ -1716,7 +1714,7 @@ object LlmOps {
 
   /** Bench-time overrides minus determinism-only global sorts (see
     * [[Relational.benchVariants]]). Verify runs the sorted forms. */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q22_exact_dedup"  -> q22Bench,
     "q74_knn_join"     -> q74Bench,
     "q91_sem_decontam" -> q91Bench,

@@ -31,9 +31,7 @@ import graft.plans.Mv
   * scan). At 100 TB this is the difference between a dashboard query
   * scanning 100 TB and scanning megabytes.
   */
-object Materialized {
-
-  type Q = (SparkSession, String) => DataFrame
+object Materialized extends graft.QueryModule {
 
   private def tag(dir: String): String = graft.Tables.dirTag(dir)
 
@@ -212,7 +210,7 @@ object Materialized {
     "q94_mv_rollup" -> q94Sql)
 
   /** Bench-time override minus the determinism-only global sort. */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q93_mv_exact"  -> q93Bench,
     "q94_mv_rollup" -> q94Bench)
 }

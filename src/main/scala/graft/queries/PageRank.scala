@@ -36,9 +36,7 @@ import org.apache.spark.sql.functions._
   * on the edge side; rounds are fixed (Iters), so total cost is
   * Iters × (|E| shuffle) — the known PageRank bill.
   */
-object PageRank {
-
-  type Q = (SparkSession, String) => DataFrame
+object PageRank extends graft.QueryModule {
 
   private val Scale = 1000000000000L // 1e12 fixed-point
   private val Iters = 5

@@ -18,9 +18,7 @@ import org.apache.spark.sql.types.DataTypes
   * each plan is written for the 100 TB layout (broadcast the dimension,
   * partial-agg before shuffle, push filters to the scan).
   */
-object Relational {
-
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends graft.QueryModule {
 
   // ---------------------------------------------------------------------
   // q01: TPC-H Q1-style pricing summary. Hash partial-agg on 2 low-card
@@ -1883,7 +1881,7 @@ object Relational {
     * sorts (which exist purely for the oracle's ordered hash-compare and
     * would be a cluster-wide sort at scale). Verify always runs the full
     * (sorted) form from [[queries]]. */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     // the sketch queries bench their raw sketch shapes — the bracket
     // oracle's exact-count join-back exists for Verify only and would
     // bench the EXACT path, not the sketch the entry is about

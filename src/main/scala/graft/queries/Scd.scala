@@ -26,9 +26,7 @@ import graft.Tables.t
   * idempotent commit and every pre-merge dimension version stays
   * time-travelable.
   */
-object Scd {
-
-  type Q = (SparkSession, String) => DataFrame
+object Scd extends graft.QueryModule {
 
   /** Apply one update batch to an SCD-2 dimension.
     *

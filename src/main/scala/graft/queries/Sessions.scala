@@ -16,9 +16,7 @@ import graft.Tables.t
   * events belong to one session while consecutive gaps are <= 1 h; the
   * first event (or a gap > 1 h) opens a new session.
   */
-object Sessions {
-
-  type Q = (SparkSession, String) => DataFrame
+object Sessions extends graft.QueryModule {
 
   /** Session gap in microseconds (1 hour). Exact integer comparison on
     * epoch micros — no interval arithmetic to diverge across engines. */
@@ -278,7 +276,7 @@ object Sessions {
 
   /** The benched plan drops only the determinism-only global sort
     * (same split as [[Relational.benchVariants]]). */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q52_sessionize" -> q52Bench,
     "q87_debounce"   -> q87Bench)
 }

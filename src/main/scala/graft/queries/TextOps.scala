@@ -13,9 +13,7 @@ import graft.Tables.t
   * IEEE ops across engines). Every query is a single scan + narrow
   * shuffle — nothing here is all-pairs or collects to the driver.
   */
-object TextOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object TextOps extends graft.QueryModule {
 
   // ---------------------------------------------------------------------
   // q29: SimHash — 16-bit signature over distinct tokens. Bit b is the
@@ -1796,7 +1794,7 @@ object TextOps {
 
   /** Bench-time overrides minus determinism-only global sorts (see
     * [[Relational.benchVariants]]). Verify runs the sorted forms. */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q29_simhash"        -> q29Bench,
     "q32_lang_id"        -> q32Bench,
     "q33_quality_score"  -> q33Bench,

@@ -26,9 +26,7 @@ import graft.sinks.TxnTable
   * here proven for log-committed maintenance. TxnTableSpec covers the
   * log mechanics themselves (atomicity, conflict, travel, vacuum).
   */
-object Txn {
-
-  type Q = (SparkSession, String) => DataFrame
+object Txn extends graft.QueryModule {
 
   private def tag(dir: String): String = graft.Tables.dirTag(dir)
 
@@ -1189,7 +1187,7 @@ object Txn {
 
   /** Bench-time override minus the determinism-only global sort (see
     * [[Relational.benchVariants]]). Verify runs the sorted forms. */
-  val benchVariants: Map[String, Q] = Map(
+  override val benchVariants: Map[String, Q] = Map(
     "q82_txn_snapshot" -> q82Bench,
     "q89_txn_delete"   -> q89Bench,
     "q90_txn_merge"    -> q90Bench,

@@ -28,9 +28,7 @@ import graft.Tables.t
   * rectangle-pruning property — the interleave does not care what the
   * ordinals mean.
   */
-object ZOrder {
-
-  type Q = (SparkSession, String) => DataFrame
+object ZOrder extends graft.QueryModule {
 
   /** Bits interleaved per dimension (a in even positions, b in odd).
     * 16 bits per dim covers ordinals up to 65535 — dims are bucket
@@ -129,7 +127,7 @@ object ZOrder {
   val oracles: Map[String, String] = Map("q55_zorder" -> q55Sql)
 
   /** Bench form without the verify-only global sort. */
-  val benchVariants: Map[String, Q] = Map("q55_zorder" -> ((s, dir) => {
+  override val benchVariants: Map[String, Q] = Map("q55_zorder" -> ((s, dir) => {
     import s.implicits._
     t(s, dir, "events")
       .select($"event_id", $"user_id",

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import graft.Bench.{sec, usedMb}
 
 /** MANIFEST-ONLY planning bench at 10⁶ entries — the scale step past
   * [[graft.BenchPlanning]]'s physical 10⁵-file table. The driver-side
@@ -33,27 +33,13 @@ import org.apache.spark.sql.SparkSession
 object BenchManifest {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val spark = SparkSession.builder()
-      .appName("graft-bench-manifest").master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val root = "/tmp/graft_bman/t"
     val loc = new Path(root)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-
-    def sec[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def usedMb(): Long = {
-      System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory() - r.freeMemory()) >> 20
-    }
 
     def entry(i: Int): String = f"data/b${i / 10000}%03d/part-$i%07d.parquet"
     def statsOf(fls: Seq[String]): Map[String, Map[String, (Long, Long)]] =

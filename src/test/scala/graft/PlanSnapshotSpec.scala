@@ -25,7 +25,7 @@ class PlanSnapshotSpec extends AnyFunSuite {
         val i = line.indexOf(' ')
         line.substring(0, i) -> line.substring(i + 1)
       }.toMap
-    val diffs = PlanSig.benchPlans.flatMap { case (name, fn) =>
+    val diffs = SparkEntry.benchQueries.flatMap { case (name, fn) =>
       val now = PlanSig.render(PlanSig.signature(fn(spark, sfDir)))
       committed.get(name) match {
         case Some(`now`) => None
@@ -33,7 +33,7 @@ class PlanSnapshotSpec extends AnyFunSuite {
         case None        => Some(s"$name: MISSING from snapshot (regenerate)")
       }
     }
-    val stale = committed.keySet -- PlanSig.benchPlans.map(_._1).toSet
+    val stale = committed.keySet -- SparkEntry.benchQueries.map(_._1).toSet
     assert(diffs.isEmpty && stale.isEmpty,
       s"plan signatures drifted (regenerate via `runMain graft.PlanSnapshot` " +
         s"if intentional):\n${diffs.mkString("\n")}" +

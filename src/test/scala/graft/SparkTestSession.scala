@@ -8,17 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test JVM (Test/fork := true
-  * gives all suites a single forked JVM, so getOrCreate dedups). */
+  * gives all suites a single forked JVM, so getOrCreate dedups). Built by
+  * [[GraftSession.local]] at 4 cores, like PlanSnapshot's session, so the
+  * committed plan signatures compare like with like. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -18,7 +18,7 @@ class GuardRailsSpec extends AnyFunSuite {
 
   test("every benched plan passes the guard rails (minus the audited allowlist)") {
     graft.ArtifactCaches.reset(spark)
-    val flagged = graft.PlanSig.benchPlans.flatMap { case (name, fn) =>
+    val flagged = graft.SparkEntry.benchQueries.flatMap { case (name, fn) =>
       val hz = GuardRails.audit(fn(spark, sfDir))
       if (hz.nonEmpty) Some(name -> hz.map(_.kind).toSet) else None
     }.toMap
@@ -141,7 +141,7 @@ class GuardRailsSpec extends AnyFunSuite {
       assert(ex.hazards.exists(h => h.kind === "cartesian" &&
         h.detail.contains("REFUSED at runtime")))
       // while the genuinely domain-small q108 shape still passes the
-      // same gate (asserted per-query in the benchPlans sweep too)
+      // same gate (asserted per-query in the benchQueries sweep too)
       val small = (1 to n).map(i => (i % 13, i.toDouble)).toDF("k", "v")
       GuardRails.check(small.groupBy($"k").agg(max($"v").as("mv")).as("a")
         .crossJoin(small.groupBy($"k").agg(min($"v").as("nv")).as("b")))
