@@ -8,9 +8,9 @@ import graft.Det._
 import graft.Tables.t
 
 /** Batch sessionization over the `events` stream table — the batch twin
-  * of [[graft.streaming.Sessionize]] (reference analog: the daily-batch
-  * side of the pipeline's event analytics; the streaming side is
-  * flatMapGroupsWithState).
+  * of Spark's streaming `session_window`, which SessionWindowSpec proves
+  * equal to q52 (reference analog: the daily-batch side of the
+  * pipeline's event analytics).
   *
   * Gap-based session semantics (industry default, e.g. GA4): a user's
   * events belong to one session while consecutive gaps are <= 1 h; the
@@ -208,8 +208,8 @@ object Sessions extends graft.QueryModule {
   // mean anything). Deliberately the lag-based variant (burst extends
   // while gaps stay <= 30 min) — the session-opener semantics of q52
   // applied as a filter, not the fixed-window-after-last-KEPT throttle,
-  // which needs running state (that shape lives in the streaming twin,
-  // flatMapGroupsWithState in Sessionize).
+  // which needs running state (that shape is the streaming operator
+  // graft.streaming.Throttle, a row of StreamPrefixSpec).
   //
   // Scale: ONE window (lag) partitioned by (user_id, event_type) — over
   // the user_id-bucketed events layout HashPartitioning(user_id)

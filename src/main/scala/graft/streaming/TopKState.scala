@@ -10,11 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * best maximum is monotone non-decreasing, and an id evicted below it
   * can only re-enter by scoring ABOVE its own discarded past — keeping
   * k (id, max) pairs therefore reproduces batch top-k over the full
-  * history bit-for-bit (the TopKStateSpec pins the eviction/re-entry
-  * cases where sub-k state would be tempting and wrong... and also the
-  * one where it works). This is [[graft.functions.TopKByScore]]'s
-  * bounded-buffer idea lifted from a map-side aggregate into
-  * cross-batch streaming state.
+  * history bit-for-bit (StreamPrefixSpec's TopKState row pins the
+  * eviction/re-entry cases where sub-k state would be tempting and
+  * wrong... and also the one where it works). This is
+  * [[graft.functions.TopKByScore]]'s bounded-buffer idea lifted from a
+  * map-side aggregate into cross-batch streaming state.
   *
   * Scale posture: one shuffle on the group key per batch; state is
   * k × (long, double) per group — bounded by construction, no timeout

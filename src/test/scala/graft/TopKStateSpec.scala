@@ -1,81 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.TopKState
-import graft.streaming.TopKState.{Ranked, Scored}
 
-/** Streaming top-k maintenance: after EVERY micro-batch the emitted
-  * board equals batch top-k over the full history — including the
-  * eviction/re-entry cases that justify why k slots of state suffice
-  * (per-id maxima are monotone, so the k-th threshold never falls). */
+/** Streaming top-k's pure fold: k slots of per-id maxima reproduce
+  * top-k over the full history, because per-id maxima are monotone and
+  * the k-th threshold never falls. The streaming operator itself is a
+  * row of [[StreamPrefixSpec]]. */
 class TopKStateSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-
-  /** Batch reference: top-k by per-id max over everything seen. */
-  private def ref(hist: Seq[Scored], k: Int): Map[String, Seq[Ranked]] =
-    hist.groupBy(_.group).map { case (g, evs) =>
-      g -> evs.groupBy(_.id).map { case (id, es) => (id, es.map(_.score).max) }
-        .toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-        .zipWithIndex.map { case ((id, s), i) => Ranked(g, i + 1, id, s) }
-    }
-
-  /** A group's CURRENT board is its emission in the highest-numbered
-    * batch that touched it (batch ids from foreachBatch — a contractual
-    * ordering, unlike memory-sink row order). */
-  private def latestBoards(rows: Seq[(Long, Ranked)]): Map[String, Seq[Ranked]] =
-    rows.groupBy(_._2.group).map { case (g, rs) =>
-      val lastBatch = rs.map(_._1).max
-      g -> rs.filter(_._1 == lastBatch).map(_._2).sortBy(_.rank)
-    }
-
-  test("board == batch top-k after every batch, incl. eviction and re-entry") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    val emitted =
-      scala.collection.mutable.ArrayBuffer[(Long, Ranked)]()
-    val input = MemoryStream[Scored]
-    val query = TopKState.topK(input.toDS(), k = 3)
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Ranked], id: Long) =>
-        val rows = df.collect()
-        emitted.synchronized { emitted ++= rows.map(r => (id, r)) }
-        ()
-      }.start()
-    val hist = scala.collection.mutable.ArrayBuffer[Scored]()
-    def push(batch: Scored*): Unit = {
-      hist ++= batch
-      input.addData(batch: _*)
-      query.processAllAvailable()
-      val rows = emitted.synchronized { emitted.toSeq }
-      // latest board per touched group must equal the batch reference
-      // over the full history
-      val got = latestBoards(rows).filter { case (g, _) =>
-        batch.exists(_.group == g) // only touched groups re-emit
-      }
-      val want = ref(hist.toSeq, 3).filter { case (g, _) =>
-        batch.exists(_.group == g)
-      }
-      assert(got === want, s"after batch $batch")
-    }
-    try {
-      push(Scored("a", 1, 10.0), Scored("a", 2, 20.0), Scored("a", 3, 30.0))
-      // id 4 evicts id 1 (10 < 15)
-      push(Scored("a", 4, 15.0))
-      // id 1 re-enters ABOVE its discarded past — the sound case
-      push(Scored("a", 1, 25.0))
-      // a lower score for a board member must NOT lower its max
-      push(Scored("a", 2, 1.0))
-      // tie on score: smaller id ranks first
-      push(Scored("a", 5, 25.0))
-      // independent group, untouched 'a' board keeps state
-      push(Scored("b", 9, 1.0))
-      push(Scored("a", 6, 100.0), Scored("b", 8, 2.0))
-    } finally query.stop()
-  }
 
   test("foldBoard: k-bounded state reproduces unbounded recompute") {
     // randomized mini-law without the streaming harness: fold batches
