@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Det._
@@ -76,8 +76,31 @@ object Materialized extends graft.QueryModule {
   // inserts add (count and exact cents are distributive, the same
   // algebra the query-side rewrite exploits); groups whose count reaches
   // zero are purged. Cost ∝ the files the raw commits touched (the
-  // feed's contract), plus a keyed merge into the aggregate.
+  // feed's contract), plus a keyed merge into the aggregate. The signed
+  // delta and the changed view rows are each COLLECTED once: both hold
+  // one row per touched (day, event_type) group, not per raw row, and
+  // the merge and the emptied-group test read those driver-side rows.
   // ---------------------------------------------------------------------
+
+  /** `df` collected once, plus a local relation over those rows, whose
+    * reads never re-evaluate `df`'s plan. */
+  private def collectLocal(df: DataFrame): (Array[Row], DataFrame) = {
+    val rows = df.collect()
+    (rows, df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
+  }
+
+  /** The feed folded to one signed `(day, event_type, dn, dcents)` row
+    * per touched group, collected; None when it touched nothing. */
+  private def groupDelta(s: SparkSession, feed: DataFrame): Option[DataFrame] = {
+    import s.implicits._
+    val sign = when($"_change_type" === "insert", lit(1L)).otherwise(lit(-1L))
+    val (rows, delta) = collectLocal(feed
+      .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
+      .groupBy($"day", $"event_type")
+      .agg(sum(sign * $"_n").as("dn"),
+        sum(sign * $"_n" * cents($"value")).as("dcents")))
+    if (rows.isEmpty) None else Some(delta)
+  }
 
   /** Fold the raw table's feed (v1, v2] into the aggregate at `aggRoot`
     * (a txn table with the defining query's shape: day, event_type, n,
@@ -88,14 +111,7 @@ object Materialized extends graft.QueryModule {
       v1: Long, v2: Long): Unit = {
     import s.implicits._
     import graft.sinks.TxnTable
-    val feed = TxnTable.changesBetween(s, rawRoot, v1, v2)
-    val sign = when($"_change_type" === "insert", lit(1L)).otherwise(lit(-1L))
-    val delta = feed
-      .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
-      .groupBy($"day", $"event_type")
-      .agg(sum(sign * $"_n").as("dn"),
-        sum(sign * $"_n" * cents($"value")).as("dcents"))
-    if (!delta.isEmpty) {
+    groupDelta(s, TxnTable.changesBetween(s, rawRoot, v1, v2)).foreach { delta =>
       val cur = TxnTable.read(s, aggRoot)
         .select($"day".as("cday"), $"event_type".as("ctype"), $"n", $"sum_cents")
       // right join: ONLY groups the feed touched flow into the merge
@@ -104,9 +120,10 @@ object Materialized extends graft.QueryModule {
         .select($"day", $"event_type",
           (coalesce($"n", lit(0L)) + $"dn").as("n"),
           (coalesce($"sum_cents", lit(0L)) + $"dcents").as("sum_cents"))
-      TxnTable.mergeInto(s, aggRoot, changes, keyCols = Seq("day", "event_type"))
+      val (changed, local) = collectLocal(changes)
+      TxnTable.mergeInto(s, aggRoot, local, keyCols = Seq("day", "event_type"))
       // a group the feed emptied is a DELETE on the view, not a zero row
-      if (changes.filter($"n" === 0L).head(1).nonEmpty)
+      if (changed.exists(_.getAs[Long]("n") == 0L))
         TxnTable.deleteWhere(s, aggRoot, $"n" === 0L)
     }
   }
@@ -125,27 +142,22 @@ object Materialized extends graft.QueryModule {
                      batchId: Long): Unit = {
     import s.implicits._
     import graft.sinks.TxnTable
-    val sign = when($"_change_type" === "insert", lit(1L)).otherwise(lit(-1L))
-    val delta = feed
-      .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
-      .groupBy($"day", $"event_type")
-      .agg(sum(sign * $"_n").as("dn"),
-        sum(sign * $"_n" * cents($"value")).as("dcents"))
-    if (delta.isEmpty) return
-    val cur =
-      if (TxnTable.versions(s, aggRoot).nonEmpty)
-        TxnTable.read(s, aggRoot)
-          .select($"day".as("cday"), $"event_type".as("ctype"), $"n", $"sum_cents")
-      else delta.limit(0).select($"day".as("cday"), $"event_type".as("ctype"),
-        $"dn".as("n"), $"dcents".as("sum_cents"))
-    val merged = cur.join(delta,
-        $"cday" === $"day" && $"ctype" === $"event_type", "full")
-      .select(coalesce($"day", $"cday").as("day"),
-        coalesce($"event_type", $"ctype").as("event_type"),
-        (coalesce($"n", lit(0L)) + coalesce($"dn", lit(0L))).as("n"),
-        (coalesce($"sum_cents", lit(0L)) + coalesce($"dcents", lit(0L))).as("sum_cents"))
-      .filter($"n" =!= 0L)
-    TxnTable.replaceBatch(s, aggRoot, merged, batchId)
+    groupDelta(s, feed).foreach { delta =>
+      val cur =
+        if (TxnTable.versions(s, aggRoot).nonEmpty)
+          TxnTable.read(s, aggRoot)
+            .select($"day".as("cday"), $"event_type".as("ctype"), $"n", $"sum_cents")
+        else delta.limit(0).select($"day".as("cday"), $"event_type".as("ctype"),
+          $"dn".as("n"), $"dcents".as("sum_cents"))
+      val merged = cur.join(delta,
+          $"cday" === $"day" && $"ctype" === $"event_type", "full")
+        .select(coalesce($"day", $"cday").as("day"),
+          coalesce($"event_type", $"ctype").as("event_type"),
+          (coalesce($"n", lit(0L)) + coalesce($"dn", lit(0L))).as("n"),
+          (coalesce($"sum_cents", lit(0L)) + coalesce($"dcents", lit(0L))).as("sum_cents"))
+        .filter($"n" =!= 0L)
+      TxnTable.replaceBatch(s, aggRoot, merged, batchId)
+    }
   }
 
   // ---------------------------------------------------------------------

@@ -820,6 +820,18 @@ object TxnTable {
     }
   }
 
+  /** `staged` minus its zero-row parts, deleted here: Spark writes a
+    * schema-only part for an empty result or union branch, and a commit
+    * must not reference one. Counts come from the cached footers
+    * [[commit]] reads anyway; an unreadable footer keeps its file. */
+  private def dropEmptyParts(s: SparkSession, root: String,
+                             staged: Seq[String]): Seq[String] = {
+    prewarmFooters(s, root, staged)
+    val (empty, kept) = staged.partition(footerRows(s, root, _).contains(0L))
+    empty.foreach(p => fs(s, root).delete(new Path(root, p), false))
+    kept
+  }
+
   /** A fresh root-relative staging dir name, `data/<uuid>`. */
   private def newStagingDir(): String =
     s"data/${java.util.UUID.randomUUID().toString.take(8)}"
@@ -2317,7 +2329,7 @@ object TxnTable {
     * `targetFiles` files and commit the SAME rows as a new version —
     * in-flight readers of any prior version are untouched (contrast
     * [[Compact.compact]], which rewrites in place). coalesce = narrow
-    * merge, no shuffle. */
+    * merge, no shuffle. Zero-row parts are dropped before commit. */
   def compactTxn(s: SparkSession, root: String, targetFiles: Int,
                  sortCols: Seq[String] = Nil): Snapshot = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
@@ -2339,7 +2351,8 @@ object TxnTable {
       }
     // compaction preserves the transform fan-out (a compacted file must
     // still hold one transform value for path-derived pruning to hold)
-    val staged = stage(s, root, toPhys(arranged, cur), cur.transforms)
+    val staged = dropEmptyParts(s, root,
+      stage(s, root, toPhys(arranged, cur), cur.transforms))
     // rewritten files get fresh stats/blooms under the table's columns
     commit(s, root, fullRewrite(s, root, cur, "compact", staged, cur.statsCols,
       cur.schema.orElse(Some(arranged.schema))))
@@ -2435,11 +2448,8 @@ object TxnTable {
       else if (sortCols.isEmpty) logical.coalesce(targetFiles)
       else logical.repartitionByRange(targetFiles, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
-    // the mask may have emptied every selected file; a 0-row stage
-    // would write no parquet parts to reference
-    val staged =
-      if (arranged.isEmpty) Seq.empty[String]
-      else stage(s, root, toPhys(arranged, cur), cur.transforms)
+    val staged = dropEmptyParts(s, root,
+      stage(s, root, toPhys(arranged, cur), cur.transforms))
     // z-dims join the recorded stats columns (physical names) so the
     // rewritten region prunes on them from this commit on; carried
     // files simply lack the entries (absent metadata never skips)
@@ -2507,7 +2517,8 @@ object TxnTable {
     * carries over by reference. Same caller contract: a range that does
     * not bound the change keys leaves stale rows alive in carried files
     * (the update half applies only to touched files). `changes` must
-    * have the table's schema; key equality is null-safe exact. */
+    * have the table's schema; key equality is null-safe exact. The
+    * rewrite is staged once; zero-row parts are dropped before commit. */
   def mergeInto(s: SparkSession, root: String, changes: DataFrame,
                 keyCols: Seq[String],
                 statsRange: Option[(Long, Long)] = None): Snapshot = {
@@ -2643,10 +2654,8 @@ object TxnTable {
         val survivors = existing.join(ch, cond, "left_anti")
         survivors.unionByName(changes, allowMissingColumns = true)
       }
-    val staged =
-      if (rewritten.isEmpty) Seq.empty[String]
-      else stage(s, root, ColumnMapping.toPhysical(rewritten, evolved),
-        cur.transforms)
+    val staged = dropEmptyParts(s, root,
+      stage(s, root, ColumnMapping.toPhysical(rewritten, evolved), cur.transforms))
     commit(s, root, partialRewrite(cur, opTag, carry, staged,
         stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms))
       .copy(schema = Some(evolved)))
@@ -3264,7 +3273,8 @@ object TxnTable {
     * `statsRange` must BOUND the predicate — every row the predicate
     * matches has its stats column inside [lo, hi]. A narrower range
     * silently leaves matching rows alive in carried files. Omit it to
-    * rewrite every file (always sound).
+    * rewrite every file (always sound). The rewrite is staged once and
+    * its zero-row parts are dropped before commit.
     *
     * Prior snapshots still read the deleted rows (immutable files,
     * snapshot isolation) until [[vacuum]] reclaims them — which is also
@@ -3324,10 +3334,7 @@ object TxnTable {
         val rest = cur.schema.fold(touched)(
             sc => ColumnMapping.aliasToLogical(touched, sc))
           .filter(org.apache.spark.sql.functions.not(predicate))
-        // a delete may empty every touched file; a 0-row stage would
-        // write no parquet parts to reference
-        if (rest.isEmpty) Seq.empty[String]
-        else stage(s, root, toPhys(rest, cur), cur.transforms)
+        dropEmptyParts(s, root, stage(s, root, toPhys(rest, cur), cur.transforms))
       }
     commit(s, root, partialRewrite(cur, "delete", carry, staged,
       stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms)))

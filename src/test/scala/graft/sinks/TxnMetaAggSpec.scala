@@ -87,9 +87,9 @@ class TxnMetaAggSpec extends AnyFunSuite {
   }
 
   test("metaMinMax: a provably-empty staged file (rows:0) does not force refusal") {
-    // a CoW delete whose predicate empties one touched file stages a
-    // zero-row part with no stats entry — found at the sf10 scale run;
-    // the recorded zero count proves it contributes nothing
+    // a CoW delete whose predicate empties one touched file once staged
+    // a zero-row part with no stats entry (found at the sf10 scale run);
+    // the rewrite now drops such parts before commit, so none is recorded
     val root = freshRoot()
     val s = spark; import s.implicits._
     TxnTable.overwrite(spark, root,
@@ -99,11 +99,8 @@ class TxnMetaAggSpec extends AnyFunSuite {
     // delete everything in the first file's span -> its rewrite is empty
     TxnTable.deleteWhere(spark, root, col("id") <= 25, Some((1L, 25L)))
     val sn = TxnTable.latest(spark, root).get
-    if (sn.files.exists(f => sn.rowCounts.get(f).contains(0L))) {
-      // the zero-row part actually materialized on this Spark version —
-      // the case under test
-      assert(sn.files.exists(f => !sn.stats.get(f).exists(_.contains("id"))))
-    }
+    assert(!sn.files.exists(f => sn.rowCounts.get(f).contains(0L)))
+    assert(sn.files.forall(f => sn.stats.get(f).exists(_.contains("id"))))
     assert(TxnTable.metaCount(spark, root) === Some(75L))
     assert(TxnTable.metaMinMax(spark, root, "id") === Some((26L, 100L)))
   }
@@ -303,7 +300,7 @@ class TxnMetaAggSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     TxnTable.append(spark, root, df(3, 3).coalesce(1), statsCols = Seq("id"))
     TxnTable.append(spark, root, df(9).coalesce(1))
-    // CoW-delete one whole value: its rewrite stages zero-row parts
+    // CoW-delete one whole value: its rewrite keeps no row and no part
     TxnTable.deleteWhere(spark, root, col("id") === 3L, Some((3L, 3L)))
     assert(TxnTable.metaGroupCount(spark, root, "id") ===
       Some(Seq(Some(9L) -> 1L)))

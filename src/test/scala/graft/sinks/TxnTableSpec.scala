@@ -548,4 +548,86 @@ class TxnTableSpec extends AnyFunSuite {
     }
     assert(failed.nonEmpty && !exists(failed))
   }
+
+  /** Parquet parts under `root`'s data dir whose footer records 0 rows. */
+  private def zeroRowParts(root: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val walk = Files.walk(java.nio.file.Paths.get(root, "data"))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      .filter { p =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p), conf))
+        try r.getRecordCount == 0L finally r.close()
+      }
+    finally walk.close()
+  }
+
+  /** The committed head references no 0-row file, and none is on disk. */
+  private def assertNoZeroRowParts(root: String): Unit = {
+    val head = TxnTable.latest(spark, root).get
+    assert(!head.files.exists(f => head.rowCounts.get(f).contains(0L)),
+      s"v${head.version} commits a 0-row file: ${head.rowCounts}")
+    assert(zeroRowParts(root).isEmpty, "a 0-row part was left under data/")
+  }
+
+  /** Three single-file commits: ids 1..3, 10..11, 20..22, stats on id. */
+  private def threeFiles(root: String): Unit = {
+    TxnTable.overwrite(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))
+    TxnTable.append(spark, root, df(10, 11).coalesce(1))
+    TxnTable.append(spark, root, df(20, 21, 22).coalesce(1))
+  }
+
+  test("zero-row rewrite: a deleteWhere that empties every file it touches commits no part") {
+    val root = freshRoot()
+    threeFiles(root)
+    val before = TxnTable.latest(spark, root).get
+    val after = TxnTable.deleteWhere(spark, root, col("id") <= 11, Some((1L, 11L)))
+    assert(after.files === before.files.takeRight(1))
+    assert(rows(TxnTable.read(spark, root)) === rows(df(20, 21, 22)))
+    assertNoZeroRowParts(root)
+    // the unbounded form that empties the whole table, too
+    assert(TxnTable.deleteWhere(spark, root, lit(true)).files.isEmpty)
+    assert(TxnTable.read(spark, root).count() === 0L)
+    assertNoZeroRowParts(root)
+  }
+
+  test("zero-row rewrite: a mergeInto whose rewrite loses a whole file commits no empty part") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    threeFiles(root)
+    // every row of the 10..11 file is replaced: the file's survivors are empty
+    TxnTable.mergeInto(spark, root, Seq((10, 1), (11, 2)).toDF("id", "v"),
+      Seq("id"), Some((10L, 11L)))
+    assert(rows(TxnTable.read(spark, root)) ===
+      rows(df(1, 2, 3, 20, 21, 22)) + Seq[Any](10, 1) + Seq[Any](11, 2))
+    assertNoZeroRowParts(root)
+    // an empty change set that touches no file: the rewrite is empty
+    val before = TxnTable.latest(spark, root).get
+    val after = TxnTable.mergeInto(spark, root, df().limit(0), Seq("id"), Some((50L, 50L)))
+    assert(after.files === before.files)
+    assertNoZeroRowParts(root)
+  }
+
+  test("zero-row rewrite: compaction whose delete mask empties the selected files commits no part") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    threeFiles(root)
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(1, 2, 3, 10, 11).toDF("id"))
+    val before = TxnTable.latest(spark, root).get
+    // the two selected files are masked out completely
+    val after = TxnTable.compactWhere(spark, root, targetFiles = 1, bounds = Seq(("id", 1L, 11L)))
+    assert(after.files === before.files.takeRight(1))
+    assert(rows(TxnTable.read(spark, root)) === rows(df(20, 21, 22)))
+    assertNoZeroRowParts(root)
+    // the full compaction of a table its mask emptied
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(20, 21, 22).toDF("id"))
+    assert(TxnTable.compactTxn(spark, root, targetFiles = 1).files.isEmpty)
+    assert(TxnTable.read(spark, root).count() === 0L)
+    assertNoZeroRowParts(root)
+  }
 }
+
