@@ -60,7 +60,7 @@ object PlanSnapshot {
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = "/root/testdata/sf0.001"
-    ArtifactCaches.reset(spark) // cold-start shapes (see PlanSnapshotSpec)
+    SourceStamp.reset(spark) // cold-start shapes (see PlanSnapshotSpec)
     val lines = SparkEntry.benchQueries.map { case (name, fn) =>
       s"$name ${PlanSig.render(PlanSig.signature(fn(spark, sfDir)))}"
     }

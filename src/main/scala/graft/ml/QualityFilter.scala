@@ -159,24 +159,20 @@ object QualityFilter extends graft.QueryModule {
     }
   }
 
-  /** STAMP-KEYED MODEL CACHE (the ARTIFACT-CACHE CONTRACT, see
-    * LlmOps.sigCache): the classifier is planning state derived from
+  /** STAMP-KEYED MODEL CACHE (the artifact-cache contract at
+    * [[graft.SourceStamp]]): the classifier is planning state derived from
     * one documents snapshot — fit ONCE per (session, dir, source
     * stamp), score many. Without it every pipeline run re-pays a full
     * LR fit (the r10 bench's 3rd-most-expensive entry was mostly
     * redundant training); with it q120 costs scoring — a broadcast
     * projection. A regenerated source evicts the stale entry. */
-  private val modelCache = graft.ArtifactCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), Fit]())
+  private val modelCache = new graft.StampCache[Fit]()
 
   /** The corpus's quality model — cached per source stamp. */
-  def ensureModel(s: SparkSession, dir: String): Fit = {
-    val st = graft.SourceStamp.table(s, dir, "documents")
-    graft.SourceStamp.evictStale(modelCache, s, dir, st)(_ => ())
-    modelCache.computeIfAbsent((s, dir, st),
-      { _: (SparkSession, String, String) => fit(fitSample(docsOf(s, dir))) })
-  }
+  def ensureModel(s: SparkSession, dir: String): Fit =
+    modelCache(s, dir, graft.SourceStamp.table(s, dir, "documents")) {
+      fit(fitSample(docsOf(s, dir)))
+    }
 
   val q120: (SparkSession, String) => DataFrame = (s, dir) => {
     val docs = docsOf(s, dir)

@@ -81,7 +81,7 @@ object Mv {
       schema: Seq[(String, DataType)])
 
   // Session-keyed registry (same lifetime posture as the ARTIFACT-CACHE
-  // CONTRACT at LlmOps.sigCache: entries live for the session; an MvDef
+  // CONTRACT at graft.SourceStamp: entries live for the session; an MvDef
   // holds only plan metadata, no persisted data, and artifact freshness
   // is owned by the registering module's SourceStamp check — a
   // regenerated dataset rebuilds the artifact under the same path, which

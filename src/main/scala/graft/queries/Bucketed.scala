@@ -58,21 +58,16 @@ object Bucketed extends graft.QueryModule {
     * survive JVMs but the warehouse directory does — an orphaned
     * location (ours by construction) is removed before re-creating, or
     * Spark refuses the managed-table CTAS. */
-  def ensureTable(s: SparkSession, dir: String, name: String): Unit = synchronized {
+  def ensureTable(s: SparkSession, dir: String, name: String): Unit = {
     val (key, sortCols) = specs(name)
     s.sql(s"CREATE DATABASE IF NOT EXISTS $Db")
     val table = s"$Db.${name}_${tag(dir)}"
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir") + s"/$Db.db/${name}_${tag(dir)}")
-    // layout validity is decided by the SOURCE's file listing, not by
-    // table existence — regenerated source data forces a rebuild
-    // (graft.SourceStamp; marker written after a successful build)
-    val st = graft.SourceStamp.table(s, dir, name)
-    if (!s.catalog.tableExists(table) ||
-        !graft.SourceStamp.isCurrent(s, loc.toString, st)) {
+    val loc = s.conf.get("spark.sql.warehouse.dir") + s"/$Db.db/${name}_${tag(dir)}"
+    // layout validity is decided by the SOURCE's file listing; the
+    // catalog entry is per JVM, so its absence also forces a rebuild
+    graft.SourceStamp.ensure(s, loc, graft.SourceStamp.table(s, dir, name),
+        valid = s.catalog.tableExists(table)) {
       if (s.catalog.tableExists(table)) s.sql(s"DROP TABLE $table")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       // repartition on the bucket key first: bucketBy writes one file
       // per (task, bucket), and the scan only reports its output as
       // SORTED when each bucket is a single file — without this, a
@@ -81,7 +76,6 @@ object Bucketed extends graft.QueryModule {
         .format("parquet")
         .bucketBy(Buckets, key).sortBy(sortCols.head, sortCols.tail: _*)
         .saveAsTable(table)
-      graft.SourceStamp.write(s, loc.toString, st)
     }
   }
 

@@ -117,21 +117,16 @@ object Clusters extends graft.QueryModule {
     * snapshot and every downstream consumer (dedup filter, cluster
     * stats, representative selection) reads it. The labeling is already
     * block-manager-resident via the final round's localCheckpoint.
-    * Invalidation: the artifact-cache contract at [[LlmOps]].sigCache. */
-  private val ccCache =
-    graft.ArtifactCaches.register(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]())
+    * Invalidation: the artifact-cache contract at [[graft.SourceStamp]]. */
+  private val ccCache = new graft.StampCache[DataFrame](_.unpersist(): Unit)
 
   /** (doc_id, cluster_id) for every doc in ≥1 LSH candidate pair. */
-  private[queries] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.SourceStamp.table(s, dir, "documents")
-    graft.SourceStamp.evictStale(ccCache, s, dir, st)(_.unpersist(): Unit)
-    ccCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+  private[queries] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    ccCache(s, dir, graft.SourceStamp.table(s, dir, "documents")) {
       val pairs = LlmOps.bucketPairs(LlmOps.bandRows(LlmOps.signatures(s, dir)._2))
       connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-    })
-  }
+    }
 
   /** DuckDB mirror of [[clusterLabels]]: the q25 candidate CTEs closed
     * transitively by a recursive CTE (min reachable id == component min,

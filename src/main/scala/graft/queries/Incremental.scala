@@ -91,15 +91,9 @@ object Incremental extends graft.QueryModule {
   /** Build-once bootstrap exercising the incremental path: all history
     * in one overwrite, then the LAST day via a real [[applyDay]] merge —
     * so every verify/bench run proves the merge, not just the rebuild. */
-  def ensureMaintained(s: SparkSession, dir: String): String = synchronized {
+  def ensureMaintained(s: SparkSession, dir: String): String = {
     val path = tableDir(s, dir)
-    val loc = new org.apache.hadoop.fs.Path(path)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // rebuild when the SOURCE was regenerated under the same path
-    // (graft.SourceStamp; marker written after a successful build)
-    val st = graft.SourceStamp.table(s, dir, "events")
-    if (!fs.exists(loc) || !graft.SourceStamp.isCurrent(s, path, st)) {
-      if (fs.exists(loc)) fs.delete(loc, true)
+    graft.SourceStamp.ensure(s, path, graft.SourceStamp.table(s, dir, "events")) {
       import s.implicits._
       val days = sourceDays(s, dir)
       graft.Tables.t(s, dir, "events")
@@ -109,7 +103,6 @@ object Incremental extends graft.QueryModule {
         .agg(count(lit(1)).as("n"), money(sum(cents($"value"))).as("total_value"))
         .write.mode("overwrite").partitionBy("day").parquet(path)
       applyDay(s, dir, days.last)
-      graft.SourceStamp.write(s, path, st)
     }
     path
   }

@@ -260,39 +260,20 @@ object LlmOps extends graft.QueryModule {
   /** The LSH pipeline's shared signature artifact, built and persisted
     * ONCE per (session, sfDir): per-doc distinct shingle sets and their
     * 8 min-hashes. This is the checkpoint a real near-dedup pipeline
-    * shares between candidate generation (q25), verification (q30) and
-    * incremental ingest (NearDupStream's store is seedable from it) —
-    * compute signatures once, every stage reads them. Min-hash over the
+    * shares between candidate generation (q25) and verification (q30)
+    * — compute signatures once, every stage reads them. Min-hash over the
     * DISTINCT shingle set equals min-hash over the raw multiset (min is
     * duplicate-insensitive), so one artifact serves both the signature
     * and the exact-Jaccard stages. MEMORY_AND_DISK: spills, never
-    * recomputes.
-    *
-    * ARTIFACT-CACHE CONTRACT (applies to every per-(session, dir) cache
-    * in this codebase — sigCache, centroidCache, probeCache,
-    * batchProbeCache, Clusters.ccCache, Relational.devCache — and to
-    * the on-disk artifacts keyed by path: the IVF index, the bucketed
-    * layouts, Incremental's maintained tables, Txn's log): an artifact
-    * is a materialization of the dataset AT dir AS OF build time, and
-    * its validity is decided by a SOURCE FINGERPRINT
-    * ([[graft.SourceStamp]]: name+len+mtime of the source's data
-    * files). In-memory caches carry the stamp in their key (stale
-    * entries are unpersisted and evicted on next access); on-disk
-    * artifacts carry a `_source_stamp` marker their ensure* entry
-    * point re-checks. Regenerating data under an existing path
-    * therefore triggers a rebuild instead of silently serving stale
-    * results — SourceStampSpec proves both paths. */
-  private val sigCache =
-    graft.ArtifactCaches.register(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (DataFrame, DataFrame)]())
+    * recomputes. Invalidation: the artifact-cache contract at
+    * [[graft.SourceStamp]]. */
+  private val sigCache = new graft.StampCache[(DataFrame, DataFrame)]({
+    case (a, b) => a.unpersist(); b.unpersist(): Unit
+  })
 
   /** (shingle sets, minhash signatures) for the documents table. */
-  private[graft] def signatures(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val st = graft.SourceStamp.table(s, dir, "documents")
-    graft.SourceStamp.evictStale(sigCache, s, dir, st) {
-      case (a, b) => a.unpersist(); b.unpersist(): Unit
-    }
-    sigCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+  private[graft] def signatures(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    sigCache(s, dir, graft.SourceStamp.table(s, dir, "documents")) {
       import s.implicits._
       val sig = t(s, dir, "documents")
         .withColumn("tk", split($"text", " "))
@@ -302,8 +283,7 @@ object LlmOps extends graft.QueryModule {
       val mh = minhashAgg(sig.select($"doc_id", explode($"s").as("sh")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (sig, mh)
-    })
-  }
+    }
 
   val q25: Q = (s, dir) => {
     import s.implicits._
@@ -371,20 +351,15 @@ object LlmOps extends graft.QueryModule {
     * generated for exactly this width, so sign-LSH is dimension-generic
     * like its oracle SQL (which derives bounds from len(e)). The peek is
     * planning metadata (one row, one column), the same class of
-    * driver-side lookup as the IVF centroids; stamp-keyed per the
-    * ARTIFACT-CACHE CONTRACT so a regenerated dataset re-derives it. */
-  private val dimCache =
-    graft.ArtifactCaches.register(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Integer]())
+    * driver-side lookup as the IVF centroids; stamp-keyed (the
+    * artifact-cache contract at [[graft.SourceStamp]]) so a regenerated
+    * dataset re-derives it. */
+  private val dimCache = new graft.StampCache[Int]()
 
-  private[queries] def dimOf(s: SparkSession, dir: String): Int = {
-    val st = graft.SourceStamp.table(s, dir, "embeddings")
-    graft.SourceStamp.evictStale(dimCache, s, dir, st)(_ => ())
-    dimCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
-      Integer.valueOf(t(s, dir, "embeddings")
-        .select(size(col("embedding"))).head().getInt(0))
-    }).intValue()
-  }
+  private[queries] def dimOf(s: SparkSession, dir: String): Int =
+    dimCache(s, dir, graft.SourceStamp.table(s, dir, "embeddings")) {
+      t(s, dir, "embeddings").select(size(col("embedding"))).head().getInt(0)
+    }
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -648,22 +623,24 @@ object LlmOps extends graft.QueryModule {
     graft.SourceStamp.table(s, dir, "embeddings") +
       s"\n#build:k=${ivfK(s)}:iters=${kmIters(s)}"
 
-  def ensureIvfIndex(s: SparkSession, dir: String): String = synchronized {
+  /** The index table's directory: the artifact [[ensureIvfIndex]]
+    * stamps and [[ivfMaintain]] appends to, under one lock. */
+  private def ivfLoc(s: SparkSession, dir: String): String =
+    s.conf.get("spark.sql.warehouse.dir") + s"/$IvfDb.db/emb_${tagDir(dir)}"
+
+  def ensureIvfIndex(s: SparkSession, dir: String): String = {
     import s.implicits._
     s.sql(s"CREATE DATABASE IF NOT EXISTS $IvfDb")
     val table = ivfTable(dir)
     val centsTable = ivfCentsTable(dir)
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(
-      wh + s"/$IvfDb.db/emb_${tagDir(dir)}")
+    val loc = new org.apache.hadoop.fs.Path(ivfLoc(s, dir))
     val centsLoc = new org.apache.hadoop.fs.Path(
-      wh + s"/$IvfDb.db/cents_${tagDir(dir)}")
+      s.conf.get("spark.sql.warehouse.dir") + s"/$IvfDb.db/cents_${tagDir(dir)}")
     // index validity keyed on the SOURCE listing + build knobs
     // ([[ivfStamp]]): a regenerated embeddings table OR a re-tuned
-    // K/iters forces an index rebuild
-    val st = ivfStamp(s, dir)
-    if (!s.catalog.tableExists(table) || !s.catalog.tableExists(centsTable) ||
-        !graft.SourceStamp.isCurrent(s, loc.toString, st)) {
+    // K/iters forces an index rebuild; the catalog entries are per JVM
+    graft.SourceStamp.ensure(s, ivfLoc(s, dir), ivfStamp(s, dir),
+        valid = s.catalog.tableExists(table) && s.catalog.tableExists(centsTable)) {
       val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
       for ((tbl, l) <- Seq((table, loc), (centsTable, centsLoc))) {
         if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl")
@@ -687,9 +664,6 @@ object LlmOps extends graft.QueryModule {
       // plan serves the deleted files (surfaced by the second-K spec)
       s.catalog.refreshTable(table)
       s.catalog.refreshTable(centsTable)
-      // stamp written LAST = commit marker: a crash between the two
-      // writes leaves no stamp, and the next call rebuilds both
-      graft.SourceStamp.write(s, loc.toString, st)
     }
     table
   }
@@ -710,19 +684,21 @@ object LlmOps extends graft.QueryModule {
     * one delta scan + a K-row broadcast, independent of index size.
     * The delta diff is the SourceStamp listing itself: recorded lines
     * vs current lines, set difference = new files. */
-  def ivfMaintain(s: SparkSession, dir: String): String = synchronized {
+  def ivfMaintain(s: SparkSession, dir: String): String =
+    graft.SourceStamp.locked(ivfLoc(s, dir))(ivfMaintainLocked(s, dir))
+
+  private def ivfMaintainLocked(s: SparkSession, dir: String): String = {
     import s.implicits._
     val table = ivfTable(dir)
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir") + s"/$IvfDb.db/emb_${tagDir(dir)}")
+    val loc = ivfLoc(s, dir)
     // knob-aware stamp: a knob change fails the subset check below (the
     // old #build line is not in the current stamp) -> full retrain
     val st = ivfStamp(s, dir)
     if (!s.catalog.tableExists(table) ||
         !s.catalog.tableExists(ivfCentsTable(dir)))
       return ensureIvfIndex(s, dir)
-    if (graft.SourceStamp.isCurrent(s, loc.toString, st)) return table
-    val rec = graft.SourceStamp.recorded(s, loc.toString).getOrElse("")
+    if (graft.SourceStamp.isCurrent(s, loc, st)) return table
+    val rec = graft.SourceStamp.recorded(s, loc).getOrElse("")
     val recLines = rec.split("\n").filter(_.nonEmpty).toSet
     val curLines = st.split("\n").filter(_.nonEmpty).toSet
     if (!recLines.subsetOf(curLines))
@@ -742,7 +718,7 @@ object LlmOps extends graft.QueryModule {
       .select($"vec_id", $"e", $"m.c".cast("int").as("cell"))
       .write.mode("append").format("parquet")
       .partitionBy("cell").saveAsTable(table)
-    graft.SourceStamp.write(s, loc.toString, st)
+    graft.SourceStamp.write(s, loc, st)
     table
   }
 
@@ -750,20 +726,18 @@ object LlmOps extends graft.QueryModule {
     * K quantized vectors, the in-memory half of the IVF index (every
     * real IVF implementation keeps centroids resident; ranking K
     * centroids against a probe is query PLANNING, not a cluster job). */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Array[(Int, Array[Long])]]()
+  private val centroidCache = new graft.StampCache[Array[(Int, Array[Long])]]()
 
-  private def ivfCentroids(s: SparkSession, dir: String): Array[(Int, Array[Long])] = {
+  private[graft] def ivfCentroids(s: SparkSession, dir: String): Array[(Int, Array[Long])] = {
     // knob-aware stamp: an in-session K change must not serve the prior
     // build's cached centroids
     val st = ivfStamp(s, dir)
-    graft.SourceStamp.evictStale(centroidCache, s, dir, st)(_ => ())
     ensureIvfIndex(s, dir)
-    centroidCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+    centroidCache(s, dir, st) {
       s.table(ivfCentsTable(dir)).collect()
         .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
         .sortBy(_._1)
-    })
+    }
   }
 
   /** The planning key on the driver: ‖c‖² − 2·p·c, the same integer
@@ -802,20 +776,16 @@ object LlmOps extends graft.QueryModule {
     * bench/oracle setup (probe = vec_id 0) — cached per (session, dir)
     * beside the centroids: in a real deployment the probe arrives as an
     * API argument and this lookup does not exist. */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Array[Long]]()
+  private val probeCache = new graft.StampCache[Array[Long]]()
 
-  private def corpusProbe(s: SparkSession, dir: String): Array[Long] = {
-    val st = graft.SourceStamp.table(s, dir, "embeddings")
-    graft.SourceStamp.evictStale(probeCache, s, dir, st)(_ => ())
-    probeCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+  private def corpusProbe(s: SparkSession, dir: String): Array[Long] =
+    probeCache(s, dir, graft.SourceStamp.table(s, dir, "embeddings")) {
       import s.implicits._
       t(s, dir, "embeddings")
         .select(quantize($"embedding").as("e"))
         .filter($"vec_id" === 0)
         .head().getSeq[Long](0).toArray
-    })
-  }
+    }
 
   /** Shared oracle CTE chain: quantized corpus `q`, first-K seeds `c0`,
     * KmIters fixed-point Lloyd rounds (text-identical to q110's, so the
@@ -1068,16 +1038,13 @@ object LlmOps extends graft.QueryModule {
   // Cost: |cells(probe batch)|/K of the corpus + a maps×B×k shuffle —
   // versus q53's full corpus scan. Recall contract is q46's, per probe.
   // ---------------------------------------------------------------------
-  private val batchProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Array[(Int, Array[Long])]]()
+  private val batchProbeCache = new graft.StampCache[Array[(Int, Array[Long])]]()
 
   /** The bench/oracle probe batch (vec_ids 0..BatchProbes-1), collected
     * once per (session, dir) — in production probes arrive as API
     * arguments, like [[ivfSearch]]'s. */
-  private def batchProbes(s: SparkSession, dir: String): Array[(Int, Array[Long])] = {
-    val st = graft.SourceStamp.table(s, dir, "embeddings")
-    graft.SourceStamp.evictStale(batchProbeCache, s, dir, st)(_ => ())
-    batchProbeCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+  private def batchProbes(s: SparkSession, dir: String): Array[(Int, Array[Long])] =
+    batchProbeCache(s, dir, graft.SourceStamp.table(s, dir, "embeddings")) {
       import s.implicits._
       t(s, dir, "embeddings")
         .filter($"vec_id" < BatchProbes)
@@ -1085,8 +1052,7 @@ object LlmOps extends graft.QueryModule {
         .collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray))
         .sortBy(_._1)
-    })
-  }
+    }
 
   val q58: Q = (s, dir) => {
     import graft.functions.TopKByScore.topKByScore

@@ -54,15 +54,10 @@ object Materialized extends graft.QueryModule {
     * scale is [[Incremental]]'s per-day dynamic-overwrite contract; here
     * the build is one overwrite because registration, not maintenance,
     * is what this module adds. */
-  def ensureMv(s: SparkSession, dir: String): String = synchronized {
+  def ensureMv(s: SparkSession, dir: String): String = {
     val path = mvPath(s, dir)
-    val loc = new org.apache.hadoop.fs.Path(path)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = graft.SourceStamp.table(s, dir, "events")
-    if (!fs.exists(loc) || !graft.SourceStamp.isCurrent(s, path, st)) {
-      if (fs.exists(loc)) fs.delete(loc, true)
+    graft.SourceStamp.ensure(s, path, graft.SourceStamp.table(s, dir, "events")) {
       defining(s, dir).write.mode("overwrite").parquet(path)
-      graft.SourceStamp.write(s, path, st)
     }
     Mv.register(s, s"daily_events_${tag(dir)}", defining(s, dir), path)
     path

@@ -199,21 +199,18 @@ object PageRank extends graft.QueryModule {
   // counting) cannot express and iteration can.
   // ---------------------------------------------------------------------
   /** The symmetric purchase edge list as a stamp-keyed SESSION ARTIFACT
-    * (the sigCache/Clusters-labeling contract): the 6M⋈1.5M join +
+    * (the artifact-cache contract at [[graft.SourceStamp]]): the 6M⋈1.5M join +
     * distinct that DERIVES the graph is paid once per dataset snapshot,
     * not once per query run — q104 and q114 share one persisted edge
     * table, exactly as a production graph pipeline materializes its
     * edge list once and runs many centrality/proximity queries over
-    * it. Lifetime owned by [[graft.ArtifactCaches]] (cold-start resets
-    * for plan snapshots; stale stamps unpersist on regeneration). */
-  private val edgeCache = graft.ArtifactCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]())
+    * it. */
+  private val edgeCache = new graft.StampCache[DataFrame](_.unpersist(): Unit)
 
   private def purchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.SourceStamp.table(s, dir, "lineitem") + " " +
+    val st = graft.SourceStamp.table(s, dir, "lineitem") + "\u0000" +
       graft.SourceStamp.table(s, dir, "orders")
-    graft.SourceStamp.evictStale(edgeCache, s, dir, st)(_.unpersist(): Unit)
-    edgeCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+    edgeCache(s, dir, st) {
       import s.implicits._
       val pairs = graft.Tables.t(s, dir, "lineitem")
         .select($"l_orderkey", $"l_suppkey")
@@ -231,7 +228,7 @@ object PageRank extends graft.QueryModule {
           struct(($"sp" + SuppOff).as("src"), $"c".as("dst")))).as("e"))
         .select($"e.src".as("src"), $"e.dst".as("dst"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
   val q104Bench: Q = (s, dir) => {

@@ -1458,19 +1458,15 @@ object Relational extends graft.QueryModule {
   // — the signatures-artifact pattern — so the plan is med pass (scan 1)
   // + dev build (scan 2), and the MAD pass and the flagging aggregate
   // both read the persisted 3-column subtree. Was 3 corpus scans;
-  // plan-pinned at ≤2 in plan_signatures. Same re-derivation contract
-  // as every artifact cache: see LlmOps.sigCache.
+  // plan-pinned at ≤2 in plan_signatures. Invalidation: the
+  // artifact-cache contract at graft.SourceStamp.
   // ---------------------------------------------------------------------
-  private val devCache =
-    graft.ArtifactCaches.register(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]())
+  private val devCache = new graft.StampCache[DataFrame](_.unpersist(): Unit)
 
   /** (event_type, med_c, dev) for every event — the shared input of the
     * MAD pass and the flagging pass, persisted narrow (3 columns). */
-  private def medDev(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.SourceStamp.table(s, dir, "events")
-    graft.SourceStamp.evictStale(devCache, s, dir, st)(_.unpersist(): Unit)
-    devCache.computeIfAbsent((s, dir, st), { _: (SparkSession, String, String) =>
+  private def medDev(s: SparkSession, dir: String): DataFrame =
+    devCache(s, dir, graft.SourceStamp.table(s, dir, "events")) {
       import s.implicits._
       val ev = t(s, dir, "events")
         .select($"event_type", cents($"value").as("v_c"))
@@ -1479,8 +1475,7 @@ object Relational extends graft.QueryModule {
       ev.join(med, "event_type")
         .select($"event_type", $"med_c", abs($"v_c" - $"med_c").as("dev"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   val q80: Q = (s, dir) => {
     import s.implicits._

@@ -28,11 +28,44 @@ import graft.sinks.TxnTable
   */
 object Txn extends graft.QueryModule {
 
-  private def tag(dir: String): String = graft.Tables.dirTag(dir)
-
-  private[queries] def tableRoot(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/graft_txn/daily_${tag(dir)}"
+  /** One build-once txn table of this module: its name, spelled once,
+    * the source table its stamp covers, and where its log lives (under
+    * the warehouse's `graft_txn/`, or as a table of the SQL catalog
+    * `graft_cat`, addressed by that name). */
+  private[graft] final case class Art(prefix: String, source: String,
+                                      inCatalog: Boolean) {
+    def name(dir: String): String = s"${prefix}_${graft.Tables.dirTag(dir)}"
+    def root(s: SparkSession, dir: String): String =
+      if (inCatalog) s"${sqlCatWarehouse(s)}/db/${name(dir)}"
+      else s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
+        s"/graft_txn/${name(dir)}"
+    /** Builds the table once per source stamp ([[graft.SourceStamp.ensure]]);
+      * `build` gets the root and the name. Returns the root. */
+    def ensure(s: SparkSession, dir: String)(build: (String, String) => Unit): String = {
+      val root = this.root(s, dir)
+      graft.SourceStamp.ensure(s, root, graft.SourceStamp.table(s, dir, source))(
+        build(root, name(dir)))
+      root
+    }
+  }
+  private val Daily = Art("daily", "events", inCatalog = false)
+  private val Raw = Art("events_raw", "events", inCatalog = false)
+  private val DailyMerge = Art("daily_merge", "events", inCatalog = false)
+  private val Mor = Art("events_mor", "events", inCatalog = false)
+  private val DailyBranch = Art("daily_branch", "events", inCatalog = false)
+  private val SqlUp = Art("events_sqlup", "events", inCatalog = true)
+  private val Maint = Art("events_maint", "events", inCatalog = true)
+  private val Ren = Art("events_ren", "events", inCatalog = true)
+  private val Rep = Art("daily_rep", "events", inCatalog = true)
+  private val PComp = Art("events_pcomp", "events", inCatalog = true)
+  private val StrDocs = Art("docs_str", "documents", inCatalog = true)
+  private val MorUp = Art("events_morup", "events", inCatalog = true)
+  private val UserCounts = Art("user_counts", "events", inCatalog = true)
+  private val ConsDocs = Art("docs_cons", "documents", inCatalog = true)
+  private val PosFold = Art("events_posfold", "events", inCatalog = true)
+  private[graft] val artifacts: Seq[Art] = Seq(Daily, Raw, DailyMerge, Mor,
+    DailyBranch, SqlUp, Maint, Ren, Rep, PComp, StrDocs, MorUp, UserCounts,
+    ConsDocs, PosFold)
 
   /** One day-slice of the daily aggregate (same shape as q56's). */
   private def dayAgg(s: SparkSession, dir: String, pred: org.apache.spark.sql.Column): DataFrame = {
@@ -46,28 +79,15 @@ object Txn extends graft.QueryModule {
 
   /** Idempotent 4-commit build; returns the table root. Rebuilds from
     * scratch when the SOURCE was regenerated (graft.SourceStamp). */
-  def ensureTable(s: SparkSession, dir: String): String = synchronized {
-    import s.implicits._
-    val root = tableRoot(s, dir)
-    val st = graft.SourceStamp.table(s, dir, "events")
-    // op-based idempotence: the build always ENDS with the compact
-    // commit, so "last op is compact" is day-count-independent (a
-    // version COUNT check miscounts for sources with < 3 days and
-    // rebuilds on every call)
-    if (!TxnTable.latest(s, root).exists(_.op == "compact") ||
-        !graft.SourceStamp.isCurrent(s, root, st)) {
-      val loc = new org.apache.hadoop.fs.Path(root)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+  def ensureTable(s: SparkSession, dir: String): String =
+    Daily.ensure(s, dir) { (root, _) =>
+      import s.implicits._
       val days = Incremental.sourceDays(s, dir)
       val (hist, tail) = days.splitAt(math.max(1, days.size - 2))
       TxnTable.overwrite(s, root, dayAgg(s, dir, $"day".isin(hist: _*)))
       tail.foreach(d => TxnTable.append(s, root, dayAgg(s, dir, $"day" === d)))
       TxnTable.compactTxn(s, root, targetFiles = 1)
-      graft.SourceStamp.write(s, root, st)
     }
-    root
-  }
 
   // ---------------------------------------------------------------------
   // q82: latest txn snapshot == from-scratch recompute. The bench form
@@ -102,38 +122,21 @@ object Txn extends graft.QueryModule {
   private[queries] val DelLo = 101L
   private[queries] val DelHi = 200L
 
-  private[queries] def rawRoot(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/graft_txn/events_raw_${tag(dir)}"
-
   /** Idempotent build: raw events range-partitioned on user_id with
     * manifest stats, then the v2 delete commit. Rebuilds when the
     * source was regenerated. */
   private[queries] def ensureDeleted(s: SparkSession, dir: String): String =
-    synchronized {
+    Raw.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val root = rawRoot(s, dir)
-      val st = graft.SourceStamp.table(s, dir, "events")
-      // the metaCount probe also forces ONE rebuild of tables whose
-      // on-disk manifests predate per-file row counts (q122 needs them)
-      if (TxnTable.versions(s, root).size < 2 ||
-          !graft.SourceStamp.isCurrent(s, root, st) ||
-          TxnTable.metaCount(s, root).isEmpty) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        // range partitioning gives files with disjoint user_id spans, so
-        // the delete's manifest pruning has something to skip — the
-        // same write-side clustering any stats-pruned table needs
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.deleteWhere(s, root,
-          $"user_id".between(DelLo, DelHi), Some((DelLo, DelHi)))
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      // range partitioning gives files with disjoint user_id spans, so
+      // the delete's manifest pruning has something to skip — the
+      // same write-side clustering any stats-pruned table needs
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.deleteWhere(s, root,
+        $"user_id".between(DelLo, DelHi), Some((DelLo, DelHi)))
     }
 
   val q89Bench: Q = (s, dir) => {
@@ -168,35 +171,21 @@ object Txn extends graft.QueryModule {
   // merge, corrected == recomputed, hash-exact. TxnTableSpec proves the
   // file-skipping mechanics; this proves end-to-end repair semantics.
   // ---------------------------------------------------------------------
-  private[queries] def mergeRoot(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/graft_txn/daily_merge_${tag(dir)}"
-
   private[queries] def ensureMerged(s: SparkSession, dir: String): String =
-    synchronized {
+    DailyMerge.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val root = mergeRoot(s, dir)
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (TxnTable.versions(s, root).size < 2 ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        val days = Incremental.sourceDays(s, dir)
-        val last = days.last
-        // partial bootstrap: the last day aggregated from only half its
-        // events (even event_ids) — the corruption the merge repairs
-        val partial = graft.Tables.t(s, dir, "events")
-          .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
-          .filter($"day" =!= last || $"event_id" % 2 === 0)
-          .groupBy($"day", $"event_type")
-          .agg(count(lit(1)).as("n"), money(sum(cents($"value"))).as("total_value"))
-        TxnTable.overwrite(s, root, partial)
-        TxnTable.mergeInto(s, root, dayAgg(s, dir, $"day" === last),
-          keyCols = Seq("day", "event_type"))
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      val days = Incremental.sourceDays(s, dir)
+      val last = days.last
+      // partial bootstrap: the last day aggregated from only half its
+      // events (even event_ids) — the corruption the merge repairs
+      val partial = graft.Tables.t(s, dir, "events")
+        .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
+        .filter($"day" =!= last || $"event_id" % 2 === 0)
+        .groupBy($"day", $"event_type")
+        .agg(count(lit(1)).as("n"), money(sum(cents($"value"))).as("total_value"))
+      TxnTable.overwrite(s, root, partial)
+      TxnTable.mergeInto(s, root, dayAgg(s, dir, $"day" === last),
+        keyCols = Seq("day", "event_type"))
     }
 
   val q90Bench: Q = (s, dir) => TxnTable.read(s, ensureMerged(s, dir))
@@ -263,31 +252,17 @@ object Txn extends graft.QueryModule {
   // same keys removed. Erased means erased on the MoR path too —
   // BEFORE any compaction folds the deletes in.
   // ---------------------------------------------------------------------
-  private[queries] def morRoot(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/graft_txn/events_mor_${tag(dir)}"
-
   /** Idempotent build: raw events with manifest stats, then the v2
     * MoR-delete commit of every 13th user's id. */
   private[queries] def ensureMorDeleted(s: SparkSession, dir: String): String =
-    synchronized {
+    Mor.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val root = morRoot(s, dir)
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (TxnTable.versions(s, root).size < 2 ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events").repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.deleteKeysMor(s, root, "user_id",
-          graft.Tables.t(s, dir, "events")
-            .filter($"user_id" % 13 === 0).select($"user_id").distinct())
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events").repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.deleteKeysMor(s, root, "user_id",
+        graft.Tables.t(s, dir, "events")
+          .filter($"user_id" % 13 === 0).select($"user_id").distinct())
     }
 
   val q119Bench: Q = (s, dir) => {
@@ -394,31 +369,17 @@ object Txn extends graft.QueryModule {
   // proves the ref mechanics (isolation, divergence refusal, vacuum
   // pinning); this certifies the values end-to-end.
   // ---------------------------------------------------------------------
-  private[queries] def branchRoot(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/graft_txn/daily_branch_${tag(dir)}"
-
   private[queries] def ensureBranched(s: SparkSession, dir: String): String =
-    synchronized {
+    DailyBranch.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val root = branchRoot(s, dir)
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (!TxnTable.latest(s, root).exists(_.op.startsWith("fast-forward")) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        val days = Incremental.sourceDays(s, dir)
-        val (hist, tail) = days.splitAt(math.max(1, days.size - 2))
-        TxnTable.overwrite(s, root, dayAgg(s, dir, $"day".isin(hist: _*)))
-        TxnTable.createBranch(s, root, "load")
-        tail.foreach(d =>
-          TxnTable.appendToBranch(s, root, "load", dayAgg(s, dir, $"day" === d)))
-        TxnTable.fastForward(s, root, "load")
-        TxnTable.dropBranch(s, root, "load")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      val days = Incremental.sourceDays(s, dir)
+      val (hist, tail) = days.splitAt(math.max(1, days.size - 2))
+      TxnTable.overwrite(s, root, dayAgg(s, dir, $"day".isin(hist: _*)))
+      TxnTable.createBranch(s, root, "load")
+      tail.foreach(d =>
+        TxnTable.appendToBranch(s, root, "load", dayAgg(s, dir, $"day" === d)))
+      TxnTable.fastForward(s, root, "load")
+      TxnTable.dropBranch(s, root, "load")
     }
 
   val q124Bench: Q = (s, dir) => TxnTable.read(s, ensureBranched(s, dir))
@@ -479,30 +440,18 @@ object Txn extends graft.QueryModule {
   }
 
   private[queries] def ensureSqlUpdated(s: SparkSession, dir: String): String =
-    synchronized {
+    SqlUp.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_sqlup_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (TxnTable.versions(s, root).size < 2 ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        // range clustering on the update key: the row-level rewrite's
-        // group filter needs disjoint per-file spans to have anything
-        // to carry (same write-side discipline as q89's delete)
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
-          s"WHERE user_id BETWEEN $UpLo AND $UpHi")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      // range clustering on the update key: the row-level rewrite's
+      // group filter needs disjoint per-file spans to have anything
+      // to carry (same write-side discipline as q89's delete)
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
+        s"WHERE user_id BETWEEN $UpLo AND $UpHi")
     }
 
   val q126Bench: Q = (s, dir) => {
@@ -546,39 +495,25 @@ object Txn extends graft.QueryModule {
   private[queries] val MaintHi = 6L
 
   private[queries] def ensureMaintained(s: SparkSession, dir: String): String =
-    synchronized {
+    Maint.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_maint_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      // the lifecycle ends compacted with exactly ONE retained version
-      if (!(TxnTable.latest(s, root).exists(_.op.startsWith("compact")) &&
-            TxnTable.versions(s, root).size == 1) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.deleteKeysMor(s, root, "user_id",
-          s.range(MaintLo, MaintHi + 1).toDF("user_id"))
-        s.sql(s"CALL graft_cat.system.compact_deletes('db.$name')")
-        s.sql(s"CALL graft_cat.system.compact('db.$name', " +
-          "target_files => 4, sort_cols => 'user_id')")
-        s.sql(s"CALL graft_cat.system.vacuum('db.$name', " +
-          "retain_versions => 1, grace_ms => 0)")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.deleteKeysMor(s, root, "user_id",
+        s.range(MaintLo, MaintHi + 1).toDF("user_id"))
+      s.sql(s"CALL graft_cat.system.compact_deletes('db.$name')")
+      s.sql(s"CALL graft_cat.system.compact('db.$name', " +
+        "target_files => 4, sort_cols => 'user_id')")
+      s.sql(s"CALL graft_cat.system.vacuum('db.$name', " +
+        "retain_versions => 1, grace_ms => 0)")
     }
 
   val q127Bench: Q = (s, dir) => {
     import s.implicits._
-    val name = s"events_maint_${tag(dir)}"
+    val name = Maint.name(dir)
     ensureMaintained(s, dir)
     // read BY NAME through the catalog: the lifecycle's product is an
     // ordinary SQL table
@@ -620,37 +555,23 @@ object Txn extends graft.QueryModule {
   private[queries] val RenHi = 14L
 
   private[queries] def ensureRenamed(s: SparkSession, dir: String): String =
-    synchronized {
+    Ren.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_ren_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      // lifecycle product: overwrite + 3 alters + delete = 5 versions
-      if (!(TxnTable.latest(s, root).exists(_.op == "delete") &&
-            TxnTable.versions(s, root).size == 5) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        s.sql(s"ALTER TABLE graft_cat.db.$name RENAME COLUMN user_id TO uid")
-        s.sql(s"ALTER TABLE graft_cat.db.$name RENAME COLUMN value TO amount")
-        s.sql(s"ALTER TABLE graft_cat.db.$name DROP COLUMN props")
-        s.sql(s"DELETE FROM graft_cat.db.$name " +
-          s"WHERE uid BETWEEN $RenLo AND $RenHi")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      s.sql(s"ALTER TABLE graft_cat.db.$name RENAME COLUMN user_id TO uid")
+      s.sql(s"ALTER TABLE graft_cat.db.$name RENAME COLUMN value TO amount")
+      s.sql(s"ALTER TABLE graft_cat.db.$name DROP COLUMN props")
+      s.sql(s"DELETE FROM graft_cat.db.$name " +
+        s"WHERE uid BETWEEN $RenLo AND $RenHi")
     }
 
   val q128Bench: Q = (s, dir) => {
     import s.implicits._
-    val name = s"events_ren_${tag(dir)}"
+    val name = Ren.name(dir)
     ensureRenamed(s, dir)
     s.sql(s"SELECT * FROM graft_cat.db.$name")
       .groupBy($"event_type")
@@ -687,40 +608,25 @@ object Txn extends graft.QueryModule {
   // TRAVELS and is ADDRESSED, never what it IS.
   // ---------------------------------------------------------------------
   private[queries] def ensureReplayRenamed(s: SparkSession, dir: String): String =
-    synchronized {
+    Rep.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"daily_rep_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      // lifecycle product: the head is either a replay commit or (for
-      // a source too small to split off tail days) the bare rename
-      if (!TxnTable.latest(s, root).exists(sn =>
-            sn.op.startsWith("replay:") || sn.op == "alter") ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        val days = Incremental.sourceDays(s, dir)
-        val (hist, tail) = days.splitAt(math.max(1, days.size - 2))
-        TxnTable.overwrite(s, root, dayAgg(s, dir, $"day".isin(hist: _*)))
-        s.sql(s"CALL graft_cat.system.create_branch('db.$name', 'load')")
-        tail.foreach(d =>
-          TxnTable.appendToBranch(s, root, "load", dayAgg(s, dir, $"day" === d)))
-        // main diverges by EVOLVING: a mapped-schema commit past the fork
-        s.sql(s"ALTER TABLE graft_cat.db.$name " +
-          "RENAME COLUMN total_value TO revenue")
-        if (tail.nonEmpty)
-          s.sql(s"CALL graft_cat.system.replay_branch('db.$name', 'load')")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      val days = Incremental.sourceDays(s, dir)
+      val (hist, tail) = days.splitAt(math.max(1, days.size - 2))
+      TxnTable.overwrite(s, root, dayAgg(s, dir, $"day".isin(hist: _*)))
+      s.sql(s"CALL graft_cat.system.create_branch('db.$name', 'load')")
+      tail.foreach(d =>
+        TxnTable.appendToBranch(s, root, "load", dayAgg(s, dir, $"day" === d)))
+      // main diverges by EVOLVING: a mapped-schema commit past the fork
+      s.sql(s"ALTER TABLE graft_cat.db.$name " +
+        "RENAME COLUMN total_value TO revenue")
+      if (tail.nonEmpty)
+        s.sql(s"CALL graft_cat.system.replay_branch('db.$name', 'load')")
     }
 
   val q129Bench: Q = (s, dir) => {
     import s.implicits._
-    val name = s"daily_rep_${tag(dir)}"
+    val name = Rep.name(dir)
     ensureReplayRenamed(s, dir)
     s.sql(s"SELECT * FROM graft_cat.db.$name")
   }
@@ -757,34 +663,18 @@ object Txn extends graft.QueryModule {
   private[queries] val PcHi = 24L
 
   private[queries] def ensurePartialCompacted(s: SparkSession, dir: String): String =
-    synchronized {
+    PComp.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_pcomp_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      // lifecycle product: overwrite + MoR delete + partial compact,
-      // with the delete files still live at the head
-      if (!(TxnTable.latest(s, root).exists(sn =>
-              sn.op == "compact" && sn.deletes.nonEmpty) &&
-            TxnTable.versions(s, root).size == 3) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.deleteKeysMor(s, root, "user_id",
-          s.range(PcLo, PcHi + 1).toDF("user_id"))
-        s.sql(s"CALL graft_cat.system.compact_where('db.$name', 2, " +
-          s"col => 'user_id', lo => $PcLo, hi => ${PcHi + 40}, " +
-          "sort_cols => 'user_id')")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.deleteKeysMor(s, root, "user_id",
+        s.range(PcLo, PcHi + 1).toDF("user_id"))
+      s.sql(s"CALL graft_cat.system.compact_where('db.$name', 2, " +
+        s"col => 'user_id', lo => $PcLo, hi => ${PcHi + 40}, " +
+        "sort_cols => 'user_id')")
     }
 
   val q130Bench: Q = (s, dir) => {
@@ -827,33 +717,21 @@ object Txn extends graft.QueryModule {
   // probe scanned the full manifest while looking indexed).
   // ---------------------------------------------------------------------
   private[queries] def ensureStrDocs(s: SparkSession, dir: String): String =
-    synchronized {
+    StrDocs.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"docs_str_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "documents")
-      if (TxnTable.latest(s, root).isEmpty ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        // range clustering on the STRING key gives files disjoint lang
-        // spans — the layout discipline that turns recorded bounds into
-        // an index (same as q89's user_id clustering, on a string)
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "documents")
-            .repartitionByRange(5, $"lang"),
-          statsCols = Seq("lang"), bloomCols = Seq("source"))
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      // range clustering on the STRING key gives files disjoint lang
+      // spans — the layout discipline that turns recorded bounds into
+      // an index (same as q89's user_id clustering, on a string)
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "documents")
+          .repartitionByRange(5, $"lang"),
+        statsCols = Seq("lang"), bloomCols = Seq("source"))
     }
 
   val q131Bench: Q = (s, dir) => {
     import s.implicits._
-    val name = s"docs_str_${tag(dir)}"
+    val name = StrDocs.name(dir)
     ensureStrDocs(s, dir)
     s.sql(s"SELECT source, COUNT(*) AS n, SUM(n_chars) AS chars " +
       s"FROM graft_cat.db.$name WHERE lang = 'en' GROUP BY source")
@@ -885,38 +763,25 @@ object Txn extends graft.QueryModule {
   // per workload).
   // ---------------------------------------------------------------------
   private[queries] def ensureMorUpdated(s: SparkSession, dir: String): String =
-    synchronized {
+    MorUp.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_morup_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (!TxnTable.latest(s, root).exists(sn =>
-            sn.op == "update-mor" && sn.deletes.nonEmpty) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.setTableProperty(s, root, TxnTable.RowLevelModeKey,
-          "merge-on-read")
-        val before = TxnTable.latest(s, root).get
-        s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
-          s"WHERE user_id BETWEEN $UpLo AND $UpHi")
-        val after = TxnTable.latest(s, root).get
-        // the whole point, asserted at build time: zero data rewrite
-        require(before.files.forall(after.files.contains) &&
-            after.deletes.nonEmpty &&
-            after.deleteCols == TxnTable.PosDeleteCols,
-          "merge-on-read UPDATE must carry every data file by path " +
-            "identity and commit position-delete tombstones")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.setTableProperty(s, root, TxnTable.RowLevelModeKey,
+        "merge-on-read")
+      val before = TxnTable.latest(s, root).get
+      s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
+        s"WHERE user_id BETWEEN $UpLo AND $UpHi")
+      val after = TxnTable.latest(s, root).get
+      // the whole point, asserted at build time: zero data rewrite
+      require(before.files.forall(after.files.contains) &&
+          after.deletes.nonEmpty &&
+          after.deleteCols == TxnTable.PosDeleteCols,
+        "merge-on-read UPDATE must carry every data file by path " +
+          "identity and commit position-delete tombstones")
     }
 
   val q132Bench: Q = (s, dir) => {
@@ -947,47 +812,35 @@ object Txn extends graft.QueryModule {
   // trigger; Update writes only the keys a day touched.
   // ---------------------------------------------------------------------
   private[queries] def ensureUpdateSunk(s: SparkSession, dir: String): String =
-    synchronized {
+    UserCounts.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"user_counts_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (!TxnTable.latest(s, root).exists(_.op.startsWith("merge-batch:")) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        val ckpt = java.nio.file.Files.createTempDirectory("q133_ckpt").toString
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long)]
-        val q = in.toDF().toDF("user_id", "cnt")
-          .groupBy($"user_id").agg(sum($"cnt").as("n"))
-          .writeStream.format("graft-txn").outputMode("update")
-          .option("mergeKeys", "user_id")
-          .option("checkpointLocation", ckpt)
-          .start(root)
-        try {
-          // one micro-batch per source day, in day order — deterministic
-          // batches, so the update stream's emitted keys are too. The
-          // feed is the per-(day, user) PARTIAL count, not raw events:
-          // the driver holds |users|x|days| tuples (the stream sums
-          // them), never the event log — at sf10 that is 450k tuples
-          // instead of 10M rows.
-          val byDay = graft.Tables.t(s, dir, "events")
-            .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
-            .groupBy($"day", $"user_id").agg(count(lit(1)).as("cnt"))
-            .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
-            .groupBy(_._1).toSeq.sortBy(_._1)
-          byDay.foreach { case (_, rows) =>
-            in.addData(rows.map(_._2))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      val ckpt = java.nio.file.Files.createTempDirectory("q133_ckpt").toString
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Long)]
+      val q = in.toDF().toDF("user_id", "cnt")
+        .groupBy($"user_id").agg(sum($"cnt").as("n"))
+        .writeStream.format("graft-txn").outputMode("update")
+        .option("mergeKeys", "user_id")
+        .option("checkpointLocation", ckpt)
+        .start(root)
+      try {
+        // one micro-batch per source day, in day order — deterministic
+        // batches, so the update stream's emitted keys are too. The
+        // feed is the per-(day, user) PARTIAL count, not raw events:
+        // the driver holds |users|x|days| tuples (the stream sums
+        // them), never the event log — at sf10 that is 450k tuples
+        // instead of 10M rows.
+        val byDay = graft.Tables.t(s, dir, "events")
+          .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
+          .groupBy($"day", $"user_id").agg(count(lit(1)).as("cnt"))
+          .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
+          .groupBy(_._1).toSeq.sortBy(_._1)
+        byDay.foreach { case (_, rows) =>
+          in.addData(rows.map(_._2))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
     }
 
   val q133Bench: Q = (s, dir) => TxnTable.read(s, ensureUpdateSunk(s, dir))
@@ -1017,44 +870,31 @@ object Txn extends graft.QueryModule {
   // source — enforcement and the predicate agree exactly.
   // ---------------------------------------------------------------------
   private[queries] def ensureConstrained(s: SparkSession, dir: String): String =
-    synchronized {
+    ConsDocs.ensure(s, dir) { (root, _) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"docs_cons_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "documents")
-      if (TxnTable.latest(s, root).isEmpty ||
-          !TxnTable.constraints(s, root).contains("min_len") ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        val docs = graft.Tables.t(s, dir, "documents")
-          .select($"doc_id", $"lang", $"source", $"n_chars")
-        val valid = docs.filter($"n_chars" >= 100)
-        TxnTable.overwrite(s, root, valid.filter($"doc_id" % 2 === 0),
-          statsCols = Seq("doc_id"))
-        TxnTable.addConstraint(s, root, "min_len", "n_chars >= 100")
-        TxnTable.addConstraint(s, root, "doc_id_present", "doc_id IS NOT NULL")
-        // an over-strict contract the current content violates refuses
-        // at ADD time (Delta's ADD CONSTRAINT scan)
-        val strict = scala.util.Try(
-          TxnTable.addConstraint(s, root, "too_strict", "n_chars >= 10000"))
-        require(strict.isFailure && !TxnTable.constraints(s, root)
-            .contains("too_strict"),
-          "ADD CONSTRAINT must validate existing content")
-        // the raw corpus contains under-length docs: the ingest refuses
-        // ATOMICALLY — version and file set must not move
-        val before = TxnTable.latest(s, root).get
-        val refused = scala.util.Try(TxnTable.append(s, root, docs))
-        val after = TxnTable.latest(s, root).get
-        require(refused.isFailure &&
-            after.version == before.version && after.files == before.files,
-          "a violating append must refuse with zero version/file drift")
-        TxnTable.append(s, root, valid.filter($"doc_id" % 2 === 1))
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      val docs = graft.Tables.t(s, dir, "documents")
+        .select($"doc_id", $"lang", $"source", $"n_chars")
+      val valid = docs.filter($"n_chars" >= 100)
+      TxnTable.overwrite(s, root, valid.filter($"doc_id" % 2 === 0),
+        statsCols = Seq("doc_id"))
+      TxnTable.addConstraint(s, root, "min_len", "n_chars >= 100")
+      TxnTable.addConstraint(s, root, "doc_id_present", "doc_id IS NOT NULL")
+      // an over-strict contract the current content violates refuses
+      // at ADD time (Delta's ADD CONSTRAINT scan)
+      val strict = scala.util.Try(
+        TxnTable.addConstraint(s, root, "too_strict", "n_chars >= 10000"))
+      require(strict.isFailure && !TxnTable.constraints(s, root)
+          .contains("too_strict"),
+        "ADD CONSTRAINT must validate existing content")
+      // the raw corpus contains under-length docs: the ingest refuses
+      // ATOMICALLY — version and file set must not move
+      val before = TxnTable.latest(s, root).get
+      val refused = scala.util.Try(TxnTable.append(s, root, docs))
+      val after = TxnTable.latest(s, root).get
+      require(refused.isFailure &&
+          after.version == before.version && after.files == before.files,
+        "a violating append must refuse with zero version/file drift")
+      TxnTable.append(s, root, valid.filter($"doc_id" % 2 === 1))
     }
 
   val q134Bench: Q = (s, dir) => TxnTable.read(s, ensureConstrained(s, dir))
@@ -1084,42 +924,29 @@ object Txn extends graft.QueryModule {
   private[queries] val PfDelLo = 10L
   private[queries] val PfDelHi = 11L
   private[queries] def ensurePosFolded(s: SparkSession, dir: String): String =
-    synchronized {
+    PosFold.ensure(s, dir) { (root, name) =>
       import s.implicits._
-      val wh = sqlCatWarehouse(s)
-      val name = s"events_posfold_${tag(dir)}"
-      val root = s"$wh/db/$name"
-      val st = graft.SourceStamp.table(s, dir, "events")
-      if (!TxnTable.latest(s, root).exists(sn =>
-            sn.op == "compact-pos-deletes" && sn.deletes.size == 1) ||
-          !graft.SourceStamp.isCurrent(s, root, st)) {
-        val loc = new org.apache.hadoop.fs.Path(root)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
-        TxnTable.overwrite(s, root,
-          graft.Tables.t(s, dir, "events")
-            .repartitionByRange(8, $"user_id"),
-          statsCols = Seq("user_id"))
-        TxnTable.setTableProperty(s, root, TxnTable.RowLevelModeKey,
-          "merge-on-read")
-        s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
-          s"WHERE user_id BETWEEN $UpLo AND $UpHi")
-        s.sql(s"DELETE FROM graft_cat.db.$name " +
-          s"WHERE user_id BETWEEN $PfDelLo AND $PfDelHi")
-        val pre = TxnTable.latest(s, root).get
-        require(pre.deletes.size >= 2,
-          "two MoR statements must stage at least two sidecars")
-        val after = TxnTable.compactPosDeletes(s, root)
-        // the whole point, asserted at build time: sidecars consolidate,
-        // data files are byte-identical by path
-        require(after.deletes.size == 1 && after.files == pre.files &&
-            after.op == "compact-pos-deletes",
-          "compactPosDeletes must consolidate sidecars and carry every " +
-            "data file by path identity")
-        graft.SourceStamp.write(s, root, st)
-      }
-      root
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")
+      TxnTable.overwrite(s, root,
+        graft.Tables.t(s, dir, "events")
+          .repartitionByRange(8, $"user_id"),
+        statsCols = Seq("user_id"))
+      TxnTable.setTableProperty(s, root, TxnTable.RowLevelModeKey,
+        "merge-on-read")
+      s.sql(s"UPDATE graft_cat.db.$name SET value = value * 2 " +
+        s"WHERE user_id BETWEEN $UpLo AND $UpHi")
+      s.sql(s"DELETE FROM graft_cat.db.$name " +
+        s"WHERE user_id BETWEEN $PfDelLo AND $PfDelHi")
+      val pre = TxnTable.latest(s, root).get
+      require(pre.deletes.size >= 2,
+        "two MoR statements must stage at least two sidecars")
+      val after = TxnTable.compactPosDeletes(s, root)
+      // the whole point, asserted at build time: sidecars consolidate,
+      // data files are byte-identical by path
+      require(after.deletes.size == 1 && after.files == pre.files &&
+          after.op == "compact-pos-deletes",
+        "compactPosDeletes must consolidate sidecars and carry every " +
+          "data file by path identity")
     }
 
   val q135Bench: Q = (s, dir) => {

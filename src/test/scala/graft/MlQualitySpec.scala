@@ -73,7 +73,7 @@ class MlQualitySpec extends AnyFunSuite {
     assert(a eq b, "second ensureModel must hit the stamp-keyed cache")
     // cold-start reset (the PlanSnapshot contract) rebuilds an equivalent
     // model: deterministic weak labels + seeded split + seeded LR
-    graft.ArtifactCaches.reset(spark)
+    graft.SourceStamp.reset(spark)
     val c = QualityFilter.ensureModel(spark, dir)
     assert(!(a eq c))
     assert(math.abs(c.auc - a.auc) <= 1e-12)

@@ -18,7 +18,7 @@ class PlanSnapshotSpec extends AnyFunSuite {
     // signatures are COLD-START plan shapes: a warm, materialized cache
     // legitimately plans fewer exchanges, so suites that ran earlier in
     // this JVM must not leak warm state into the comparison
-    ArtifactCaches.reset(spark)
+    SourceStamp.reset(spark)
     val committed = scala.io.Source
       .fromInputStream(getClass.getResourceAsStream("/plan_signatures.txt"))
       .getLines().filter(_.nonEmpty).map { line =>

@@ -17,7 +17,7 @@ class GuardRailsSpec extends AnyFunSuite {
   private val audited: Map[String, String] = GuardRails.auditedAllowlist
 
   test("every benched plan passes the guard rails (minus the audited allowlist)") {
-    graft.ArtifactCaches.reset(spark)
+    graft.SourceStamp.reset(spark)
     val flagged = graft.SparkEntry.benchQueries.flatMap { case (name, fn) =>
       val hz = GuardRails.audit(fn(spark, sfDir))
       if (hz.nonEmpty) Some(name -> hz.map(_.kind).toSet) else None
