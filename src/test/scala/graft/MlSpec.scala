@@ -23,7 +23,12 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("M2/M4 GBT fit reaches the R² floor on the training split") {
-    assert(fit.r2Train >= 0.9, s"r2Train=${fit.r2Train}")
+    assert(fit.r2Train >= 0.999, s"r2Train=${fit.r2Train}")
+  }
+
+  test("M2 fit launches at most 25 Spark jobs (GBT runs one per tree level)") {
+    val (_, jobs) = SparkTestSession.jobsIn(NextDayTemp.fit(flat))
+    assert(jobs <= 25, s"NextDayTemp.fit launched $jobs jobs")
   }
 
   test("P10 abs-error column: non-negative, finite, |label - prediction|") {
@@ -79,6 +84,7 @@ class MlSpec extends AnyFunSuite {
       .drop("k")
     assert(cities40.select("city").distinct().count() === 40)
     val fit40 = NextDayTemp.fit(cities40)
+    assert(fit40.r2Train >= 0.999, s"r2Train=${fit40.r2Train}")
     val preds = NextDayTemp.predictNextDay(spark, fit40.model, cities40).collect()
     assert(preds.length === 40)
     assert(preds.map(_.getAs[String]("city")).distinct.length === 40)

@@ -18,7 +18,7 @@ global row order, and pulling tens of millions of rows into Python
 tuples would dominate the run. Values still compare exactly — only the
 order check is given up, which the parallel write already forfeited.
 """
-import sys, os, json, glob, math
+import sys, os, json, glob, math, atexit, shutil, tempfile
 import duckdb
 
 setop = "--setop" in sys.argv
@@ -31,13 +31,20 @@ con = duckdb.connect()
 # tens of GB at sf10; fewer threads shrink the concurrent working set
 # (slower, but disk-feasible), and an explicit temp dir points the spill
 # at the roomiest mount. DUCKDB_THREADS / DUCKDB_MEM / DUCKDB_TMP env.
+# Without DUCKDB_TMP the spill goes to a fresh temp directory, removed at
+# exit (DuckDB's own default, `.tmp/` under the working directory, puts
+# gigabytes into the working tree).
 import os as _os
 if _os.environ.get("DUCKDB_THREADS"):
     con.execute(f"PRAGMA threads={int(_os.environ['DUCKDB_THREADS'])}")
 if _os.environ.get("DUCKDB_MEM"):
     con.execute(f"PRAGMA memory_limit='{_os.environ['DUCKDB_MEM']}'")
-if _os.environ.get("DUCKDB_TMP"):
-    con.execute(f"PRAGMA temp_directory='{_os.environ['DUCKDB_TMP']}'")
+spill = _os.environ.get("DUCKDB_TMP")
+if not spill:
+    spill = tempfile.mkdtemp(prefix="check_duckdb_")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+atexit.register(con.close)  # runs first: close before the spill goes
+con.execute(f"PRAGMA temp_directory='{spill}'")
 ONLY = [q for q in _os.environ.get("CHECK_ONLY", "").split(",") if q]
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
