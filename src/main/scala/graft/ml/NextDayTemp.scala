@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
+import graft.sinks.Compact
 import graft.weather.Weather
 
 /** The reference's ML half (weather_etl.py:110-172), MLlib-first:
@@ -89,7 +90,7 @@ object NextDayTemp {
     * unchanged. */
   def fit(flat: DataFrame): Fit = {
     val (train, test) = split(flat)
-    val (trainC, testC) = (rightSized(train).cache(), rightSized(test).cache())
+    val (trainC, testC) = (Compact.rightSized(train).cache(), Compact.rightSized(test).cache())
     try {
       val indexer = new StringIndexer()
         .setInputCol("city").setOutputCol("city_idx").setHandleInvalid("keep")
@@ -101,15 +102,6 @@ object NextDayTemp {
       trainC.unpersist()
       testC.unpersist()
     }
-  }
-
-  /** `df` coalesced to the partitions its estimated size fills at
-    * `spark.sql.files.maxPartitionBytes` each, at least one. */
-  private def rightSized(df: DataFrame): DataFrame = {
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val perPartition = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
-    val n = ((size + perPartition - 1) / perPartition).max(1).min(Int.MaxValue)
-    df.coalesce(n.toInt)
   }
 
   /** M4 for every split in ONE aggregate over the scored splits: per

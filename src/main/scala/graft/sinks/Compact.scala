@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction — the table-maintenance half of the layout
   * story (Bucketed/ZOrder choose a layout; this keeps it healthy).
@@ -73,5 +73,17 @@ object Compact {
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"rename $tmp -> $p failed")
     Stats(files.size, dataFiles(s, dir).size, bytes, rewritten = true)
+  }
+
+  /** `df` coalesced to the partitions its estimated size fills at
+    * `spark.sql.files.maxPartitionBytes` each, at least one — the write
+    * side of the same file-size rule: a tiny result is written as one
+    * file, not one per plan partition, while a large one keeps its
+    * fan-out. A narrow merge, so no shuffle and no change to the rows. */
+  def rightSized(df: DataFrame): DataFrame = {
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perPartition = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val n = ((size + perPartition - 1) / perPartition).max(1).min(Int.MaxValue)
+    df.coalesce(n.toInt)
   }
 }

@@ -686,8 +686,7 @@ object TxnTable {
     if (snap.deletes.isEmpty || snap.deleteCols.isEmpty) df
     else if (isPosShape(snap)) {
       import org.apache.spark.sql.functions.col
-      val base = root.stripSuffix("/")
-      val dels = s.read.parquet(snap.deletes.map(f => s"$base/$f"): _*)
+      val dels = readFiles(s, root, snap.deletes)
         .select(col("_file").as("_del_file"), col("_pos").as("_del_pos"))
         .distinct()
       val withId = df.withColumn("_gmask_file", relFileCol)
@@ -698,8 +697,7 @@ object TxnTable {
         .drop("_gmask_file", "_gmask_pos")
     } else {
       import org.apache.spark.sql.functions.col
-      val base = root.stripSuffix("/")
-      val keys = s.read.parquet(snap.deletes.map(f => s"$base/$f"): _*)
+      val keys = readFiles(s, root, snap.deletes)
         .select(snap.deleteCols.map(c => col(c).as(s"_del_$c")): _*).distinct()
       // null-safe per component: a null-keyed delete row must remove
       // null-keyed data; composite keys match on EVERY component
@@ -714,12 +712,8 @@ object TxnTable {
     * The result carries physical names; callers surfacing it to users
     * alias back via [[ColumnMapping.aliasToLogical]]. */
   private def scanFiles(s: SparkSession, root: String, snap: Snapshot,
-                        files: Seq[String]): DataFrame = {
-    val base = root.stripSuffix("/")
-    val reader = snap.schema.fold(s.read)(sc =>
-      s.read.schema(ColumnMapping.physicalSchema(sc)))
-    reader.parquet(files.map(f => s"$base/$f"): _*)
-  }
+                        files: Seq[String]): DataFrame =
+    readPinned(s, root, files, snap.schema.map(ColumnMapping.physicalSchema))
 
   /** The boundary translation every column-name-taking entry point
     * runs its argument through: user-facing logical name → recorded
@@ -915,12 +909,22 @@ object TxnTable {
 
   /** Per-file commit metadata — [min, max] range stats and/or bloom
     * filters ([[graft.functions.BloomAgg]]) over the table's recorded
-    * column SETS — in ONE Spark job for the whole commit regardless of
-    * how many columns are enabled (one groupBy(input_file_name)
-    * aggregate carrying every column's partials, merging map-side;
-    * never a job per file, per column, or per metadata kind — the same
-    * economics as Iceberg manifests, which record all tracked columns'
-    * stats from the one write pass).
+    * column SETS — the same economics as Iceberg manifests, which record
+    * all tracked columns' stats from the write pass.
+    *
+    * Range stats come from the staged files' cached parquet footers
+    * ([[FooterRange]]) whenever the footer proves them: a byte, short,
+    * int or long column maps its footer min/max exactly (the cast to
+    * long commutes with min and max), a string column through the
+    * monotone [[graft.functions.Utf8Prefix64]] bounds of its footer
+    * min/max. Every other (file, column) — a missing or partial
+    * statistic (parquet drops min/max past 4 KB), INT96, float,
+    * decimal, date or timestamp — and every bloom column fall back to
+    * ONE groupBy(input_file_name) aggregate over just the files that
+    * need it, carrying every such column's partials and merging
+    * map-side; a commit whose footers prove everything launches no job
+    * here. Every read is pinned to the first staged file's footer
+    * schema ([[footerSchema]]), so no schema-inference job either.
     *
     * Bloom size calculus the caller owns: ~1.2 B per expected item at
     * 3% fpp, base64 in the manifest — right for point-lookup keys with
@@ -937,11 +941,13 @@ object TxnTable {
                        statsCols: Seq[String], bloomCols: Seq[String])
       : FileMeta = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min, xxhash64}
+    import org.apache.spark.sql.types._
     if (staged.isEmpty || (statsCols.isEmpty && bloomCols.isEmpty))
       return (Map.empty, Map.empty)
-    val base = root.stripSuffix("/")
-    val df = s.read.parquet(staged.map(f => s"$base/$f"): _*)
-    val present = df.columns.toSet
+    // every read pinned to ONE schema, the first staged file's
+    val pinned = staged.headOption.flatMap(footerSchema(s, root, _))
+    val schema = pinned.getOrElse(readPinned(s, root, staged, None).schema)
+    val present = schema.fieldNames.toSet
     val sCols = statsCols.filter(present.contains)
     val bCols = bloomCols.filter(present.contains)
     if (sCols.isEmpty && bCols.isEmpty) return (Map.empty, Map.empty)
@@ -955,11 +961,29 @@ object TxnTable {
     // any integral probe range that its row satisfies, so recorded
     // [min,max] of casts never mis-skips an integral probe).
     (sCols ++ bCols).distinct.foreach(c => require(
-      metaRepresentable(df.schema(c).dataType),
-      s"stats/bloom column '$c' has type ${df.schema(c).dataType.sql}, which " +
+      metaRepresentable(schema(c).dataType),
+      s"stats/bloom column '$c' has type ${schema(c).dataType.sql}, which " +
         "manifest range/bloom metadata cannot represent — declare a " +
         "numeric, boolean, date/timestamp, or string column instead"))
-    def isStr(c: String): Boolean = df.schema(c).dataType == org.apache.spark.sql.types.StringType
+    def isStr(c: String): Boolean = schema(c).dataType == StringType
+    // (file, column) -> the range its footer proves (None: all null; a
+    // column the file lacks reads as null)
+    val footerTyped = sCols.filter(c => schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    })
+    prewarmFooters(s, root, staged)
+    val proven: Map[(String, String), Option[(Long, Long)]] = (for {
+      f <- staged
+      c <- footerTyped
+      m <- footerMeta(s, root, f)
+      r <- if (!m.cols.contains(c)) Some(None)
+           else m.ranges.get(c).filter(_.str == isStr(c)).map(_.range)
+    } yield (f, c) -> r).toMap
+    val aggCols = sCols.filter(c => staged.exists(f => !proven.contains((f, c))))
+    val aggFiles =
+      if (bCols.nonEmpty) staged
+      else staged.filter(f => aggCols.exists(c => !proven.contains((f, c))))
     def loExpr(c: String) =
       if (isStr(c)) graft.functions.Utf8Prefix64.lowerCol(col(c)) else col(c).cast("long")
     def hiExpr(c: String) =
@@ -967,25 +991,31 @@ object TxnTable {
     def hashExpr(c: String) =
       if (isStr(c)) xxhash64(col(c)) else col(c).cast("long")
     val aggs =
-      sCols.flatMap(c => Seq(min(loExpr(c)).as(s"lo_$c"),
+      aggCols.flatMap(c => Seq(min(loExpr(c)).as(s"lo_$c"),
         max(hiExpr(c)).as(s"hi_$c"))) ++
       bCols.map(c => graft.functions.BloomAgg
         .bloomAgg(hashExpr(c), BloomItemsPerFile, BloomFpp).as(s"bf_$c"))
-    val rows = df.groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
+    val rows =
+      if (aggFiles.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else readPinned(s, root, aggFiles, pinned).groupBy(input_file_name().as("f"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect()
     // input_file_name is a URI; staged paths are root-relative
     def fileOf(uri: String): Option[String] = staged.find(uri.endsWith)
-    val stats = rows.flatMap { r =>
-      fileOf(r.getString(0)).map { f =>
-        f -> sCols.zipWithIndex.flatMap { case (c, i) =>
+    val aggStats: Map[(String, String), (Long, Long)] = rows.flatMap { r =>
+      fileOf(r.getString(0)).toSeq.flatMap { f =>
+        aggCols.zipWithIndex.flatMap { case (c, i) =>
           // all-null column in a file -> null min/max -> no entry
           if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-          else Some(c -> (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-        }.toMap
+          else Some((f, c) -> (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
+        }
       }
+    }.toMap
+    val stats = staged.map { f =>
+      f -> sCols.flatMap(c =>
+        proven.getOrElse((f, c), aggStats.get((f, c))).map(c -> _)).toMap
     }.filter(_._2.nonEmpty).toMap
-    val bloomBase = 1 + 2 * sCols.size
+    val bloomBase = 1 + 2 * aggCols.size
     val blooms = rows.flatMap { r =>
       fileOf(r.getString(0)).map { f =>
         f -> bCols.zipWithIndex.flatMap { case (c, i) =>
@@ -1018,20 +1048,33 @@ object TxnTable {
   }
 
   /** Footer-level metadata of one data file: record count, the leaf
-    * columns the footer carries, and per-column null counts where every
+    * columns the footer carries, per-column null counts where every
     * column chunk recorded one (a single chunk without `num_nulls`
-    * poisons that column — unknown, never guessed). Data files are
+    * poisons that column — unknown, never guessed), per-column
+    * [[FooterRange]]s where every chunk proves one, and the source of
+    * the file's Spark schema ([[footerSchema]]). Data files are
     * immutable, so this never changes — cached per JVM keyed by
     * absolute path; one footer read per file per process lifetime, no
     * data pages touched. */
   private final case class FooterMeta(rows: Long, cols: Set[String],
-                                      nulls: Map[String, Long])
+                                      nulls: Map[String, Long],
+                                      ranges: Map[String, FooterRange],
+                                      schema: Either[org.apache.parquet.schema.MessageType, String])
+
+  /** A top-level column's [min, max] as its footer statistics prove it,
+    * in the manifest's long envelope: `str` columns carry the
+    * [[graft.functions.Utf8Prefix64]] bounds of the footer's min and
+    * max, signed INT32/INT64 columns the values themselves. Both maps
+    * are monotone, so this is exactly the aggregate of [[fileMeta]] over
+    * the rows. `range` None: every value is null. */
+  private final case class FooterRange(str: Boolean, range: Option[(Long, Long)])
+
   private val footerMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, FooterMeta]()
 
   /** A parquet file's [[FooterMeta]] — pure metadata, the same numRows /
-    * null-count statistics parquet writers record for every engine's
-    * count pushdown. None if the footer is unreadable (the file then
+    * null-count / min-max statistics parquet writers record for every
+    * engine's pushdown. None if the footer is unreadable (the file then
     * gets no manifest count and metadata aggregates refuse). */
   private def footerMeta(s: SparkSession, root: String, file: String): Option[FooterMeta] = {
     val abs = s"${root.stripSuffix("/")}/$file"
@@ -1043,6 +1086,8 @@ object TxnTable {
         try {
           import scala.jdk.CollectionConverters._
           val perCol = scala.collection.mutable.LinkedHashMap[String, Option[Long]]()
+          // None = some chunk proves no range (no kind, no statistic)
+          val ranges = scala.collection.mutable.HashMap[String, Option[FooterRange]]()
           r.getFooter.getBlocks.asScala.foreach { b =>
             b.getColumns.asScala.foreach { c =>
               val name = c.getPath.toDotString
@@ -1053,15 +1098,97 @@ object TxnTable {
                 case (None, Some(x))          => Some(x)
                 case _                        => None // any chunk without the stat → unknown
               }
+              val cr = chunkRange(c)
+              ranges(name) = ranges.get(name).fold(cr)(prev => for {
+                a <- prev; x <- cr
+              } yield FooterRange(a.str, (a.range ++ x.range).reduceOption((p, q) =>
+                (math.min(p._1, q._1), math.max(p._2, q._2)))))
             }
           }
+          val fm = r.getFooter.getFileMetaData
+          val key = Option(fm.getKeyValueMetaData.get(SparkSchemaKey))
           FooterMeta(r.getRecordCount, perCol.keySet.toSet,
-            perCol.collect { case (k, Some(v)) => k -> v }.toMap)
+            perCol.collect { case (k, Some(v)) => k -> v }.toMap,
+            ranges.collect { case (k, Some(v)) => k -> v }.toMap,
+            // interned: every file a write staged carries the same JSON
+            key.map(_.intern()).toRight(fm.getSchema))
         } finally r.close()
       }.toOption
       m.foreach(footerMetaCache.put(abs, _))
       m
     }
+  }
+
+  /** The footer key under which Spark's parquet writer stores the row
+    * schema (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** One column chunk's [[FooterRange]], None when the chunk cannot
+    * prove one: a nested or repeated leaf, a type whose long envelope
+    * is not the raw statistic (unsigned, INT96, float, decimal, date,
+    * timestamp, non-string binary), or a statistic that is missing or
+    * partial — parquet drops min/max past 4 KB, so a long string's
+    * chunk records only its null count. */
+  private def chunkRange(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
+      : Option[FooterRange] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, StringLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    import org.apache.parquet.schema.Type.Repetition.REPEATED
+    val t = c.getPrimitiveType
+    val str: Option[Boolean] = (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case _ if c.getPath.size != 1 || t.getRepetition == REPEATED => None
+      case (INT32 | INT64, null)                                   => Some(false)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => Some(false)
+      case (BINARY, _: StringLogicalTypeAnnotation)                => Some(true)
+      case _                                                       => None
+    }
+    val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+    str.filter(_ => st != null).flatMap { isStr =>
+      if (st.hasNonNullValue) Some(FooterRange(isStr, Some(
+        if (isStr) {
+          def utf8(v: Any) = org.apache.spark.unsafe.types.UTF8String.fromBytes(
+            v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
+          (graft.functions.Utf8Prefix64.lower(utf8(st.genericGetMin)),
+            graft.functions.Utf8Prefix64.upper(utf8(st.genericGetMax)))
+        } else {
+          def long(v: Any) = v.asInstanceOf[Number].longValue
+          (long(st.genericGetMin), long(st.genericGetMax))
+        })))
+      else if (st.isNumNullsSet && st.getNumNulls == c.getValueCount)
+        Some(FooterRange(isStr, None))
+      else None
+    }
+  }
+
+  /** The Spark schema of an internal file as its footer records it —
+    * the schema Spark's non-merging parquet inference reads from the
+    * same footer (the writer's row-schema key, else the converted
+    * parquet schema), with no inference job. None for an unreadable
+    * footer or a key this JSON parser does not read. */
+  private def footerSchema(s: SparkSession, root: String, file: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    footerMeta(s, root, file).flatMap(_.schema.fold(
+      ps => Some(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(s.sessionState.conf).convert(ps)),
+      json => scala.util.Try(DataType.fromJson(json)).toOption.collect {
+        case st: StructType => st
+      }))
+  }
+
+  /** Raw scan of internal files — data files, delete keys, position
+    * sidecars — pinned to the first file's [[footerSchema]], the file
+    * Spark's own inference would touch. Inference would cost a Spark job
+    * per read; an unreadable first footer falls back to it. */
+  private[graft] def readFiles(s: SparkSession, root: String,
+                               files: Seq[String]): DataFrame =
+    readPinned(s, root, files, files.headOption.flatMap(footerSchema(s, root, _)))
+
+  /** Raw scan of root-relative `files` under `schema`; None infers it. */
+  private def readPinned(s: SparkSession, root: String, files: Seq[String],
+                         schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val base = root.stripSuffix("/")
+    schema.fold(s.read)(s.read.schema).parquet(files.map(f => s"$base/$f"): _*)
   }
 
   private def footerRows(s: SparkSession, root: String, file: String): Option[Long] =
@@ -2654,8 +2781,8 @@ object TxnTable {
         val survivors = existing.join(ch, cond, "left_anti")
         survivors.unionByName(changes, allowMissingColumns = true)
       }
-    val staged = dropEmptyParts(s, root,
-      stage(s, root, ColumnMapping.toPhysical(rewritten, evolved), cur.transforms))
+    val staged = dropEmptyParts(s, root, stage(s, root,
+      Compact.rightSized(ColumnMapping.toPhysical(rewritten, evolved)), cur.transforms))
     commit(s, root, partialRewrite(cur, opTag, carry, staged,
         stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms))
       .copy(schema = Some(evolved)))
@@ -2870,9 +2997,8 @@ object TxnTable {
       else if (snap.deletes.isEmpty) Some(counts.sum)
       else {
         import org.apache.spark.sql.functions.col
-        val base = root.stripSuffix("/")
         val live = snap.files.toSet
-        val masked = s.read.parquet(snap.deletes.map(f => s"$base/$f"): _*)
+        val masked = readFiles(s, root, snap.deletes)
           .select(col("_file"), col("_pos")).distinct()
           .filter(col("_file").isInCollection(live)).count()
         Some(counts.sum - masked)
@@ -3182,7 +3308,7 @@ object TxnTable {
     }
     def keysOf(files: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(s.read.parquet(files.map(f => s"$base/$f"): _*)
+      else Some(readFiles(s, root, files)
         .select(delCols.map(c => col(c).as(s"_del_$c")): _*).distinct())
     lazy val d1 = keysOf(s1.deletes)
     lazy val d2 = keysOf(s2.deletes)
@@ -3334,7 +3460,8 @@ object TxnTable {
         val rest = cur.schema.fold(touched)(
             sc => ColumnMapping.aliasToLogical(touched, sc))
           .filter(org.apache.spark.sql.functions.not(predicate))
-        dropEmptyParts(s, root, stage(s, root, toPhys(rest, cur), cur.transforms))
+        dropEmptyParts(s, root,
+          stage(s, root, Compact.rightSized(toPhys(rest, cur)), cur.transforms))
       }
     commit(s, root, partialRewrite(cur, "delete", carry, staged,
       stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols, cur.transforms)))
@@ -3554,7 +3681,7 @@ object TxnTable {
     lazy val touched: Set[String] = {
       val base = root.stripSuffix("/")
       val cap = 100000
-      val rows = s.read.parquet(posDeletes.map(r => s"$base/$r"): _*)
+      val rows = readFiles(s, root, posDeletes)
         .select(org.apache.spark.sql.functions.col("_file"))
         .distinct().limit(cap + 1).collect()
       if (rows.length <= cap) rows.map(_.getString(0)).toSet
@@ -3599,9 +3726,8 @@ object TxnTable {
       cap: Int = 5000000): Map[String, Array[Long]] = {
     if (snap.deletes.isEmpty || !isPosShape(snap)) return Map.empty
     import org.apache.spark.sql.functions.col
-    val base = root.stripSuffix("/")
     val want = files.toSet
-    val rows = s.read.parquet(snap.deletes.map(f => s"$base/$f"): _*)
+    val rows = readFiles(s, root, snap.deletes)
       .select(col("_file"), col("_pos")).distinct()
       .limit(cap + 1).collect()
     require(rows.length <= cap,

@@ -134,7 +134,7 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
           if (cur.deletes.isEmpty ||
               cur.deleteCols == graft.sinks.TxnTable.PosDeleteCols) rows
           else {
-            val keys = s.read.parquet(cur.deletes.map(f => s"$base/$f"): _*)
+            val keys = graft.sinks.TxnTable.readFiles(s, tableRoot, cur.deletes)
               .select(cur.deleteCols.map(c => col(c).as(s"_del_$c")): _*).distinct()
             rows.join(keys,
               cur.deleteCols.map(c => rows(c) <=> keys(s"_del_$c")).reduce(_ && _),

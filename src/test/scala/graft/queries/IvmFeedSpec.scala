@@ -83,11 +83,11 @@ class IvmFeedSpec extends AnyFunSuite {
     xs.toDF("event_id")
   }
 
-  /** Maintain's job budget for one window, as measured: 11, plus 1 for
+  /** Maintain's job budget for one window, as measured: 10, plus 1 for
     * the delete when a group empties. Evaluating the feed in each step
     * (emptiness probe, merge probe, merge, emptied-group probe) ran
     * 27 and 29 on the same windows. */
-  private val MaintainJobs = 11
+  private val MaintainJobs = 10
 
   test("one maintenance window of the daily shape: job pin, one commit, two when a group empties") {
     val rawRoot = freshRoot("rawday")

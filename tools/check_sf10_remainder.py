@@ -11,10 +11,10 @@ semantics:
   shingle) is the grind; compute it in doc-sharded chunks, then iterate
   the reach closure to a fixed point (the WITH RECURSIVE UNION
   semantics, level by level).
-- q115_bpe_encode: shard the corpus-wide pair counting (w0) and the
-  per-doc encode (e0..e5) by doc ranges; the 5 merge rounds run on the
-  small distinct-word table with the winning pairs as one-row tables
-  (so the replace literals never round-trip through Python escaping).
+- q115_bpe_encode: tools/bpe_oracle.py (shared with check.py) shards
+  the corpus-wide pair counting (w0) and the per-doc encode (e0..e5)
+  by doc ranges and runs the 5 merge rounds on the small distinct-word
+  table.
 
 Every fragment is copied from the recorded oracle SQL
 (oracle_sql.json) byte-for-byte where possible — this is the SAME
@@ -26,6 +26,8 @@ Usage: check_sf10_remainder.py [sfDir] [dumpDir] [q104,q67,...]
 import duckdb
 import sys
 import time
+
+import bpe_oracle
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf10"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_sf10"
@@ -219,65 +221,8 @@ if want("q67"):
 
 # ---------------------------------------------------------------- q115
 if want("q115"):
-    con.execute("CREATE TABLE b_w0_raw (s VARCHAR, cnt BIGINT)")
-    for k in range(CHUNKS):
-        con.execute(f"""INSERT INTO b_w0_raw
-          SELECT '|' || regexp_replace(w, '(.)', '\\1|', 'g') AS s,
-                 COUNT(*) AS cnt
-          FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents
-                WHERE doc_id % {CHUNKS} = {k})
-          WHERE len(w) > 0 AND w NOT LIKE '%|%' GROUP BY 1""")
-        print(f"  q115 w0 chunk {k+1}/{CHUNKS} ({time.time()-t0:.0f}s)",
-              flush=True)
-    con.execute("CREATE TABLE b_w AS "
-                "SELECT s, CAST(SUM(cnt) AS BIGINT) AS cnt "
-                "FROM b_w0_raw GROUP BY s")
-    for i in range(1, 6):
-        con.execute(f"""CREATE TABLE b_p{i} AS
-          SELECT a[j] AS l, a[j+1] AS r, CAST(SUM(cnt) AS BIGINT) AS pc
-          FROM (SELECT cnt, string_split(s[2:-2], '|') AS a FROM b_w),
-               unnest(generate_series(1, len(a) - 1)) AS u(j)
-          GROUP BY 1, 2 ORDER BY pc DESC, l ASC, r ASC LIMIT 1""")
-        con.execute(f"""CREATE TABLE b_w_next AS
-          SELECT CAST(cnt AS BIGINT) AS cnt, replace(s,
-            '|' || (SELECT l FROM b_p{i}) || '|' || (SELECT r FROM b_p{i}) || '|',
-            '|' || (SELECT l FROM b_p{i}) || (SELECT r FROM b_p{i}) || '|') AS s
-          FROM b_w""")
-        con.execute("DROP TABLE b_w")
-        con.execute("ALTER TABLE b_w_next RENAME TO b_w")
-        print(f"  q115 merge round {i}/5 ({time.time()-t0:.0f}s)", flush=True)
-    con.execute("""CREATE TABLE res_q115
-      (doc_id BIGINT, n_bpe_tokens BIGINT, n_ws_tokens BIGINT)""")
-    for k in range(CHUNKS):
-        con.execute(f"""INSERT INTO res_q115
-          WITH e0 AS (
-            SELECT doc_id,
-              '|' || regexp_replace(text, '(.)', '\\1|', 'g') AS s,
-              len(text) - len(replace(text, ' ', '')) AS n_sp,
-              len(list_filter(string_split(text, ' '), w -> len(w) > 0)) AS n_ws
-            FROM documents
-            WHERE text NOT LIKE '%|%' AND doc_id % {CHUNKS} = {k}),
-          e1 AS (SELECT doc_id, n_sp, n_ws, replace(s,
-            '|' || (SELECT l FROM b_p1) || '|' || (SELECT r FROM b_p1) || '|',
-            '|' || (SELECT l FROM b_p1) || (SELECT r FROM b_p1) || '|') AS s FROM e0),
-          e2 AS (SELECT doc_id, n_sp, n_ws, replace(s,
-            '|' || (SELECT l FROM b_p2) || '|' || (SELECT r FROM b_p2) || '|',
-            '|' || (SELECT l FROM b_p2) || (SELECT r FROM b_p2) || '|') AS s FROM e1),
-          e3 AS (SELECT doc_id, n_sp, n_ws, replace(s,
-            '|' || (SELECT l FROM b_p3) || '|' || (SELECT r FROM b_p3) || '|',
-            '|' || (SELECT l FROM b_p3) || (SELECT r FROM b_p3) || '|') AS s FROM e2),
-          e4 AS (SELECT doc_id, n_sp, n_ws, replace(s,
-            '|' || (SELECT l FROM b_p4) || '|' || (SELECT r FROM b_p4) || '|',
-            '|' || (SELECT l FROM b_p4) || (SELECT r FROM b_p4) || '|') AS s FROM e3),
-          e5 AS (SELECT doc_id, n_sp, n_ws, replace(s,
-            '|' || (SELECT l FROM b_p5) || '|' || (SELECT r FROM b_p5) || '|',
-            '|' || (SELECT l FROM b_p5) || (SELECT r FROM b_p5) || '|') AS s FROM e4)
-          SELECT doc_id,
-            CAST(len(s) - len(replace(s, '|', '')) - 1 - n_sp AS BIGINT),
-            CAST(n_ws AS BIGINT)
-          FROM e5""")
-        print(f"  q115 encode chunk {k+1}/{CHUNKS} ({time.time()-t0:.0f}s)",
-              flush=True)
+    bpe_oracle.bpe_encode(con, "res_q115", CHUNKS,
+                          log=lambda m: print(m, flush=True))
     results["q115"] = compare("q115_bpe_encode", "res_q115", "q115_bpe_encode")
 
 print(f"\n{'ALL OK' if all(results.values()) else 'FAILURES'} / "
