@@ -67,14 +67,11 @@ object SourceStamp {
     new Path(s"${artifactDir.stripSuffix("/")}/_source_stamp")
 
   /** True iff `artifactDir` carries a marker equal to `st`. */
-  def isCurrent(s: SparkSession, artifactDir: String, st: String): Boolean =
+  private[graft] def isCurrent(s: SparkSession, artifactDir: String, st: String): Boolean =
     recorded(s, artifactDir).contains(st)
 
-  /** The marker's recorded stamp, if any — for incremental maintainers
-    * that DIFF the recorded listing against the current one (the stamp
-    * is the sorted per-file listing, so set-difference of its lines IS
-    * the file-level delta). */
-  def recorded(s: SparkSession, artifactDir: String): Option[String] = {
+  /** The marker's recorded stamp, if any. */
+  private[graft] def recorded(s: SparkSession, artifactDir: String): Option[String] = {
     val m = marker(artifactDir)
     val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(m)) None
@@ -90,7 +87,7 @@ object SourceStamp {
 
   /** Record `st` as `artifactDir`'s source version (call AFTER a
     * successful build). */
-  def write(s: SparkSession, artifactDir: String, st: String): Unit = {
+  private def write(s: SparkSession, artifactDir: String, st: String): Unit = {
     val m = marker(artifactDir)
     val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
     val out = fs.create(m, true)
@@ -99,10 +96,10 @@ object SourceStamp {
 
   private val locks = new ConcurrentHashMap[String, AnyRef]()
 
-  /** Runs `body` holding `artifactDir`'s lock (reentrant): builds and
-    * incremental maintenance of one artifact never interleave, while
-    * different artifacts build concurrently. */
-  def locked[T](artifactDir: String)(body: => T): T =
+  /** Runs `body` holding `artifactDir`'s lock (reentrant): two builds
+    * of one artifact never interleave, while different artifacts build
+    * concurrently. */
+  private def locked[T](artifactDir: String)(body: => T): T =
     locks.computeIfAbsent(artifactDir.stripSuffix("/"), _ => new AnyRef)
       .synchronized(body)
 

@@ -81,9 +81,6 @@ object Det {
   /** double → exact integer cents (scale 2). */
   def cents(c: Column): Column = round(c * lit(100)).cast(LongType)
 
-  /** double → exact integer micro-units (scale 6), for unit-scale metrics. */
-  def micros(c: Column): Column = round(c * lit(1000000)).cast(LongType)
-
   /** integer cents → double money for output. */
   def money(sumCents: Column): Column = sumCents / lit(100.0)
 
@@ -93,5 +90,4 @@ object Det {
 
   /** SQL fragment: double expr → exact integer cents, DuckDB side. */
   def sqlCents(expr: String): String = s"CAST(ROUND(($expr) * 100) AS BIGINT)"
-  def sqlMicros(expr: String): String = s"CAST(ROUND(($expr) * 1000000) AS BIGINT)"
 }

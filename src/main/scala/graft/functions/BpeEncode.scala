@@ -78,12 +78,6 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
 }
 
 object BpeEncode {
-  /** `c` must already be the '|'-delimited symbol encoding (one
-    * regexp_replace upstream); the merge pairs apply in the given
-    * (training) order. */
-  def bpeEncode(c: Column, merges: Seq[(String, String)]): Column =
-    ExprBridge.column(BpeEncode(ExprBridge.expression(c), merges))
-
   /** `count_in(bpe_encode(c), "|")` as ONE expression returning LONG —
     * what q115 actually consumes. The length−length(replace(enc,'|',''))
     * form referenced the encoded column twice in an interpreted

@@ -23,8 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // materialized-view substitution (graft.plans.Mv) for sessions built
-    // with these extensions; same conf gate (graft.mv.rewrite) as the
-    // experimental-methods injection path Mv.enable uses on live sessions
+    // with these extensions, behind the conf gate graft.mv.rewrite
     ext.injectOptimizerRule(s => graft.plans.MvRewriteRule(s))
     ext.injectFunction((
       new FunctionIdentifier("long_array_dot"),

@@ -124,12 +124,6 @@ object NextDayTemp {
     }
   }
 
-  /** P10: per-row absolute prediction error (the reference's
-    * abs(y_test - predictions) error column, weather_etl.py:135) over a
-    * scored frame — a pure projection, no shuffle. */
-  def withAbsError(scored: DataFrame): DataFrame =
-    scored.withColumn("abs_error", abs(col(labelCol) - col("prediction")))
-
   /** M5+M3: latest row per city, epoch shifted one day forward, scored.
     * Returns (city, predicted temp, prediction timestamp). */
   def predictNextDay(spark: SparkSession, model: PipelineModel,

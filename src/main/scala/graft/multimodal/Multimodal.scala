@@ -7,9 +7,9 @@ import graft.Tables.t
 
 /** Multimodal columns for the LLM-data pipeline: image/audio/video as
   * opaque BINARY content beside typed metadata, with decode /
-  * frame-sample / feature-extract operators.
+  * frame-slice / feature-extract operators.
   *
-  * EVERY decode path is REAL — no stubs remain. [[decodeImages]]
+  * EVERY decode path is REAL — no stubs remain. [[graft.functions.DecodeImage]]
   * decodes PNG/GIF/BMP binaries through the JDK's own `javax.imageio`
   * codecs into (width, height, luma plane) — no external libraries,
   * golden-pixel tested (DecodeImageSpec). [[decodeAudioAssets]]
@@ -53,26 +53,13 @@ object Multimodal extends graft.QueryModule {
         length($"text").as("src_bytes")).as("meta"))
   }
 
-  /** REAL image decode through the JDK codecs: one row per decodable
-    * asset with its dimensions and row-major 8-bit luma plane (see
-    * [[graft.functions.DecodeImage]] for determinism + scale notes).
-    * Undecodable/corrupt content drops out via the NULL filter instead
-    * of failing the job — the standard posture for web-crawled media. */
-  def decodeImages(df: DataFrame): DataFrame =
-    df.select(col("asset_id"), col("kind"),
-        graft.functions.DecodeImage.decodeImage(col("content")).as("img"))
-      .filter(col("img").isNotNull)
-      .select(col("asset_id"), col("kind"),
-        col("img.width").as("width"), col("img.height").as("height"),
-        col("img.gray").as("gray"))
-
   /** REAL audio decode through the JDK codecs: the `audio`-kind assets
     * wrapped in a canonical WAV container (44-byte PCM header — the
     * container is metadata, the payload is the asset's own bytes as
     * 16-bit LE samples) and decoded by `javax.sound.sampled` into
     * per-asset sample statistics (see [[graft.functions.DecodeAudio]]).
     * This closes the audio half of the decode seam the way
-    * [[decodeImages]] closed the image half; q84 hash-verifies the
+    * [[graft.functions.DecodeImage]] closed the image half; q84 hash-verifies the
     * whole path against a DuckDB oracle that recomputes the statistics
     * from the raw hex independently of any audio API. */
   def decodeAudioAssets(df: DataFrame): DataFrame =
@@ -162,7 +149,7 @@ object Multimodal extends graft.QueryModule {
     * matching BMP header and run it through the REAL JDK decode
     * ([[graft.functions.DecodeImage]]) into its 8-bit luma plane —
     * closing the last seam of the multimodal decode surface. Corrupt
-    * frames drop via the NULL filter, the [[decodeImages]] posture. */
+    * frames drop via the NULL filter, like undecodable images. */
   def decodeFrames(df: DataFrame): DataFrame =
     videoFrames(df)
       .select(col("asset_id"), col("frame_no").cast("int").as("frame_no"),
@@ -176,30 +163,6 @@ object Multimodal extends graft.QueryModule {
     ccHex("BM") + u32Hex(70) + u32Hex(0) + u32Hex(54) +
       u32Hex(40) + u32Hex(2) + u32Hex(2) + u16Hex(1) + u16Hex(24) +
       u32Hex(0) + u32Hex(16) + u32Hex(0) * 4
-
-  /** Frame sampling: keep every k-th frame (the video-pipeline op that
-    * cuts decode fan-out before feature extraction). */
-  def sampleFrames(frames: DataFrame, everyK: Int): DataFrame =
-    frames.filter(col("frame_no") % everyK === 0)
-
-  /** RESIZE stub: average-pool the content bytes into `bins` equal-width
-    * bins — a fixed-length numeric "thumbnail" of variable-length binary
-    * (the real pipeline resizes decoded images; the pooling shape is
-    * what downstream similarity/feature operators consume). Averages are
-    * exact-integer sums divided once at the end, so the output is
-    * deterministic; requires `bins` to divide the byte length (true for
-    * the 32-byte synthetic corpus and any fixed-frame layout). */
-  def avgPool(df: DataFrame, bins: Int = 8): DataFrame = {
-    val h = lower(hex(col("content")))
-    val n = length(col("content"))
-    val binW = (n / bins).cast("int")
-    val pooled = transform(sequence(lit(0), lit(bins - 1)), b => {
-      val byteVals = transform(sequence(b * binW, (b + 1) * binW - 1), i =>
-        conv(substring(h, i * 2 + 1, lit(2)), 16, 10).cast("long"))
-      aggregate(byteVals, lit(0L), (a, x) => a + x).cast("double") / binW
-    })
-    df.select(col("asset_id"), col("kind"), pooled.as("pooled"))
-  }
 
   /** Per-asset feature extraction: a 16-bin nibble histogram of the
     * content bytes — computed entirely in codegen'd expressions on the
@@ -329,7 +292,7 @@ object Multimodal extends graft.QueryModule {
   // ---------------------------------------------------------------------
   // q109: decode → RESIZE, the full image-normalization path — every
   // asset's first 24 content bytes wrapped as a REAL 4×2 24-bit BMP,
-  // decoded by the REAL JDK codec path ([[decodeImages]]' DecodeImage),
+  // decoded by the REAL JDK codec path ([[graft.functions.DecodeImage]]),
   // then 2×2 box-filter downscaled by the [[graft.functions.
   // BoxDownscale]] expression (integer floor-average — the Det-safe
   // resize kernel). The oracle re-derives the two output pixels from

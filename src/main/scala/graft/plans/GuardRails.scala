@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.{GlobalLimitExec, SortExec, TakeOrderedAndProjectExec}
@@ -36,16 +35,13 @@ import org.apache.spark.sql.execution.{GlobalLimitExec, SortExec, TakeOrderedAnd
   *    default: legitimate for final writes clustered by key — callers
   *    opt into strictness.
   *
-  * Usage: `GuardRails.check(df)` throws [[GuardRailViolation]] listing
-  * every hazard; `GuardRails.audit(df)` returns them. Wire into CI
-  * (the spec), a submission gate, or an analysis-time review.
+  * Usage: `GuardRails.audit(df)` returns every hazard;
+  * `GuardRails.gate(name, df)` returns those the justified allowlist
+  * does not cover (Bench refuses on them, Verify logs them).
   */
 object GuardRails {
 
   final case class Hazard(kind: String, detail: String)
-  final class GuardRailViolation(val hazards: Seq[Hazard])
-    extends RuntimeException(
-      s"plan violates guard rails:\n${hazards.map(h => s"  [${h.kind}] ${h.detail}").mkString("\n")}")
 
   private def initialPlan(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan match {
@@ -277,12 +273,6 @@ object GuardRails {
       }
     }
     hazards.result()
-  }
-
-  /** Throw [[GuardRailViolation]] if the plan has hazards. */
-  def check(df: DataFrame, strict: Boolean = false): Unit = {
-    val h = audit(df, strict)
-    if (h.nonEmpty) throw new GuardRailViolation(h)
   }
 
   /** Queries whose flagged shape is bounded BY CONSTRUCTION in a way a

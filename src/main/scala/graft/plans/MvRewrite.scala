@@ -110,14 +110,6 @@ object Mv {
       }
     }
 
-  /** Install the transparent mode: the rule into the session's user
-    * optimizer batch (fires only while conf graft.mv.rewrite=true). */
-  def enable(s: SparkSession): Unit = synchronized {
-    val ex = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!ex.extraOptimizations.exists(_.isInstanceOf[MvRewriteRule]))
-      ex.extraOptimizations = ex.extraOptimizations :+ MvRewriteRule(s)
-  }
-
   /** Explicit mode: rewrite every matching Aggregate in `df`'s plan,
     * returning a DataFrame over the substituted plan (the input plan
     * unchanged where nothing matches). */
@@ -418,10 +410,9 @@ object Mv {
 
 /** Transparent mode of [[Mv]]: a user optimizer rule, conf-gated so only
   * sessions that opt in (`SET graft.mv.rewrite=true`) get plans
-  * substituted — registered via `spark.experimental.extraOptimizations`
-  * ([[Mv.enable]]), the public hook that works on a LIVE session (the
-  * driver contract hands this library sessions it didn't build, so
-  * SparkSessionExtensions-at-builder-time can't be required). */
+  * substituted — injected at session creation by
+  * [[graft.functions.GraftExtensions]], or on a live session through
+  * `spark.experimental.extraOptimizations`. */
 case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (conf.getConfString("graft.mv.rewrite", "false") != "true") plan

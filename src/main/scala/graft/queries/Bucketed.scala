@@ -79,10 +79,6 @@ object Bucketed extends graft.QueryModule {
     }
   }
 
-  /** The q04/q05 join layout (kept as the BucketedJoinSpec entry point). */
-  def ensureLayout(s: SparkSession, dir: String): Unit =
-    Seq("orders", "lineitem").foreach(ensureTable(s, dir, _))
-
   /** The bucketed tables, as catalog reads (bucket metadata only flows
     * through the catalog, not raw parquet paths). */
   def orders(s: SparkSession, dir: String): DataFrame = {

@@ -553,8 +553,8 @@ object LlmOps extends graft.QueryModule {
   // [[ensureIvfIndex]] trains once and builds (vec_id, e, cell) ONCE per
   // dataset — per round one broadcast N×K pass through the codegen'd dot
   // + one K·dim-partial shuffle — and persists it as a parquet table
-  // PARTITIONED BY cell (the same build-once contract as
-  // [[Bucketed.ensureLayout]]), with the trained centroids in a K-row
+  // PARTITIONED BY cell (the same build-once contract as the bucketed
+  // layouts, [[graft.SourceStamp.ensure]]), with the trained centroids in a K-row
   // companion table. A query then (a) ranks the resident centroids
   // against its probe on the driver — the planning step every IVF
   // implementation runs — and (b) scans ONLY the planned cell partitions
@@ -600,34 +600,30 @@ object LlmOps extends graft.QueryModule {
   private def ivfTable(dir: String): String = s"$IvfDb.emb_${tagDir(dir)}"
   private def ivfCentsTable(dir: String): String = s"$IvfDb.cents_${tagDir(dir)}"
 
+  /** Index validity stamp: the SOURCE listing plus the BUILD knobs — a
+    * changed K or Lloyd-round count is a retrain request, and an index
+    * built under different knobs must not be served as current (found
+    * by the K=256 scale measurement: without the knob line, raising
+    * graft.ivf.k silently reused the K=8 index). */
+  private def ivfStamp(s: SparkSession, dir: String): String =
+    graft.SourceStamp.table(s, dir, "embeddings") +
+      s"\n#build:k=${ivfK(s)}:iters=${kmIters(s)}"
+
+  /** The index table's directory: the artifact [[ensureIvfIndex]]
+    * stamps and builds under its lock. */
+  private def ivfLoc(s: SparkSession, dir: String): String =
+    s.conf.get("spark.sql.warehouse.dir") + s"/$IvfDb.db/emb_${tagDir(dir)}"
+
   /** Idempotent one-time IVF index for (sfDir): centroids TRAINED with
     * the q110 fixed-point kmeans (measurably better cells than naive
     * first-K seeding — IvfRecallSpec), every embedding row tagged with
     * its argmin-‖e−c‖² cell (the trainer's own assignment criterion),
     * written partitioned by cell, plus a K-row companion table holding
     * the trained centroids (the resident half of the index — serving
-    * and maintenance read it instead of retraining). Final candidate
-    * scoring stays exact cosine; only the cell geometry is L2, the
-    * standard IVF-flat split. Orphaned warehouse locations (ours by
-    * construction) are removed before re-creating, as in
-    * [[Bucketed.ensureLayout]]. */
-  /** Index validity stamp: the SOURCE listing plus the BUILD knobs — a
-    * changed K or Lloyd-round count is a retrain request, and an index
-    * built under different knobs must not be served as current (found
-    * by the K=256 scale measurement: without the knob line, raising
-    * graft.ivf.k silently reused the K=8 index). The knob line is
-    * constant while knobs are constant, so [[ivfMaintain]]'s
-    * new-files-only delta diff (set difference of lines) is untouched
-    * by it. */
-  private def ivfStamp(s: SparkSession, dir: String): String =
-    graft.SourceStamp.table(s, dir, "embeddings") +
-      s"\n#build:k=${ivfK(s)}:iters=${kmIters(s)}"
-
-  /** The index table's directory: the artifact [[ensureIvfIndex]]
-    * stamps and [[ivfMaintain]] appends to, under one lock. */
-  private def ivfLoc(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir") + s"/$IvfDb.db/emb_${tagDir(dir)}"
-
+    * reads it instead of retraining). Final candidate scoring stays
+    * exact cosine; only the cell geometry is L2, the standard IVF-flat
+    * split. Orphaned warehouse locations (ours by construction) are
+    * removed before re-creating. */
   def ensureIvfIndex(s: SparkSession, dir: String): String = {
     import s.implicits._
     s.sql(s"CREATE DATABASE IF NOT EXISTS $IvfDb")
@@ -647,7 +643,7 @@ object LlmOps extends graft.QueryModule {
         if (fs.exists(l)) fs.delete(l, true)
       }
       // one materialization shared by the trainer's rounds AND the
-      // cell-assignment write (see [[kmeansCentroids]]'s build-once note)
+      // cell-assignment write (see [[trainOn]])
       val quant = t(s, dir, "embeddings")
         .select($"vec_id", quantize($"embedding").as("e"))
         .localCheckpoint(true)
@@ -665,60 +661,6 @@ object LlmOps extends graft.QueryModule {
       s.catalog.refreshTable(table)
       s.catalog.refreshTable(centsTable)
     }
-    table
-  }
-
-  /** INCREMENTAL IVF maintenance — the arrival path of a living index.
-    * When the source dataset grows by NEW FILES (the append-only shape
-    * every ingest produces), only the delta files are read: their
-    * vectors are assigned to the EXISTING centroids and appended into
-    * the index table's cell partitions; indexed files are never
-    * rescanned, never rewritten (path identity asserted in
-    * IvfMaintainSpec). Any non-append change (a rewritten or deleted
-    * source file) falls back to the full rebuild, because cell
-    * assignments derived from retired data cannot be patched.
-    *
-    * Centroids stay FIXED at first-build values — standard IVF serving
-    * (cells drift only at retrain, and retrain IS the rebuild) — and
-    * they are read from the INDEX table itself, so maintenance costs
-    * one delta scan + a K-row broadcast, independent of index size.
-    * The delta diff is the SourceStamp listing itself: recorded lines
-    * vs current lines, set difference = new files. */
-  def ivfMaintain(s: SparkSession, dir: String): String =
-    graft.SourceStamp.locked(ivfLoc(s, dir))(ivfMaintainLocked(s, dir))
-
-  private def ivfMaintainLocked(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val table = ivfTable(dir)
-    val loc = ivfLoc(s, dir)
-    // knob-aware stamp: a knob change fails the subset check below (the
-    // old #build line is not in the current stamp) -> full retrain
-    val st = ivfStamp(s, dir)
-    if (!s.catalog.tableExists(table) ||
-        !s.catalog.tableExists(ivfCentsTable(dir)))
-      return ensureIvfIndex(s, dir)
-    if (graft.SourceStamp.isCurrent(s, loc, st)) return table
-    val rec = graft.SourceStamp.recorded(s, loc).getOrElse("")
-    val recLines = rec.split("\n").filter(_.nonEmpty).toSet
-    val curLines = st.split("\n").filter(_.nonEmpty).toSet
-    if (!recLines.subsetOf(curLines))
-      return ensureIvfIndex(s, dir) // rewrite/delete: retrain from scratch
-    val newNames = (curLines -- recLines).map(_.split(":")(0)).toSeq.sorted
-    val base = s"${dir.stripSuffix("/")}/embeddings.parquet"
-    val delta = s.read.parquet(newNames.map(n => s"$base/$n"): _*)
-      .select($"vec_id", quantize($"embedding").as("e"))
-    // trained centroids from the companion table (K rows): assignment of
-    // the delta uses the SAME argmin-L2 key as the build, so maintained
-    // cells are exactly what a build over (old ∪ delta) WITH THESE
-    // centroids would produce
-    val cents = s.table(ivfCentsTable(dir)).collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1).toSeq
-    kmAssign(delta, cents)
-      .select($"vec_id", $"e", $"m.c".cast("int").as("cell"))
-      .write.mode("append").format("parquet")
-      .partitionBy("cell").saveAsTable(table)
-    graft.SourceStamp.write(s, loc, st)
     table
   }
 
@@ -790,7 +732,7 @@ object LlmOps extends graft.QueryModule {
   /** Shared oracle CTE chain: quantized corpus `q`, first-K seeds `c0`,
     * KmIters fixed-point Lloyd rounds (text-identical to q110's, so the
     * cross-engine fixed point is proven once), trained centroids exposed
-    * as `cents(c_id, ce)` — the SQL twin of [[kmeansCentroids]] as the
+    * as `cents(c_id, ce)` — the SQL twin of [[trainOn]] as the
     * IVF build runs it. */
   private def kmCentsSqlCtes: String = {
     val dot = "list_sum(list_transform(range(1, len(e) + 1), i -> e[i] * c[i]))"
@@ -1314,7 +1256,6 @@ object LlmOps extends graft.QueryModule {
     import s.implicits._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"lang").orderBy($"k".asc, $"doc_id".asc)
-    val wc = org.apache.spark.sql.expressions.Window.partitionBy($"lang")
     t(s, dir, "documents")
       .withColumn("k", conv(substring(md5(concat(lit("q:"), $"doc_id")), 1, 8), 16, 10).cast("long"))
       .withColumn("rn", row_number().over(w).cast("long"))
@@ -1474,15 +1415,10 @@ object LlmOps extends graft.QueryModule {
   }
 
   /** The TRAINER half of [[kmeans]]: `iters` Lloyd rounds from the
-    * first-`k` seeds, returning the trained centroids — K × dim longs of
-    * driver-held planning data. Public because the IVF index build
-    * consumes exactly this (train once, assign cells, persist). */
-  def kmeansCentroids(q: DataFrame, k: Int,
-                      iters: Int): Seq[(Int, Array[Long])] =
-    trainOn(q.localCheckpoint(true), k, iters)
-
-  /** [[kmeansCentroids]] on an already-materialized frame (callers that
-    * also assign against the same frame share one materialization). */
+    * first-`k` seeds over an already-materialized frame, returning the
+    * trained centroids — K × dim longs of driver-held planning data.
+    * Callers that also assign against the same frame (the IVF index
+    * build, [[kmeans]]) share one materialization. */
   private def trainOn(q: DataFrame, k: Int,
                       iters: Int): Seq[(Int, Array[Long])] = {
     val s = q.sparkSession

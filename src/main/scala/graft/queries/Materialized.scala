@@ -123,38 +123,6 @@ object Materialized extends graft.QueryModule {
     }
   }
 
-  /** The same fold over an ALREADY-READ feed batch — the shape a
-    * [[graft.streaming.CdcSource]] stream delivers to `foreachBatch` —
-    * applied EXACTLY ONCE: the merged aggregate replaces the view table
-    * via the batch-keyed [[graft.sinks.TxnTable.replaceBatch]], so a
-    * crash-replayed micro-batch finds its own commit and no-ops instead
-    * of double-folding. An empty view bootstraps from the stream's
-    * version-1 initial-insert window — the view table never needs a
-    * batch recompute at all. The view is group-cardinality-sized (days ×
-    * types), so replacing it per batch is metadata-cheap; the raw-table
-    * cost stays the feed's contract (changed files only). */
-  def applyFeedBatch(s: SparkSession, feed: DataFrame, aggRoot: String,
-                     batchId: Long): Unit = {
-    import s.implicits._
-    import graft.sinks.TxnTable
-    groupDelta(s, feed).foreach { delta =>
-      val cur =
-        if (TxnTable.versions(s, aggRoot).nonEmpty)
-          TxnTable.read(s, aggRoot)
-            .select($"day".as("cday"), $"event_type".as("ctype"), $"n", $"sum_cents")
-        else delta.limit(0).select($"day".as("cday"), $"event_type".as("ctype"),
-          $"dn".as("n"), $"dcents".as("sum_cents"))
-      val merged = cur.join(delta,
-          $"cday" === $"day" && $"ctype" === $"event_type", "full")
-        .select(coalesce($"day", $"cday").as("day"),
-          coalesce($"event_type", $"ctype").as("event_type"),
-          (coalesce($"n", lit(0L)) + coalesce($"dn", lit(0L))).as("n"),
-          (coalesce($"sum_cents", lit(0L)) + coalesce($"dcents", lit(0L))).as("sum_cents"))
-        .filter($"n" =!= 0L)
-      TxnTable.replaceBatch(s, aggRoot, merged, batchId)
-    }
-  }
-
   // ---------------------------------------------------------------------
   // q93: exact hit — the raw-table query matches the view's full shape;
   // the rewritten plan is a projection of the artifact (no aggregation).

@@ -108,8 +108,8 @@ object Relational extends graft.QueryModule {
       |ORDER BY o_custkey, rnk""".stripMargin
 
   // ---------------------------------------------------------------------
-  // q04: fact-fact join + agg over the BUCKETED layout (Bucketed
-  // .ensureLayout): orders and lineitem are read co-located on the order
+  // q04: fact-fact join + agg over the BUCKETED layout (Bucketed.orders
+  // and Bucketed.lineitem): orders and lineitem are read co-located on the order
   // key, so the join — and the first-phase per-orderkey aggregate — run
   // with ZERO exchange on the facts (plan-asserted in BucketedJoinSpec);
   // at 100 TB the layout, not every query, pays the orderkey shuffle.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Manual SALTED equijoin — the skew mitigation you reach for when
@@ -48,12 +48,4 @@ object Salted {
       explode(array((0 until shards).map(i => lit(i.toLong)): _*)))
     saltedFact.join(saltedDim, Seq(key, "__salt"), joinType).drop("__salt")
   }
-
-  /** The observable the salt buys: per-partition row counts after a
-    * hash repartition on the given columns (test/diagnostic helper). */
-  private[queries] def partitionCounts(df: DataFrame, numPartitions: Int,
-                                       cols: Column*): Array[Long] =
-    df.repartition(numPartitions, cols: _*)
-      .groupBy(spark_partition_id().as("p")).count()
-      .collect().map(_.getLong(1))
 }

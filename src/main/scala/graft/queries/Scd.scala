@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 
@@ -21,10 +21,6 @@ import graft.Tables.t
   * the session's autoBroadcastJoinThreshold, and otherwise left to the
   * engine, which degrades to a shuffle join instead of an executor OOM
   * (the q62 lesson; both paths hash-identical, ScdSpec runs both).
-  * [[scd2MergeTxn]] wraps the merge in the transactional log
-  * ([[graft.sinks.TxnTable]]): each merge is an atomic, batch-id-
-  * idempotent commit and every pre-merge dimension version stays
-  * time-travelable.
   */
 object Scd extends graft.QueryModule {
 
@@ -87,21 +83,6 @@ object Scd extends graft.QueryModule {
         lit(true).as("is_current"))
     merged.unionByName(inserts)
   }
-
-  /** SCD-2 MERGE as a TRANSACTIONAL commit — the production shape the
-    * scaladoc above promises: apply `updates` to the CURRENT snapshot
-    * of the dimension stored at txn-table `root` and commit the merged
-    * dimension as a new version. Pre-merge history stays time-travelable
-    * (snapshot isolation: a reader pinned to an older version never sees
-    * the merge), and the commit is idempotent under replay via the
-    * batch-id op tag ([[graft.sinks.TxnTable.replaceBatch]]) — re-running
-    * a committed merge no-ops instead of double-closing versions. */
-  def scd2MergeTxn(s: SparkSession, root: String, updates: DataFrame,
-                   key: String, attr: String, eff: Column,
-                   batchId: Long): Option[graft.sinks.TxnTable.Snapshot] =
-    graft.sinks.TxnTable.replaceBatch(s, root,
-      scd2Apply(graft.sinks.TxnTable.read(s, root), updates, key, attr, eff),
-      batchId)
 
   // ---------------------------------------------------------------------
   // q64: SCD-2 merge over the customer dimension. The "update batch" is

@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Det._
-import graft.Tables.t
 
 /** Batch sessionization over the `events` stream table — the batch twin
   * of Spark's streaming `session_window`, which SessionWindowSpec proves
@@ -208,8 +206,8 @@ object Sessions extends graft.QueryModule {
   // mean anything). Deliberately the lag-based variant (burst extends
   // while gaps stay <= 30 min) — the session-opener semantics of q52
   // applied as a filter, not the fixed-window-after-last-KEPT throttle,
-  // which needs running state (that shape is the streaming operator
-  // graft.streaming.Throttle, a row of StreamPrefixSpec).
+  // which needs running state (README's flatMapGroupsWithState throttle
+  // recipe).
   //
   // Scale: ONE window (lag) partitioned by (user_id, event_type) — over
   // the user_id-bucketed events layout HashPartitioning(user_id)

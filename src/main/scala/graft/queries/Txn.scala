@@ -625,7 +625,6 @@ object Txn extends graft.QueryModule {
     }
 
   val q129Bench: Q = (s, dir) => {
-    import s.implicits._
     val name = Rep.name(dir)
     ensureReplayRenamed(s, dir)
     s.sql(s"SELECT * FROM graft_cat.db.$name")
@@ -730,7 +729,6 @@ object Txn extends graft.QueryModule {
     }
 
   val q131Bench: Q = (s, dir) => {
-    import s.implicits._
     val name = StrDocs.name(dir)
     ensureStrDocs(s, dir)
     s.sql(s"SELECT source, COUNT(*) AS n, SUM(n_chars) AS chars " +

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -86,21 +86,6 @@ object ZOrder extends graft.QueryModule {
     (0 until Bits).map { i =>
       s"((($a >> $i) & 1) << ${2 * i}) | ((($b >> $i) & 1) << ${2 * i + 1})"
     }.mkString("(", ") | (", ")")
-
-  /** Cluster `df` into `files` z-ordered parquet files over two integer
-    * dimension columns: compute the z-value, range-partition on it (so
-    * each output file owns one contiguous z-range = one rectangle
-    * stack), sort within partitions, drop the helper column. This is
-    * the whole OPTIMIZE ZORDER mechanic — everything else (which
-    * queries benefit, by how much) is a property of the z-curve, which
-    * ZOrderSpec measures rather than asserts. */
-  def writeClustered(df: DataFrame, dimA: String, dimB: String,
-                     path: String, files: Int): Unit =
-    df.withColumn("_z", zvalue(col(dimA), col(dimB)))
-      .repartitionByRange(files, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 
   // ---------------------------------------------------------------------
   // q55: the z-value computation itself, oracle-checked bit-for-bit —

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, StructType}
 
 /** Logical→physical COLUMN MAPPING for the txn format — what makes
@@ -78,13 +78,6 @@ object ColumnMapping {
   def logicalView(sc: StructType): StructType =
     StructType(sc.fields.filterNot(isDropped)
       .map(f => f.copy(metadata = stripKeys(f.metadata))))
-
-  /** Live fields (tombstones stripped) WITH their mapping metadata —
-    * for schema composition across commits ([[TxnTable.publishStaged]]):
-    * unlike [[logicalView]] this keeps each field's frozen physical
-    * identity, so re-evolving it cannot re-allocate differently. */
-  def liveStorage(sc: StructType): StructType =
-    StructType(sc.fields.filterNot(isDropped))
 
   /** The FILE-SIDE schema: live fields under their physical names —
     * what the parquet scan is pinned to. Positionally identical to

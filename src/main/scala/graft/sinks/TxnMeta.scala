@@ -78,21 +78,17 @@ object TxnMeta {
     rows.toDF("file", "bytes", "rows", "column", "lo", "hi", "has_bloom")
   }
 
-  /** One row per ref — tags (immutable version pins), branches (mutable
-    * refs with their own commit line — `version` is the branch HEAD),
-    * and staged write-audit-publish commits awaiting publish/abort
-    * (no version — they live outside the version line until published).
-    * The refs half of Iceberg's `refs`/`snapshots` metadata surface;
-    * manifest-scale, zero data reads. */
+  /** One row per ref — tags (immutable version pins) and branches
+    * (mutable refs with their own commit line — `version` is the branch
+    * HEAD). The refs half of Iceberg's `refs`/`snapshots` metadata
+    * surface; manifest-scale, zero data reads. */
   def refs(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     val tagRows = TxnTable.tags(s, root).toSeq.sortBy(_._1)
       .map { case (n, v) => (n, "tag", Some(v)) }
     val branchRows = TxnTable.branches(s, root).keys.toSeq.sorted
       .map(n => (n, "branch", Some(TxnTable.branchHead(s, root, n).version)))
-    val stagedRows = TxnTable.stagedIds(s, root)
-      .map(id => (id, "staged", Option.empty[Long]))
-    (tagRows ++ branchRows ++ stagedRows).toDF("name", "kind", "version")
+    (tagRows ++ branchRows).toDF("name", "kind", "version")
   }
 
   /** The table CONTRACT — sidecar properties (row-level mode/isolation,

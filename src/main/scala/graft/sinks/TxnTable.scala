@@ -250,7 +250,7 @@ object TxnTable {
   }
 
   /** V1 boundary for the write paths that stage files OUTSIDE
-    * [[stage]] (executor-staged row-level/streaming writes, WAP) or
+    * [[stage]] (executor-staged row-level/streaming writes) or
     * replay raw files across schema epochs: they would need the
     * logical→physical rename threaded through machinery that does not
     * yet carry it, so a table with renamed/dropped columns refuses loud
@@ -474,10 +474,11 @@ object TxnTable {
       // encodings cannot collide
       case rc if rc.startsWith("rows:") && rc.count(_ == ':') == 1 =>
         rows = Some(rc.stripPrefix("rows:").toLong)
-      // `nulls:<col>:<n>` — per-file null count of a stats column
-      // ([[metaGroupCount]] needs it to attribute point-range files
-      // exactly). "nulls" is a RESERVED stats-column name (rejected
-      // at serialize time) so the encodings cannot collide.
+      // `nulls:<col>:<n>` — per-file null count of a stats column,
+      // recorded from the footers at commit; no reader in the program
+      // consumes it today (segment reuse only compares it). "nulls" is
+      // a RESERVED stats-column name (rejected at serialize time) so
+      // the encodings cannot collide.
       case nl if nl.startsWith("nulls:") && nl.count(_ == ':') == 2 =>
         val Array(_, c, n) = nl.split(":", 3)
         nulls += c -> n.toLong
@@ -571,13 +572,12 @@ object TxnTable {
       else None
     }.toMap
     // refresh the commit-side reuse hint from HEAD parses only —
-    // staged (WAP) manifests are partial file lists, and time-travel /
-    // branch / vacuum walks parse historical versions whose refs would
+    // time-travel / branch / vacuum walks parse historical versions whose refs would
     // swap the hint away from the head between a committer's latest()
     // and its manifest build (reuse lost at best; combined with a
     // vacuumed re-chunk orphan, a dangling ref at worst — the commit
     // side also stats every reused segment for exactly that reason)
-    if (refreshHint && !what.startsWith("staged"))
+    if (refreshHint)
       lastSegs.put(rootKey(root), refs.map(_._1))
     Snapshot(version, lines.head.stripPrefix(Header).trim, entries.map(_._1),
       entries.collect { case (f, st, _, _, _) if st.nonEmpty => f -> st }.toMap,
@@ -768,13 +768,6 @@ object TxnTable {
       .map(_.stripPrefix(TsTag).toLong)
       .getOrElse(f.getFileStatus(p).getModificationTime)
   }
-
-  /** Timestamp-based time travel: the table as it was at `epochMs`
-    * (AS OF TIMESTAMP to [[readAsOf]]'s AS OF VERSION). */
-  def readAsOfTime(s: SparkSession, root: String, epochMs: Long): DataFrame =
-    readAsOf(s, root, versionAt(s, root, epochMs).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot at $root as of epoch-ms $epochMs")))
 
   /** Stage `df` as immutable parquet files under data/<uuid>/, return
     * their root-relative paths. Nothing references them until commit.
@@ -1221,13 +1214,11 @@ object TxnTable {
   }
 
   /** Complete `known` to per-file null counts of the stats columns via
-    * cached footer reads — the nulls analog of [[completeCounts]],
-    * feeding [[metaGroupCount]]'s exact attribution. A column absent
-    * from a file's footer is all-null there by schema-on-read (files
-    * written before the column existed read it as null — count = file
-    * rows); a footer whose writer recorded no null-count statistic
-    * yields no entry, and the metadata GROUP BY refuses rather than
-    * guess. */
+    * cached footer reads — the nulls analog of [[completeCounts]]. A
+    * column absent from a file's footer is all-null there by
+    * schema-on-read (files written before the column existed read it as
+    * null — count = file rows); a footer whose writer recorded no
+    * null-count statistic yields no entry rather than a guess. */
   private def completeNulls(s: SparkSession, root: String, files: Seq[String],
                             cols: Seq[String],
                             known: Map[String, Map[String, Long]])
@@ -1304,9 +1295,8 @@ object TxnTable {
       // row-count recording
       rowCounts = completeCounts(s, root, next.files, next.rowCounts),
       // per-file null counts of the stats columns ride the same cached
-      // footer reads — [[metaGroupCount]] needs them to attribute a
-      // point-range file's rows exactly (min/max exclude nulls, so a
-      // point range alone cannot certify "single-valued file")
+      // footer reads (min/max exclude nulls; the count records what the
+      // range leaves out — written, not yet read by any query path)
       nullCounts = completeNulls(s, root, next.files, next.statsCols,
         next.nullCounts),
       // provenance lives only while its sidecar is in the delete set
@@ -1869,8 +1859,8 @@ object TxnTable {
   }
 
   /** Exactly-once table REPLACEMENT keyed by batch id — the commit
-    * shape of an idempotent MERGE job (e.g. SCD-2, see
-    * `graft.queries.Scd.scd2MergeTxn`): the new snapshot replaces the
+    * shape of an idempotent MERGE job (e.g. an SCD-2 merge of
+    * `graft.queries.Scd.scd2Apply`'s output): the new snapshot replaces the
     * table content; a replayed batch finds its own commit in the log
     * and no-ops (returns None) instead of double-applying the merge. */
   def replaceBatch(s: SparkSession, root: String, df: DataFrame,
@@ -2007,153 +1997,19 @@ object TxnTable {
   }
 
   // ---------------------------------------------------------------------
-  // Write–audit–publish (staged commits) + named tags — the two ref-level
-  // features of a production table format this log was still missing.
-  // A STAGED append writes its data files and a full manifest envelope
-  // OUTSIDE the version line (`_txn/staged-<id>.txt` — invisible to
-  // read/time-travel/CDC), an audit session reads the publish preview by
-  // id, and publish is one ordinary optimistic commit folding the staged
-  // files onto the then-current head — validation queries run against
-  // the EXACT bytes production will serve, and a failed audit aborts
-  // with zero effect on the table (Iceberg's WAP pattern). Tags are
-  // immutable named version pointers (`prod-2024-05`, `audit-baseline`);
-  // vacuum retains tagged versions and staged files.
+  // Named TAGS — immutable version pointers (`prod-2024-05`,
+  // `audit-baseline`): SQL reads them through `VERSION AS OF '<tag>'`
+  // ([[graft.sources.GraftTxnSource]]), `CALL <catalog>.system.create_tag` writes
+  // them, and vacuum retains every tagged version.
   // ---------------------------------------------------------------------
-
-  private def stagedPath(root: String, id: String): Path =
-    new Path(s"${root.stripSuffix("/")}/_txn/staged-$id.txt")
-
-  private val StagedRe = "^staged-([a-f0-9]+)\\.txt$".r
-
-  /** Staged-commit ids awaiting publish or abort, ascending. */
-  def stagedIds(s: SparkSession, root: String): Seq[String] = {
-    val dir = new Path(s"${root.stripSuffix("/")}/_txn")
-    val f = fs(s, root)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.flatMap(st => st.getPath.getName match {
-      case StagedRe(id) => Some(id)
-      case _            => None
-    }).sorted
-  }
-
-  private def stagedSnapshot(s: SparkSession, root: String, id: String): Snapshot =
-    parseManifest(s, root, 0L, readSmallFile(s, root, stagedPath(root, id)),
-      s"staged-$id")
-
-  /** Stage an append WITHOUT committing it: data files + a manifest
-    * envelope land outside the version line, invisible to every reader.
-    * Schema evolution is validated now (fail at write time, not publish
-    * time); the staged files fan out under the table's transform spec so
-    * the published files prune like any others. Returns the stage id. */
-  def stageAppend(s: SparkSession, root: String, df: DataFrame): String = {
-    val cur = latestRequired(s, root)
-    val evolved = evolveM(cur.schema, df.schema) // validate early; re-checked at publish
-    // mapped tables stage under the frozen physical names and record the
-    // full storage schema (mapping carrier) in the staged manifest;
-    // unmapped tables keep the incoming shape byte-identically
-    val mapped = ColumnMapping.hasMapping(evolved)
-    val staged = stage(s, root,
-      if (mapped) ColumnMapping.toPhysical(df, evolved) else df, cur.transforms)
-    val (st, bl) = stagedMeta(s, root, staged, cur.statsCols, cur.bloomCols,
-      cur.transforms)
-    val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val text = serializeManifest(Snapshot(0L, "staged-append", staged, st,
-      cur.statsCols, Some(if (mapped) evolved else df.schema), bl,
-      cur.bloomCols, Some(System.currentTimeMillis()),
-      transforms = cur.transforms,
-      rowCounts = completeCounts(s, root, staged, Map.empty)))
-    val f = fs(s, root)
-    val out = f.create(stagedPath(root, id), false)
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    id
-  }
-
-  private def alignTo(df: DataFrame,
-                      target: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    df.select(target.fields.toSeq.map(f =>
-      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
-        .cast(f.dataType).as(f.name)): _*)
-  }
-
-  /** The publish PREVIEW: current head plus the staged files, under the
-    * schema publish would record — the frame an audit job validates. */
-  def readStaged(s: SparkSession, root: String, id: String): DataFrame = {
-    val head = latestRequired(s, root)
-    val stg = stagedSnapshot(s, root, id)
-    val target = ColumnMapping.logicalView(
-      stg.schema.fold(head.schema.get) { sc =>
-        val merged = evolveM(head.schema, ColumnMapping.liveStorage(sc))
-        // the same refusal publishStaged issues: a DDL between stage
-        // and audit that re-mapped a staged column (drop/re-add) would
-        // otherwise make this preview silently show staged rows under a
-        // separate dead column — the audit read must refuse exactly the
-        // stages publish would
-        ColumnMapping.liveStorage(sc).fieldNames.foreach { c =>
-          require(ColumnMapping.physName(merged, c) ==
-              ColumnMapping.physName(sc, c),
-            s"column '$c' was re-mapped since stage '$id' - abort and restage")
-        }
-        merged
-      })
-    // staged files carry physical names when the stage-time schema was
-    // mapped — read pinned to them, alias back before aligning
-    val stagedDf = stg.schema.fold(
-      scanFiles(s, root, stg.copy(schema = None), stg.files))(sc =>
-      ColumnMapping.aliasToLogical(scanFiles(s, root, stg, stg.files), sc))
-    alignTo(read(s, root), target).unionByName(alignTo(stagedDf, target))
-  }
-
-  /** Fold a staged commit onto the CURRENT head as one ordinary commit
-    * (bounded optimistic retries — staged files never restage), then
-    * retire the stage marker. Refuses if the table's transform spec
-    * changed since staging (the staged fan-out would no longer match). */
-  def publishStaged(s: SparkSession, root: String, id: String): Snapshot = {
-    val stg = stagedSnapshot(s, root, id)
-    val out = retrying(WriterAttempts) {
-      val head = latestRequired(s, root)
-      require(head.transforms == stg.transforms,
-        s"partition spec changed since stage '$id' - abort and restage")
-      // mapped tables: the staged parquet carries the STAGE-TIME physical
-      // names; publish merges schemas in logical space and refuses if a
-      // DDL between stage and publish re-mapped any staged column (a
-      // drop/re-add — renames are harmless, physical names are frozen)
-      val sc = stg.schema.fold(head.schema) { stgSc =>
-        // liveStorage keeps each staged field's frozen physical identity
-        // through the merge (logicalView would strip it and a staged
-        // reborn column would re-allocate — then falsely refuse below)
-        val target = evolveM(head.schema, ColumnMapping.liveStorage(stgSc))
-        ColumnMapping.liveStorage(stgSc).fieldNames.foreach { c =>
-          require(ColumnMapping.physName(target, c) ==
-              ColumnMapping.physName(stgSc, c),
-            s"column '$c' was re-mapped since stage '$id' - abort and restage")
-        }
-        Some(target)
-      }
-      commit(s, root, appended(head, s"publish-staged:$id", stg.files,
-        (stg.stats, stg.blooms), stg.rowCounts).copy(schema = sc))
-    }
-    fs(s, root).delete(stagedPath(root, id), false)
-    out
-  }
-
-  /** Drop a staged commit: its data files and marker go; the table never
-    * saw it. */
-  def abortStaged(s: SparkSession, root: String, id: String): Unit = {
-    val stg = stagedSnapshot(s, root, id)
-    val f = fs(s, root)
-    val base = root.stripSuffix("/")
-    stg.files.foreach(p => f.delete(new Path(s"$base/$p"), false))
-    f.delete(stagedPath(root, id), false)
-  }
 
   private def tagPath(root: String, name: String): Path =
     new Path(s"${root.stripSuffix("/")}/_txn/tag-$name.txt")
 
   private val TagRe = "^tag-([A-Za-z0-9_\\-.]+)\\.txt$".r
 
-  /** Pin `name` to `version` — immutable (re-tagging a name refuses;
-    * drop it first). The version must exist; vacuum keeps it alive. */
+  /** Pin `name` to `version` — immutable (re-tagging a name refuses).
+    * The version must exist; vacuum keeps it alive. */
   def tagVersion(s: SparkSession, root: String, name: String,
                  version: Long): Unit = {
     require(name.matches("[A-Za-z0-9_\\-.]+"),
@@ -2179,13 +2035,6 @@ object TxnTable {
       case _ => None
     }).toMap
   }
-
-  def readTag(s: SparkSession, root: String, name: String): DataFrame =
-    readAsOf(s, root, tags(s, root).getOrElse(name,
-      throw new NoSuchElementException(s"no tag '$name' at $root")))
-
-  def dropTag(s: SparkSession, root: String, name: String): Unit =
-    fs(s, root).delete(tagPath(root, name), false)
 
   // ---------------------------------------------------------------------
   // BRANCHES — named MUTABLE refs with their own commit line (tags are
@@ -2284,10 +2133,6 @@ object TxnTable {
           head.transforms)).copy(schema = Some(evolved)),
       branch = Some(name))
   }
-
-  /** The branch as a DataFrame (fork content + branch appends). */
-  def readBranch(s: SparkSession, root: String, name: String): DataFrame =
-    readSnap(s, root, branchHead(s, root, name))
 
   /** Publish the branch head as MAIN's next version — valid only while
     * main's head still IS the fork point (nothing to merge; the commit
@@ -2653,20 +2498,6 @@ object TxnTable {
     mergeIntoImpl(s, root, cur, changes, keyCols, primaryBounds(cur, statsRange))
   }
 
-  /** [[mergeInto]] with MULTI-COLUMN bounds: each (column, lo, hi)
-    * entry asserts the change keys' values of that RECORDED stats
-    * column all lie in [lo, hi]; a file any bound proves disjoint
-    * carries by reference. More bounds = more skipping — the payoff of
-    * multi-column manifest stats on the write path. Same caller
-    * contract per bound as `statsRange`. */
-  def mergeIntoBounded(s: SparkSession, root: String, changes: DataFrame,
-                       keyCols: Seq[String],
-                       bounds: Seq[(String, Long, Long)]): Snapshot = {
-    val cur = latestRequired(s, root)
-    mergeIntoImpl(s, root, cur, changes, keyCols,
-      bounds.map { case (c, lo, hi) => (physCol(cur, c), lo, hi) })
-  }
-
   /** Exactly-once keyed MERGE per micro-batch — the Update-mode
     * streaming sink's commit shape ([[graft.streaming.TxnStreamSink]]):
     * each batch UPSERTS its rows by `keyCols` (replace-or-insert, the
@@ -2757,7 +2588,6 @@ object TxnTable {
     // survivors come FROM the table (already admitted); only the change
     // set carries new values that can violate
     enforceConstraints(s, root, changes, opTag)
-    val base = root.stripSuffix("/")
     val (carry, touch) =
       if (bounds.isEmpty) (Seq.empty[String], cur.files)
       else cur.files.partition(provablyDisjoint(cur, _, bounds))
@@ -2798,12 +2628,6 @@ object TxnTable {
       s"$what reads data files directly and snapshot v${snap.version} carries " +
         s"${snap.deletes.size} merge-on-read delete file(s) - run " +
         "compactDeletes (or compactTxn) first")
-
-  /** The primary stats column's recorded range for one file — the
-    * single-column view [[deleteWhere]]/[[mergeInto]]'s `statsRange`
-    * and the column-less [[readPruned]] overload address. */
-  private def primaryStats(snap: Snapshot, f: String): Option[(Long, Long)] =
-    snap.statsCols.headOption.flatMap(c => snap.stats.get(f).flatMap(_.get(c)))
 
   /** BUCKET SPECS applicable to file `rel` for point probes on
     * (physical) column `col`: the table's CURRENT spec plus any
@@ -3037,69 +2861,6 @@ object TxnTable {
     }
   }
 
-  /** Exact per-value row counts of `col` — the metadata-only GROUP BY
-    * (Iceberg's `partitions` metadata-table surface): when every live
-    * file holds a SINGLE value of `col` (its recorded range is a point,
-    * lo == hi — which hidden-partitioning fan-out guarantees for its
-    * derived columns, and an identity-partitioned layout satisfies
-    * naturally), `GROUP BY col → COUNT(*)` is a driver-side fold of the
-    * manifest's per-file row counts. Zero data reads, zero Spark jobs —
-    * at 100 TB, "rows per day for the last year" costs manifest IO
-    * instead of a full scan.
-    *
-    * NULL attribution is exact, not assumed: min/max EXCLUDE nulls, so
-    * a point range alone cannot certify a single-valued file — a file
-    * mixing nulls with one value has a point range too. The manifest's
-    * per-file null counts (recorded at commit time from the parquet
-    * footers' null-count statistic, see [[commit]]) split such a file
-    * exactly: `rows − nulls` to the value group, `nulls` to the NULL
-    * group (key `None`, returned first); a file with NO range entry but
-    * `nulls == rows` is provably the all-null file and contributes only
-    * the NULL group. A transform-DERIVED column needs no recorded
-    * count: its fan-out routes null sources to the hive-default dir
-    * (which gets no entry), so any file with an entry is null-free by
-    * construction. EXACT-OR-REFUSE like its siblings: live MoR deletes,
-    * a non-empty file without a recorded count, an unknown null count
-    * for a data column, a non-point range (values mixed in one file),
-    * or an inconsistent entry all return None rather than guess.
-    *
-    * Returns groups ascending by value, NULL group first. An empty
-    * table certifies an empty grouping (Some(Nil)). */
-  def metaGroupCount(s: SparkSession, root: String, col0: String,
-                     version: Option[Long] = None): Option[Seq[(Option[Long], Long)]] = {
-    val snap = version.fold(latestRequired(s, root))(snapshot(s, root, _))
-    val col = physCol(snap, col0)
-    // string stats are prefix ENCODINGS: a point range does not certify
-    // a single value (two long strings can share an 8-byte prefix) and
-    // the group key would be an encoding, not a value — refuse.
-    requireNotString(snap, col, "metaGroupCount", "a data-path GROUP BY")
-    if (snap.deletes.nonEmpty) return None
-    val derived = snap.transforms.exists(_.name == col)
-    val perFile: Seq[Option[Seq[(Option[Long], Long)]]] = snap.files.map { f =>
-      snap.rowCounts.get(f) match {
-        case Some(0L) => Some(Nil) // provably empty: no contribution
-        case Some(n) =>
-          val nc: Option[Long] =
-            if (derived) Some(0L) else snap.nullCounts.get(f).flatMap(_.get(col))
-          (snap.stats.get(f).flatMap(_.get(col)), nc) match {
-            case (Some((lo, hi)), Some(0L)) if lo == hi =>
-              Some(Seq(Some(lo) -> n))
-            case (Some((lo, hi)), Some(k)) if lo == hi && k > 0L && k < n =>
-              Some(Seq(Option.empty[Long] -> k, Some(lo) -> (n - k)))
-            case (None, Some(k)) if k == n =>
-              Some(Seq(Option.empty[Long] -> n)) // the all-null file
-            case _ => None // non-point range, unknown nulls, or an
-                           // inconsistent entry — refuse
-          }
-        case None => None // legacy file without a count — refuse
-      }
-    }
-    if (perFile.exists(_.isEmpty)) None
-    else Some(perFile.flatten.flatten.filter(_._2 > 0L)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum)
-      .toSeq.sortBy { case (k, _) => (k.isDefined, k.getOrElse(0L)) })
-  }
-
   /** RUNTIME JOIN PRUNING — the manifest-level analog of dynamic
     * partition pruning: given the small side of a join (`keys`, one
     * column), read only the files whose recorded range/bloom metadata
@@ -3123,13 +2884,12 @@ object TxnTable {
     requireNoMor(snap, "readSemiPruned")
     require(snap.files.nonEmpty, s"snapshot v${snap.version} has no data files")
     import org.apache.spark.sql.functions.{broadcast, col => c}
-    // STRING keys keep their type end-to-end: the manifest metadata for
-    // a string column is prefix-encoded ranges + xxhash64 blooms
-    // ([[fileMeta]]), so the probe encodes the same way; the old long
-    // cast silently nulled every string key (an empty, WRONG result)
-    val keyIsString = keys.schema.fields.head.dataType ==
-      org.apache.spark.sql.types.StringType
-    if (keyIsString) return readSemiPrunedStr(s, root, snap, col, keys, maxKeys)
+    // STRING keys refuse: the long cast below would silently null every
+    // one (an empty, WRONG result), and no registered caller probes by
+    // string. A plain left_semi join is exact for them.
+    require(keys.schema.fields.head.dataType != org.apache.spark.sql.types.StringType,
+      s"readSemiPruned: key column '${keys.columns.head}' is a string — " +
+        "only integral keys are probed; use a plain left_semi join")
     val kDf = keys.select(c(keys.columns.head).cast("long").as("_probe_k"))
       .filter(c("_probe_k").isNotNull).distinct()
     val collected = kDf.limit(maxKeys + 1).collect().map(_.getLong(0))
@@ -3169,53 +2929,6 @@ object TxnTable {
         range.forall { case (lo, hi) => lo <= k && k <= hi } &&
           bloom.forall(_.mightContainLong(k)) &&
           (!srcIsLong || specs.forall { case (name, param) =>
-            snap.stats.get(f).flatMap(_.get(name)).forall { case (lo, hi) =>
-              val v = bucketOf(param, k); lo <= v && v <= hi
-            }
-          }))
-    }
-    if (kept.isEmpty)
-      semi(logical(scanFiles(s, root, snap, Seq(snap.files.head)).limit(0)))
-    else semi(logical(scanFiles(s, root, snap, kept)))
-  }
-
-  /** [[readSemiPruned]] for STRING keys: per-key may-contain tests run
-    * against the prefix-encoded ranges (`fileLo <= lower(k) &&
-    * upper(k) <= fileHi` — [[graft.functions.Utf8Prefix64]]), the
-    * xxhash64 blooms, and — because [[Transform]]'s bucket fan-out is
-    * `xxhash64(col)` regardless of type — the bucket transform entries,
-    * hashing each key's UTF-8 bytes exactly as the fan-out did. The
-    * exactness contract is the caller's semi-join, same as the long
-    * path. */
-  private def readSemiPrunedStr(s: SparkSession, root: String, snap: Snapshot,
-                                col: String, keys: DataFrame,
-                                maxKeys: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col => c}
-    import graft.functions.Utf8Prefix64
-    val kDf = keys.select(c(keys.columns.head).as("_probe_k"))
-      .filter(c("_probe_k").isNotNull).distinct()
-    val collected = kDf.limit(maxKeys + 1).collect().map(_.getString(0))
-    val colP = physCol(snap, col)
-    def semi(data: DataFrame): DataFrame =
-      data.join(broadcast(kDf), data(col) === kDf("_probe_k"), "left_semi")
-    def logical(raw: DataFrame): DataFrame =
-      snap.schema.fold(raw)(sc => ColumnMapping.aliasToLogical(raw, sc))
-    if (collected.length > maxKeys) return semi(readSnap(s, root, snap))
-    val srcIsString = isStringCol(snap, colP)
-    def bucketOf(param: Int, k: String): Long = {
-      val h = Utf8Prefix64.bloomHash(k) // xxhash64(col), seed 42
-      ((h % param) + param) % param
-    }
-    val kept = snap.files.filter { f =>
-      val range = snap.stats.get(f).flatMap(_.get(colP))
-      val bloom = snap.blooms.get(f).flatMap(_.get(colP))
-        .map(graft.functions.BloomAgg.fromBytes)
-      val specs = bucketSpecsFor(snap, f, colP)
-      collected.exists(k =>
-        range.forall { case (lo, hi) =>
-          lo <= Utf8Prefix64.lower(k) && Utf8Prefix64.upper(k) <= hi } &&
-          bloom.forall(_.mightContainLong(Utf8Prefix64.bloomHash(k))) &&
-          (!srcIsString || specs.forall { case (name, param) =>
             snap.stats.get(f).flatMap(_.get(name)).forall { case (lo, hi) =>
               val v = bucketOf(param, k); lo <= v && v <= hi
             }
@@ -3445,7 +3158,6 @@ object TxnTable {
                               predicate: org.apache.spark.sql.Column,
                               bounds: Seq[(String, Long, Long)]): Snapshot = {
     requireNoMor(cur, "deleteWhere (copy-on-write)")
-    val base = root.stripSuffix("/")
     val (carry, touch) =
       if (bounds.isEmpty) (Seq.empty[String], cur.files)
       else cur.files.partition(provablyDisjoint(cur, _, bounds))
@@ -3580,7 +3292,7 @@ object TxnTable {
 
   private def staleConflict(root: String, opTag: String, expected: Long,
                             cur: Long, what: String,
-                            refusal: Option[String] = None): Nothing =
+                            refusal: Option[String]): Nothing =
     throw new TxnConflictException(
       s"row-level $opTag planned against v$expected but $root is at " +
         s"v$cur — $what; re-run the statement (pure-append and disjoint-file " +
@@ -4131,8 +3843,8 @@ object TxnTable {
   // was made at, in an append-only dir of immutable one-change files
   // (`_txn/props/change-*.txt` — one file per change, no filesystem
   // append() dependency, crash-safe via tmp+rename). That gives time
-  // travel a contract AS OF version N ([[propertiesAt]] /
-  // [[constraintsAt]]) and an audit meta table
+  // travel a contract AS OF version N ([[propertiesAt]], CHECK
+  // constraints included) and an audit meta table
   // ([[TxnMeta.propertyHistory]]) without touching the hot
   // [[tableProperties]] read path. A table whose properties predate
   // the log gets a SEED baseline (recorded at version 0: the earliest
@@ -4214,15 +3926,6 @@ object TxnTable {
     }
   }
 
-  /** CHECK constraints in force as of `version` — what a time-travel
-    * read's rows were admitted under. */
-  def constraintsAt(s: SparkSession, root: String,
-                    version: Long): Map[String, String] =
-    propertiesAt(s, root, version).collect {
-      case (k, v) if k.startsWith(ConstraintKeyPrefix) =>
-        k.drop(ConstraintKeyPrefix.length) -> v
-    }
-
   // ---------------------------------------------------------------------
   // Table CONSTRAINTS — Delta-shaped CHECK invariants enforced at write
   // time (`delta.constraints.<name>` semantics): property key
@@ -4252,9 +3955,6 @@ object TxnTable {
   def addConstraint(s: SparkSession, root: String,
                     name: String, expression: String): Unit =
     setTableProperty(s, root, s"$ConstraintKeyPrefix$name", expression)
-
-  def dropConstraint(s: SparkSession, root: String, name: String): Unit =
-    unsetTableProperty(s, root, s"$ConstraintKeyPrefix$name")
 
   /** Remove a sidecar property (constraints; the row-level mode resets
     * to its default). Same crash-safe publish as [[setTableProperty]]. */
@@ -4365,13 +4065,9 @@ object TxnTable {
 
   /** Every data-pool file some retained manifest can still reach:
     * `keep` versions' files AND their MoR delete-key files (vacuuming
-    * one would silently resurrect its deleted rows),
-    * staged-but-unpublished commits' files (referenced through the
-    * stage marker, not a version — deleting them would turn a later
-    * publish into a manifest of dead paths), and branch commits' files
-    * (shared-pool paths only the branch manifests know about). */
-  /** (data+delete files, manifest segments) referenced by any retained
-    * version, staged (WAP) commit, or branch manifest. */
+    * one would silently resurrect its deleted rows), and branch
+    * commits' files (shared-pool paths only the branch manifests know
+    * about). Returns (data+delete files, manifest segments). */
   private def referencedFiles(s: SparkSession, root: String,
                               keep: Seq[Long]): (Set[String], Set[String]) = {
     val branchRefs = branches(s, root)
@@ -4381,15 +4077,14 @@ object TxnTable {
           readSmallFile(s, root, branchManifestPath(root, b, v)),
           s"branch $b v$v")
       })
-    (snaps.flatMap(sn => sn.files ++ sn.deletes).toSet ++
-       stagedIds(s, root).flatMap(id => stagedSnapshot(s, root, id).files),
+    (snaps.flatMap(sn => sn.files ++ sn.deletes).toSet,
       snaps.flatMap(_.segs).toSet)
   }
 
   /** REPORT-ONLY orphan scan (Iceberg's `remove_orphan_files` dry-run
     * semantic, distinct from [[vacuum]]'s history expiry): data-pool
     * files that NO reachable manifest references — not any version's,
-    * not a staged commit's, not a branch's — and that are older than
+    * not a branch's — and that are older than
     * `graceMs` (younger unreferenced files are presumed to be a
     * concurrent writer's staged-but-not-yet-committed data, the same
     * in-flight guard vacuum applies). These are write-attempt debris:
@@ -4426,7 +4121,7 @@ object TxnTable {
     val vs = versions(s, root)
     val (dropByAge, keepByAge) = vs.splitAt(math.max(0, vs.size - retainVersions))
     // a tagged version is pinned history — retention by count never
-    // drops it (Iceberg's tag-retention contract); dropTag first. A
+    // drops it (Iceberg's tag-retention contract). A
     // branch FORK version is pinned the same way: an empty branch's
     // head IS the fork manifest, and every branch manifest chains off
     // its content — dropBranch first.
@@ -4436,8 +4131,8 @@ object TxnTable {
     val drop = dropByAge.filterNot(pinned)
     val (live, liveSegs) = referencedFiles(s, root, keep)
     drop.foreach(v => f.delete(manifestPath(root, v), false))
-    // manifest SEGMENTS referenced by no retained manifest (any branch,
-    // any staged commit) are garbage — the same grace guard as data
+    // manifest SEGMENTS referenced by no retained manifest (any branch
+    // included) are garbage — the same grace guard as data
     // files protects a concurrent committer's segments written just
     // before its version-file CAS
     locally {

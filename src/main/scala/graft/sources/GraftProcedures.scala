@@ -201,7 +201,7 @@ object GraftProcedures {
 
     proc(catalog, "orphan_files",
       "REPORT unreferenced data-pool files older than grace_ms (write-" +
-        "attempt debris no manifest, staged commit, or branch can reach) " +
+        "attempt debris no manifest or branch can reach) " +
         "- dry-run only, deletes nothing",
       Seq(
         in("table", StringType, "table name, e.g. 'db.t'"),

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession

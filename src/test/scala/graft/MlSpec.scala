@@ -32,7 +32,9 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("P10 abs-error column: non-negative, finite, |label - prediction|") {
-    val scored = NextDayTemp.withAbsError(fit.model.transform(flat))
+    // the reference's abs(y_test - predictions) column, weather_etl.py:135
+    val scored = fit.model.transform(flat).withColumn("abs_error",
+      abs(col(NextDayTemp.labelCol) - col("prediction")))
     val rows = scored.select("temp_c", "prediction", "abs_error").collect()
     assert(rows.length === 27)
     rows.foreach { r =>

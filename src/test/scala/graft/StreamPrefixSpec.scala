@@ -9,14 +9,77 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{AsOfEnrich, Throttle, TopKState}
-import graft.streaming.AsOfEnrich.{Click, Enriched, Purchase, Tagged}
-import graft.streaming.Throttle.{Ev, Kept}
-import graft.streaming.TopKState.{Ranked, Scored}
-
 object StreamPrefixSpec {
+  final case class Ev(user_id: Long, event_type: String, ts: Timestamp, value: Double)
+  final case class Kept(user_id: Long, event_type: String, ts_ms: Long, value: Double)
+  final case class Scored(group: String, id: Long, score: Double)
+  final case class Ranked(group: String, rank: Int, id: Long, score: Double)
+  final case class Board(ids: Array[Long], scores: Array[Double])
+  /** A click (`is_click`) or a purchase, on one stream so that one
+    * group state sees both sides in event-time order. */
+  final case class Tagged(user_id: Long, id: Long, ts: Timestamp, is_click: Boolean)
+  final case class Enriched(user_id: Long, event_id: Long, ts_ms: Long, asof_click: Option[Long])
+  /** Clicks and pending purchases, each as (event ms, id). */
+  final case class Buf(clicks: Vector[(Long, Long)], purchases: Vector[(Long, Long)])
+
+  // README's flatMapGroupsWithState recipes, as the rows below run them.
+
+  /** Throttle: per (user, type), keep an event only when it is more than
+    * `windowMs` after the last KEPT one; state is that one timestamp, and
+    * its event-time timeout only frees it. Folds in event-time order
+    * within a batch, so batches must not overlap in time. */
+  def throttle(windowMs: Long)(key: (Long, String), evs: Iterator[Ev],
+                               state: GroupState[Long]): Iterator[Kept] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else {
+      var last = state.getOption
+      val kept = evs.toVector.sortBy(e => (e.ts.getTime, e.value)).filter { e =>
+        val keep = last.forall(e.ts.getTime > _ + windowMs)
+        if (keep) last = Some(e.ts.getTime)
+        keep
+      }
+      last.foreach { ms => state.update(ms); state.setTimeoutTimestamp(ms + windowMs) }
+      kept.iterator.map(e => Kept(key._1, key._2, e.ts.getTime, e.value))
+    }
+
+  /** Top-k: per group, exactly k (id, max score) slots; per-id maxima only
+    * rise, so an evicted id can only come back above its discarded past. */
+  def topK(k: Int)(group: String, evs: Iterator[Scored],
+                   state: GroupState[Board]): Iterator[Ranked] = {
+    val maxes = scala.collection.mutable.Map(
+      state.getOption.fold(Seq.empty[(Long, Double)])(b => b.ids.toSeq.zip(b.scores)): _*)
+    evs.foreach(e => if (maxes.get(e.id).forall(_ < e.score)) maxes(e.id) = e.score)
+    val board = maxes.toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
+    state.update(Board(board.map(_._1).toArray, board.map(_._2).toArray))
+    board.iterator.zipWithIndex.map { case ((id, s), i) => Ranked(group, i + 1, id, s) }
+  }
+
+  /** As-of enrich: buffer a user's purchases until the watermark passes
+    * them, then match each to the latest click at or before it (larger
+    * click id on a tie). Clicks behind the watermark collapse to the
+    * newest one; a timeout at the earliest pending purchase flushes it. */
+  def asOf(user: Long, it: Iterator[Tagged], state: GroupState[Buf]): Iterator[Enriched] = {
+    val prev = state.getOption.getOrElse(Buf(Vector.empty, Vector.empty))
+    val (inC, inP) = (if (state.hasTimedOut) Vector.empty else it.toVector).partition(_.is_click)
+    val clicks = prev.clicks ++ inC.map(e => (e.ts.getTime, e.id))
+    val wm = state.getCurrentWatermarkMs()
+    val (ready, pending) = (prev.purchases ++ inP.map(e => (e.ts.getTime, e.id))).partition(_._1 <= wm)
+    val out = ready.sorted.map { case (pMs, pId) =>
+      Enriched(user, pId, pMs, clicks.filter(_._1 <= pMs).maxOption.map(_._2))
+    }
+    val (live, old) = clicks.partition(_._1 > wm)
+    val keptC = old.maxOption.toVector ++ live
+    if (pending.isEmpty && keptC.isEmpty) state.remove()
+    else {
+      state.update(Buf(keptC, pending))
+      if (pending.nonEmpty) state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
+    }
+    out.iterator
+  }
+
   /** A closed session: first and last event time, event count, value sum. */
   final case class Sess(user_id: Long, start_ms: Long, last_ms: Long, n: Long,
                         value_sum: Double)
@@ -57,6 +120,8 @@ class StreamPrefixSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   private implicit def product[T <: Product: TypeTag]: Encoder[T] = Encoders.product[T]
+  private implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+  private implicit val stringEnc: Encoder[String] = Encoders.STRING
 
   /** Whether finalization time `t` (a purchase's event time, a session's
     * or window's end) has passed watermark `wm`. Whether Spark finalizes
@@ -115,8 +180,8 @@ class StreamPrefixSpec extends AnyFunSuite {
 
   private val throttle = Row[Ev, Kept](
     "Throttle: kept events == the last-kept fold over the prefix",
-    // Throttle folds in event-time order only within a batch (its
-    // scaladoc caveat), so every batch here starts after the last ends.
+    // the throttle folds in event-time order only within a batch, so
+    // every batch here starts after the last ends
     Seq(
       // 25 is dropped (within 0+30); 52 is kept: more than 30 s after the
       // last KEPT event though only 27 s after the previous raw one, the
@@ -127,7 +192,9 @@ class StreamPrefixSpec extends AnyFunSuite {
       Seq(Ev(1, "click", ts(80), 5.0), Ev(1, "click", ts(83), 6.0)),
       // an in-batch tie on ts keeps one event, the lower value
       Seq(Ev(7, "view", ts(105), 2.0), Ev(7, "view", ts(105), 1.0))),
-    in => Throttle.throttled(in, windowSeconds = 30),
+    in => in.withWatermark("ts", "0 seconds").groupByKey(e => (e.user_id, e.event_type))
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
+        StreamPrefixSpec.throttle(30000L) _),
     (prefix, _) => prefix.groupBy(e => (e.user_id, e.event_type)).values.toSeq.flatMap {
       _.sortBy(e => (e.ts.getTime, e.value)).foldLeft(Vector.empty[Kept]) { (kept, e) =>
         if (kept.lastOption.forall(e.ts.getTime > _.ts_ms + 30000L))
@@ -147,7 +214,8 @@ class StreamPrefixSpec extends AnyFunSuite {
       Seq(Scored("a", 5, 25.0)),  // ties id 1: the smaller id ranks first
       Seq(Scored("b", 9, 1.0)),   // new group; 'a' is untouched, keeps its board
       Seq(Scored("a", 6, 100.0), Scored("b", 8, 2.0))),
-    in => TopKState.topK(in, k = 3),
+    in => in.groupByKey(_.group).flatMapGroupsWithState(OutputMode.Update(),
+      GroupStateTimeout.NoTimeout())(StreamPrefixSpec.topK(3) _),
     (prefix, _) => prefix.groupBy(_.group).toSeq.flatMap { case (g, evs) =>
       evs.groupMapReduce(_.id)(_.score)(math.max).toSeq
         .sortBy { case (id, s) => (-s, id) }.take(3)
@@ -178,10 +246,9 @@ class StreamPrefixSpec extends AnyFunSuite {
       Seq(purchase(2, 204, 111), purchase(2, 205, 120), click(2, 55, 120), click(2, 56, 120)),
       Seq(click(99, 1, 150)),
       Seq(click(99, 2, 151))),
-    in => AsOfEnrich.enrich(
-      in.filter(_.is_click).map(t => Click(t.user_id, t.id, t.ts)),
-      in.filter(!_.is_click).map(t => Purchase(t.user_id, t.id, t.ts)),
-      "10 seconds"),
+    in => in.withWatermark("ts", "10 seconds").groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
+        StreamPrefixSpec.asOf _),
     (prefix, wm) => {
       val (clicks, purchases) = prefix.partition(_.is_click)
       purchases.filter(p => isFinal(p.ts.getTime, wm)).map { p =>

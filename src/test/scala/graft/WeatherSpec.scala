@@ -23,7 +23,7 @@ class WeatherSpec extends AnyFunSuite {
   }
 
   test("S2 scan survives a malformed doc: null structs, no job failure") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val tmp = Files.createTempDirectory("weather_bad")
     val day = tmp.resolve("2023-08-11"); Files.createDirectories(day)
     new java.io.File(s"$dataDir/2023-08-11").listFiles().foreach { f =>

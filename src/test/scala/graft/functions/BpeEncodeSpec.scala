@@ -20,9 +20,12 @@ class BpeEncodeSpec extends AnyFunSuite {
     }
   }
 
+  /** The expression over the '|'-delimited symbol encoding of `text`;
+    * the merge pairs apply in the given (training) order. */
   private def encoded(merges: Seq[(String, String)]) =
-    BpeEncode.bpeEncode(
-      concat(lit("|"), regexp_replace(col("text"), "(.)", "$1|")), merges)
+    org.apache.spark.sql.graft.ExprBridge.column(BpeEncode(
+      org.apache.spark.sql.graft.ExprBridge.expression(
+        concat(lit("|"), regexp_replace(col("text"), "(.)", "$1|"))), merges))
 
   test("equals the chained replace form on the trained corpus") {
     val merges = graft.queries.TextOps.bpeMerges(spark, sfDir)

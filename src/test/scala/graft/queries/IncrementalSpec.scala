@@ -16,8 +16,6 @@ class IncrementalSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("applyDay is idempotent and rewrites only its own partition") {
-    val s = spark
-    import s.implicits._
     val path = Incremental.ensureMaintained(spark, sfDir)
     val days = Incremental.sourceDays(spark, sfDir)
     val before = spark.read.parquet(path).collect().map(_.toSeq).toSet

@@ -63,8 +63,6 @@ class IvfRecallSpec extends AnyFunSuite {
   }
 
   private def curveAt(K: Int, setConf: Boolean): Unit = {
-    val s = spark
-    import s.implicits._
     if (setConf) spark.conf.set("graft.ivf.k", K.toString)
     try curveBody(K)
     finally if (setConf) spark.conf.unset("graft.ivf.k")

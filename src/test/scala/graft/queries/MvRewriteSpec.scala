@@ -18,6 +18,10 @@ class MvRewriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.isolated() // mutates session confs
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** double → exact integer micro-units (a scale the view did not store). */
+  private def micros(c: org.apache.spark.sql.Column) =
+    round(c * lit(1000000)).cast("long")
+
   private def scans(df: DataFrame): Seq[String] =
     graft.PlanSig.initialPlan(df).collectWithSubqueries {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -113,7 +117,10 @@ class MvRewriteSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     Materialized.ensureMv(spark, sfDir)
-    Mv.enable(spark)
+    // install the rule on this live session, as GraftExtensions does at creation
+    val ex = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!ex.extraOptimizations.exists(_.isInstanceOf[graft.plans.MvRewriteRule]))
+      ex.extraOptimizations = ex.extraOptimizations :+ graft.plans.MvRewriteRule(spark)
     def query(): DataFrame = graft.Tables.t(spark, sfDir, "events")
       .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
       .groupBy($"event_type")

@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,7 +132,6 @@ class RewriteEquivalenceSpec extends AnyFunSuite {
 
   test("q44 subqueries: one-row stats join == two scalar subqueries") {
     val s = spark
-    import s.implicits._
     Seq("part", "supplier").foreach(n =>
       t(s, sfDir, n).createOrReplaceTempView(n + "_v"))
     val old = s.sql(

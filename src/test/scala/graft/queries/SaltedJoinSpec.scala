@@ -12,6 +12,14 @@ import graft.SparkTestSession
 class SaltedJoinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** The observable the salt buys: per-partition row counts after a
+    * hash repartition on the given columns. */
+  private def partitionCounts(df: org.apache.spark.sql.DataFrame, numPartitions: Int,
+                              cols: org.apache.spark.sql.Column*): Array[Long] =
+    df.repartition(numPartitions, cols: _*)
+      .groupBy(spark_partition_id().as("p")).count()
+      .collect().map(_.getLong(1))
+
   // 90% of fact rows share one hot key
   private def skewed() = {
     val s = spark
@@ -38,8 +46,8 @@ class SaltedJoinSpec extends AnyFunSuite {
 
   test("the salt spreads the hot key over shards (bounded max partition)") {
     val (fact, _) = skewed()
-    val unsalted = Salted.partitionCounts(fact, 16, col("k"))
-    val salted = Salted.partitionCounts(
+    val unsalted = partitionCounts(fact, 16, col("k"))
+    val salted = partitionCounts(
       fact.withColumn("__salt",
         pmod(xxhash64(struct(fact.columns.map(col): _*)), lit(8L))),
       16, col("k"), col("__salt"))

@@ -94,8 +94,6 @@ class ScdSpec extends AnyFunSuite {
   }
 
   test("oversized batch drops the broadcast hint; shuffle path is hash-identical") {
-    val s = spark
-    import s.implicits._
     def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h

@@ -80,8 +80,6 @@ class SessionsBatchSpec extends AnyFunSuite {
   }
 
   test("q52 sessions partition the event log; durations within gap bounds") {
-    val s = spark
-    import s.implicits._
     val events = graft.Tables.t(spark, sfDir, "events")
     val sessions = Sessions.q52(spark, sfDir).collect()
     assert(sessions.map(_.getAs[Long]("n_events")).sum === events.count(),

@@ -17,6 +17,19 @@ class ZOrderSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.01"
   private val Files = 64
 
+  /** Cluster `df` into `files` z-ordered parquet files over two integer
+    * dimensions: range-partition on the z-value so each file owns one
+    * contiguous z-range, sort within partitions, drop the helper. */
+  private def writeClustered(df: DataFrame, dimA: String, dimB: String,
+                             path: String, files: Int): Unit = {
+    import org.apache.spark.sql.functions.col
+    df.withColumn("_z", ZOrder.zvalue(col(dimA), col(dimB)))
+      .repartitionByRange(files, col("_z"))
+      .sortWithinPartitions(col("_z"))
+      .drop("_z")
+      .write.mode("overwrite").parquet(path)
+  }
+
   private lazy val dims = {
     val s = spark
     import s.implicits._
@@ -29,7 +42,7 @@ class ZOrderSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val base = java.nio.file.Files.createTempDirectory("zorder").toString
-    ZOrder.writeClustered(dims, "user_id", "day", s"$base/z", Files)
+    writeClustered(dims, "user_id", "day", s"$base/z", Files)
     dims.repartitionByRange(Files, $"user_id")
       .sortWithinPartitions($"user_id")
       .write.mode("overwrite").parquet(s"$base/linear")

@@ -12,8 +12,6 @@ class CompactSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("compact merges a splintered directory without a shuffle, idempotently") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/events"
     val src = graft.Tables.t(spark, sfDir, "events")
     src.repartition(64).write.mode("overwrite").parquet(dir) // splintered
@@ -37,8 +35,6 @@ class CompactSpec extends AnyFunSuite {
   }
 
   test("target size splits into multiple files, none re-merged needlessly") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("compact2").toString + "/e"
     graft.Tables.t(spark, sfDir, "events")
       .repartition(32).write.mode("overwrite").parquet(dir)
@@ -52,8 +48,6 @@ class CompactSpec extends AnyFunSuite {
   }
 
   test("recovers from a crash between delete and rename") {
-    val s = spark
-    import s.implicits._
     val base = java.nio.file.Files.createTempDirectory("compact3").toString
     val dir = base + "/e"
     val fs = new org.apache.hadoop.fs.Path(dir)

@@ -12,7 +12,7 @@ import graft.SparkTestSession
   * branch reads as fork content + its appends, a clean fast-forward
   * publishes the branch head as main's next version, divergence refuses
   * loud, and vacuum treats branch-referenced files and the fork manifest
-  * as pinned. */
+  * as pinned. Tags, the immutable refs, pin their version the same way. */
 class TxnBranchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -24,6 +24,10 @@ class TxnBranchSpec extends AnyFunSuite {
     import s.implicits._
     ids.toDF("id").withColumn("v", col("id") * 10L)
   }
+
+  /** A branch head (or tag) through the reader's `versionAsOf` reference. */
+  private def branchRead(root: String, name: String) =
+    spark.read.format("graft-txn").option("versionAsOf", name).load(root)
 
   private def ids(d: org.apache.spark.sql.DataFrame): Set[Long] = {
     val s = spark
@@ -43,7 +47,7 @@ class TxnBranchSpec extends AnyFunSuite {
     assert(ids(TxnTable.read(spark, root)) === Set(1L, 2L, 3L))
     // branch: fork content + both appends, numbered past the fork
     assert(TxnTable.branchVersions(spark, root, "audit") === Seq(3L, 4L))
-    assert(ids(TxnTable.readBranch(spark, root, "audit")) ===
+    assert(ids(branchRead(root, "audit")) ===
       Set(1L, 2L, 3L, 10L, 11L, 12L))
     // inherited metadata: branch files carry the table's stats column
     val bh = TxnTable.branchHead(spark, root, "audit")
@@ -52,7 +56,7 @@ class TxnBranchSpec extends AnyFunSuite {
     // an empty branch's head IS the fork snapshot
     TxnTable.createBranch(spark, root, "empty")
     assert(TxnTable.branchHead(spark, root, "empty").version === 2L)
-    assert(ids(TxnTable.readBranch(spark, root, "empty")) === Set(1L, 2L, 3L))
+    assert(ids(branchRead(root, "empty")) === Set(1L, 2L, 3L))
   }
 
   test("fast-forward publishes the branch head; divergence refuses") {
@@ -76,7 +80,7 @@ class TxnBranchSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("diverged"))
     // the branch itself still reads (off its own fork)
-    assert(ids(TxnTable.readBranch(spark, root, "stale")) ===
+    assert(ids(branchRead(root, "stale")) ===
       Set(1L, 2L, 20L, 21L, 30L))
   }
 
@@ -139,15 +143,31 @@ class TxnBranchSpec extends AnyFunSuite {
     TxnTable.compactTxn(spark, root, targetFiles = 1)
     TxnTable.vacuum(spark, root, retainVersions = 1, graceMs = 0L)
     // fork manifest pinned -> branch still reads, with its append
-    assert(ids(TxnTable.readBranch(spark, root, "b")) === Set(1L, 2L, 10L))
+    assert(ids(branchRead(root, "b")) === Set(1L, 2L, 10L))
     assert(ids(TxnTable.read(spark, root)) === Set(1L, 2L, 3L))
     // drop the branch: next vacuum reclaims what only it referenced
     TxnTable.dropBranch(spark, root, "b")
     TxnTable.vacuum(spark, root, retainVersions = 1, graceMs = 0L)
     assert(TxnTable.branches(spark, root).isEmpty)
     assert(ids(TxnTable.read(spark, root)) === Set(1L, 2L, 3L))
-    intercept[NoSuchElementException] {
-      TxnTable.readBranch(spark, root, "b")
+    intercept[IllegalArgumentException] {
+      branchRead(root, "b")
+    }
+  }
+
+  test("vacuum pins tagged versions; a tag is immutable and reads by name") {
+    val root = freshRoot()
+    TxnTable.append(spark, root, df(1).coalesce(1)) // v1
+    TxnTable.tagVersion(spark, root, "baseline", 1L)
+    TxnTable.append(spark, root, df(2).coalesce(1)) // v2
+    TxnTable.append(spark, root, df(3).coalesce(1)) // v3
+    TxnTable.vacuum(spark, root, retainVersions = 1, graceMs = 0L)
+    // v2 is gone, the tagged v1 is not, and it still reads through the tag
+    assert(TxnTable.versions(spark, root) === Seq(1L, 3L))
+    assert(ids(branchRead(root, "baseline")) === Set(1L))
+    assert(TxnTable.tags(spark, root) === Map("baseline" -> 1L))
+    intercept[IllegalStateException] {
+      TxnTable.tagVersion(spark, root, "baseline", 3L)
     }
   }
 

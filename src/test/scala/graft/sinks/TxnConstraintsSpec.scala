@@ -57,7 +57,7 @@ class TxnConstraintsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       TxnTable.addConstraint(spark, root, "bad", "no_such_col > 0")
     }
-    TxnTable.dropConstraint(spark, root, "v_pos")
+    spark.sql(s"ALTER TABLE $cat.db.t1 UNSET TBLPROPERTIES ('constraint.v_pos')")
     assert(TxnTable.constraints(spark, root).isEmpty)
   }
 
@@ -97,7 +97,6 @@ class TxnConstraintsSpec extends AnyFunSuite {
   }
 
   test("row-level SQL refuses in BOTH regimes, staged files aborted") {
-    val s = spark; import s.implicits._
     // copy-on-write
     val root = freshTable("t4")
     spark.sql(s"SELECT 1") // warm catalog
@@ -175,7 +174,6 @@ class TxnConstraintsSpec extends AnyFunSuite {
 
   test("SQL face: SET TBLPROPERTIES adds (and validates), SHOW surfaces, " +
       "UNSET drops") {
-    val s = spark; import s.implicits._
     freshTable("t8")
     spark.sql(s"ALTER TABLE $cat.db.t8 SET TBLPROPERTIES " +
       "('constraint.v_pos' = 'v > 0')")

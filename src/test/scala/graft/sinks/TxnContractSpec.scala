@@ -12,8 +12,8 @@ import graft.sources.GraftCatalog
 /** The VERSIONED table contract: every property change (row-level
   * mode/isolation, CHECK constraints) is recorded against the head
   * version it was made at in an append-only change log, giving time
-  * travel the contract AS OF version N ([[TxnTable.propertiesAt]] /
-  * [[TxnTable.constraintsAt]]) and an audit surface
+  * travel the contract AS OF version N ([[TxnTable.propertiesAt]],
+  * CHECK constraints included) and an audit surface
   * (`db.t.properties` / `db.t.property_history` metadata tables) —
   * while WRITE-time semantics stay on the current `props.txt` exactly
   * as before (time travel must never flip a table's operational mode).
@@ -51,17 +51,14 @@ class TxnContractSpec extends AnyFunSuite {
     TxnTable.addConstraint(spark, root, "v_pos", "v > 0") // recorded at v0+1
     TxnTable.append(spark, root,
       spark.range(16, 21).toDF("id").withColumn("v", col("id") * 10L)) // v0+2
-    TxnTable.dropConstraint(spark, root, "v_pos") // recorded at v0+2
+    spark.sql(s"ALTER TABLE $cat.db.c1 UNSET TBLPROPERTIES ('constraint.v_pos')") // recorded at v0+2
 
     assert(TxnTable.propertiesAt(spark, root, v0) ===
       Map(TxnTable.RowLevelModeKey -> "merge-on-read"))
-    assert(TxnTable.constraintsAt(spark, root, v0 + 1) ===
-      Map("v_pos" -> "v > 0"))
     assert(TxnTable.propertiesAt(spark, root, v0 + 1) ===
       Map(TxnTable.RowLevelModeKey -> "merge-on-read",
         s"${TxnTable.ConstraintKeyPrefix}v_pos" -> "v > 0"))
     // the drop at v0+2 takes effect AT v0+2
-    assert(TxnTable.constraintsAt(spark, root, v0 + 2) === Map.empty)
     assert(TxnTable.propertiesAt(spark, root, v0 + 2) ===
       Map(TxnTable.RowLevelModeKey -> "merge-on-read"))
     // and the CURRENT contract agrees with the replayed head
@@ -137,7 +134,7 @@ class TxnContractSpec extends AnyFunSuite {
       TxnTable.append(spark, root,
         spark.range(21, 22).toDF("id").withColumn("v", lit(999L)))
     }
-    TxnTable.dropConstraint(spark, root, "v_cap")
+    spark.sql(s"ALTER TABLE $cat.db.c4 UNSET TBLPROPERTIES ('constraint.v_cap')")
     TxnTable.append(spark, root, // dropped: the same batch lands
       spark.range(21, 22).toDF("id").withColumn("v", lit(999L)))
     assert(TxnTable.read(spark, root).count() === 11L)
@@ -146,6 +143,7 @@ class TxnContractSpec extends AnyFunSuite {
     TxnTable.addConstraint(spark, root, "gnarly", gnarly)
     assert(TxnTable.constraints(spark, root)("gnarly") === gnarly)
     val head = TxnTable.latest(spark, root).get.version
-    assert(TxnTable.constraintsAt(spark, root, head)("gnarly") === gnarly)
+    assert(TxnTable.propertiesAt(spark, root, head)(
+      s"${TxnTable.ConstraintKeyPrefix}gnarly") === gnarly)
   }
 }

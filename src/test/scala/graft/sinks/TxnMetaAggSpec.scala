@@ -190,141 +190,6 @@ class TxnMetaAggSpec extends AnyFunSuite {
       s"bucket pruning kept ${pruned.inputFiles.length} of ${snap.files.size}")
   }
 
-  // ---- metaGroupCount: the metadata-only GROUP BY --------------------
-  // Exactness contract includes NULL attribution: min/max exclude nulls,
-  // so a point range alone cannot certify a single-valued file — the
-  // manifest's per-file null counts (from the parquet footers) split
-  // such files exactly, and unknown null counts refuse.
-
-  test("metaGroupCount: identity-partitioned happy path == real GROUP BY") {
-    val root = freshRoot()
-    TxnTable.append(spark, root, df(5, 5, 5).coalesce(1), statsCols = Seq("id"))
-    TxnTable.append(spark, root, df(7).coalesce(1))
-    TxnTable.append(spark, root, df(5, 5).coalesce(1)) // same value, new file
-    assert(TxnTable.metaGroupCount(spark, root, "id") ===
-      Some(Seq(Some(5L) -> 5L, Some(7L) -> 1L)))
-    // version-pinned
-    assert(TxnTable.metaGroupCount(spark, root, "id", Some(1L)) ===
-      Some(Seq(Some(5L) -> 3L)))
-    // oracle: the real GROUP BY agrees
-    val real = TxnTable.read(spark, root).groupBy("id").count()
-      .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1))
-      .sortBy(_._1.getOrElse(-1L)).toSeq
-    assert(TxnTable.metaGroupCount(spark, root, "id").get.sortBy(_._1.getOrElse(-1L)) === real)
-  }
-
-  test("metaGroupCount: mixed-value file refuses (counts cannot be attributed)") {
-    val root = freshRoot()
-    TxnTable.append(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))
-    assert(TxnTable.metaGroupCount(spark, root, "id") === None)
-    // an unrecorded column refuses too
-    assert(TxnTable.metaGroupCount(spark, root, "v") === None)
-  }
-
-  test("metaGroupCount: null-bearing point-range file splits exactly; all-null file is the NULL group") {
-    val root = freshRoot()
-    val s = spark; import s.implicits._
-    // one file: value 5 twice + one null — min/max=(5,5) is a point
-    // range, but 1 of the 3 rows belongs to the NULL group
-    TxnTable.append(spark, root,
-      Seq(Option(5L), Option(5L), Option.empty[Long]).toDF("id").coalesce(1),
-      statsCols = Seq("id"))
-    val sn1 = TxnTable.latest(spark, root).get
-    assert(sn1.nullCounts.values.flatMap(_.get("id")).sum === 1L)
-    assert(TxnTable.metaGroupCount(spark, root, "id") ===
-      Some(Seq(None -> 1L, Some(5L) -> 2L)))
-    // an ALL-null file has no range entry; nulls == rows proves it is
-    // entirely the NULL group
-    TxnTable.append(spark, root,
-      Seq(Option.empty[Long], Option.empty[Long]).toDF("id").coalesce(1))
-    assert(TxnTable.metaGroupCount(spark, root, "id") ===
-      Some(Seq(None -> 3L, Some(5L) -> 2L)))
-    // oracle: the real GROUP BY (nulls form their own group) agrees
-    val real = TxnTable.read(spark, root).groupBy("id").count()
-      .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1)).toSet
-    assert(TxnTable.metaGroupCount(spark, root, "id").get.toSet === real)
-  }
-
-  test("metaGroupCount: unknown null count refuses; the next commit backfills from footers") {
-    val root = freshRoot()
-    TxnTable.append(spark, root, df(5, 5).coalesce(1), statsCols = Seq("id"))
-    // simulate a legacy manifest written before null-count recording
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = new Path(s"$root/_txn/v0000000001.txt")
-    val legacy = {
-      val in = fs.open(m)
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, true)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-        .replaceAll("\tnulls:[^\t\n]+", "")
-    }
-    fs.delete(m, false)
-    val o = fs.create(m, false)
-    try o.write(legacy.getBytes(StandardCharsets.UTF_8)) finally o.close()
-    assert(TxnTable.snapshot(spark, root, 1L).nullCounts.isEmpty)
-    // a point range with UNKNOWN nulls might hide misattributed rows
-    assert(TxnTable.metaGroupCount(spark, root, "id") === None)
-    // any new commit backfills carried files' null counts via footers
-    TxnTable.append(spark, root, df(7).coalesce(1))
-    assert(TxnTable.metaGroupCount(spark, root, "id") ===
-      Some(Seq(Some(5L) -> 2L, Some(7L) -> 1L)))
-  }
-
-  test("metaGroupCount: refuses on live MoR deletes and on count-less legacy files") {
-    val root = freshRoot()
-    val s = spark; import s.implicits._
-    TxnTable.append(spark, root, df(5, 5).coalesce(1), statsCols = Seq("id"))
-    TxnTable.deleteKeysMor(spark, root, "id", Seq(5L).toDF("id"))
-    assert(TxnTable.metaGroupCount(spark, root, "id") === None)
-    TxnTable.compactDeletes(spark, root)
-    assert(TxnTable.metaGroupCount(spark, root, "id").isDefined)
-    // strip the rows: field -> legacy count-less file -> refuse
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val head = TxnTable.latest(spark, root).get.version
-    val m = new Path(f"$root/_txn/v$head%010d.txt")
-    val legacy = {
-      val in = fs.open(m)
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, true)
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-        .replaceAll("\trows:\\d+", "")
-    }
-    fs.delete(m, false)
-    val o = fs.create(m, false)
-    try o.write(legacy.getBytes(StandardCharsets.UTF_8)) finally o.close()
-    assert(TxnTable.metaGroupCount(spark, root, "id") === None)
-  }
-
-  test("metaGroupCount: zero-count staged files tolerated; emptied table certifies Some(Nil)") {
-    val root = freshRoot()
-    val s = spark; import s.implicits._
-    TxnTable.append(spark, root, df(3, 3).coalesce(1), statsCols = Seq("id"))
-    TxnTable.append(spark, root, df(9).coalesce(1))
-    // CoW-delete one whole value: its rewrite keeps no row and no part
-    TxnTable.deleteWhere(spark, root, col("id") === 3L, Some((3L, 3L)))
-    assert(TxnTable.metaGroupCount(spark, root, "id") ===
-      Some(Seq(Some(9L) -> 1L)))
-    TxnTable.deleteWhere(spark, root, col("id") === 9L, Some((9L, 9L)))
-    assert(TxnTable.metaGroupCount(spark, root, "id") === Some(Nil))
-  }
-
-  test("metaGroupCount: transform-derived column needs no null record (null-free by fan-out)") {
-    val root = freshRoot()
-    val s = spark; import s.implicits._
-    // unsorted layout; the bucket fan-out still makes every file
-    // single-valued in the DERIVED column
-    val t = Seq(TxnTable.Transform.bucket(4, "id"))
-    TxnTable.append(spark, root,
-      (1L to 100L).toDF("id").repartition(3), statsCols = Seq("id"), transforms = t)
-    val got = TxnTable.metaGroupCount(spark, root, "bucket4_id")
-    assert(got.isDefined)
-    val real = TxnTable.read(spark, root)
-      .groupBy(pmod(xxhash64(col("id")), lit(4L)).as("b")).count()
-      .collect().map(r => Option(r.getLong(0)) -> r.getLong(1)).toSet
-    assert(got.get.toSet === real)
-    assert(got.get.map(_._2).sum === 100L)
-  }
-
   test("files metadata table surfaces the per-file row counts") {
     val root = freshRoot()
     TxnTable.append(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))

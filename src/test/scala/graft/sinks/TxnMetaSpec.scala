@@ -92,24 +92,20 @@ class TxnMetaSpec extends AnyFunSuite {
     assert(!f.head.getAs[Boolean]("has_bloom"))
   }
 
-  test("refs: tags and staged commits mirror the ref files; empty when none") {
+  test("refs: tags mirror the ref files; empty when none") {
     val root = freshRoot()
     TxnTable.append(spark, root, df(1))
     assert(TxnMeta.refs(spark, root).count() === 0L)
     TxnTable.tagVersion(spark, root, "baseline", 1L)
-    val sid = TxnTable.stageAppend(spark, root, df(2))
+    TxnTable.append(spark, root, df(2))
+    TxnTable.tagVersion(spark, root, "next", 2L)
     val got = TxnMeta.refs(spark, root).collect()
-      .map(r => (r.getString(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-    assert(got === Set(("baseline", "tag", Some(1L)), (sid, "staged", None)))
-    TxnTable.publishStaged(spark, root, sid)
-    TxnTable.dropTag(spark, root, "baseline")
-    assert(TxnMeta.refs(spark, root).count() === 0L)
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(got === Set(("baseline", "tag", 1L), ("next", "tag", 2L)))
   }
 
   test("partitions: per-transform-value rollup from the manifest; version pins") {
     val root = freshRoot()
-    val s = spark; import s.implicits._
     TxnTable.append(spark, root, df(1, 2, 3, 4, 5, 6).coalesce(1),
       statsCols = Seq("id"),
       transforms = Seq(TxnTable.Transform.bucket(2, "id")))

@@ -20,6 +20,10 @@ class TxnRenameSpec extends AnyFunSuite {
   private def freshRoot(): String =
     Files.createTempDirectory("txn_rename").toString + "/tbl"
 
+  /** The branch head through the reader's `versionAsOf` reference. */
+  private def branchRead(root: String, name: String) =
+    spark.read.format("graft-txn").option("versionAsOf", name).load(root)
+
   private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
@@ -180,25 +184,6 @@ class TxnRenameSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       TxnTable.alterTable(spark, root, drops = Seq("id")) }
     assert(e.getMessage.contains("statsCols"))
-    // write-audit-publish works under the mapping: staged files carry
-    // the physical names, the preview aliases, publish folds
-    TxnTable.alterTable(spark, root, renames = Seq("v" -> "value"))
-    val sid = TxnTable.stageAppend(spark, root, df(9).toDF("id", "value"))
-    assert(rows(TxnTable.readStaged(spark, root, sid).select("value")) ===
-      Set(Seq(10L), Seq(90L)))
-    TxnTable.publishStaged(spark, root, sid)
-    assert(rows(TxnTable.read(spark, root).select("value")) ===
-      Set(Seq(10L), Seq(90L)))
-    // a drop/re-add BETWEEN stage and publish re-maps the column —
-    // publish refuses (physical identities no longer match)
-    val sid2 = TxnTable.stageAppend(spark, root, df(7).toDF("id", "value"))
-    TxnTable.alterTable(spark, root, drops = Seq("value"))
-    TxnTable.alterTable(spark, root, newSchema = Some(ColumnMapping
-      .logicalView(TxnTable.latest(spark, root).get.schema.get)
-      .add("value", "long", nullable = true)))
-    val remap = intercept[IllegalArgumentException] {
-      TxnTable.publishStaged(spark, root, sid2) }
-    assert(remap.getMessage.contains("re-mapped"))
     // incoming data may not claim the tombstone namespace
     val s = spark; import s.implicits._
     intercept[IllegalArgumentException] {
@@ -255,25 +240,6 @@ class TxnRenameSpec extends AnyFunSuite {
     assert(snap2.statsCols.isEmpty && snap2.bloomCols.isEmpty)
   }
 
-  test("readStaged refuses a stage whose column was re-mapped since " +
-      "(same refusal as publishStaged)") {
-    val root = freshRoot()
-    TxnTable.append(spark, root, df(1, 2))
-    val id = TxnTable.stageAppend(spark, root, df(3, 4))
-    // drop + re-add 'v' on main: the staged files' frozen 'v' identity
-    // no longer matches the head's reborn 'v'
-    TxnTable.alterTable(spark, root, drops = Seq("v"))
-    TxnTable.alterTable(spark, root, newSchema = Some(
-      ColumnMapping.logicalView(TxnTable.latest(spark, root).get.schema.get)
-        .add("v", org.apache.spark.sql.types.LongType)))
-    val audit = intercept[IllegalArgumentException] {
-      TxnTable.readStaged(spark, root, id).collect() }
-    assert(audit.getMessage.contains("re-mapped since stage"))
-    val pub = intercept[IllegalArgumentException] {
-      TxnTable.publishStaged(spark, root, id) }
-    assert(pub.getMessage.contains("re-mapped since stage"))
-  }
-
   test("replayBranch composes across a renamed main by frozen physical identity") {
     val root = freshRoot()
     TxnTable.append(spark, root, df(1, 2), statsCols = Seq("id"))
@@ -293,7 +259,6 @@ class TxnRenameSpec extends AnyFunSuite {
       === Set(Seq(10L)))
     // a branch-NEW column appends under its own name; pre-replay main
     // rows read NULL in it
-    val s = spark; import s.implicits._
     TxnTable.createBranch(spark, root, "extra")
     TxnTable.appendToBranch(spark, root, "extra",
       df(20).toDF("k", "v").withColumn("w", lit(7L)))
@@ -323,7 +288,6 @@ class TxnRenameSpec extends AnyFunSuite {
     val root2 = freshRoot()
     TxnTable.append(spark, root2, df(1), statsCols = Seq("id"))
     TxnTable.createBranch(spark, root2, "clash")
-    val s = spark; import s.implicits._
     TxnTable.appendToBranch(spark, root2, "clash",
       df(30).withColumn("z", lit(9L)))
     TxnTable.append(spark, root2, df(5))
@@ -339,7 +303,7 @@ class TxnRenameSpec extends AnyFunSuite {
     TxnTable.alterTable(spark, root, renames = Seq("id" -> "k"))
     TxnTable.createBranch(spark, root, "audit")
     TxnTable.appendToBranch(spark, root, "audit", df(9).toDF("k", "v"))
-    val br = TxnTable.readBranch(spark, root, "audit")
+    val br = branchRead(root, "audit")
     assert(br.columns.toSeq === Seq("k", "v"))
     assert(rows(br.select("k")) === Set(Seq(1L), Seq(2L), Seq(9L)))
     // the branch-staged file carries the frozen physical name

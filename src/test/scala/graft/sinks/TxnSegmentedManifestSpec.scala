@@ -223,7 +223,6 @@ class TxnSegmentedManifestSpec extends AnyFunSuite {
         "snapshot")
       assert(TxnTable.latest(spark, root).get.segs.nonEmpty)
 
-      val snap = TxnTable.latest(spark, root).get
       // four disjoint quarters of the id space — each updater's
       // BETWEEN stats-prunes to its own files, racing the appenders
       val quarters = Seq((1L, 80L), (81L, 160L), (161L, 240L), (241L, 320L))

@@ -96,8 +96,6 @@ class TxnTableSpec extends AnyFunSuite {
   }
 
   test("manifest stats enable file skipping; pruning is sound and survives compaction") {
-    val s = spark
-    import s.implicits._
     val root = freshRoot()
     // three commits, disjoint id ranges, one file each
     TxnTable.overwrite(spark, root,
@@ -194,12 +192,13 @@ class TxnTableSpec extends AnyFunSuite {
     assert(TxnTable.read(spark, root).count() === 8L)
     assert(!TxnTable.read(spark, root).filter($"id" === 21L).head(1).nonEmpty)
 
-    // same bounds shape on the merge path: update id=22 in the grp=300
-    // file only; the other two carry by reference
+    // same bounds shape on the merge path: mergeBatch bounds the rewrite
+    // by every stats-recorded key (id=22 and grp=300 here), so only the
+    // grp=300 file is rewritten; the other two carry by reference
     val before2 = TxnTable.latest(spark, root).get
-    val after2 = TxnTable.mergeIntoBounded(spark, root,
-      Seq((22L, 300L, 777L)).toDF("id", "grp", "v"), Seq("id", "grp"),
-      Seq(("id", 22L, 22L), ("grp", 300L, 300L)))
+    val after2 = TxnTable.mergeBatch(spark, root,
+      Seq((22L, 300L, 777L)).toDF("id", "grp", "v"), batchId = 1L,
+      keyCols = Seq("id", "grp")).get
     val carried2 = before2.files.filter(f =>
       before2.statsOf("grp")(f) match { case (lo, hi) => hi < 300 || lo > 300 })
     carried2.foreach(f => assert(after2.files.contains(f),
@@ -210,8 +209,6 @@ class TxnTableSpec extends AnyFunSuite {
 
   test("deleteWhere rewrites only stats-overlapping files; carried files " +
     "are untouched by path identity; prior snapshots keep the rows") {
-    val s = spark
-    import s.implicits._
     val root = freshRoot()
     // three single-file commits with disjoint id ranges
     TxnTable.overwrite(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))

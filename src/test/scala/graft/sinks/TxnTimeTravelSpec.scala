@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** AS OF TIMESTAMP time travel ([[TxnTable.readAsOfTime]]): commit
+/** AS OF TIMESTAMP time travel (the reader's `timestampAsOf` option): commit
   * instants are recorded IN the manifest, the resolved version is the
   * newest commit at-or-before the asked instant, pre-table instants
   * fail loud, and a restore commit is visible at its own (later)
@@ -24,6 +24,9 @@ class TxnTimeTravelSpec extends AnyFunSuite {
     ids.toDF("id").withColumn("v", col("id") * 10)
   }
 
+  private def asOfTime(root: String, epochMs: Long) =
+    spark.read.format("graft-txn").option("timestampAsOf", epochMs).load(root)
+
   private def idsOf(d: org.apache.spark.sql.DataFrame): Set[Int] =
     d.select("id").collect().map(_.getInt(0)).toSet
 
@@ -37,13 +40,13 @@ class TxnTimeTravelSpec extends AnyFunSuite {
     val (t1, t2, t3) = (s1.tsMs.get, s2.tsMs.get, s3.tsMs.get)
     assert(t1 < t2 && t2 < t3, "commit timestamps must be recorded and ordered")
     // exact instants and midpoints
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, t1)) === Set(1, 2))
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, (t1 + t2) / 2)) === Set(1, 2))
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, t2)) === Set(1, 2, 3))
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, t3 + 1000)) === Set(1, 2, 3, 4))
+    assert(idsOf(asOfTime(root, t1)) === Set(1, 2))
+    assert(idsOf(asOfTime(root, (t1 + t2) / 2)) === Set(1, 2))
+    assert(idsOf(asOfTime(root, t2)) === Set(1, 2, 3))
+    assert(idsOf(asOfTime(root, t3 + 1000)) === Set(1, 2, 3, 4))
     // before the table existed: loud failure, not an empty guess
     intercept[IllegalStateException] {
-      TxnTable.readAsOfTime(spark, root, t1 - 1000)
+      asOfTime(root, t1 - 1000)
     }
   }
 
@@ -62,7 +65,7 @@ class TxnTimeTravelSpec extends AnyFunSuite {
     val bad = TxnTable.append(spark, root, df(99))
     Thread.sleep(5)
     val fix = TxnTable.restore(spark, root, 1)
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, bad.tsMs.get)) === Set(1, 99))
-    assert(idsOf(TxnTable.readAsOfTime(spark, root, fix.tsMs.get)) === Set(1))
+    assert(idsOf(asOfTime(root, bad.tsMs.get)) === Set(1, 99))
+    assert(idsOf(asOfTime(root, fix.tsMs.get)) === Set(1))
   }
 }

@@ -78,7 +78,6 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     assert(after.files === before.files) // zero data movement, same order
     assert(after.deletes.nonEmpty)
     // the tombstone names exactly the two ordinals
-    val s = spark; import s.implicits._
     val base = root.stripSuffix("/")
     val tomb = spark.read.parquet(after.deletes.map(f => s"$base/$f"): _*)
     assert(tomb.count() === 2L)

@@ -225,7 +225,6 @@ class GraftProceduresSpec extends AnyFunSuite {
   }
 
   test("metadata tables by name: history / files / refs match TxnMeta") {
-    val s = spark; import s.implicits._
     val root = seed("db.meta1", Seq(1 to 5, 6 to 10))
     spark.sql(s"CALL $cat.system.create_tag('db.meta1', 'keep', 1)")
     val hist = spark.sql(s"SELECT * FROM $cat.db.meta1.history")
@@ -254,7 +253,6 @@ class GraftProceduresSpec extends AnyFunSuite {
 
   test("metadata tables resolve tag/branch refs against the parent " +
       "(never silently the latest)") {
-    val s = spark; import s.implicits._
     val root = seed("db.meta2", Seq(1 to 5, 6 to 10))
     spark.sql(s"CALL $cat.system.create_tag('db.meta2', 'early', 1)")
     // the tagged snapshot's files, not the head's
@@ -307,7 +305,7 @@ class GraftProceduresSpec extends AnyFunSuite {
   test("by-name scans report exact manifest row counts to the planner") {
     import org.apache.spark.sql.connector.read.SupportsReportStatistics
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-    val root = seed("db.s1", Seq(1 to 10, 11 to 15))
+    seed("db.s1", Seq(1 to 10, 11 to 15))
     def scanStats(sql: String) = {
       val scan = spark.sql(sql).queryExecution.optimizedPlan.collectFirst {
         case r: DataSourceV2ScanRelation => r.scan
@@ -373,7 +371,6 @@ class GraftProceduresSpec extends AnyFunSuite {
   test("the advisor CLOSES THE LOOP: executing the report's own " +
       "recommendation strings verbatim turns every action row ok and " +
       "measurably speeds up the scan") {
-    val s = spark; import s.implicits._
     val root = s"$warehouse/db/mr2"
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
     // degrade: 100 tiny files in one commit + 9 per-statement sidecars
