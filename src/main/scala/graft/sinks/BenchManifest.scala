@@ -8,7 +8,7 @@ import graft.Bench.{sec, usedMb}
   * manifest paths (serialize, segment, parse, SEGMENT-REUSE VERIFY) are
   * the product; physical data files are not needed to measure them, so
   * entries are synthetic: every per-file fact ([[TxnTable.commit]]'s
-  * stats / rowCounts / nullCounts maps) is passed in complete, which
+  * stats / rowCounts maps) is passed in complete, which
   * short-circuits all footer reads by construction. What a run reports:
   *
   *  - `commit_sec`       one commit carrying N synthetic entries
@@ -48,14 +48,12 @@ object BenchManifest {
       }.toMap
     def countsOf(fls: Seq[String]): Map[String, Long] =
       fls.map(_ -> 10L).toMap
-    def nullsOf(fls: Seq[String]): Map[String, Map[String, Long]] =
-      fls.map(_ -> Map("id" -> 0L)).toMap
 
     val files = (0 until n).map(entry)
     val (_, commitSec) = sec {
       TxnTable.commit(spark, root, TxnTable.Snapshot(1L, "overwrite", files,
         statsOf(files), Seq("id"),
-        rowCounts = countsOf(files), nullCounts = nullsOf(files)))
+        rowCounts = countsOf(files)))
     }
     val manifestBytes = fs.listStatus(new Path(s"$root/_txn"))
       .filter(_.getPath.getName.startsWith("v")).map(_.getLen).max
@@ -79,8 +77,7 @@ object BenchManifest {
         TxnTable.commit(spark, root, head.copy(version = v, op = "append",
           files = all,
           stats = head.stats ++ Map(fl -> Map("id" -> (-10L * i - 9, -10L * i))),
-          rowCounts = head.rowCounts ++ Map(fl -> 10L),
-          nullCounts = head.nullCounts ++ Map(fl -> Map("id" -> 0L))))
+          rowCounts = head.rowCounts ++ Map(fl -> 10L)))
       }._2
     }
     val append1 = appendOnce(2L, 1)

@@ -95,7 +95,6 @@ object TxnTable {
                             deleteCols: Seq[String] = Nil,
                             transforms: Seq[Transform] = Nil,
                             rowCounts: Map[String, Long] = Map.empty,
-                            nullCounts: Map[String, Map[String, Long]] = Map.empty,
                             segs: Seq[String] = Nil,
                             delProv: Map[String, Seq[String]] = Map.empty) {
     /** Primary (first-recorded) columns — the single-column views most
@@ -310,14 +309,14 @@ object TxnTable {
     new Path(s"${root.stripSuffix("/")}/_txn/$name")
 
   /** One parsed per-file manifest entry: (path, range stats, blooms,
-    * row count, per-column null counts). */
+    * row count). */
   private type Entry = (String, Map[String, (Long, Long)],
-    Map[String, Array[Byte]], Option[Long], Map[String, Long])
+    Map[String, Array[Byte]], Option[Long])
 
   /** Parsed-segment cache. Segments are immutable (uuid-named, written
     * create-no-overwrite, never rewritten), so cached parses never go
-    * stale; bounded by approximate RETAINED BYTES (path chars, stat/
-    * null map slots, decoded bloom arrays — a bloom-heavy table's
+    * stale; bounded by approximate RETAINED BYTES (path chars, stat
+    * map slots, decoded bloom arrays — a bloom-heavy table's
     * entries weigh hundreds of bytes each, so an entry-count budget
     * would silently pin GBs of driver heap), LRU. */
   private object SegCache {
@@ -325,7 +324,7 @@ object TxnTable {
     private def weigh(es: IndexedSeq[Entry]): Long = {
       var t = 0L
       es.foreach { e =>
-        t += 64L + 2L * e._1.length + 64L * e._2.size + 48L * e._5.size
+        t += 64L + 2L * e._1.length + 64L * e._2.size
         e._3.valuesIterator.foreach(b => t += 48L + b.length)
       }
       t
@@ -456,14 +455,13 @@ object TxnTable {
 
   /** Parse one per-file entry line: `relpath` + optional tab-separated
     * metadata fields — `<col>:<min>:<max>` range stats, `rows:<n>`,
-    * `nulls:<col>:<n>`, and/or `bloom:<col>:<base64>`, any number of
-    * each (readers of older, field-less manifests interoperate: unknown
-    * absence = no pruning). */
+    * and/or `bloom:<col>:<base64>`, any number of each (readers of
+    * older, field-less manifests interoperate: unknown absence = no
+    * pruning). */
   private def parseEntry(l: String): Entry = {
     val fields = l.split("\t")
     val stat = Map.newBuilder[String, (Long, Long)]
     val bloom = Map.newBuilder[String, Array[Byte]]
-    val nulls = Map.newBuilder[String, Long]
     var rows: Option[Long] = None
     fields.drop(1).foreach {
       case b if b.startsWith("bloom:") =>
@@ -474,19 +472,16 @@ object TxnTable {
       // encodings cannot collide
       case rc if rc.startsWith("rows:") && rc.count(_ == ':') == 1 =>
         rows = Some(rc.stripPrefix("rows:").toLong)
-      // `nulls:<col>:<n>` — per-file null count of a stats column,
-      // recorded from the footers at commit; no reader in the program
-      // consumes it today (segment reuse only compares it). "nulls" is
-      // a RESERVED stats-column name (rejected at serialize time) so
-      // the encodings cannot collide.
+      // `nulls:<col>:<n>` — a per-file null count older commits
+      // recorded and nothing read; skipped. "nulls" stays a RESERVED
+      // stats-column name (rejected at serialize time), so such a
+      // field is never a range.
       case nl if nl.startsWith("nulls:") && nl.count(_ == ':') == 2 =>
-        val Array(_, c, n) = nl.split(":", 3)
-        nulls += c -> n.toLong
       case st =>
         val Array(c, lo, hi) = st.split(":")
         stat += c -> (lo.toLong, hi.toLong)
     }
-    (fields.head, stat.result(), bloom.result(), rows, nulls.result())
+    (fields.head, stat.result(), bloom.result(), rows)
   }
 
   private def parseManifest(s: SparkSession, root: String, version: Long,
@@ -580,14 +575,13 @@ object TxnTable {
     if (refreshHint)
       lastSegs.put(rootKey(root), refs.map(_._1))
     Snapshot(version, lines.head.stripPrefix(Header).trim, entries.map(_._1),
-      entries.collect { case (f, st, _, _, _) if st.nonEmpty => f -> st }.toMap,
+      entries.collect { case (f, st, _, _) if st.nonEmpty => f -> st }.toMap,
       statsCols,
       schema,
-      entries.collect { case (f, _, bl, _, _) if bl.nonEmpty => f -> bl }.toMap,
+      entries.collect { case (f, _, bl, _) if bl.nonEmpty => f -> bl }.toMap,
       bloomCols,
       tsMs, deletes, deleteCols, transforms,
-      entries.collect { case (f, _, _, Some(n), _) => f -> n }.toMap,
-      entries.collect { case (f, _, _, _, nu) if nu.nonEmpty => f -> nu }.toMap,
+      entries.collect { case (f, _, _, Some(n)) => f -> n }.toMap,
       segs = refs.map(_._1),
       delProv = delProv)
   }
@@ -1041,16 +1035,13 @@ object TxnTable {
   }
 
   /** Footer-level metadata of one data file: record count, the leaf
-    * columns the footer carries, per-column null counts where every
-    * column chunk recorded one (a single chunk without `num_nulls`
-    * poisons that column — unknown, never guessed), per-column
-    * [[FooterRange]]s where every chunk proves one, and the source of
+    * columns the footer carries, per-column [[FooterRange]]s where
+    * every chunk proves one, and the source of
     * the file's Spark schema ([[footerSchema]]). Data files are
     * immutable, so this never changes — cached per JVM keyed by
     * absolute path; one footer read per file per process lifetime, no
     * data pages touched. */
   private final case class FooterMeta(rows: Long, cols: Set[String],
-                                      nulls: Map[String, Long],
                                       ranges: Map[String, FooterRange],
                                       schema: Either[org.apache.parquet.schema.MessageType, String])
 
@@ -1066,7 +1057,7 @@ object TxnTable {
     new java.util.concurrent.ConcurrentHashMap[String, FooterMeta]()
 
   /** A parquet file's [[FooterMeta]] — pure metadata, the same numRows /
-    * null-count / min-max statistics parquet writers record for every
+    * min/max statistics parquet writers record for every
     * engine's pushdown. None if the footer is unreadable (the file then
     * gets no manifest count and metadata aggregates refuse). */
   private def footerMeta(s: SparkSession, root: String, file: String): Option[FooterMeta] = {
@@ -1078,19 +1069,13 @@ object TxnTable {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           import scala.jdk.CollectionConverters._
-          val perCol = scala.collection.mutable.LinkedHashMap[String, Option[Long]]()
+          val cols = Set.newBuilder[String]
           // None = some chunk proves no range (no kind, no statistic)
           val ranges = scala.collection.mutable.HashMap[String, Option[FooterRange]]()
           r.getFooter.getBlocks.asScala.foreach { b =>
             b.getColumns.asScala.foreach { c =>
               val name = c.getPath.toDotString
-              val st = c.getStatistics
-              val nn = if (st != null && st.isNumNullsSet) Some(st.getNumNulls) else None
-              perCol(name) = (perCol.get(name), nn) match {
-                case (Some(Some(a)), Some(x)) => Some(a + x)
-                case (None, Some(x))          => Some(x)
-                case _                        => None // any chunk without the stat → unknown
-              }
+              cols += name
               val cr = chunkRange(c)
               ranges(name) = ranges.get(name).fold(cr)(prev => for {
                 a <- prev; x <- cr
@@ -1100,8 +1085,7 @@ object TxnTable {
           }
           val fm = r.getFooter.getFileMetaData
           val key = Option(fm.getKeyValueMetaData.get(SparkSchemaKey))
-          FooterMeta(r.getRecordCount, perCol.keySet.toSet,
-            perCol.collect { case (k, Some(v)) => k -> v }.toMap,
+          FooterMeta(r.getRecordCount, cols.result(),
             ranges.collect { case (k, Some(v)) => k -> v }.toMap,
             // interned: every file a write staged carries the same JSON
             key.map(_.intern()).toRight(fm.getSchema))
@@ -1188,7 +1172,7 @@ object TxnTable {
     footerMeta(s, root, file).map(_.rows)
 
   /** Warm the footer cache for `files` on the common ForkJoin pool —
-    * the commit path completes counts/nulls for EVERY carried file, and
+    * the commit path completes row counts for EVERY carried file, and
     * a 10⁵-file commit must not serialize 10⁵ footer round trips on the
     * driver (measured: the dominant commit cost before this existed —
     * see `graft.BenchPlanning`). IO-bound, one small read per UNCACHED
@@ -1212,35 +1196,6 @@ object TxnTable {
     files.flatMap(f =>
       known.get(f).orElse(footerRows(s, root, f)).map(f -> _)).toMap
   }
-
-  /** Complete `known` to per-file null counts of the stats columns via
-    * cached footer reads — the nulls analog of [[completeCounts]]. A
-    * column absent from a file's footer is all-null there by
-    * schema-on-read (files written before the column existed read it as
-    * null — count = file rows); a footer whose writer recorded no
-    * null-count statistic yields no entry rather than a guess. */
-  private def completeNulls(s: SparkSession, root: String, files: Seq[String],
-                            cols: Seq[String],
-                            known: Map[String, Map[String, Long]])
-      : Map[String, Map[String, Long]] =
-    if (cols.isEmpty) known.filter(_._2.nonEmpty)
-    else {
-    prewarmFooters(s, root, files.filter(f =>
-      cols.exists(c => !known.getOrElse(f, Map.empty).contains(c))))
-    files.flatMap { f =>
-      val have = known.getOrElse(f, Map.empty)
-      val need = cols.filterNot(have.contains)
-      val add: Map[String, Long] = if (need.isEmpty) Map.empty
-        else footerMeta(s, root, f).fold(Map.empty[String, Long]) { m =>
-          need.flatMap { c =>
-            if (!m.cols.contains(c)) Some(c -> m.rows) // schema-on-read: all null
-            else m.nulls.get(c).map(c -> _)
-          }.toMap
-        }
-      val merged = have ++ add
-      if (merged.isEmpty) None else Some(f -> merged)
-    }.toMap
-    }
 
   /** The optimistic-retry loop every writer runs around [[commit]]:
     * re-runs `body` only when it loses a commit race
@@ -1294,11 +1249,6 @@ object TxnTable {
       // commit onward, including tables whose older manifests predate
       // row-count recording
       rowCounts = completeCounts(s, root, next.files, next.rowCounts),
-      // per-file null counts of the stats columns ride the same cached
-      // footer reads (min/max exclude nulls; the count records what the
-      // range leaves out — written, not yet read by any query path)
-      nullCounts = completeNulls(s, root, next.files, next.statsCols,
-        next.nullCounts),
       // provenance lives only while its sidecar is in the delete set
       delProv = next.delProv.view.filterKeys(next.deletes.toSet).toMap,
       segs = Nil)
@@ -1355,7 +1305,7 @@ object TxnTable {
       s"metadata column name '$c' collides with the manifest encoding"))
     // "nulls" is reserved: a stats column so named would serialize as
     // `nulls:<lo>:<hi>`, indistinguishable from the per-file null-count
-    // field `nulls:<col>:<n>`
+    // field `nulls:<col>:<n>` of older manifests, which the parser skips
     require(!snap.statsCols.contains("nulls"),
       "'nulls' is a reserved stats-column name in the manifest encoding")
     // refuse-or-record: a declared metadata column whose type the
@@ -1420,8 +1370,7 @@ object TxnTable {
   private def entryLine(snap: Snapshot, file: String): String = {
     val fileStats = snap.stats.getOrElse(file, Map.empty)
     val fileBlooms = snap.blooms.getOrElse(file, Map.empty)
-    val fileNulls = snap.nullCounts.getOrElse(file, Map.empty)
-    (fileStats.keys ++ fileBlooms.keys ++ fileNulls.keys).foreach(c => require(
+    (fileStats.keys ++ fileBlooms.keys).foreach(c => require(
       !c.contains("\t") && !c.contains(":") && !c.contains("\n") && c != "nulls",
       s"metadata column name '$c' collides with the manifest encoding"))
     def ordered(recorded: Seq[String], present: Iterable[String]): Seq[String] =
@@ -1435,26 +1384,22 @@ object TxnTable {
     // present); absent for legacy files — metadata aggregates then
     // answer None rather than guess ([[metaCount]])
     val rowsF = snap.rowCounts.get(file).map(n => s"rows:$n").toSeq
-    val nullsF = ordered(snap.statsCols, fileNulls.keys).map(c =>
-      s"nulls:$c:${fileNulls(c)}")
-    (file +: (rowsF ++ statF ++ nullsF ++ bloomF)).mkString("\t")
+    (file +: (rowsF ++ statF ++ bloomF)).mkString("\t")
   }
 
   /** The parsed form of `file`'s entry in `snap`. */
   private def entryOf(snap: Snapshot, file: String): Entry =
     (file, snap.stats.getOrElse(file, Map.empty),
-      snap.blooms.getOrElse(file, Map.empty), snap.rowCounts.get(file),
-      snap.nullCounts.getOrElse(file, Map.empty))
+      snap.blooms.getOrElse(file, Map.empty), snap.rowCounts.get(file))
 
   /** Does segment entry `e` record EXACTLY the metadata `snap` asks to
     * persist for its file? The correctness anchor of segment reuse: a
     * ref is emitted only when the parsed segment round-trips to the
     * intended entries. */
   private def entryMatches(e: Entry, snap: Snapshot): Boolean = {
-    val (f, st, bl, rw, nu) = e
+    val (f, st, bl, rw) = e
     st == snap.stats.getOrElse(f, Map.empty) &&
-      rw == snap.rowCounts.get(f) &&
-      nu == snap.nullCounts.getOrElse(f, Map.empty) && {
+      rw == snap.rowCounts.get(f) && {
         val b2 = snap.blooms.getOrElse(f, Map.empty)
         bl.keySet == b2.keySet &&
           bl.forall { case (c, v) => java.util.Arrays.equals(v, b2(c)) }
@@ -2000,7 +1945,7 @@ object TxnTable {
   // Named TAGS — immutable version pointers (`prod-2024-05`,
   // `audit-baseline`): SQL reads them through `VERSION AS OF '<tag>'`
   // ([[graft.sources.GraftTxnSource]]), `CALL <catalog>.system.create_tag` writes
-  // them, and vacuum retains every tagged version.
+  // them, and vacuum retains every tagged version until [[dropTag]].
   // ---------------------------------------------------------------------
 
   private def tagPath(root: String, name: String): Path =
@@ -2009,7 +1954,7 @@ object TxnTable {
   private val TagRe = "^tag-([A-Za-z0-9_\\-.]+)\\.txt$".r
 
   /** Pin `name` to `version` — immutable (re-tagging a name refuses).
-    * The version must exist; vacuum keeps it alive. */
+    * The version must exist; vacuum keeps it alive until [[dropTag]]. */
   def tagVersion(s: SparkSession, root: String, name: String,
                  version: Long): Unit = {
     require(name.matches("[A-Za-z0-9_\\-.]+"),
@@ -2035,6 +1980,11 @@ object TxnTable {
       case _ => None
     }).toMap
   }
+
+  /** Remove tag `name` — the one way to release the tagged version to
+    * vacuum's retention; a missing tag is a no-op. */
+  def dropTag(s: SparkSession, root: String, name: String): Unit =
+    fs(s, root).delete(tagPath(root, name), false)
 
   // ---------------------------------------------------------------------
   // BRANCHES — named MUTABLE refs with their own commit line (tags are
@@ -2133,6 +2083,13 @@ object TxnTable {
           head.transforms)).copy(schema = Some(evolved)),
       branch = Some(name))
   }
+
+  /** The branch as a DataFrame (fork content + branch appends) with its
+    * live merge-on-read delete files applied — the DSv2 reader's
+    * `versionAsOf = <branch>` refuses a head that carries equality
+    * deletes, so this is the one read of such a branch. */
+  def readBranch(s: SparkSession, root: String, name: String): DataFrame =
+    readSnap(s, root, branchHead(s, root, name))
 
   /** Publish the branch head as MAIN's next version — valid only while
     * main's head still IS the fork point (nothing to merge; the commit
@@ -4063,6 +4020,8 @@ object TxnTable {
     * yet-committed data and are left alone. */
   val DefaultVacuumGraceMs: Long = 30L * 60L * 1000L
 
+  private val StagedMarkerRe = "^staged-[a-f0-9]+\\.txt$".r
+
   /** Every data-pool file some retained manifest can still reach:
     * `keep` versions' files AND their MoR delete-key files (vacuuming
     * one would silently resurrect its deleted rows), and branch
@@ -4134,14 +4093,20 @@ object TxnTable {
     // manifest SEGMENTS referenced by no retained manifest (any branch
     // included) are garbage — the same grace guard as data
     // files protects a concurrent committer's segments written just
-    // before its version-file CAS
+    // before its version-file CAS. So are `staged-<id>.txt` markers,
+    // left by the write-audit-publish commits older tables may hold:
+    // nothing reads them, and their unpublished files go with the
+    // unreferenced data below.
     locally {
       val horizon0 = System.currentTimeMillis() - graceMs
       val txnDir = new Path(s"${root.stripSuffix("/")}/_txn")
       f.listStatus(txnDir).toSeq
-        .filter(st => st.isFile && SegNameRe.matches(st.getPath.getName) &&
-          !liveSegs.contains(st.getPath.getName) &&
-          st.getModificationTime <= horizon0)
+        .filter { st =>
+          val n = st.getPath.getName
+          st.isFile && st.getModificationTime <= horizon0 &&
+            (SegNameRe.matches(n) && !liveSegs.contains(n) ||
+              StagedMarkerRe.matches(n))
+        }
         .foreach(st => f.delete(st.getPath, false))
     }
     val base = root.stripSuffix("/")

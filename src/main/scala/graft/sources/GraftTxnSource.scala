@@ -338,7 +338,8 @@ class GraftTxnTableV2(spark: SparkSession, val root: String, val snap: Snapshot,
     require(snap.deletes.isEmpty,
       s"snapshot v${snap.version} at $root carries ${snap.deletes.size} live " +
         "merge-on-read delete file(s); the DSv2 scan cannot apply them — run " +
-        "TxnTable.compactDeletes (or read via TxnTable.read, which merges)")
+        "TxnTable.compactDeletes (or read via TxnTable.read, readAsOf or " +
+        "readBranch, which merge)")
     // a mapped table scans under its PHYSICAL schema (what the parquet
     // bytes say); the builder translates pushed names both ways and the
     // scan reports the logical read schema back to Spark — rows are

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * in a configuration string counts as called.
   *
   * The true entry points (mains, classes Spark instantiates by name,
-  * the paper's own stages) are listed with a one-line reason each in
+  * the paper's own stages) and the few table operations no SQL or DSv2
+  * path covers are listed with a one-line reason each in
   * `src/test/resources/callers_allow.txt`. The scan is lexical, so it
   * misses an uncalled member that shares its name with another one;
   * `-Wunused` in build.sbt covers the private half. */

@@ -12,7 +12,8 @@ import graft.SparkTestSession
   * branch reads as fork content + its appends, a clean fast-forward
   * publishes the branch head as main's next version, divergence refuses
   * loud, and vacuum treats branch-referenced files and the fork manifest
-  * as pinned. Tags, the immutable refs, pin their version the same way. */
+  * as pinned. Tags, the immutable refs, pin their version the same way
+  * until dropped. */
 class TxnBranchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -155,7 +156,7 @@ class TxnBranchSpec extends AnyFunSuite {
     }
   }
 
-  test("vacuum pins tagged versions; a tag is immutable and reads by name") {
+  test("tags pin versions through vacuum; immutable until dropped") {
     val root = freshRoot()
     TxnTable.append(spark, root, df(1).coalesce(1)) // v1
     TxnTable.tagVersion(spark, root, "baseline", 1L)
@@ -169,6 +170,28 @@ class TxnBranchSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       TxnTable.tagVersion(spark, root, "baseline", 3L)
     }
+    // dropping the tag releases v1 to retention
+    TxnTable.dropTag(spark, root, "baseline")
+    TxnTable.vacuum(spark, root, retainVersions = 1, graceMs = 0L)
+    assert(TxnTable.versions(spark, root) === Seq(3L))
+    assert(TxnTable.tags(spark, root).isEmpty)
+  }
+
+  test("a branch holding live MoR deletes reads merged through readBranch") {
+    val root = freshRoot()
+    TxnTable.append(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))
+    val s = spark
+    import s.implicits._
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(2L).toDF("id"))
+    TxnTable.createBranch(spark, root, "audit")
+    TxnTable.appendToBranch(spark, root, "audit", df(10).coalesce(1))
+    assert(TxnTable.branchHead(spark, root, "audit").deletes.nonEmpty)
+    assert(ids(TxnTable.readBranch(spark, root, "audit")) === Set(1L, 3L, 10L))
+    // the DSv2 scan serves no equality deletes, and says where to go
+    val e = intercept[IllegalArgumentException] {
+      branchRead(root, "audit").collect()
+    }
+    assert(e.getMessage.contains("readBranch"))
   }
 
   test("refs metadata table lists branches with their head version") {

@@ -86,6 +86,34 @@ class TxnMetaAggSpec extends AnyFunSuite {
     assert(TxnTable.metaCount(spark, root) === Some(4L))
   }
 
+  test("an older manifest's per-file nulls: fields still load; new commits write none") {
+    val root = freshRoot()
+    TxnTable.append(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def text(v: Long): String = {
+      val in = fs.open(new Path(f"$root/_txn/v$v%010d.txt"))
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, true)
+      new String(out.toByteArray, StandardCharsets.UTF_8)
+    }
+    val fresh = TxnTable.snapshot(spark, root, 1L)
+    assert(!text(1L).contains("nulls:"))
+    // what commits once recorded after each row count: `nulls:<col>:<n>`
+    val m = new Path(s"$root/_txn/v0000000001.txt")
+    val older = text(1L).replaceAll("(\trows:\\d+)", "$1\tnulls:id:0")
+    assert(older.contains("\tnulls:id:0"))
+    fs.delete(m, false)
+    val o = fs.create(m, false)
+    try o.write(older.getBytes(StandardCharsets.UTF_8)) finally o.close()
+    val re = TxnTable.snapshot(spark, root, 1L)
+    assert(re.stats === fresh.stats)
+    assert(re.rowCounts === fresh.rowCounts)
+    assert(TxnTable.metaCount(spark, root) === Some(3L))
+    TxnTable.append(spark, root, df(4).coalesce(1))
+    assert(!text(2L).contains("nulls:"))
+    assert(TxnTable.metaMinMax(spark, root, "id") === Some((1L, 4L)))
+  }
+
   test("metaMinMax: a provably-empty staged file (rows:0) does not force refusal") {
     // a CoW delete whose predicate empties one touched file once staged
     // a zero-row part with no stats entry (found at the sf10 scale run);

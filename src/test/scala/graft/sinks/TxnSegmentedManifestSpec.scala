@@ -21,7 +21,7 @@ import graft.sources.GraftCatalog
   * public model). Contract under test: byte-level reuse really happens
   * (appends re-reference the parent's segment names; the version file
   * stays small), reads are value-identical to the inline encoding on
-  * every surface (snapshot parse round-trip, stats, counts, nulls,
+  * every surface (snapshot parse round-trip, stats, counts,
   * blooms), a row-level rewrite breaks ONLY the touched segment, the
   * ref-count bound re-chunks, vacuum collects orphaned segments but
   * never referenced ones, and small tables keep the single-file inline
@@ -96,7 +96,6 @@ class TxnSegmentedManifestSpec extends AnyFunSuite {
       assert(re.files === v2.files)
       assert(re.stats === v2.stats)
       assert(re.rowCounts === v2.rowCounts)
-      assert(re.nullCounts === v2.nullCounts)
       assert(re.segs === v2.segs)
       assert(TxnTable.read(spark, root).count() === 510L)
       assert(TxnTable.metaCount(spark, root) === Some(510L))

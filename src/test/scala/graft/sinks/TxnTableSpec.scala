@@ -425,6 +425,25 @@ class TxnTableSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(inflight)))
   }
 
+  test("vacuum removes a write-audit-publish staged marker and its unpublished files") {
+    val root = freshRoot()
+    TxnTable.overwrite(spark, root, df(1))
+    // what a staged, never-published append of an older table left:
+    // data files no manifest names, and its `_txn/staged-<id>.txt`
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stagedData = s"$root/data/staged1"
+    df(99).write.parquet(stagedData)
+    val marker = new org.apache.hadoop.fs.Path(s"$root/_txn/staged-0a1b2c3d.txt")
+    val out = fs.create(marker, false)
+    try out.write("GRAFT-TXN-MANIFEST staged-append\n".getBytes("UTF-8"))
+    finally out.close()
+    TxnTable.vacuum(spark, root, retainVersions = 1, graceMs = 0L)
+    assert(!fs.exists(marker), "vacuum left the staged marker")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(stagedData)))
+    assert(rows(TxnTable.read(spark, root)) === Set(Seq(1, 10)))
+  }
+
   test("mergeInto replaces a null-keyed row instead of duplicating it") {
     val s = spark
     import s.implicits._

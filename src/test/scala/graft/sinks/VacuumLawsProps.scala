@@ -81,25 +81,6 @@ object VacuumLawsProps extends Properties("graft.txn.vacuum.laws") {
   private def headContents(root: String): Seq[(Long, Long)] =
     versionContents(root, TxnTable.latest(spark, root).get.version)
 
-  /** What a branch reads as: its head's file lists, whether every file
-    * they name is still on disk, and its rows through the reader's
-    * `versionAsOf = <branch>`. Data files are immutable, so the lists
-    * and their presence fix the rows; the rows are read only where the
-    * scan serves them (no live equality deletes, which it refuses). */
-  private def branchState(root: String, b: String) = {
-    val h = TxnTable.branchHead(spark, root, b)
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = (h.files ++ h.deletes)
-      .forall(p => f.exists(new org.apache.hadoop.fs.Path(s"$root/$p")))
-    val rows =
-      if (h.files.isEmpty) Some(Seq.empty)
-      else if (h.deletes.nonEmpty) None
-      else Some(contents(
-        spark.read.format("graft-txn").option("versionAsOf", b).load(root)))
-    (h.files.toSet, h.deletes.toSet, present, rows)
-  }
-
   property("every readable version survives vacuum bit-identical") =
     Prop.forAll(caseGen) { case (bucketed, ops) =>
       val root = Files.createTempDirectory("txn_vacuum_fuzz").toString + "/tbl"
@@ -158,7 +139,8 @@ object VacuumLawsProps extends Properties("graft.txn.vacuum.laws") {
       // ---- the law: snapshot everything readable, vacuum, re-read ----
       val beforeMain = TxnTable.versions(spark, root)
         .map(v => v -> versionContents(root, v)).toMap
-      val beforeBranch = branch.map(branchState(root, _))
+      val beforeBranch = branch.map(b =>
+        contents(TxnTable.readBranch(spark, root, b)))
       TxnTable.vacuum(spark, root, retainVersions = 2, graceMs = 0L)
       val after = TxnTable.versions(spark, root)
       val mainOk = Prop.all(after.map(v =>
@@ -167,7 +149,7 @@ object VacuumLawsProps extends Properties("graft.txn.vacuum.laws") {
       val headOk = (headContents(root) ==
         beforeMain(beforeMain.keys.max)) :| "head changed across vacuum"
       val branchOk = branch.fold(Prop.passed)(b =>
-        (beforeBranch.contains(branchState(root, b))) :|
+        (beforeBranch.contains(contents(TxnTable.readBranch(spark, root, b)))) :|
           s"branch $b changed across vacuum")
       // the newest retained window must actually be retained
       val retainedOk = (after.nonEmpty &&
