@@ -214,8 +214,7 @@ object LlmOps extends graft.QueryModule {
     * sf10 scale step surfaced exactly one 1400-id bucket where the
     * previously-uncapped oracle diverged by the capped-out pairs. At
     * 100 TB a capped-out bucket means thousands of near-identical
-    * copies — the retained pairs still link every kept doc, and the
-    * overflow set is exactly `bucketOverflow`. */
+    * copies — the retained pairs still link every kept doc. */
   private[queries] val BucketCap = 1000
 
   /** Salt shards for the two-phase capped collect: a hot bucket's id
@@ -249,13 +248,6 @@ object LlmOps extends graft.QueryModule {
           struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-
-  /** Monitoring view for the cap: buckets whose size exceeds `cap`
-    * (empty on the testdata; at scale, the near-duplicate hot spots). */
-  private[queries] def bucketOverflow(bands: DataFrame, cap: Int = BucketCap): DataFrame =
-    bands.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("n_ids"))
-      .filter(col("n_ids") > cap)
 
   /** The LSH pipeline's shared signature artifact, built and persisted
     * ONCE per (session, sfDir): per-doc distinct shingle sets and their

@@ -51,13 +51,16 @@ object Txn extends graft.QueryModule {
   private val Daily = Art("daily", "events", inCatalog = false)
   private val Raw = Art("events_raw", "events", inCatalog = false)
   private val DailyMerge = Art("daily_merge", "events", inCatalog = false)
-  private val Mor = Art("events_mor", "events", inCatalog = false)
+  // the three tables built with deleteKeysMor carry a `_pos` suffix:
+  // builds older than position-only deletes left equality-delete
+  // manifests under the bare names, which no longer load
+  private val Mor = Art("events_mor_pos", "events", inCatalog = false)
   private val DailyBranch = Art("daily_branch", "events", inCatalog = false)
   private val SqlUp = Art("events_sqlup", "events", inCatalog = true)
-  private val Maint = Art("events_maint", "events", inCatalog = true)
+  private val Maint = Art("events_maint_pos", "events", inCatalog = true)
   private val Ren = Art("events_ren", "events", inCatalog = true)
   private val Rep = Art("daily_rep", "events", inCatalog = true)
-  private val PComp = Art("events_pcomp", "events", inCatalog = true)
+  private val PComp = Art("events_pcomp_pos", "events", inCatalog = true)
   private val StrDocs = Art("docs_str", "documents", inCatalog = true)
   private val MorUp = Art("events_morup", "events", inCatalog = true)
   private val UserCounts = Art("user_counts", "events", inCatalog = true)
@@ -245,12 +248,12 @@ object Txn extends graft.QueryModule {
   // ---------------------------------------------------------------------
   // q119: MERGE-ON-READ delete end-to-end — q89's GDPR erasure at the
   // opposite point of the delete cost model: [[TxnTable.deleteKeysMor]]
-  // commits ONLY the deleted user ids (zero data rewrite — path
-  // identity is TxnMorDeleteSpec's claim; the ORACLE here certifies
-  // the merged READ), and the aggregate over the read-time anti-join
-  // must hash-match DuckDB recomputing from the raw source with the
-  // same keys removed. Erased means erased on the MoR path too —
-  // BEFORE any compaction folds the deletes in.
+  // commits ONLY position tombstones of the deleted users' rows (zero
+  // data rewrite — path identity is TxnMorDeleteSpec's claim; the
+  // ORACLE here certifies the merged READ), and the aggregate over the
+  // read-time position mask must hash-match DuckDB recomputing from
+  // the raw source with the same keys removed. Erased means erased on
+  // the MoR path too — BEFORE any compaction folds the deletes in.
   // ---------------------------------------------------------------------
   /** Idempotent build: raw events with manifest stats, then the v2
     * MoR-delete commit of every 13th user's id. */
@@ -651,8 +654,8 @@ object Txn extends graft.QueryModule {
   // 'user_id', lo, hi, sort_cols)` rewrites ONLY the stats-overlapping
   // files — the rewritten region sheds its dead rows physically, the
   // out-of-range files carry by path identity, and the delete files
-  // STAY for the carried region (equality deletes are a global
-  // anti-join, so re-masking the cleansed rewrite is a no-op). The
+  // STAY for the carried region (their positions name only the files
+  // they were resolved against, so they mask nothing rewritten). The
   // oracle recomputes from the RAW source with the delete as a WHERE:
   // a scoped rewrite must change LAYOUT, never content — losing the
   // mask on a carried file, shedding the wrong rows, or double-
@@ -679,8 +682,7 @@ object Txn extends graft.QueryModule {
   val q130Bench: Q = (s, dir) => {
     import s.implicits._
     // the head deliberately carries LIVE MoR deletes (that is the
-    // sharp edge) — read through the merging path API; the by-name
-    // DSv2 scan refuses MoR-live tables by contract
+    // sharp edge) — read through the merging path API
     TxnTable.read(s, ensurePartialCompacted(s, dir))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
@@ -776,8 +778,7 @@ object Txn extends graft.QueryModule {
       val after = TxnTable.latest(s, root).get
       // the whole point, asserted at build time: zero data rewrite
       require(before.files.forall(after.files.contains) &&
-          after.deletes.nonEmpty &&
-          after.deleteCols == TxnTable.PosDeleteCols,
+          after.deletes.nonEmpty,
         "merge-on-read UPDATE must carry every data file by path " +
           "identity and commit position-delete tombstones")
     }

@@ -22,7 +22,7 @@ object TxnMeta {
 
   /** One row per commit, ascending by version (the audit log):
     * `version, ts, op, n_files, n_delete_files, stats_cols, bloom_cols,
-    * delete_cols, transforms`. `ts` is the manifest-recorded commit
+    * transforms`. `ts` is the manifest-recorded commit
     * instant (null for legacy manifests without one — file mtimes are
     * deliberately NOT substituted here: history must survive directory
     * copies/restores, and a silently mtime-derived audit row would lie
@@ -32,13 +32,13 @@ object TxnMeta {
     val rows = TxnTable.versions(s, root).map { v =>
       val sn = TxnTable.snapshot(s, root, v)
       (sn.version, sn.tsMs, sn.op, sn.files.size, sn.deletes.size,
-        sn.statsCols, sn.bloomCols, sn.deleteCols, sn.transforms.map(_.name))
+        sn.statsCols, sn.bloomCols, sn.transforms.map(_.name))
     }
     rows.toDF("version", "ts_ms", "op", "n_files", "n_delete_files",
-        "stats_cols", "bloom_cols", "delete_cols", "transforms")
+        "stats_cols", "bloom_cols", "transforms")
       .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms")
       .select("version", "ts", "op", "n_files", "n_delete_files",
-        "stats_cols", "bloom_cols", "delete_cols", "transforms")
+        "stats_cols", "bloom_cols", "transforms")
   }
 
   /** One row per (data file × recorded stats column) of one snapshot —
@@ -50,7 +50,7 @@ object TxnMeta {
     * `column` (visible, never silently dropped — an unpruned file is
     * exactly what this table exists to surface). Hidden-partitioning
     * transform values appear under their derived names (`day_ts`,
-    * `bucketN_k`) like any recorded column. Delete-key files are not
+    * `bucketN_k`) like any recorded column. Delete files are not
     * data files and are not listed ([[history]] counts them). */
   def files(s: SparkSession, root: String,
             version: Option[Long] = None): DataFrame = {

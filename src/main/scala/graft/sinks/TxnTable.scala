@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal transactional table format — a versioned snapshot log over
   * immutable parquet data files, closing the "no txn-log" caveat that
-  * Compact/Scd/Incremental each carry in their scaladoc (the reference
+  * Scd/Incremental each carry in their scaladoc (the reference
   * has no table format at all: its sink is a raw JSON dump to object
   * storage + a Glue catalog pointer, reference: airflow/dags/
   * weather_data_dag.py's load step — atomicity/versioning is exactly
@@ -22,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A manifest is a text file: header line `graft-txn v1 <op>`,
   * optional order-insensitive `#`-tagged metadata lines (`#schema` —
   * the table schema as of the commit, schema-on-read evolution per
-  * [[evolve]]; `#ts` — the commit instant; `#delcol`/`#delete` —
-  * merge-on-read equality-delete files, [[deleteKeysMor]]), then one
+  * [[evolve]]; `#ts` — the commit instant; `#delete` — merge-on-read
+  * position-delete files, [[PosDeleteCols]]), then one
   * data-file path per line (relative to the table root). A snapshot is
   * the complete file list — never a delta — so a reader resolves ANY
   * version with one small-file read, O(files) not O(history).
@@ -39,8 +39,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - '''Snapshot isolation''': data files are immutable and a reader
   *    resolves its file list from ONE manifest — concurrent commits
   *    (appends, compactions) never change what an in-flight reader
-  *    sees. This is why [[compactTxn]] is safe against live readers,
-  *    which plain [[Compact]] (delete + rename in place) is not.
+  *    sees. This is why [[compactTxn]] is safe against live readers:
+  *    it never rewrites a file in place.
   *  - '''Optimistic concurrency''': the next version number is the
   *    lock. Two writers racing to commit version N both stage, but
   *    `create(vN, overwrite = false)` succeeds for exactly one; the
@@ -78,8 +78,8 @@ object TxnTable {
     * file per recorded `bloomCols` ([[readPointLookup]]); `schema` is
     * the TABLE schema as of this snapshot (schema-on-read: files
     * written before a column existed simply read it as null);
-    * `deleteCols` is the (possibly composite) merge-on-read
-    * equality-delete key ([[deleteKeysMor]]). Column ORDER is
+    * `deletes` are merge-on-read position-delete files
+    * ([[PosDeleteCols]]). Column ORDER is
     * meaningful: the first stats column is the table's primary
     * clustering column — the one [[compactTxn]] sorts by and the
     * column-less [[readPruned]]/`statsRange` compatibility paths
@@ -92,16 +92,10 @@ object TxnTable {
                             bloomCols: Seq[String] = Nil,
                             tsMs: Option[Long] = None,
                             deletes: Seq[String] = Seq.empty,
-                            deleteCols: Seq[String] = Nil,
                             transforms: Seq[Transform] = Nil,
                             rowCounts: Map[String, Long] = Map.empty,
                             segs: Seq[String] = Nil,
                             delProv: Map[String, Seq[String]] = Map.empty) {
-    /** Primary (first-recorded) columns — the single-column views most
-      * call sites and older specs address. */
-    def statsCol: Option[String] = statsCols.headOption
-    def bloomCol: Option[String] = bloomCols.headOption
-    def deleteCol: Option[String] = deleteCols.headOption
     /** Per-file range of one column (the file-keyed single-column view). */
     def statsOf(col: String): Map[String, (Long, Long)] =
       stats.flatMap { case (f, m) => m.get(col).map(f -> _) }
@@ -148,9 +142,6 @@ object TxnTable {
   object Transform {
     def day(src: String): Transform = Transform("day", src, 0)
     def bucket(n: Int, src: String): Transform = Transform("bucket", src, n)
-    /** The day-transform value for an epoch-day lookup (sugar so call
-      * sites read `Transform.dayValue(LocalDate.of(...))`). */
-    def dayValue(d: java.time.LocalDate): Long = d.toEpochDay
   }
 
   private val Header = "graft-txn v1"
@@ -158,9 +149,9 @@ object TxnTable {
   private val SchemaTag = "#schema\t"
   // commit wall-clock (epoch ms), for timestamp-based time travel
   private val TsTag = "#ts\t"
-  // merge-on-read equality deletes: the (possibly composite,
-  // tab-separated) key columns + one tag line per delete-key file
-  // ([[deleteKeysMor]]); readers anti-join them out
+  // merge-on-read deletes: one `#delete` line per position-delete file.
+  // Older manifests also carry `#delcol` with the delete key columns;
+  // the parser accepts only the position key `_file _pos` there
   private val DelColTag = "#delcol\t"
   private val DeleteTag = "#delete\t"
   // recorded metadata column SETS, in priority order (first = primary
@@ -498,9 +489,13 @@ object TxnTable {
         .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
     val tsMs = lines.find(_.startsWith(TsTag)).map(_.stripPrefix(TsTag).toLong)
-    val deleteCols = lines.find(_.startsWith(DelColTag))
-      .map(_.stripPrefix(DelColTag).split("\t").toSeq.filter(_.nonEmpty))
-      .getOrElse(Nil)
+    lines.find(_.startsWith(DelColTag)).foreach { l =>
+      val keyCols = l.stripPrefix(DelColTag).split("\t").toSeq.filter(_.nonEmpty)
+      require(keyCols == PosDeleteCols,
+        s"manifest $what at $root carries equality delete files keyed " +
+          s"on '${keyCols.mkString(",")}'; only position deletes " +
+          s"(${PosDeleteCols.mkString(",")}) are readable — rebuild the table")
+    }
     val deletes = lines.filter(_.startsWith(DeleteTag))
       .map(_.stripPrefix(DeleteTag))
     def colsTag(tag: String): Option[Seq[String]] = lines.find(_.startsWith(tag))
@@ -580,7 +575,7 @@ object TxnTable {
       schema,
       entries.collect { case (f, _, bl, _) if bl.nonEmpty => f -> bl }.toMap,
       bloomCols,
-      tsMs, deletes, deleteCols, transforms,
+      tsMs, deletes, transforms,
       entries.collect { case (f, _, _, Some(n)) => f -> n }.toMap,
       segs = refs.map(_._1),
       delProv = delProv)
@@ -610,16 +605,19 @@ object TxnTable {
   /** Time travel: the table exactly as of `version`. With a recorded
     * schema the read is pinned to it (columns absent from older files
     * come back null); schema-less legacy snapshots infer from footers.
-    * A snapshot carrying merge-on-read delete files
-    * ([[deleteKeysMor]]) anti-joins them out at read time — the MoR
-    * contract: deletes cost O(deleted keys) at write, the merge is
-    * paid by readers until [[compactDeletes]] folds it in. */
+    * A snapshot carrying merge-on-read position-delete files (SQL
+    * row-level statements in `merge-on-read` mode, [[deleteKeysMor]])
+    * masks the deleted (file, row ordinal) pairs at read time. Those
+    * positions were resolved against the data when the delete
+    * committed, so rows a later version appended are never masked: the
+    * read equals what a copy-on-write delete at the same version gives.
+    * The merge is paid by readers until [[compactDeletes]] folds it in. */
   def readAsOf(s: SparkSession, root: String, version: Long): DataFrame =
     readSnap(s, root, snapshot(s, root, version))
 
-  /** The read of ONE resolved snapshot (shared by version/branch/tag
-    * reads): schema-pinned file-list scan plus the merge-on-read
-    * anti-join when delete files are live. */
+  /** The read of ONE resolved snapshot (shared by [[readAsOf]] and
+    * [[readSemiPruned]]'s fallback): schema-pinned file-list scan plus the merge-on-read
+    * position mask when delete files are live. */
   private def readSnap(s: SparkSession, root: String, snap: Snapshot): DataFrame = {
     if (snap.files.isEmpty) {
       // an empty snapshot WITH a recorded schema is a principled read
@@ -640,20 +638,12 @@ object TxnTable {
     snap.schema.fold(merged)(sc => ColumnMapping.aliasToLogical(merged, sc))
   }
 
-  /** The reserved delete-column list that marks a snapshot's delete
-    * files as POSITION deletes (Iceberg's other delete-file shape): each
-    * delete-file row is `(_file: root-relative data file path,
-    * _pos: row ordinal within that file)`. Position deletes ride the
-    * SAME manifest plumbing as equality deletes (carry, vacuum
-    * liveness, streaming classification, requireNoMor, metaCount
-    * refusal) — only the read-side mask and the write path differ. One
-    * MoR shape per table at a time ([[deleteKeysMor]] and
-    * [[commitDelta]] refuse to mix; [[compactDeletes]] moves between
-    * regimes). */
+  /** The columns of every merge-on-read delete file — POSITION deletes
+    * (Iceberg's position-delete shape): each row is `(_file:
+    * root-relative data file path, _pos: row ordinal within that
+    * file)`. SQL row-level statements in `merge-on-read` mode
+    * ([[commitDelta]]) and [[deleteKeysMor]] both write them. */
   private[graft] val PosDeleteCols: Seq[String] = Seq("_file", "_pos")
-
-  private[graft] def isPosShape(snap: Snapshot): Boolean =
-    snap.deleteCols == PosDeleteCols
 
   /** Root-relative data-file path of a scanned row, derived from the
     * parquet metadata column: every staged path starts with `data/`
@@ -665,20 +655,18 @@ object TxnTable {
     regexp_extract(col("_metadata.file_path"), "^.*/(data/.*)$", 1)
   }
 
-  /** Apply the snapshot's merge-on-read deletes to a PHYSICAL-named
-    * scan (`df` must come from [[scanFiles]] — delete files were
-    * written physical too). Equality shape: GLOBAL null-safe anti-join
-    * on the key columns. Position shape: anti-join on the row's
-    * (root-relative file, row ordinal) derived from the parquet
-    * metadata columns. Both are global over whatever files the caller
-    * scanned, which is what makes masking safe on any SUBSET of the
-    * snapshot's files ([[compactWhere]]): idempotent and per-row,
-    * never per-file-set (a position entry for a file outside the
-    * subset simply matches nothing). */
+  /** Apply the snapshot's merge-on-read deletes to a scan (`df` must
+    * come from [[scanFiles]]): anti-join on the row's (root-relative
+    * file, row ordinal) derived from the parquet metadata columns. The
+    * join is global over whatever files the caller scanned, which is
+    * what makes masking safe on any SUBSET of the snapshot's files
+    * ([[compactWhere]]): idempotent and per-row, never per-file-set (a
+    * position entry for a file outside the subset simply matches
+    * nothing). */
   private def maskDeletes(s: SparkSession, root: String, snap: Snapshot,
                           df: DataFrame): DataFrame =
-    if (snap.deletes.isEmpty || snap.deleteCols.isEmpty) df
-    else if (isPosShape(snap)) {
+    if (snap.deletes.isEmpty) df
+    else {
       import org.apache.spark.sql.functions.col
       val dels = readFiles(s, root, snap.deletes)
         .select(col("_file").as("_del_file"), col("_pos").as("_del_pos"))
@@ -689,15 +677,6 @@ object TxnTable {
         withId("_gmask_file") === dels("_del_file") &&
           withId("_gmask_pos") === dels("_del_pos"), "left_anti")
         .drop("_gmask_file", "_gmask_pos")
-    } else {
-      import org.apache.spark.sql.functions.col
-      val keys = readFiles(s, root, snap.deletes)
-        .select(snap.deleteCols.map(c => col(c).as(s"_del_$c")): _*).distinct()
-      // null-safe per component: a null-keyed delete row must remove
-      // null-keyed data; composite keys match on EVERY component
-      val cond = snap.deleteCols
-        .map(c => df(c) <=> keys(s"_del_$c")).reduce(_ && _)
-      df.join(keys, cond, "left_anti")
     }
 
   /** Schema-pinned raw scan of `files`: pinned to the snapshot's
@@ -1153,8 +1132,8 @@ object TxnTable {
       }))
   }
 
-  /** Raw scan of internal files — data files, delete keys, position
-    * sidecars — pinned to the first file's [[footerSchema]], the file
+  /** Raw scan of internal files — data files or position sidecars —
+    * pinned to the first file's [[footerSchema]], the file
     * Spark's own inference would touch. Inference would cost a Spark job
     * per read; an unreadable first footer falls back to it. */
   private[graft] def readFiles(s: SparkSession, root: String,
@@ -1298,9 +1277,7 @@ object TxnTable {
   /** Refuse a snapshot the manifest encoding cannot carry — commit (and
     * the staged-append envelope) is the choke point. */
   private def requireEncodable(snap: Snapshot): Unit = {
-    require(snap.deletes.isEmpty || snap.deleteCols.nonEmpty,
-      "merge-on-read delete files need recorded delete column(s)")
-    (snap.statsCols ++ snap.bloomCols ++ snap.deleteCols).foreach(c => require(
+    (snap.statsCols ++ snap.bloomCols).foreach(c => require(
       !c.contains("\t") && !c.contains(":") && !c.contains("\n"),
       s"metadata column name '$c' collides with the manifest encoding"))
     // "nulls" is reserved: a stats column so named would serialize as
@@ -1333,9 +1310,7 @@ object TxnTable {
   /** Manifest text: header, the `#`-tagged metadata lines, then `items`
     * (inline entry lines and/or segment refs) in file order. */
   private def manifestText(snap: Snapshot, items: Seq[String]): String = {
-    val delLines = (if (snap.deletes.nonEmpty)
-        Seq(DelColTag + snap.deleteCols.mkString("\t")) else Seq.empty) ++
-      snap.deletes.map(DeleteTag + _) ++
+    val delLines = snap.deletes.map(DeleteTag + _) ++
       snap.deletes.flatMap(d => snap.delProv.get(d).filter(_.nonEmpty)
         .map(from => DelProvTag + d + "\t" + from.mkString("\t")))
     val colLines =
@@ -1560,16 +1535,13 @@ object TxnTable {
           ColumnMapping.rename(x, from, to) }
         // DROP COLUMN: the field becomes a reader-stripped tombstone.
         // Columns the table's METADATA still depends on refuse loud —
-        // dropping them would orphan the pruning/delete contracts
-        // (clear them first: ALTER ... SET TBLPROPERTIES / compactDeletes)
+        // dropping them would orphan the pruning contracts (clear them
+        // first: ALTER ... SET TBLPROPERTIES)
         drops.foreach { d =>
           val p = ColumnMapping.physName(sc, d)
           require(!cur.statsCols.contains(p) && !cur.bloomCols.contains(p),
             s"DROP COLUMN $d: it is a recorded stats/bloom column — " +
               "remove it from statsCols/bloomCols first")
-          require(!cur.deleteCols.contains(p),
-            s"DROP COLUMN $d: it is the table's MoR delete key — " +
-              "compactDeletes first")
           require(!cur.transforms.exists(_.src == p),
             s"DROP COLUMN $d: it is a hidden-partitioning transform source")
         }
@@ -2084,13 +2056,6 @@ object TxnTable {
       branch = Some(name))
   }
 
-  /** The branch as a DataFrame (fork content + branch appends) with its
-    * live merge-on-read delete files applied — the DSv2 reader's
-    * `versionAsOf = <branch>` refuses a head that carries equality
-    * deletes, so this is the one read of such a branch. */
-  def readBranch(s: SparkSession, root: String, name: String): DataFrame =
-    readSnap(s, root, branchHead(s, root, name))
-
   /** Publish the branch head as MAIN's next version — valid only while
     * main's head still IS the fork point (nothing to merge; the commit
     * is a pure pointer advance, Iceberg's fast-forward). A main that
@@ -2126,9 +2091,7 @@ object TxnTable {
     *    cannot be mechanically replayed onto different content);
     *  - a branch-added file is already referenced by main's head
     *    (overlapping-file conflict: a partial fast-forward or a
-    *    duplicated replay would double-count rows);
-    *  - main carries live MoR deletes whose key columns the replayed
-    *    schema would widen away (guarded by [[evolve]] itself).
+    *    duplicated replay would double-count rows).
     *
     * Same optimistic retry as every writer ([[retrying]]): a lost
     * commit race re-resolves the new head and re-commits the SAME
@@ -2155,7 +2118,7 @@ object TxnTable {
         require(removed.isEmpty,
           s"branch '$name' v$v removed ${removed.size} file(s) — not a pure " +
             "append; replay refuses (re-run the compaction/delete on main instead)")
-        require(cur.deletes == prev.deletes && cur.deleteCols == prev.deleteCols,
+        require(cur.deletes == prev.deletes,
           s"branch '$name' v$v changed the MoR delete set — replay refuses")
         (cur, acc :+ (cur, cur.files.filterNot(prevSet)))
     }._2
@@ -2256,8 +2219,8 @@ object TxnTable {
 
   /** Transactional compaction: rewrite the current snapshot to
     * `targetFiles` files and commit the SAME rows as a new version —
-    * in-flight readers of any prior version are untouched (contrast
-    * [[Compact.compact]], which rewrites in place). coalesce = narrow
+    * in-flight readers of any prior version are untouched (nothing is
+    * rewritten in place). coalesce = narrow
     * merge, no shuffle. Zero-row parts are dropped before commit. */
   def compactTxn(s: SparkSession, root: String, targetFiles: Int,
                  sortCols: Seq[String] = Nil): Snapshot = {
@@ -2312,9 +2275,9 @@ object TxnTable {
     * Live MoR deletes are allowed, unlike the full compact's fold: the
     * selected files are read WITH the delete mask applied (rewritten
     * files shed their dead rows), and the delete files STAY in the
-    * manifest for the carried files. Equality deletes are a GLOBAL
-    * anti-join ([[maskDeletes]]), so re-applying them to the already-
-    * cleansed rewrite is a no-op — the visible content is unchanged,
+    * manifest for the carried files. Their positions name only files
+    * that existed when they committed, so they mask nothing in the
+    * rewritten files — the visible content is unchanged,
     * which also keeps the op's `compact` classification honest for the
     * change feed and streaming sources (maintenance commits emit
     * nothing).
@@ -2576,10 +2539,10 @@ object TxnTable {
   }
 
   /** Raw-file code paths (pruned reads, copy-on-write rewrites) bypass
-    * [[readAsOf]]'s anti-join and would silently resurrect MoR-deleted
+    * [[readAsOf]]'s position mask and would silently resurrect MoR-deleted
     * rows — they refuse until the deletes are folded in.
     * ([[changesBetween]] is the exception: it diffs EFFECTIVE content,
-    * folding delete files in as keyed delete events.) */
+    * folding delete files in as delete events.) */
   private def requireNoMor(snap: Snapshot, what: String): Unit =
     require(snap.deletes.isEmpty,
       s"$what reads data files directly and snapshot v${snap.version} carries " +
@@ -2750,40 +2713,35 @@ object TxnTable {
   // from manifest stats; Delta from the transaction log): at 100 TB a
   // row count or a freshness watermark (max of an event-time column)
   // must not cost a million-file scan. EXACT-OR-REFUSE: the answer is
-  // either precisely what scanning would return, or None — live
-  // merge-on-read deletes (the merged row set is not knowable from
-  // metadata), a file without a recorded count (legacy manifest), or a
-  // file without that column's stats entry all refuse rather than guess.
+  // either precisely what scanning would return, or None — a file
+  // without a recorded count (legacy manifest), or a file without that
+  // column's stats entry, refuses rather than guess.
   // ---------------------------------------------------------------------
 
   /** Exact COUNT(*) of snapshot `version` (default: latest) from the
     * manifest's per-file row counts. None if any live file lacks a
-    * recorded count or MoR deletes are live (a fresh commit — even a
-    * metadata-only one — backfills counts, see [[commit]]). */
+    * recorded count (a fresh commit — even a metadata-only one —
+    * backfills counts, see [[commit]]). */
   def metaCount(s: SparkSession, root: String,
                 version: Option[Long] = None): Option[Long] = {
     val snap = version.fold(latestRequired(s, root))(snapshot(s, root, _))
-    if (snap.deletes.nonEmpty && !isPosShape(snap)) None
+    val counts = snap.files.flatMap(snap.rowCounts.get)
+    if (counts.size != snap.files.size) None
+    // live deletes keep COUNT(*) exact: each distinct live tombstone
+    // (file, pos) masks exactly ONE existing row (positions are unique
+    // per immutable file), so the count is the per-file sum minus the
+    // live tombstones — Iceberg's metadata-count rule for position
+    // deletes. Tombstones referencing files no longer in the snapshot
+    // mask nothing and are excluded. Reads the (small) delete parquet,
+    // never a data file.
+    else if (snap.deletes.isEmpty) Some(counts.sum)
     else {
-      val counts = snap.files.flatMap(snap.rowCounts.get)
-      if (counts.size != snap.files.size) None
-      // POSITION-shape deletes keep COUNT(*) exact: each distinct live
-      // tombstone (file, pos) masks exactly ONE existing row (positions
-      // are unique per immutable file), so the count is the per-file
-      // sum minus the live tombstones — Iceberg's metadata-count rule
-      // for position deletes. Tombstones referencing files no longer in
-      // the snapshot mask nothing and are excluded. Reads the (small)
-      // delete parquet, never a data file; equality deletes still
-      // refuse (the masked row multiset is not knowable without data).
-      else if (snap.deletes.isEmpty) Some(counts.sum)
-      else {
-        import org.apache.spark.sql.functions.col
-        val live = snap.files.toSet
-        val masked = readFiles(s, root, snap.deletes)
-          .select(col("_file"), col("_pos")).distinct()
-          .filter(col("_file").isInCollection(live)).count()
-        Some(counts.sum - masked)
-      }
+      import org.apache.spark.sql.functions.col
+      val live = snap.files.toSet
+      val masked = readFiles(s, root, snap.deletes)
+        .select(col("_file"), col("_pos")).distinct()
+        .filter(col("_file").isInCollection(live)).count()
+      Some(counts.sum - masked)
     }
   }
 
@@ -2918,20 +2876,19 @@ object TxnTable {
     * key, which is the fallback CDC encoding every feed consumer
     * handles.
     *
-    * MERGE-ON-READ NATIVE: live equality-delete files
-    * ([[deleteKeysMor]]) are part of the versioned state — a delete
-    * file IS a set of keyed delete rows, so the feed folds them in
-    * rather than refusing (the one raw-file path that can, because the
-    * diff is computed against EFFECTIVE content, not raw files):
+    * MERGE-ON-READ NATIVE: live position-delete files are part of the
+    * versioned state — a delete file IS a set of delete rows, so the
+    * feed folds them in rather than refusing (the one raw-file path
+    * that can, because the diff is computed against EFFECTIVE content,
+    * not raw files):
     *  - data files added/removed between the versions contribute only
-    *    their EFFECTIVE rows (keys live at that version anti-joined
+    *    their EFFECTIVE rows (positions live at that version masked
     *    out) — a row that was already MoR-deleted at v1 and whose file
     *    is removed by v2 emits nothing, exactly as readers saw it;
     *  - a delete file that appears between v1 and v2 emits `delete`
-    *    events carrying the PRE-IMAGE: its newly-deleted keys (minus
-    *    keys already dead at v1) semi-join the carried data files —
-    *    the only case where carried files are read, and then only
-    *    through a key-probe the consumer's own apply would need anyway;
+    *    events carrying the PRE-IMAGE: its new positions (minus those
+    *    already dead at v1) semi-join the carried data files — the
+    *    only case where carried files are read;
     *  - a delete file that disappears while its data files carry
     *    (a [[restore]] to a pre-delete version) emits the resurrected
     *    rows as `insert`s — the inverted feed of the mistake;
@@ -2940,8 +2897,8 @@ object TxnTable {
     *    EMPTY feed, same as any compaction.
     * When the delete-file set is unchanged between the versions
     * (appends while deletes are live — the common CDC window), carried
-    * files are still never read: the key-diff is empty by file-list
-    * identity, from the manifests alone. */
+    * files are still never read: the position diff is empty by
+    * file-list identity, from the manifests alone. */
   def changesBetween(s: SparkSession, root: String, v1: Long, v2: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     require(v1 <= v2, s"changesBetween: v1=$v1 must be <= v2=$v2")
@@ -2953,86 +2910,56 @@ object TxnTable {
     val added = s2.files.filterNot(f1).map(f => s"$base/$f")
     val removed = (f1 -- f2).toSeq.sorted.map(f => s"$base/$f")
     val carried = s2.files.filter(f1).map(f => s"$base/$f")
-    // raw file reads are PHYSICAL-named (delete-key files included);
-    // each side aliases back to v2's logical names before the union
+    // raw file reads are PHYSICAL-named; each side aliases back to v2's
+    // logical names before the union
     val reader = s2.schema.fold(s.read)(sc =>
       s.read.schema(ColumnMapping.physicalSchema(sc)))
     def logical(df: DataFrame): DataFrame =
       s2.schema.fold(df)(sc => ColumnMapping.aliasToLogical(df, sc))
-    // The equality-delete key columns are only FIXED while delete files
-    // are live: after a compactDeletes, a later deleteKeysMor may re-fix
-    // a DIFFERENT key list, and s1's delete files contain only s1's key
-    // columns — selecting s2's columns from them would throw. When both
-    // snapshots carry live deletes the keys must agree (refuse clearly
-    // otherwise: a key-diff across two key spaces is not well-defined —
-    // diff in two steps, each on one side of the re-keying boundary);
-    // when only one side carries deletes, its own key list governs.
-    val delCols: Seq[String] = {
-      if (s1.deletes.nonEmpty && s2.deletes.nonEmpty)
-        require(s1.deleteCols == s2.deleteCols,
-          s"changesBetween: delete key columns changed between v$v1 " +
-            s"(${s1.deleteCols.mkString(",")}) and v$v2 " +
-            s"(${s2.deleteCols.mkString(",")}) across a compactDeletes " +
-            "boundary - diff [v1, compaction] and [compaction, v2] separately")
-      if (s2.deletes.nonEmpty) s2.deleteCols else s1.deleteCols
-    }
-    def keysOf(files: Seq[String]): Option[DataFrame] =
+    def positionsOf(files: Seq[String]): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(readFiles(s, root, files)
-        .select(delCols.map(c => col(c).as(s"_del_$c")): _*).distinct())
-    lazy val d1 = keysOf(s1.deletes)
-    lazy val d2 = keysOf(s2.deletes)
-    // POSITION-shape deletes address rows by (file, ordinal), not by
-    // data columns: the join id comes from the parquet metadata columns
-    // of the scanned side, everything else (key diffing, sign algebra)
-    // is shape-independent
-    val posShape = delCols == PosDeleteCols
+        .select(col("_file").as("_del_file"), col("_pos").as("_del_pos")).distinct())
+    lazy val d1 = positionsOf(s1.deletes)
+    lazy val d2 = positionsOf(s2.deletes)
+    // deletes address rows by (file, ordinal): the join id comes from
+    // the parquet metadata columns of the scanned side
     def withPosId(df: DataFrame): DataFrame = df
       .withColumn("_gcdc_file", relFileCol)
       .withColumn("_gcdc_pos", col("_metadata.row_index"))
-    // null-safe per component throughout (equality shape): a null-keyed
-    // delete row kills null-keyed data; composite keys match on EVERY
-    // component. Position ids are never null.
     def dataCond(df: DataFrame, k: DataFrame) =
-      if (posShape)
-        df("_gcdc_file") === k("_del__file") && df("_gcdc_pos") === k("_del__pos")
-      else delCols.map(c => df(c) <=> k(s"_del_$c")).reduce(_ && _)
-    def minusKeys(df: DataFrame, keys: Option[DataFrame]): DataFrame =
-      keys.fold(df) { k =>
-        if (posShape) {
-          val d = withPosId(df)
-          d.join(k, dataCond(d, k), "left_anti")
-            .drop("_gcdc_file", "_gcdc_pos")
-        } else df.join(k, dataCond(df, k), "left_anti")
+      df("_gcdc_file") === k("_del_file") && df("_gcdc_pos") === k("_del_pos")
+    def minusPositions(df: DataFrame, dels: Option[DataFrame]): DataFrame =
+      dels.fold(df) { k =>
+        val d = withPosId(df)
+        d.join(k, dataCond(d, k), "left_anti").drop("_gcdc_file", "_gcdc_pos")
       }
-    def keyDiff(a: Option[DataFrame], b: Option[DataFrame]): Option[DataFrame] =
+    def positionDiff(a: Option[DataFrame], b: Option[DataFrame]): Option[DataFrame] =
       a.map(aa => b.fold(aa)(bb => aa.join(bb,
-        delCols.map(c => aa(s"_del_$c") <=> bb(s"_del_$c")).reduce(_ && _),
+        aa("_del_file") === bb("_del_file") && aa("_del_pos") === bb("_del_pos"),
         "left_anti")))
     def side(df: DataFrame, sign: Int): DataFrame =
       df.withColumn("_sign", lit(sign.toLong))
     val sides = Seq.newBuilder[DataFrame]
     if (added.nonEmpty)
-      sides += side(logical(minusKeys(reader.parquet(added: _*), d2)), 1)
+      sides += side(logical(minusPositions(reader.parquet(added: _*), d2)), 1)
     if (removed.nonEmpty)
-      sides += side(logical(minusKeys(reader.parquet(removed: _*), d1)), -1)
+      sides += side(logical(minusPositions(reader.parquet(removed: _*), d1)), -1)
     // carried data files matter ONLY when the delete-file set changed —
     // decided from the manifests, so the common live-delete CDC window
     // (appends on top of an unchanged delete set) stays carried-file-free
     if (carried.nonEmpty && s1.deletes.toSet != s2.deletes.toSet) {
-      lazy val carriedDf =
-        if (posShape) withPosId(reader.parquet(carried: _*))
-        else reader.parquet(carried: _*)
-      def probe(keys: Option[DataFrame], sign: Int): Unit = keys.foreach { k =>
+      lazy val carriedDf = withPosId(reader.parquet(carried: _*))
+      def probe(dels: Option[DataFrame], sign: Int): Unit = dels.foreach { k =>
         sides += side(logical(
           carriedDf.join(k, dataCond(carriedDf, k), "left_semi")
             .drop("_gcdc_file", "_gcdc_pos")), sign)
       }
-      // keys only enter D through files, so D2∖D1 lives in the NEW
-      // delete files (minus keys v1 already had) — changed files are
-      // all that is read beyond the key-probe of carried data
-      probe(keyDiff(keysOf(s2.deletes.filterNot(s1.deletes.toSet)), d1), -1)
-      probe(keyDiff(keysOf(s1.deletes.filterNot(s2.deletes.toSet)), d2), 1)
+      // positions only enter D through files, so D2∖D1 lives in the NEW
+      // delete files (minus positions v1 already had) — changed files
+      // are all that is read beyond the probe of carried data
+      probe(positionDiff(positionsOf(s2.deletes.filterNot(s1.deletes.toSet)), d1), -1)
+      probe(positionDiff(positionsOf(s1.deletes.filterNot(s2.deletes.toSet)), d2), 1)
     }
     sides.result().reduceOption(_.unionByName(_)) match {
       case None => // identical file sets: an empty feed with the v2 shape
@@ -3170,8 +3097,8 @@ object TxnTable {
     *  - the delete set either did not move, or GREW by position
     *    sidecars whose footer `_file` bounds provably exclude every
     *    touched file (a concurrent MoR statement on other files; a
-    *    stat-less or equality-shape delete file conservatively covers
-    *    everything and refuses). Tombstones landing ON a touched file
+    *    stat-less delete file conservatively covers everything and
+    *    refuses). Tombstones landing ON a touched file
     *    refuse — admitting them would resurrect the concurrently
     *    deleted rows through our rewrite;
     *  - schema / transforms / metadata-column lists are unchanged.
@@ -3200,8 +3127,7 @@ object TxnTable {
     if (cur.transforms != planned.transforms) return Some("transforms changed")
     if (cur.statsCols != planned.statsCols) return Some("statsCols changed")
     if (cur.bloomCols != planned.bloomCols) return Some("bloomCols changed")
-    if (cur.deletes == planned.deletes &&
-      cur.deleteCols == planned.deleteCols) None
+    if (cur.deletes == planned.deletes) None
     else {
       val plannedD = planned.deletes.toSet
       // CONSOLIDATED sidecars whose recorded provenance is a subset of
@@ -3224,10 +3150,6 @@ object TxnTable {
       if (!missing.forall(foldedIntact.contains))
         Some("the delete set shrank/rewrote (concurrent delete compaction " +
           "without folded-intact provenance)")
-      else if (!isPosShape(cur))
-        Some("the concurrent delete files are equality-shape")
-      else if (!(plannedD.isEmpty || isPosShape(planned)))
-        Some("the planned delete files are equality-shape")
       else {
         val newOnes = cur.deletes
           .filterNot(plannedD).filterNot(consFromPlanned.keySet)
@@ -3322,9 +3244,7 @@ object TxnTable {
     * snapshot`, provably safe concurrency REBASES instead
     * ([[admissibleUnderSnapshot]] — appends cannot move a file's
     * ordinals, and commits touching provably disjoint files cannot
-    * invalidate this statement's tombstones).
-    * Refuses equality-shape MoR liveness — one shape at a time,
-    * `compactDeletes` first. */
+    * invalidate this statement's tombstones). */
   private[graft] def commitDelta(s: SparkSession, root: String,
       expectedVersion: Long, addedData: Seq[String],
       posDeletes: Seq[String], opTag: String): Option[Snapshot] = {
@@ -3362,10 +3282,6 @@ object TxnTable {
     var meta: Option[FileMeta] = None
     retrying(rowLevelAttempts(rebase)) {
       val cur = latestRequired(s, root)
-      require(cur.deletes.isEmpty || isPosShape(cur),
-        s"SQL $opTag (merge-on-read): snapshot v${cur.version} carries " +
-          s"equality-shape delete files on '${cur.deleteCols.mkString(",")}' — " +
-          "one MoR shape per table; run TxnTable.compactDeletes first")
       if (cur.version != expectedVersion) {
         val refusal =
           if (rebase) admissibleUnderSnapshot(s, root, planned, cur, touched)
@@ -3378,7 +3294,7 @@ object TxnTable {
       if (meta.isEmpty) meta = Some(stagedMeta(s, root, addedData,
         cur.statsCols, cur.bloomCols, cur.transforms))
       Some(commit(s, root, appended(cur, opTag, addedData, meta.get)
-        .copy(deletes = cur.deletes ++ posDeletes, deleteCols = PosDeleteCols)))
+        .copy(deletes = cur.deletes ++ posDeletes)))
     }
   }
 
@@ -3393,7 +3309,7 @@ object TxnTable {
   private[graft] def posDeleteMap(s: SparkSession, root: String,
       snap: Snapshot, files: Seq[String],
       cap: Int = 5000000): Map[String, Array[Long]] = {
-    if (snap.deletes.isEmpty || !isPosShape(snap)) return Map.empty
+    if (snap.deletes.isEmpty) return Map.empty
     import org.apache.spark.sql.functions.col
     val want = files.toSet
     val rows = readFiles(s, root, snap.deletes)
@@ -3407,76 +3323,71 @@ object TxnTable {
     }.toMap
   }
 
-  /** MERGE-ON-READ equality delete — the O(deleted keys) counterpart of
-    * the copy-on-write [[deleteWhere]]: commit a small parquet of
-    * deleted KEYS and leave every data file untouched; readers
-    * anti-join the keys out ([[readAsOf]]) until [[compactDeletes]]
-    * folds them in. This is the Iceberg equality-delete-file shape, and
-    * the missing half of the delete cost model: at 100 TB a GDPR
-    * delete of a handful of keys must not rewrite the terabyte files
-    * that contain them — CoW pays the rewrite at delete time for
-    * merge-free reads, MoR pays a per-read anti-join for a
-    * metadata-cheap delete; tables pick per workload and [[compactTxn]]
-    * / [[compactDeletes]] moves between the regimes. Consecutive MoR
-    * deletes accumulate delete files; the delete key — one column or a
-    * COMPOSITE column list (real GDPR keys are often (user_id, source))
-    * — is fixed at first use (one anti-join key per table — the
-    * equality-delete contract; composite keys match null-safe on every
-    * component).
-    * Raw-file code paths (readPruned / readPointLookup / CoW
-    * deleteWhere / mergeInto) REFUSE while MoR deletes are live: they
-    * bypass the read-path merge and would silently resurrect rows
-    * ([[changesBetween]] instead folds the delete files in as keyed
-    * delete events — CDC stays live through a MoR delete).
-    * Snapshot isolation and time travel are
-    * unchanged — an old version without the delete files still reads
-    * the deleted rows, and [[vacuum]] treats delete files as
-    * referenced data. */
+  /** MERGE-ON-READ delete by key — the counterpart of the
+    * copy-on-write [[deleteWhere]] that rewrites no data file: resolve
+    * `keys` against the head in one pass (the head's data files scanned
+    * with their (file, row ordinal), null-safe semi-joined to the keys
+    * on every key column), stage the matched positions as
+    * position-delete files — the same shape SQL row-level statements
+    * write in `merge-on-read` mode — and commit them beside the head's
+    * live deletes. Readers mask the positions ([[readAsOf]]) until
+    * [[compactDeletes]] folds them in. CoW pays the rewrite at delete
+    * time for merge-free reads; MoR pays a data scan and a kilobyte
+    * tombstone at delete time and a per-read mask after.
+    *
+    * The delete reads the data AS OF ITS COMMIT: a lost commit race
+    * re-resolves the keys against the new head, so racing-appended rows
+    * with a deleted key are deleted too, while a row appended after the
+    * commit is never masked — the same table [[deleteWhere]] on the
+    * keys would give. No commit (the head is returned) when no live
+    * row matches. Raw-file code paths (readPruned / readPointLookup /
+    * CoW deleteWhere / mergeInto) REFUSE while MoR deletes are live
+    * ([[changesBetween]] instead folds the delete files in as delete
+    * events). Time travel is unchanged — an old version without the
+    * delete files still reads the deleted rows, and [[vacuum]] treats
+    * delete files as referenced data. */
   def deleteKeysMor(s: SparkSession, root: String, keyCol: String,
                     keys: DataFrame): Snapshot =
     deleteKeysMor(s, root, Seq(keyCol), keys)
 
   /** Composite-key form: `keys` carries one row per deleted key tuple
-    * over `keyCols`; rows matching EVERY component (null-safe) merge
-    * out. Same refuse/fold semantics as the single-column form — the
-    * key column LIST is fixed at first use. */
+    * over `keyCols`; rows matching EVERY component (null-safe) are
+    * deleted. */
   def deleteKeysMor(s: SparkSession, root: String, keyCols: Seq[String],
                     keys: DataFrame): Snapshot = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
     require(keyCols.distinct == keyCols,
       s"duplicate delete key columns: $keyCols")
     import org.apache.spark.sql.functions.col
-    // delete-KEY files are not data files: no transform fan-out. Staged
-    // ONCE — on a lost commit race they re-commit unchanged on the new
-    // head: an equality delete names KEYS, not files, so it composes
-    // with a racing append the way a production store resolves this
-    // cell of the conflict matrix (the delete applies to the table AS
-    // OF ITS COMMIT, racing-appended rows with a deleted key included —
-    // Iceberg's snapshot-isolation default; a writer wanting
-    // serializable append-vs-delete validation re-reads and re-issues).
-    // A racing MoR delete merges (both key files live); a racing
-    // compactDeletes re-keys the table, so the key-list check re-runs
-    // against every new head.
-    var staged: Option[(Seq[String], Seq[String])] = None // (files, key cols)
     retrying(WriterAttempts) {
       val cur = latestRequired(s, root)
       cur.schema.foreach(sc => keyCols.foreach(c =>
         require(ColumnMapping.logicalView(sc).fieldNames.contains(c),
           s"delete column '$c' is not a table column")))
-      // delete-key files and the recorded key list are PHYSICAL — they
-      // address file contents, exactly like stats columns
-      val keyColsP = keyCols.map(physCol(cur, _))
-      require(cur.deleteCols.isEmpty || cur.deleteCols == keyColsP,
-        s"table already carries MoR deletes on '${cur.deleteCols.mkString(",")}'" +
-          "; one equality-delete key per table")
-      if (staged.isEmpty) staged = Some((stage(s, root,
-        keys.select(keyCols.map(col): _*).distinct().toDF(keyColsP: _*)), keyColsP))
-      val (files, stagedKeyColsP) = staged.get
-      require(keyColsP == stagedKeyColsP,
-        "concurrent RENAME/DROP COLUMN moved the delete key between stage " +
-          "and commit — re-run the delete")
-      commit(s, root, cur.copy(version = cur.version + 1, op = "delete-mor",
-        deletes = cur.deletes ++ files, deleteCols = keyColsP))
+      if (cur.files.isEmpty) cur
+      else withStagingDir(s, root) { rel =>
+        // data files hold PHYSICAL names; the keys probe them there. A
+        // semi-join needs no distinct keys. Rows a live delete already
+        // masks may match again: a duplicate tombstone is legal, every
+        // mask dedups
+        val keyColsP = keyCols.map(physCol(cur, _))
+        val ks = keys.select(keyCols.map(col): _*)
+          .toDF(keyColsP.map("_gdel_key_" + _): _*)
+        val data = scanFiles(s, root, cur, cur.files).select(
+          relFileCol.as("_gdel_file") +: col("_metadata.row_index").as("_gdel_pos") +:
+            keyColsP.map(col): _*)
+        // right-sized like every writer's output: a small table's
+        // tombstones land in one sidecar, not one per scan partition
+        val hits = Compact.rightSized(data.join(ks,
+            keyColsP.map(c => data(c) <=> ks("_gdel_key_" + c)).reduce(_ && _),
+            "left_semi")
+          .select(col("_gdel_file").as("_file"), col("_gdel_pos").as("_pos")))
+          .sortWithinPartitions(PosDeleteCols.map(col): _*)
+        val staged = dropEmptyParts(s, root, stageDeleteFiles(s, root, rel, hits))
+        if (staged.isEmpty) cur
+        else commit(s, root, cur.copy(version = cur.version + 1,
+          op = "delete-mor", deletes = cur.deletes ++ staged))
+      }
     }
   }
 
@@ -3489,8 +3400,8 @@ object TxnTable {
       val cur = latestRequired(s, root)
       if (cur.deletes.isEmpty) cur
       else withStagingDir(s, root) { rel =>
-        // the anti-joined view IS the new content — resolved against
-        // THIS head, so unlike append/delete-mor retries the staged
+        // the masked view IS the new content — resolved against
+        // THIS head, so unlike append retries the staged
         // result is STALE after a lost race (a racing append's rows
         // would be silently dropped by re-committing it): every attempt
         // re-reads and re-stages from the new head, and a lost
@@ -3558,8 +3469,7 @@ object TxnTable {
     * feed emits nothing. Retries on a lost commit race by re-resolving
     * against the new head ([[retrying]] — a consolidation
     * staged against a stale snapshot could resurrect a racing
-    * statement's deletes). No-op on a tombstone-free table; refuses
-    * equality shape (those are key-scale already — fold or keep). */
+    * statement's deletes). No-op on a tombstone-free table. */
   /** Auto-sizing budget for [[compactPosDeletes]] (`targetFiles = 0`):
     * consolidated sidecars hold at most this many entries each. */
   val CompactEntriesPerSidecarKey =
@@ -3580,11 +3490,6 @@ object TxnTable {
       val cur = latestRequired(s, root)
       if (cur.deletes.isEmpty) cur
       else {
-        require(isPosShape(cur),
-          s"snapshot v${cur.version} carries EQUALITY-shape delete files " +
-            s"on '${cur.deleteCols.mkString(",")}' — compactPosDeletes " +
-            "consolidates position sidecars; fold equality deletes with " +
-            "compactDeletes")
         val base = root.stripSuffix("/")
         // auto-size from the live entry count (footer metas — cached,
         // no data pages) so per-sidecar coverage stays bounded however
@@ -3630,7 +3535,6 @@ object TxnTable {
             }
           commit(s, root, cur.copy(version = cur.version + 1,
             op = "compact-pos-deletes", deletes = staged,
-            deleteCols = if (staged.isEmpty) Nil else PosDeleteCols,
             // provenance: each consolidated sidecar records the delete
             // files it folded — "the delete set was preserved" becomes a
             // manifest fact, so a row-level statement planned against
@@ -3638,46 +3542,6 @@ object TxnTable {
             // maintenance commit instead of refusing on content
             // equality it cannot re-derive ([[admissibleUnderSnapshot]])
             delProv = staged.map(_ -> cur.deletes).toMap))
-        }
-      }
-    }
-  }
-
-  /** The EQUALITY-shape sibling of [[compactPosDeletes]]: merge the
-    * delete-KEY files consecutive [[deleteKeysMor]] calls accumulate
-    * into `targetFiles` deduped, key-sorted ones — every data file
-    * carries by path, cost O(live delete keys). Overlapping GDPR
-    * sweeps (the same user deleted by several statements) collapse to
-    * one key row; the visible key SET is preserved exactly, so every
-    * read surface and the change feed are invariant ("spent" keys that
-    * no longer match any row are kept — dropping them would need a
-    * data scan, which is [[compactDeletes]]' job). Maintenance-
-    * classified (`compact-delete-keys`): streams skip it, CDC nets
-    * empty. Refuses position shape (that is [[compactPosDeletes]]);
-    * no-op on a delete-free table. Same re-resolve-on-lost-race loop
-    * as its sibling. */
-  def compactDeleteKeys(s: SparkSession, root: String,
-                        targetFiles: Int = 1): Snapshot = {
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    import org.apache.spark.sql.functions.col
-    retrying(WriterAttempts) {
-      val cur = latestRequired(s, root)
-      if (cur.deletes.isEmpty) cur
-      else {
-        require(!isPosShape(cur),
-          s"snapshot v${cur.version} carries POSITION-shape delete files — " +
-            "compactDeleteKeys consolidates equality delete KEYS; use " +
-            "compactPosDeletes for position sidecars")
-        val base = root.stripSuffix("/")
-        val consolidated = s.read
-          .parquet(cur.deletes.map(f => s"$base/$f"): _*)
-          .select(cur.deleteCols.map(col): _*).distinct()
-          .repartitionByRange(targetFiles, cur.deleteCols.map(col): _*)
-          .sortWithinPartitions(cur.deleteCols.map(col): _*)
-        withStagingDir(s, root) { rel =>
-          commit(s, root, cur.copy(version = cur.version + 1,
-            op = "compact-delete-keys",
-            deletes = stageDeleteFiles(s, root, rel, consolidated)))
         }
       }
     }
@@ -4023,7 +3887,7 @@ object TxnTable {
   private val StagedMarkerRe = "^staged-[a-f0-9]+\\.txt$".r
 
   /** Every data-pool file some retained manifest can still reach:
-    * `keep` versions' files AND their MoR delete-key files (vacuuming
+    * `keep` versions' files AND their MoR delete files (vacuuming
     * one would silently resurrect its deleted rows), and branch
     * commits' files (shared-pool paths only the branch manifests know
     * about). Returns (data+delete files, manifest segments). */

@@ -221,15 +221,14 @@ case class TxnVersionOffset(version: Long) extends Offset {
   * window classification is [[graft.streaming.TxnStreamSource]]'s,
   * decided from manifest facts (appends emit, maintenance commits are
   * the format's `dataChange=false` and emit nothing, anything else
-  * refuses loud unless `skipChangeCommits`). Two deliberate deltas from
-  * the v1 path source, both scan-level necessities:
-  *  - a MoR-live window REFUSES even as an append (a raw file scan
-  *    cannot anti-join the delete keys; the v1 path source and the CDC
-  *    feed both mask — use those, or `compactDeletes`);
-  *  - rows stream through Spark's own `ParquetPartitionReaderFactory`
-  *    (whole-stage-codegen vectorized batches, zero re-buffering) under
-  *    the schema pinned at stream start — older files upcast/null-fill
-  *    exactly as the batch scan does.
+  * refuses loud unless `skipChangeCommits`). Live merge-on-read deletes
+  * need no mask here: their positions name only files that existed
+  * when they committed, never an append window's new files. One
+  * deliberate delta from the v1 path source, a scan-level necessity:
+  * rows stream through Spark's own `ParquetPartitionReaderFactory`
+  * (whole-stage-codegen vectorized batches, zero re-buffering) under
+  * the schema pinned at stream start — older files upcast/null-fill
+  * exactly as the batch scan does.
   *
   * Options (via `spark.readStream.option(...)`): `startVersion`
   * (default: the resolved snapshot's version — tail-only, the engine's
@@ -287,18 +286,7 @@ class GraftTxnMicroBatchStream(spark: SparkSession, root: String,
     val added = cur.files.filterNot(prevFiles)
     val removed = prevFiles -- cur.files.toSet
     val isAppend = removed.isEmpty && prevDeletes == cur.deletes.toSet
-    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "compact-delete-keys", "zorder")(cur.op)
-    if (isAppend && cur.deletes.nonEmpty && added.nonEmpty &&
-        cur.deleteCols != graft.sinks.TxnTable.PosDeleteCols)
-      // the file-partition scan cannot anti-join live EQUALITY delete
-      // keys; the v1 path source and the CDC feed both mask — refuse,
-      // never serve rows a batch reader would hide. POSITION-shape
-      // deletes only reference files that existed at their own commit,
-      // never an append window's new files — raw emission is exact.
-      throw new IllegalStateException(
-        s"micro-batch stream over $root: v$v appends onto live merge-on-read " +
-          "deletes, which a raw file scan cannot mask — compactDeletes first, " +
-          "or stream by path (masking v1 source) / readChangeFeed")
+    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "zorder")(cur.op)
     if (isAppend) Some(added).filter(_.nonEmpty)
     else if (maintenance || skipChangeCommits) None
     else throw new IllegalStateException(

@@ -289,7 +289,7 @@ class GraftPosScan(spark: SparkSession, root: String, snap: Snapshot,
     * bounds) — pure parquet-footer reads, cached per JVM. Drives the
     * resolution-mode switch below. */
   private lazy val sidecars: Seq[GraftSidecars.Meta] =
-    if (!maskLive || snap.deletes.isEmpty || !TxnTable.isPosShape(snap)) Nil
+    if (!maskLive || snap.deletes.isEmpty) Nil
     else GraftSidecars.metas(spark, base, snap.deletes)
 
   /** TWO tombstone-resolution modes, switched on the total live entry

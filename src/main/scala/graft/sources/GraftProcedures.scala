@@ -55,7 +55,7 @@ object GraftProcedures {
 
   private[sources] def names: Seq[String] = Seq(
     "compact", "compact_where", "zorder", "compact_deletes",
-    "rewrite_position_deletes", "rewrite_delete_keys", "vacuum",
+    "rewrite_position_deletes", "vacuum",
     "orphan_files", "maintain_report", "restore", "create_tag",
     "create_branch", "fast_forward", "replay_branch")
 
@@ -128,7 +128,7 @@ object GraftProcedures {
 
     proc(catalog, "compact_deletes",
       "fold live merge-on-read delete files into a clean copy-on-write " +
-        "snapshot (required before DSv2 scans of a MoR-live table)",
+        "snapshot (merge-free reads; raw-file paths work again)",
       Seq(in("table", StringType, "table name, e.g. 'db.t'")),
       versionFiles) { (s, root, _) =>
       TxnTable.compactDeletes(s, root)
@@ -146,18 +146,6 @@ object GraftProcedures {
             "entries-per-sidecar budget)")),
       versionFiles) { (s, root, args) =>
       TxnTable.compactPosDeletes(s, root, args.int(1))
-    },
-
-    proc(catalog, "rewrite_delete_keys",
-      "consolidate equality delete-KEY files into target_files deduped " +
-        "sorted ones — data files carry by path (the equality sibling " +
-        "of rewrite_position_deletes; overlapping GDPR sweeps collapse)",
-      Seq(
-        in("table", StringType, "table name, e.g. 'db.t'"),
-        inDefault("target_files", IntegerType, "1",
-          "number of consolidated key files")),
-      versionFiles) { (s, root, args) =>
-      TxnTable.compactDeleteKeys(s, root, args.int(1))
     },
 
     proc(catalog, "vacuum",
@@ -334,9 +322,7 @@ object GraftProcedures {
     else ("small_files", "ok",
       s"$small of ${snap.files.size} data files under $smallBytes B", ""))
 
-    val posShape = snap.deletes.nonEmpty &&
-      snap.deleteCols == TxnTable.PosDeleteCols
-    if (posShape) {
+    if (snap.deletes.nonEmpty) {
       val metas = GraftSidecars.metas(s, base, snap.deletes)
       val entries = metas.map(_.rows).sum
       val resolveMax = s.conf
@@ -363,16 +349,6 @@ object GraftProcedures {
             "scans run in sidecar mode (correct, task-side resolution)",
           "compact_deletes in the next maintenance window restores " +
             "driver-exact masking"))
-    } else if (snap.deletes.nonEmpty) {
-      val keyFiles = snap.deletes.size
-      out += (if (keyFiles > 4)
-        ("delete_key_files", "action",
-          s"$keyFiles equality delete-key files on " +
-            s"'${snap.deleteCols.mkString(",")}'",
-          "CALL system.rewrite_delete_keys('<table>') to collapse " +
-            "overlapping sweeps; compact_deletes folds them entirely")
-      else ("delete_key_files", "ok",
-        s"$keyFiles equality delete-key files", ""))
     } else out += (("delete_debt", "ok", "no live delete files", ""))
 
     val nv = TxnTable.versions(s, root).size

@@ -57,7 +57,7 @@ import graft.sinks.TxnTable.Snapshot
   *    file is scanned and rewritten — a full-table rewrite is the
   *    correct degenerate case, never an incorrect narrow one.
   *  - MoR-live snapshots refuse at operation build (rewriting a file
-  *    without applying its pending delete keys would resurrect rows);
+  *    without applying its pending deletes would resurrect rows);
   *    `compactDeletes` first.
   *  - staged files keep the table's hidden-partitioning fan-out
   *    ([[GraftFanout]] — bit-exact transform values or flat fallback),

@@ -51,11 +51,11 @@ import graft.sinks.TxnTable.Snapshot
   * SQL writes route THROUGH the txn writer (never around it): INSERT
   * INTO/OVERWRITE via the V1 write bridge, DELETE FROM / TRUNCATE via
   * [[TxnTable.deleteWhereBounded]] with bounds derived from the pushed
-  * filters (see [[GraftTxnTableV2]]). Deliberate boundaries
-  * (refuse-loud, never silent): a snapshot with LIVE merge-on-read
-  * deletes refuses the SCAN (the FileIndex cannot anti-join) —
-  * `compactDeletes` first, or read through [[TxnTable.read]], which
-  * merges; ALTER TABLE supports the write-path evolution rules
+  * filters (see [[GraftTxnTableV2]]). A snapshot with LIVE
+  * merge-on-read deletes scans through the position-aware
+  * [[GraftPosScanBuilder]], which masks them in its readers. Deliberate
+  * boundary (refuse-loud, never silent): ALTER TABLE supports the
+  * write-path evolution rules
   * (trailing nullable adds, lossless widening) plus metadata-only
   * RENAME/DROP COLUMN through the column mapping — see
   * [[GraftCatalog.alterTable]] — and refuses everything else. */
@@ -323,23 +323,16 @@ class GraftTxnTableV2(spark: SparkSession, val root: String, val snap: Snapshot,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // scan-time, not load-time: a MoR-live table stays WRITABLE (append
-    // is delete-independent) and only the un-mergeable read refuses.
-    // POSITION-shape deletes ARE mergeable here: the position-aware
-    // scan masks tombstoned ordinals in its readers (row-based — the
-    // price of exact ordinals — until compactDeletes folds the debt).
-    if (snap.deletes.nonEmpty && TxnTable.isPosShape(snap))
+    // live deletes scan through the position-aware builder, which
+    // masks tombstoned ordinals in its readers (row-based — the price
+    // of exact ordinals — until compactDeletes folds the debt)
+    if (snap.deletes.nonEmpty)
       // forward the resolution context: the change-feed gate must see
       // the real options and by-name streaming must stay reachable —
-      // a pos-delete-live table streams like a clean one (the
-      // micro-batch source reads commit windows, not the masked head)
+      // a delete-live table streams like a clean one (the micro-batch
+      // source reads commit windows, not the masked head)
       return new GraftPosScanBuilder(spark, root, snap, schema,
         maskLive = true, streamable = byName, options = options)
-    require(snap.deletes.isEmpty,
-      s"snapshot v${snap.version} at $root carries ${snap.deletes.size} live " +
-        "merge-on-read delete file(s); the DSv2 scan cannot apply them — run " +
-        "TxnTable.compactDeletes (or read via TxnTable.read, readAsOf or " +
-        "readBranch, which merge)")
     // a mapped table scans under its PHYSICAL schema (what the parquet
     // bytes say); the builder translates pushed names both ways and the
     // scan reports the logical read schema back to Spark — rows are
@@ -416,15 +409,8 @@ class GraftTxnTableV2(spark: SparkSession, val root: String, val snap: Snapshot,
     val mor = TxnTable.rowLevelMode(spark, root) == "merge-on-read"
     // fail at plan time, not mid-rewrite: a CoW rewrite replacing a
     // file without applying pending MoR deletes would resurrect rows;
-    // a position delta composes with LIVE POSITION deletes (its scan
-    // masks them) but not with equality-shape keys (one shape at a
-    // time — commitDelta re-checks at commit)
-    if (mor)
-      require(snap.deletes.isEmpty || TxnTable.isPosShape(snap),
-        s"snapshot v${snap.version} at $root carries equality-shape " +
-          "merge-on-read delete file(s); one MoR shape per table — run " +
-          "TxnTable.compactDeletes first")
-    else
+    // a position delta composes with live deletes (its scan masks them)
+    if (!mor)
       require(snap.deletes.isEmpty,
         s"snapshot v${snap.version} at $root carries ${snap.deletes.size} live " +
           "merge-on-read delete file(s); row-level SQL ops rewrite whole files " +

@@ -18,8 +18,8 @@ import graft.sinks.TxnTable
   * Window admission is decided from MANIFEST FACTS, refuse-loud:
   *  - a window that only ADDS data files (no files removed, MoR
   *    delete-file set unchanged) is an append — its new files' rows
-  *    emit (anti-joined against the snapshot's live delete keys, so a
-  *    stream over a MoR table sees effective content);
+  *    emit as written (live deletes never name an append's new
+  *    files, so a stream over a MoR table sees effective content);
   *  - a MAINTENANCE commit (`compact` / `compact-deletes` / `zorder`)
   *    is content-preserving by the writer's commit contract — the op
   *    tag is this format's `dataChange = false` — and emits nothing;
@@ -103,7 +103,7 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
     val added = cur.files.filterNot(prevFiles)
     val removed = prevFiles -- cur.files.toSet
     val isAppend = removed.isEmpty && prevDeletes == cur.deletes.toSet
-    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "compact-delete-keys", "zorder")(cur.op)
+    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "zorder")(cur.op)
     if (isAppend) {
       if (added.isEmpty) None
       else {
@@ -112,9 +112,11 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
         // under a column mapping (at stream start OR introduced
         // mid-stream) the files carry frozen PHYSICAL names: read the
         // window under the START-TIME physical schema (schema-on-read
-        // nulls columns a window's files lack), MoR-merge in physical
-        // space, alias back to the pinned logical names last. Unmapped
-        // streams keep the exact pre-mapping path.
+        // nulls columns a window's files lack), alias back to the
+        // pinned logical names last. Unmapped
+        // streams keep the exact pre-mapping path. No delete mask: live
+        // deletes address rows of files that existed at their own
+        // commit, never an append window's new files.
         val mapped = pinnedStorage.exists(ColumnMapping.hasMapping) ||
           cur.schema.exists(ColumnMapping.hasMapping)
         require(!mapped || pinnedStorage.isDefined,
@@ -124,24 +126,8 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
           if (mapped) s.read.schema(ColumnMapping.physicalSchema(pinnedStorage.get))
           else cur.schema.fold(s.read)(s.read.schema)
         val rows = reader.parquet(added.map(f => s"$base/$f"): _*)
-        // a MoR table's live delete keys mask the new files too — the
-        // stream emits EFFECTIVE content, exactly what read() serves.
-        // POSITION-shape deletes address rows of files that existed at
-        // their own commit; an append window's NEW files are never
-        // referenced (a later position delete is a delete-set change,
-        // which refuses/skips above) — the mask is provably a no-op.
-        val masked =
-          if (cur.deletes.isEmpty ||
-              cur.deleteCols == graft.sinks.TxnTable.PosDeleteCols) rows
-          else {
-            val keys = graft.sinks.TxnTable.readFiles(s, tableRoot, cur.deletes)
-              .select(cur.deleteCols.map(c => col(c).as(s"_del_$c")): _*).distinct()
-            rows.join(keys,
-              cur.deleteCols.map(c => rows(c) <=> keys(s"_del_$c")).reduce(_ && _),
-              "left_anti")
-          }
         Some(if (mapped)
-          ColumnMapping.aliasToLogical(masked, pinnedStorage.get) else masked)
+          ColumnMapping.aliasToLogical(rows, pinnedStorage.get) else rows)
       }
     } else if (maintenance || skipChangeCommits) None
     else throw new IllegalStateException(

@@ -16,9 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * The true entry points (mains, classes Spark instantiates by name,
   * the paper's own stages) and the few table operations no SQL or DSv2
   * path covers are listed with a one-line reason each in
-  * `src/test/resources/callers_allow.txt`. The scan is lexical, so it
-  * misses an uncalled member that shares its name with another one;
-  * `-Wunused` in build.sbt covers the private half. */
+  * `src/test/resources/callers_allow.txt`. The scan is lexical. Its
+  * first pass counts a name anywhere, so it misses an uncalled def that
+  * shares its name with another identifier; the per-object pass then
+  * counts a def only where it can be reached: qualified as
+  * `Object.name`, unqualified in its own file, or unqualified in a file
+  * that imports it. `-Wunused` in build.sbt covers the private half. */
 class CallersSpec extends AnyFunSuite {
   import CallersSpec._
 
@@ -61,6 +64,17 @@ class CallersSpec extends AnyFunSuite {
       "no caller in src/main or pipebench/src (delete it, or list it in " +
         "callers_allow.txt with a reason):\n" + uncalled.map(_.toString).mkString("\n"))
   }
+
+  test("every public def of an object is reached through its object, its own file or an import") {
+    // the `main` of an allow-listed object is that entry point itself
+    def entry(d: Definition) = d.name == "main" && allow.contains(d.key.stripSuffix(".main"))
+    val uncalled = defs.filter(d => d.kind == "def" && !allow.contains(d.key) && !entry(d) &&
+      !sources.exists { case (p, text) => reaches(text, p == d.path, d) })
+    assert(uncalled.isEmpty,
+      "no qualified, same-file or imported use in src/main or pipebench/src " +
+        "(delete it, or list it in callers_allow.txt with a reason):\n" +
+        uncalled.map(_.toString).mkString("\n"))
+  }
 }
 
 object CallersSpec {
@@ -93,6 +107,22 @@ object CallersSpec {
         case _ => None
       }
     }
+  }
+
+  /** Does `text` (one source file, comments stripped) use def `d`:
+    * `Object.name` anywhere, or a bare `name` in the def's own file
+    * (besides the definition) or in a file importing `Object._`,
+    * `Object.name` or `Object.{..., name, ...}`? Import lines are not
+    * uses. */
+  def reaches(text: String, ownFile: Boolean, d: Definition): Boolean = {
+    val obj = d.key.stripSuffix("." + d.name)
+    val name = java.util.regex.Pattern.quote(d.name)
+    def bare(t: String) = s"\\b$name\\b".r.findAllIn(t).size
+    val imported = s"""\\bimport\\s+(?:[\\w.]+\\.)?$obj\\.(_|$name\\b|\\{[^}]*\\b(?:_|$name)\\b[^}]*\\})""".r
+    val body = text.split("\n").filterNot(_.trim.startsWith("import ")).mkString("\n")
+    s"\\b$obj\\s*\\.\\s*$name\\b".r.findFirstIn(text).nonEmpty ||
+      (ownFile && bare(body) > 1) ||
+      (!ownFile && imported.findFirstIn(text).nonEmpty && bare(body) > 0)
   }
 
   /** Source text with `//` and (nested) `/* */` comments removed, string

@@ -39,15 +39,6 @@ class LshSkewSpec extends AnyFunSuite {
     assert(hotIds.toSeq === (0L until 10L))
   }
 
-  test("bucketOverflow reports exactly the capped-out buckets") {
-    val s = spark
-    import s.implicits._
-    val over = LlmOps.bucketOverflow(bands, cap = 10)
-      .select($"key", $"n_ids").as[(String, Long)].collect().toSeq
-    assert(over === Seq(("hot", 100L)))
-    assert(LlmOps.bucketOverflow(bands, cap = 1000).count() === 0)
-  }
-
   test("default cap is far above real testdata bucket sizes (results unchanged)") {
     // sf0.001 documents: the largest (band,key) bucket must sit well under
     // BucketCap, so the capped plan is value-identical to the uncapped

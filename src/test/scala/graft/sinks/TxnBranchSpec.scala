@@ -177,7 +177,7 @@ class TxnBranchSpec extends AnyFunSuite {
     assert(TxnTable.tags(spark, root).isEmpty)
   }
 
-  test("a branch holding live MoR deletes reads merged through readBranch") {
+  test("a branch holding live MoR deletes reads merged through versionAsOf") {
     val root = freshRoot()
     TxnTable.append(spark, root, df(1, 2, 3).coalesce(1), statsCols = Seq("id"))
     val s = spark
@@ -186,12 +186,10 @@ class TxnBranchSpec extends AnyFunSuite {
     TxnTable.createBranch(spark, root, "audit")
     TxnTable.appendToBranch(spark, root, "audit", df(10).coalesce(1))
     assert(TxnTable.branchHead(spark, root, "audit").deletes.nonEmpty)
-    assert(ids(TxnTable.readBranch(spark, root, "audit")) === Set(1L, 3L, 10L))
-    // the DSv2 scan serves no equality deletes, and says where to go
-    val e = intercept[IllegalArgumentException] {
-      branchRead(root, "audit").collect()
-    }
-    assert(e.getMessage.contains("readBranch"))
+    // the DSv2 scan masks the live deletes: fork content minus the
+    // deleted key, plus the branch append
+    assert(ids(branchRead(root, "audit")) === Set(1L, 3L, 10L))
+    assert(ids(TxnTable.read(spark, root)) === Set(1L, 3L))
   }
 
   test("refs metadata table lists branches with their head version") {

@@ -50,13 +50,14 @@ class TxnMetaAggSpec extends AnyFunSuite {
     assert(TxnTable.metaCount(spark, root, Some(1L)) === Some(3L))
   }
 
-  test("metaCount: refuses while MoR deletes are live, answers after the fold") {
+  test("metaCount: exact while MoR deletes are live; metaMinMax refuses until the fold") {
     val root = freshRoot()
     val s = spark; import s.implicits._
     TxnTable.append(spark, root, df(1, 2, 3, 4).coalesce(1), statsCols = Seq("id"))
     TxnTable.deleteKeysMor(spark, root, "id", Seq(2L).toDF("id"))
-    // the merged row set is not knowable from metadata — refuse
-    assert(TxnTable.metaCount(spark, root) === None)
+    // each tombstone masks one row: the count stays exact; the masked
+    // row's value may have been the min or max — refuse
+    assert(TxnTable.metaCount(spark, root) === Some(3L))
     assert(TxnTable.metaMinMax(spark, root, "id") === None)
     TxnTable.compactDeletes(spark, root)
     assert(TxnTable.metaCount(spark, root) === Some(3L))

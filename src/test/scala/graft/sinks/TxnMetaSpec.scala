@@ -55,7 +55,6 @@ class TxnMetaSpec extends AnyFunSuite {
     val h = TxnMeta.history(spark, root).orderBy("version").collect()
     assert(h.map(_.getAs[String]("op")).toSeq === Seq("append", "delete-mor"))
     assert(h.last.getAs[Int]("n_delete_files") === 1)
-    assert(h.last.getAs[Seq[String]]("delete_cols") === Seq("id"))
     assert(h.forall(_.getAs[Seq[String]]("transforms") === Seq("day_ts")))
   }
 

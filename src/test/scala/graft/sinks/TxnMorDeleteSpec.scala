@@ -1,19 +1,23 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Merge-on-read equality deletes ([[TxnTable.deleteKeysMor]]): deletes
-  * cost O(keys) and rewrite nothing (file path identity), readers merge
-  * them out, time travel still sees pre-delete rows, raw-file paths
-  * refuse until [[TxnTable.compactDeletes]] folds the deletes in
-  * (except the change feed, which is MoR-native and emits the delete
-  * file as keyed delete events), and vacuum treats delete files as
-  * referenced data. */
+/** Merge-on-read deletes by key ([[TxnTable.deleteKeysMor]]): the keys
+  * resolve to position deletes at delete time and rewrite nothing (file
+  * path identity), readers mask them, time travel still sees pre-delete
+  * rows, raw-file paths refuse until [[TxnTable.compactDeletes]] folds
+  * the deletes in (except the change feed, which is MoR-native and
+  * emits the delete file as delete events), a later append of a
+  * deleted key stays visible exactly as after a copy-on-write delete,
+  * and vacuum treats delete files as referenced data. */
 class TxnMorDeleteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -38,7 +42,7 @@ class TxnMorDeleteSpec extends AnyFunSuite {
     val snap = TxnTable.deleteKeysMor(spark, root, "id",
       Seq(3L, 7L, 42L, 999L).toDF("id")) // 999 matches nothing: harmless
     assert(snap.files.toSet === filesBefore, "MoR delete must not rewrite data")
-    assert(snap.deletes.nonEmpty && snap.deleteCol === Some("id"))
+    assert(snap.deletes.nonEmpty)
 
     val ids = TxnTable.read(spark, root).select($"id")
       .collect().map(_.getLong(0)).toSet
@@ -49,13 +53,16 @@ class TxnMorDeleteSpec extends AnyFunSuite {
     // time travel: v1 still sees every row
     assert(TxnTable.readAsOf(spark, root, 1L).count() === 100L)
 
-    // consecutive deletes accumulate
+    // consecutive deletes accumulate, on any key column
     TxnTable.deleteKeysMor(spark, root, "id", Seq(5L).toDF("id"))
     assert(TxnTable.read(spark, root).count() === 96L)
-    // a different delete column is refused
-    intercept[IllegalArgumentException] {
-      TxnTable.deleteKeysMor(spark, root, "grp", Seq(1L).toDF("grp"))
-    }
+    val grp1 = (0L until 100L).filter(_ % 7 == 1).toSet
+    TxnTable.deleteKeysMor(spark, root, "grp", Seq(1L).toDF("grp"))
+    assert(TxnTable.read(spark, root).select($"id").collect().map(_.getLong(0)).toSet ===
+      (0L until 100L).toSet -- Set(3L, 5L, 7L, 42L) -- grp1)
+    // no live row matches: nothing to commit
+    val head = TxnTable.latest(spark, root).get.version
+    assert(TxnTable.deleteKeysMor(spark, root, "id", Seq(999L).toDF("id")).version === head)
   }
 
   test("appends carry live deletes; raw-file paths refuse; compaction folds") {
@@ -120,17 +127,12 @@ class TxnMorDeleteSpec extends AnyFunSuite {
     // on only ONE component (10 % 7 = 3, 5 % 7 = 5) and must NOT delete
     val keys = Seq((3L, 3L), (10L, 4L), (5L, 999L)).toDF("id", "grp")
     val snap = TxnTable.deleteKeysMor(spark, root, Seq("id", "grp"), keys)
-    assert(snap.deleteCols === Seq("id", "grp"))
     val ids = TxnTable.read(spark, root).select($"id")
       .collect().map(_.getLong(0)).toSet
     assert(!ids(3L) && ids(10L) && ids(5L),
       s"composite key must match on EVERY component: $ids")
     assert(TxnTable.read(spark, root).count() === 99L)
 
-    // a different key list is refused (the key is fixed at first use)
-    intercept[IllegalArgumentException] {
-      TxnTable.deleteKeysMor(spark, root, Seq("grp", "id"), keys)
-    }
     // the MoR-native feed emits the composite-keyed pre-image
     val v = snap.version
     val feed = TxnTable.changesBetween(spark, root, v - 1, v)
@@ -142,6 +144,66 @@ class TxnMorDeleteSpec extends AnyFunSuite {
     TxnTable.compactDeletes(spark, root)
     assert(TxnTable.latest(spark, root).get.deletes.isEmpty)
     assert(TxnTable.read(spark, root).collect().map(_.toSeq).toSet === before)
+  }
+
+  test("a row appended after deleteKeysMor with a deleted key stays: " +
+      "read, change feed and stream agree with deleteWhere") {
+    val s = spark
+    import s.implicits._
+    val mor = freshRoot
+    val cow = freshRoot
+    Seq(mor, cow).foreach(seed)
+    TxnTable.deleteKeysMor(spark, mor, "id", Seq(3L).toDF("id"))
+    TxnTable.deleteWhere(spark, cow, col("id") === 3L)
+    val late = Seq((3L, "late", 3L)).toDF("id", "payload", "grp")
+    val ckpt = Files.createTempDirectory("txn_mor_late").toString
+    val q = spark.readStream.format("graft-txn").load(mor)
+      .writeStream.format("memory").queryName("txn_mor_late")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      q.processAllAvailable() // starts after the delete
+      TxnTable.append(spark, mor, late)
+      TxnTable.append(spark, cow, late)
+      q.processAllAvailable()
+      assert(spark.table("txn_mor_late").select($"id", $"payload")
+        .as[(Long, String)].collect().toSeq === Seq((3L, "late")))
+    } finally q.stop()
+
+    def rows(root: String) = TxnTable.read(spark, root)
+      .as[(Long, String, Long)].collect().toSet
+    assert(rows(mor) === rows(cow))
+    assert(rows(mor)((3L, "late", 3L)) && !rows(mor)((3L, "v3", 3L)))
+    def feed(v1: Long, v2: Long) = TxnTable.changesBetween(spark, mor, v1, v2)
+      .select($"id", $"payload", $"_change_type").as[(Long, String, String)]
+      .collect().toSet
+    val head = TxnTable.latest(spark, mor).get.version
+    assert(feed(head - 1, head) === Set((3L, "late", "insert")))
+    assert(feed(1L, head) === Set((3L, "v3", "delete"), (3L, "late", "insert")))
+  }
+
+  test("a manifest carrying equality delete files is refused on load") {
+    val root = freshRoot
+    seed(root)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v1 = {
+      val in = fs.open(new Path(s"$root/_txn/v0000000001.txt"))
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, true)
+      new String(out.toByteArray, StandardCharsets.UTF_8).split("\n").toSeq
+    }
+    def commit(v: Long, tags: String*): Unit = {
+      val o = fs.create(new Path(f"$root/_txn/v$v%010d.txt"), false)
+      val text = (v1.head +: tags) ++ v1.tail
+      try o.write(text.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      finally o.close()
+    }
+    // an older writer's position-delete tag still loads
+    commit(2L, "#delcol\t_file\t_pos")
+    assert(TxnTable.read(spark, root).count() === 100L)
+    // its equality-delete tag does not: the load names the version
+    commit(3L, "#delcol\tid", "#delete\tdata/old/del-0.parquet")
+    val e = intercept[IllegalArgumentException](TxnTable.read(spark, root))
+    assert(e.getMessage.contains("v3") && e.getMessage.contains("equality delete files"))
   }
 
   test("vacuum keeps delete files referenced by retained manifests") {

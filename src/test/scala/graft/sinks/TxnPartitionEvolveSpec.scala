@@ -234,7 +234,7 @@ class TxnPartitionEvolveSpec extends AnyFunSuite {
       "prior files' id stats no longer prune")
   }
 
-  test("changesBetween refuses a re-keyed delete boundary with a clear error") {
+  test("changesBetween diffs across a compactDeletes boundary with a new delete key") {
     val root = freshRoot()
     val s = spark
     import s.implicits._
@@ -244,15 +244,14 @@ class TxnPartitionEvolveSpec extends AnyFunSuite {
     TxnTable.deleteKeysMor(spark, root, "id", Seq(3L, 4L).toDF("id")) // v2
     TxnTable.compactDeletes(spark, root)                              // v3
     TxnTable.deleteKeysMor(spark, root, "v", Seq(10L).toDF("v"))      // v4
-    val e = intercept[IllegalArgumentException] {
-      TxnTable.changesBetween(spark, root, 2, 4).collect()
-    }
-    assert(e.getMessage.contains("delete key columns changed"))
-    // each side of the boundary still diffs fine
+    // deletes are positions whatever key found them: one window spans
+    // the boundary, and each side diffs the same way
     assert(TxnTable.changesBetween(spark, root, 2, 3).count() === 0) // compaction
-    val feed = TxnTable.changesBetween(spark, root, 3, 4)
-    assert(rows(feed.select(col("id"), col("_change_type"), col("_n")))
-      === Set(Seq(5L, "delete", 1L)))
+    Seq(2, 3).foreach { v1 =>
+      val feed = TxnTable.changesBetween(spark, root, v1, 4)
+      assert(rows(feed.select(col("id"), col("_change_type"), col("_n")))
+        === Set(Seq(5L, "delete", 1L)))
+    }
   }
 
   // ---- two-writer conflict matrix --------------------------------------
@@ -283,8 +282,8 @@ class TxnPartitionEvolveSpec extends AnyFunSuite {
     assert(snap.version === 3L, "exactly one commit per writer")
     val ops = (2L to 3L).map(TxnTable.snapshot(spark, root, _).op).toSet
     assert(ops === Set("append", "delete-mor"))
-    // no lost rows, delete applied whole: equality deletes merge out the
-    // keys from the final snapshot regardless of commit order
+    // no lost rows, delete applied whole: a delete that lost the race
+    // re-resolves its keys against the head it commits on
     val got = TxnTable.read(spark, root).select(col("id")).as[Long].collect().toSet
     assert(got === ((1 to 50) ++ (100 to 120)).map(_.toLong).toSet -- (3 to 7).map(_.toLong))
   }

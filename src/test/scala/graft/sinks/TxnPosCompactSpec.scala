@@ -92,7 +92,7 @@ class TxnPosCompactSpec extends AnyFunSuite {
     assert(content("c2") === want)
 
     val after = TxnTable.compactPosDeletes(spark, root)
-    assert(after.deletes.isEmpty && after.deleteCols.isEmpty)
+    assert(after.deletes.isEmpty)
     assert(content("c2") === want)
     // tombstone-free again: the raw pruned read path is admissible once more
     assert(TxnTable.readPruned(spark, root, "id", 1L, 10L)
@@ -128,72 +128,28 @@ class TxnPosCompactSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("the equality sibling compactDeleteKeys: N overlapping GDPR " +
-      "sweeps collapse to one deduped key file, reads invariant, " +
-      "stream crosses it, shapes refuse each other's op") {
-    val s = spark; import s.implicits._
-    val root = s"$warehouse/db/ek1"
-    TxnTable.overwrite(spark, root,
-      spark.range(1, 201).toDF("id").withColumn("v", col("id") * 10L)
-        .repartitionByRange(4, col("id")),
-      statsCols = Seq("id"))
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    TxnTable.deleteKeysMor(spark, root, "id", Seq(7L, 8L).toDF("id"))
-    TxnTable.deleteKeysMor(spark, root, "id", Seq(8L, 60L).toDF("id")) // overlap
-    TxnTable.deleteKeysMor(spark, root, "id", Seq(160L).toDF("id"))
-    val before = TxnTable.latest(spark, root).get
-    assert(before.deletes.size === 3)
-    val want = (1L to 200L).filterNot(Set(7L, 8L, 60L, 160L))
-      .map(i => i -> i * 10).toMap
-
-    val after = TxnTable.compactDeleteKeys(spark, root)
-    assert(after.op === "compact-delete-keys")
-    assert(after.deletes.size === 1 && after.deletes.head.contains("del-"))
-    assert(after.files === before.files) // data by path identity
-    // the consolidated key file holds the DEDUPED set: 4 keys, not 5
-    assert(spark.read.parquet(s"$root/${after.deletes.head}").count() === 4L)
-    assert(TxnTable.read(spark, root).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
-    assert(TxnTable.changesBetween(spark, root, before.version,
-      after.version).count() === 0L)
-
-    // an append-mode stream (by path — MoR-live by-name read refuses by
-    // contract) skips the maintenance commit
-    val base = Files.createTempDirectory("ek_stream").toString
-    val q = spark.readStream.format("graft-txn").load(root)
-      .writeStream.format("memory").queryName("ek_stream")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    try {
-      q.processAllAvailable()
-      TxnTable.compactDeleteKeys(spark, root, targetFiles = 2) // no-op-ish: re-split
-      TxnTable.append(spark, root, spark.range(500, 502).toDF("id")
-        .withColumn("v", col("id") * 10L))
-      q.processAllAvailable()
-      assert(spark.table("ek_stream").select("id")
-        .collect().map(_.getLong(0)).toSet === Set(500L, 501L))
-    } finally q.stop()
-
-    // the shapes refuse each other's op
-    val err = intercept[IllegalArgumentException] {
-      TxnTable.compactPosDeletes(spark, root)
-    }
-    assert(err.getMessage.contains("EQUALITY-shape"))
-    // SQL face
-    spark.sql(s"CALL $cat.system.rewrite_delete_keys('db.ek1')")
-    assert(TxnTable.latest(spark, root).get.op === "compact-delete-keys")
-  }
-
-  test("refuses equality shape; no-op without tombstones; a lost race " +
-      "re-resolves (stale consolidation never commits)") {
+  test("no-op without tombstones; overlapping deleteKeysMor sweeps and " +
+      "a SQL DELETE consolidate into one deduped sidecar") {
     val root = morTable("c4")
     val clean = TxnTable.compactPosDeletes(spark, root)
     assert(clean.version === TxnTable.latest(spark, root).get.version)
 
     import spark.implicits._
-    TxnTable.deleteKeysMor(spark, root, "id", Seq(9L).toDF("id"))
-    val err = intercept[IllegalArgumentException] {
-      TxnTable.compactPosDeletes(spark, root)
-    }
-    assert(err.getMessage.contains("EQUALITY-shape"))
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(7L, 8L).toDF("id"))
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(8L, 60L).toDF("id")) // overlap
+    spark.sql(s"DELETE FROM $cat.db.c4 WHERE id = 160")
+    val before = TxnTable.latest(spark, root).get
+    assert(before.deletes.size >= 3)
+    val want = (1L to 200L).filterNot(Set(7L, 8L, 60L, 160L))
+      .map(i => i -> i * 10).toMap
+    assert(content("c4") === want)
+
+    val after = TxnTable.compactPosDeletes(spark, root, targetFiles = 1)
+    assert(after.deletes.size === 1 && after.files === before.files)
+    // the overlapping sweep tombstoned row 8 twice: 4 entries, not 5
+    assert(spark.read.parquet(s"$root/${after.deletes.head}").count() === 4L)
+    assert(content("c4") === want)
+    assert(TxnTable.changesBetween(spark, root, before.version,
+      after.version).count() === 0L)
   }
 }

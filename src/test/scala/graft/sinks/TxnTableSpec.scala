@@ -103,7 +103,7 @@ class TxnTableSpec extends AnyFunSuite {
     TxnTable.append(spark, root, df(10, 11).coalesce(1))   // inherits statsCol
     TxnTable.append(spark, root, df(20, 21, 22).coalesce(1))
     val snap = TxnTable.latest(spark, root).get
-    assert(snap.statsCol === Some("id"))
+    assert(snap.statsCols.headOption === Some("id"))
     assert(snap.files.size === 3 && snap.stats.size === 3)
     assert(snap.statsOf("id").values.toSet === Set((1L, 3L), (10L, 11L), (20L, 22L)))
 
@@ -378,7 +378,7 @@ class TxnTableSpec extends AnyFunSuite {
     TxnTable.append(spark, root, df(2, 501, 901).coalesce(1)) // inherits bloomCol
     TxnTable.append(spark, root, df(3, 502, 902).coalesce(1))
     val snap = TxnTable.latest(spark, root).get
-    assert(snap.bloomCol === Some("id"))
+    assert(snap.bloomCols.headOption === Some("id"))
     assert(snap.blooms.size === 3)
 
     // id=501 lives in exactly one file — the lookup must touch only it

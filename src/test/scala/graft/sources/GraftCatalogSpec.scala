@@ -101,12 +101,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(ids(spark.sql(s"SELECT * FROM $cat.db3.w")) === Seq(7L))
     val ow = TxnTable.latest(spark, root).get
     assert(ow.op === "overwrite" && ow.statsCols === Seq("id"))
-    // a MoR-live table refuses the un-mergeable READ but stays writable
+    // a MoR-live table reads merged by name and stays writable
     val s = spark; import s.implicits._
     TxnTable.deleteKeysMor(spark, root, "id", Seq(7L).toDF("id"))
-    intercept[Exception] { spark.sql(s"SELECT * FROM $cat.db3.w").collect() }
+    assert(ids(spark.sql(s"SELECT * FROM $cat.db3.w")).isEmpty)
     spark.sql(s"INSERT INTO $cat.db3.w VALUES (8, 80)")
-    assert(ids(TxnTable.read(spark, root)) === Seq(8L)) // API read merges
+    assert(ids(TxnTable.read(spark, root)) === Seq(8L))
+    assert(ids(spark.sql(s"SELECT * FROM $cat.db3.w")) === Seq(8L))
     TxnTable.compactDeletes(spark, root)
     assert(ids(spark.sql(s"SELECT * FROM $cat.db3.w")) === Seq(8L))
   }

@@ -16,7 +16,8 @@ import graft.sinks.TxnTable
   * byte-identical BY PATH while reads hash-match the recompute; both
   * read surfaces (Scala merge path and the DSv2 position-aware scan)
   * mask; `_file`/`_pos` are queryable; `compactDeletes` folds the
-  * debt; the CDC feed emits the deltas; shapes never mix; and the
+  * debt; the CDC feed emits the deltas; [[TxnTable.deleteKeysMor]]
+  * writes the same shape, so every surface composes with it; and the
   * two-writer race refuses serializably. */
 class GraftPosDeltaSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -57,7 +58,7 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     assert(before.files.forall(after.files.contains))
     // plus a small insert file, plus position-delete file(s)
     assert((after.files.toSet -- before.files).nonEmpty)
-    assert(after.deletes.nonEmpty && after.deleteCols === TxnTable.PosDeleteCols)
+    assert(after.deletes.nonEmpty)
     val expect = (1L to 200L).map(i =>
       (i, if (i >= 10 && i <= 12) i * 20 else i * 10)).toSet
     // the Scala merge path and the DSv2 position-aware scan both mask
@@ -171,7 +172,7 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     assert(TxnTable.latest(spark, root).get.deletes.nonEmpty)
     TxnTable.compactDeletes(spark, root)
     val folded = TxnTable.latest(spark, root).get
-    assert(folded.deletes.isEmpty && folded.deleteCols.isEmpty)
+    assert(folded.deletes.isEmpty)
     val expect = (1L to 200L).map(i => (i, if (i == 100) 1L else i * 10)).toSet
     assert(idv(TxnTable.read(spark, root)) === expect)
     assert(idv(spark.sql(s"SELECT * FROM $cat.db.fold1")) === expect)
@@ -199,7 +200,7 @@ class GraftPosDeltaSpec extends AnyFunSuite {
   }
 
   test("metaCount stays EXACT under position deletes (tombstones mask " +
-      "one row each; equality shape still refuses)") {
+      "one row each, deleteKeysMor's too)") {
     val root = morTable("cnt1")
     assert(TxnTable.metaCount(spark, root) === Some(200L))
     spark.sql(s"DELETE FROM $cat.db.cnt1 WHERE id IN (3, 4, 5)")
@@ -208,12 +209,12 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     // update = tombstone + reinsert: count unchanged
     assert(TxnTable.metaCount(spark, root) === Some(197L))
     assert(TxnTable.read(spark, root).count() === 197L)
-    // equality-shape deletes still refuse (row multiset unknowable)
+    // a key delete tombstones the same way; an overlapping one (id 5
+    // is already dead) masks nothing twice
     val s = spark; import s.implicits._
-    val root2 = s"$warehouse/db/cnt2"
-    TxnTable.overwrite(spark, root2, (1L to 9L).toDF("id").repartition(1))
-    TxnTable.deleteKeysMor(spark, root2, "id", Seq(1L).toDF("id"))
-    assert(TxnTable.metaCount(spark, root2).isEmpty)
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(5L, 6L, 10L).toDF("id"))
+    assert(TxnTable.metaCount(spark, root) === Some(195L))
+    assert(TxnTable.read(spark, root).count() === 195L)
   }
 
   test("CDC: changesBetween across a position-delta commit emits the " +
@@ -295,15 +296,15 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     assert(got(5L) === 1L && got(6L) === 1L && got.size === 200)
   }
 
-  test("shapes never mix, races refuse serializably, and CoW tables are " +
-      "untouched by the new path") {
+  test("deleteKeysMor and SQL statements share one delete shape, races " +
+      "refuse serializably, and CoW tables are untouched by the new path") {
     val root = morTable("mix1")
     val s = spark; import s.implicits._
-    spark.sql(s"DELETE FROM $cat.db.mix1 WHERE id = 2") // pos-shape live
-    // equality MoR on a pos-live table refuses
-    val e1 = intercept[IllegalArgumentException] {
-      TxnTable.deleteKeysMor(spark, root, "id", Seq(3L).toDF("id")) }
-    assert(e1.getMessage.contains("MoR"))
+    spark.sql(s"DELETE FROM $cat.db.mix1 WHERE id = 2") // deletes live
+    // a key delete on top adds tombstones of the same shape
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(3L).toDF("id"))
+    assert(idv(TxnTable.read(spark, root)) ===
+      (1L to 200L).filterNot(Set(2L, 3L)).map(i => (i, i * 10)).toSet)
     // CoW row-level on a pos-live table refuses (resurrection hazard)
     val e2 = intercept[Exception] {
       TxnTable.deleteWhere(spark, root, col("id") === 4) }
@@ -315,17 +316,12 @@ class GraftPosDeltaSpec extends AnyFunSuite {
       TxnTable.commitDelta(spark, root, head.version,
         Seq.empty, Seq("data/fake/del-x.parquet"), "delete-mor") }
     assert(e3.getMessage.contains("stale"))
-    // equality-shape table: a MoR-mode statement refuses at plan time
+    // key deletes first, then a MoR-mode statement on top
     val root2 = morTable("mix2")
-    TxnTable.setTableProperty(spark, root2, TxnTable.RowLevelModeKey,
-      "copy-on-write")
     TxnTable.deleteKeysMor(spark, root2, "id", Seq(9L).toDF("id"))
-    TxnTable.setTableProperty(spark, root2, TxnTable.RowLevelModeKey,
-      "merge-on-read")
-    val e4 = intercept[Exception] {
-      spark.sql(s"DELETE FROM $cat.db.mix2 WHERE id = 10") }
-    assert(e4.getMessage.contains("one MoR shape") ||
-      Option(e4.getCause).exists(_.getMessage.contains("one MoR shape")))
+    spark.sql(s"DELETE FROM $cat.db.mix2 WHERE id = 10")
+    assert(idv(spark.sql(s"SELECT * FROM $cat.db.mix2")) ===
+      (1L to 200L).filterNot(Set(9L, 10L)).map(i => (i, i * 10)).toSet)
     // default mode keeps the exact CoW behavior
     val root3 = s"$warehouse/db/cow1"
     TxnTable.overwrite(spark, root3,
@@ -333,5 +329,34 @@ class GraftPosDeltaSpec extends AnyFunSuite {
     spark.sql(s"UPDATE $cat.db.cow1 SET v = 0 WHERE id = 1")
     val cowHead = TxnTable.latest(spark, root3).get
     assert(cowHead.op === "update" && cowHead.deletes.isEmpty)
+  }
+
+  test("after deleteKeysMor, a by-name read, a micro-batch stream over " +
+      "later appends and a MoR UPDATE all succeed and match TxnTable.read") {
+    val root = morTable("kd1")
+    val s = spark; import s.implicits._
+    TxnTable.deleteKeysMor(spark, root, "id", Seq(5L, 150L).toDF("id"))
+    def byName = idv(spark.sql(s"SELECT * FROM $cat.db.kd1"))
+    assert(byName === idv(TxnTable.read(spark, root)))
+    assert(!byName.exists(r => r._1 == 5L || r._1 == 150L) && byName.size === 198)
+
+    val ckpt = Files.createTempDirectory("kd1_stream").toString
+    val q = spark.readStream.table(s"$cat.db.kd1")
+      .writeStream.format("memory").queryName("kd1_stream")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      q.processAllAvailable() // tail-only start, after the delete
+      TxnTable.append(spark, root, Seq((5L, 55L), (300L, 3000L)).toDF("id", "v"))
+      q.processAllAvailable()
+      assert(idv(spark.table("kd1_stream")) === Set((5L, 55L), (300L, 3000L)))
+    } finally q.stop()
+
+    spark.sql(s"UPDATE $cat.db.kd1 SET v = v + 1 WHERE id BETWEEN 4 AND 6")
+    assert(TxnTable.latest(spark, root).get.op === "update-mor")
+    val want = (1L to 200L).filterNot(Set(5L, 150L)).map(i =>
+      (i, if (i == 4L || i == 6L) i * 10 + 1 else i * 10)).toSet ++
+      Set((5L, 56L), (300L, 3000L))
+    assert(idv(TxnTable.read(spark, root)) === want)
+    assert(byName === want)
   }
 }

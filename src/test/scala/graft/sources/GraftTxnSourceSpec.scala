@@ -107,16 +107,14 @@ class GraftTxnSourceSpec extends AnyFunSuite {
     assert(df.select("id").as[Long].collect().toSeq === Seq(42L))
   }
 
-  test("live MoR deletes refuse loud on the DSv2 path") {
+  test("live MoR deletes are masked on the DSv2 path") {
     val root = freshRoot()
     val s = spark; import s.implicits._
     TxnTable.append(spark, root, Seq(1L, 2L).toDF("id").coalesce(1),
       statsCols = Seq("id"))
     TxnTable.deleteKeysMor(spark, root, "id", Seq(1L).toDF("id"))
-    val e = intercept[Exception] {
-      spark.read.format("graft-txn").load(root).collect()
-    }
-    assert(e.getMessage.contains("merge-on-read"))
+    assert(spark.read.format("graft-txn").load(root)
+      .select("id").as[Long].collect().toSeq === Seq(2L))
     TxnTable.compactDeletes(spark, root)
     assert(spark.read.format("graft-txn").load(root)
       .select("id").as[Long].collect().toSeq === Seq(2L))
