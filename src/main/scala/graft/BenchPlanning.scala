@@ -24,7 +24,9 @@ import Bench.{sec, usedMb}
   *                        (set build + membership) at N files
   *  - `sidecar_metas_sec` footer fan-out over K position-delete
   *                        sidecars ([[graft.sources.GraftSidecars.metas]], cold)
-  *  - `sidecar_plan_sec`  masked-scan planning + read in sidecar mode
+  *  - `sidecar_plan_count_sec` planning + `count()` of the DSv2 read
+  *                        over those K sidecars ([[graft.sources.GraftPosScan]],
+  *                        task-side tombstone resolution)
   *
   * Heap deltas are coarse (`used-before` vs `used-after` around the
   * manifest load) but catch order-of-magnitude superlinearity.
@@ -137,9 +139,8 @@ object BenchPlanning {
       graft.sources.GraftSidecars.metas(spark, root, rels))
     require(metas.size == rels.size, "metas fan-out incomplete")
 
-    spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
-    val (n1, sidecarPlanSec) = sec(TxnTable.read(spark, root).count())
-    spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
+    val (n1, sidecarPlanSec) = sec(
+      spark.read.format("graft-txn").load(root).count())
 
     def f(d: Double): String = "%.3f".formatLocal(java.util.Locale.US, d)
     println(s"""{"metric":"planning","files":$nFiles,""" +

@@ -53,14 +53,6 @@ object BenchPosMask {
     scanAgg(tbl()) // warm the masked plan
     val masked = best(scanAgg(tbl()))
 
-    // SIDECAR mode (threshold 0): the driver resolves nothing; the one
-    // masked task reads its own sidecar at open time — must cost ~the
-    // exact mode (the sidecar is a kilobyte)
-    spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
-    scanAgg(tbl())
-    val sidecarMode = best(scanAgg(tbl()))
-    spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
-
     // the ordinal-exact ROW regime (what every file paid before
     // per-file masking): force it by CONSUMING a metadata column in the
     // aggregate (an unused projection would just prune away)
@@ -72,28 +64,23 @@ object BenchPosMask {
 
     // WIDESPREAD debt then CONSOLIDATION: tombstones on EVERY file
     // (1% of rows), compactPosDeletes to ONE sidecar. Row-group
-    // routing (GraftSidecars.slices) must hold the compacted
-    // sidecar-mode read at ~the pre-compaction cost — the old regime
-    // re-read the whole consolidated set from every masked task, so
-    // maintenance made scans strictly worse.
+    // routing (GraftSidecars.slices) must hold the compacted read at
+    // ~the pre-compaction cost — re-reading the whole consolidated set
+    // from every masked task would make maintenance slow scans down.
     spark.sql(s"DELETE FROM graft_bpm.db.posmask WHERE id % 100 = 50")
-    spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
     scanAgg(tbl())
     val spreadPre = best(scanAgg(tbl()))
     graft.sinks.TxnTable.compactPosDeletes(spark, root, targetFiles = 1)
     scanAgg(tbl())
     val spreadCompacted = best(scanAgg(tbl()))
-    spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
 
     println(s"""{"metric":"posmask","rows":$rows,"files":${snap.files.size},""" +
       s""""clean_sec":${f(clean)},"one_tombstone_sec":${f(masked)},""" +
-      s""""sidecar_mode_sec":${f(sidecarMode)},""" +
       s""""row_regime_sec":${f(rowRegime)},""" +
       s""""spread_pre_sec":${f(spreadPre)},""" +
       s""""spread_compacted_sec":${f(spreadCompacted)},""" +
       s""""compacted_over_pre":${f(spreadCompacted / spreadPre)},""" +
       s""""masked_over_clean":${f(masked / clean)},""" +
-      s""""sidecar_over_clean":${f(sidecarMode / clean)},""" +
       s""""row_over_clean":${f(rowRegime / clean)}}""")
     spark.stop()
   }

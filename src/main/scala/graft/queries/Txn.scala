@@ -53,14 +53,16 @@ object Txn extends graft.QueryModule {
   private val DailyMerge = Art("daily_merge", "events", inCatalog = false)
   // the three tables built with deleteKeysMor carry a `_pos` suffix:
   // builds older than position-only deletes left equality-delete
-  // manifests under the bare names, which no longer load
+  // manifests under the bare names, which no longer load (q130's
+  // table is `_live`: builds before its delete ids moved into every
+  // scale's user-id range committed no delete)
   private val Mor = Art("events_mor_pos", "events", inCatalog = false)
   private val DailyBranch = Art("daily_branch", "events", inCatalog = false)
   private val SqlUp = Art("events_sqlup", "events", inCatalog = true)
   private val Maint = Art("events_maint_pos", "events", inCatalog = true)
   private val Ren = Art("events_ren", "events", inCatalog = true)
   private val Rep = Art("daily_rep", "events", inCatalog = true)
-  private val PComp = Art("events_pcomp_pos", "events", inCatalog = true)
+  private val PComp = Art("events_pcomp_live", "events", inCatalog = true)
   private val StrDocs = Art("docs_str", "documents", inCatalog = true)
   private val MorUp = Art("events_morup", "events", inCatalog = true)
   private val UserCounts = Art("user_counts", "events", inCatalog = true)
@@ -661,10 +663,13 @@ object Txn extends graft.QueryModule {
   // mask on a carried file, shedding the wrong rows, or double-
   // counting a carried-and-rewritten file all fail the hash.
   // ---------------------------------------------------------------------
-  private[queries] val PcLo = 21L
-  private[queries] val PcHi = 24L
+  // inside every scale's user ids (sf0.001 holds 0–14), and far enough
+  // up that the compact_where range [PcLo, PcHi + 40] leaves the
+  // low-id files carried
+  private[queries] val PcLo = 10L
+  private[queries] val PcHi = 12L
 
-  private[queries] def ensurePartialCompacted(s: SparkSession, dir: String): String =
+  private[graft] def ensurePartialCompacted(s: SparkSession, dir: String): String =
     PComp.ensure(s, dir) { (root, name) =>
       import s.implicits._
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.db")

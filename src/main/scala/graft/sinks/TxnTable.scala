@@ -3298,31 +3298,6 @@ object TxnTable {
     }
   }
 
-  /** Live position-delete entries of `snap` restricted to `files`, as
-    * a driver-side map (file → sorted ordinals) the delta scan's
-    * readers mask with — the SMALL-debt fast path only: the DSv2 scan
-    * calls this when sidecar footer counts fit the driver-resolution
-    * threshold, and switches to task-side sidecar resolution past it
-    * ([[graft.sources.GraftSidecarPartition]]), so there is no
-    * tombstone-scale driver ceiling anymore. The cap here is
-    * defense-in-depth for direct callers, loud on overflow. */
-  private[graft] def posDeleteMap(s: SparkSession, root: String,
-      snap: Snapshot, files: Seq[String],
-      cap: Int = 5000000): Map[String, Array[Long]] = {
-    if (snap.deletes.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.col
-    val want = files.toSet
-    val rows = readFiles(s, root, snap.deletes)
-      .select(col("_file"), col("_pos")).distinct()
-      .limit(cap + 1).collect()
-    require(rows.length <= cap,
-      s"snapshot v${snap.version} carries over $cap live position-delete " +
-        "entries for the scanned files — fold them first (compactDeletes)")
-    rows.groupBy(_.getString(0)).collect {
-      case (f, rs) if want.contains(f) => f -> rs.map(_.getLong(1)).sorted
-    }.toMap
-  }
-
   /** MERGE-ON-READ delete by key — the counterpart of the
     * copy-on-write [[deleteWhere]] that rewrites no data file: resolve
     * `keys` against the head in one pass (the head's data files scanned
@@ -3449,31 +3424,9 @@ object TxnTable {
       }
   }
 
-  /** Rewrite the POSITION-DELETE SIDECARS only — never a data file
-    * (Iceberg's `rewrite_position_delete_files` action, the maintenance
-    * op between "do nothing" and [[compactDeletes]]'s full fold): merge
-    * the accumulated per-statement sidecars into `targetFiles`
-    * consolidated ones, deduped, DROPPING dangling entries (tombstones
-    * whose data file left the snapshot — a partial compaction rewrote
-    * it), clustered and sorted by `(_file, _pos)` so each sidecar's
-    * footer `_file` bounds stay tight and the scan's sidecar-mode
-    * candidate pruning keeps routing each masked task to one sidecar.
-    *
-    * Why it exists: every MoR UPDATE/DELETE stages its own kilobyte
-    * sidecars, so a busy table accumulates thousands; folding them into
-    * the data ([[compactDeletes]]) costs a full rewrite, while THIS op
-    * costs O(live tombstones) — metadata-scale — and keeps both scan
-    * modes cheap. Data files carry BY REFERENCE with stats/blooms/row
-    * counts untouched; visible content is unchanged, so the commit
-    * classifies as maintenance (`compact-pos-deletes`) and the change
-    * feed emits nothing. Retries on a lost commit race by re-resolving
-    * against the new head ([[retrying]] — a consolidation
-    * staged against a stale snapshot could resurrect a racing
-    * statement's deletes). No-op on a tombstone-free table. */
   /** Auto-sizing budget for [[compactPosDeletes]] (`targetFiles = 0`):
     * consolidated sidecars hold at most this many entries each. */
-  val CompactEntriesPerSidecarKey =
-    "spark.graft.posDeletes.compactEntriesPerSidecar"
+  private val MaxSidecarEntries = 4000000L
 
   /** Parquet row-group size (bytes) of [[compactPosDeletes]]' output.
     * Small groups (default 1 MiB) keep per-group `_file` footer bounds
@@ -3481,6 +3434,27 @@ object TxnTable {
     * task's sidecar read file-sized on a consolidated sidecar. */
   val CompactBlockBytesKey = "spark.graft.posDeletes.compactBlockBytes"
 
+  /** Rewrite the POSITION-DELETE SIDECARS only — never a data file
+    * (Iceberg's `rewrite_position_delete_files` action, the maintenance
+    * op between "do nothing" and [[compactDeletes]]'s full fold): merge
+    * the accumulated per-statement sidecars into `targetFiles`
+    * consolidated ones, deduped, DROPPING dangling entries (tombstones
+    * whose data file left the snapshot — a partial compaction rewrote
+    * it), clustered and sorted by `(_file, _pos)` so each sidecar's
+    * footer `_file` bounds stay tight and the scan's candidate pruning
+    * keeps routing each masked task to one sidecar.
+    *
+    * Why it exists: every MoR UPDATE/DELETE stages its own kilobyte
+    * sidecars, so a busy table accumulates thousands; folding them into
+    * the data ([[compactDeletes]]) costs a full rewrite, while THIS op
+    * costs O(live tombstones) — metadata-scale — and keeps the scan's
+    * task-side resolution cheap. Data files carry BY REFERENCE with
+    * stats/blooms/row counts untouched; visible content is unchanged, so the commit
+    * classifies as maintenance (`compact-pos-deletes`) and the change
+    * feed emits nothing. Retries on a lost commit race by re-resolving
+    * against the new head ([[retrying]] — a consolidation
+    * staged against a stale snapshot could resurrect a racing
+    * statement's deletes). No-op on a tombstone-free table. */
   def compactPosDeletes(s: SparkSession, root: String,
                         targetFiles: Int = 0): Snapshot = {
     require(targetFiles >= 0,
@@ -3500,10 +3474,8 @@ object TxnTable {
           else {
             val entries = graft.sources.GraftSidecars
               .metas(s, base, cur.deletes).map(_.rows).sum
-            val budget = s.conf.getOption(CompactEntriesPerSidecarKey)
-              .map(_.toLong).getOrElse(4000000L)
-            require(budget > 0, s"$CompactEntriesPerSidecarKey must be positive")
-            math.max(1L, (entries + budget - 1) / budget).toInt
+            math.max(1L, (entries + MaxSidecarEntries - 1) /
+              MaxSidecarEntries).toInt
           }
         // live entries only: semi-join against the snapshot's file list
         // (driver-held anyway; broadcast — file-count-scale)

@@ -275,32 +275,12 @@ class GraftTxnMicroBatchStream(spark: SparkSession, root: String,
   override def latestOffset(): Offset = throw new UnsupportedOperationException(
     "latestOffset(Offset, ReadLimit) drives this stream (SupportsAdmissionControl)")
 
-  /** Added files of one admitted window (None = admitted-empty), the
-    * manifest-fact classification shared with the v1 append source. */
-  private def addedOf(v: Long): Option[Seq[String]] = {
-    val cur = TxnTable.snapshot(spark, root, v)
-    val prevFiles: Set[String] =
-      if (v == 1L) Set.empty else TxnTable.snapshot(spark, root, v - 1).files.toSet
-    val prevDeletes: Set[String] =
-      if (v == 1L) Set.empty else TxnTable.snapshot(spark, root, v - 1).deletes.toSet
-    val added = cur.files.filterNot(prevFiles)
-    val removed = prevFiles -- cur.files.toSet
-    val isAppend = removed.isEmpty && prevDeletes == cur.deletes.toSet
-    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "zorder")(cur.op)
-    if (isAppend) Some(added).filter(_.nonEmpty)
-    else if (maintenance || skipChangeCommits) None
-    else throw new IllegalStateException(
-      s"micro-batch stream over $root hit a data-changing commit: v$v " +
-        s"(op '${cur.op}') removed ${removed.size} file(s) / changed the " +
-        "delete set. Stream the change feed " +
-        "(readStream.format(\"graft-txn\").option(\"readChangeFeed\",\"true\"))" +
-        " or skip such commits with option(\"skipChangeCommits\",\"true\")")
-  }
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val v1 = start.asInstanceOf[TxnVersionOffset].version
     val v2 = end.asInstanceOf[TxnVersionOffset].version
-    val added = ((v1 + 1) to v2).flatMap(addedOf).flatten
+    val added = ((v1 + 1) to v2).flatMap(v =>
+      graft.streaming.TxnStreamSource.addedFiles(spark, root, v,
+        skipChangeCommits)).flatten
     if (added.isEmpty) Array.empty
     else
       // a fresh per-window scan: partition planning over ONLY the added

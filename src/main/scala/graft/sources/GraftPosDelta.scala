@@ -189,9 +189,9 @@ class GraftPosScanBuilder(spark: SparkSession, root: String, snap: Snapshot,
   *    files take the untouched vectorized parquet path — split at
   *    `maxSplitBytes`, packed into multi-file partitions, parquet
   *    filter pushdown live — and only files that actually carry live
-  *    tombstones are planned one-whole-file-per-partition with their
-  *    OWN ordinal slice attached to the partition
-  *    ([[GraftMaskedPartition]] — each task ships only its file's
+  *    tombstones are planned one-whole-file-per-partition, each
+  *    carrying the delete-sidecar slices that can hold its tombstones
+  *    ([[GraftSidecarPartition]] — each task reads only its file's
   *    tombstones, never a table-wide map), masked batch-level by an
   *    index-remapping [[org.apache.spark.sql.vectorized.ColumnVector]]
   *    wrapper (the Iceberg vectorized-delete shape);
@@ -286,91 +286,61 @@ class GraftPosScan(spark: SparkSession, root: String, snap: Snapshot,
   }
 
   /** Footer metadata of every live delete sidecar (row counts + `_file`
-    * bounds) — pure parquet-footer reads, cached per JVM. Drives the
-    * resolution-mode switch below. */
+    * bounds) — pure parquet-footer reads, cached per JVM.
+    *
+    * Tombstones are resolved TASK-side, never on the driver: each
+    * tombstoned file's partition carries the delete sidecars whose
+    * footer `_file` bounds cover it ([[GraftSidecarPartition]] — the
+    * delta writer stages one sidecar per rewrite-scan partition, and
+    * that scan is one-partition-per-file, so the candidate set is ~1
+    * sidecar), and the TASK resolves its own file's ordinals from them
+    * (Iceberg's delete-manifest shape: driver plans by bounds, readers
+    * merge their own delete files). The driver holds file-COUNT-scale
+    * state (the object a planner holds anyway), never tombstone-scale,
+    * and planning launches no Spark job unless a sidecar's bounds are
+    * ambiguous. */
   private lazy val sidecars: Seq[GraftSidecars.Meta] =
     if (!maskLive || snap.deletes.isEmpty) Nil
     else GraftSidecars.metas(spark, base, snap.deletes)
 
-  /** TWO tombstone-resolution modes, switched on the total live entry
-    * count (exact, from sidecar footers — no data pages touched):
-    *
-    *  - at or under `spark.graft.posDeletes.driverResolveMaxEntries`
-    *    (default 5M) the driver resolves the full file→ordinals map
-    *    once at planning and each masked partition carries its own
-    *    slice — zero extra reads at execution;
-    *  - past it the driver materializes NO positions (the old
-    *    refuse-loud cap is gone): each tombstoned file's partition
-    *    carries the delete sidecars whose footer `_file` bounds cover
-    *    it ([[GraftSidecarPartition]] — the delta writer stages one
-    *    sidecar per rewrite-scan partition, and that scan is
-    *    one-partition-per-file, so the candidate set is ~1 sidecar),
-    *    and the TASK resolves its own file's ordinals from them
-    *    (Iceberg's delete-manifest shape: driver plans by bounds,
-    *    readers merge their own delete files).
-    *
-    * Either way the driver ceiling is file-COUNT-scale (the object a
-    * planner holds anyway), never tombstone-scale. */
-  private lazy val driverResolveMax: Long = spark.conf
-    .get(GraftSidecars.DriverResolveMaxKey, "5000000").toLong
-
-  private lazy val useSidecars: Boolean =
-    sidecars.nonEmpty && sidecars.map(_.rows).sum > driverResolveMax
-
-  /** Live tombstones restricted to the scanned files, keyed by file —
-    * resolved ONCE at planning (partitions carry their own slices).
+  /** The data files carrying live tombstones: sidecars whose footer
+    * bounds pin ONE file contribute it directly; only bound-ambiguous
+    * sidecars (rare — post-writer-compaction shapes) pay a
+    * distinct-`_file` job, whose result is data-file-count-bounded.
     * Computed lazily so runtime group filtering has already narrowed
-    * `files` by the time Spark plans partitions. Empty in sidecar
-    * mode — the readers resolve their own slices there. */
-  private lazy val masked: Map[String, Array[Long]] =
-    if (maskLive && !useSidecars)
-      // footer counts already gated the mode, so the cap cannot trip;
-      // it stays as defense-in-depth at the mode threshold
-      TxnTable.posDeleteMap(spark, root, snap, files,
-        cap = math.min(driverResolveMax, Int.MaxValue - 1L).toInt)
-    else Map.empty
+    * `files` by the time Spark plans partitions. */
+  private lazy val tombRels: Set[String] = {
+    val (pinned, ambiguous) =
+      sidecars.partition(m => m.lo.isDefined && m.lo == m.hi)
+    val fromJob =
+      if (ambiguous.isEmpty) Nil
+      else spark.read
+        .parquet(ambiguous.map(m => s"$base/${m.rel}"): _*)
+        .select(org.apache.spark.sql.functions.col(GraftMetaCols.File))
+        .distinct().collect().map(_.getString(0)).toSeq
+    (pinned.map(_.lo.get) ++ fromJob).toSet
+  }
 
-  /** The data files carrying live tombstones. Exact mode: the resolved
-    * map's keys. Sidecar mode: sidecars whose footer bounds pin ONE
-    * file contribute it directly; only bound-ambiguous sidecars (rare —
-    * post-writer-compaction shapes) pay a distinct-`_file` job, whose
-    * result is data-file-count-bounded. */
-  private lazy val tombRels: Set[String] =
-    if (!useSidecars) masked.keySet
-    else {
-      val (pinned, ambiguous) =
-        sidecars.partition(m => m.lo.isDefined && m.lo == m.hi)
-      val fromJob =
-        if (ambiguous.isEmpty) Nil
-        else spark.read
-          .parquet(ambiguous.map(m => s"$base/${m.rel}"): _*)
-          .select(org.apache.spark.sql.functions.col(GraftMetaCols.File))
-          .distinct().collect().map(_.getString(0)).toSeq
-      (pinned.map(_.lo.get) ++ fromJob).toSet
-    }
-
-  /** The partition for one tombstoned file under the active mode.
-    * Sidecar mode routes by ROW GROUP, not whole sidecars: a
-    * consolidated `(_file,_pos)`-sorted sidecar covers every
-    * tombstoned file at the footer level, but each task's range is
-    * trimmed to the contiguous row-group runs whose `_file` bounds
-    * admit ITS file ([[GraftSidecars.slices]]) — so maintenance
+  /** The partition for one tombstoned file, routed by ROW GROUP, not
+    * whole sidecars: a consolidated `(_file,_pos)`-sorted sidecar
+    * covers every tombstoned file at the footer level, but each task's
+    * range is trimmed to the contiguous row-group runs whose `_file`
+    * bounds admit ITS file ([[GraftSidecars.slices]]) — so maintenance
     * compaction never inflates what a masked task reads. */
   private def maskedPartition(rel: String, fp: FilePartition): InputPartition =
-    if (useSidecars)
-      GraftSidecarPartition(fp, rel,
-        sidecars.filter(_.covers(rel)).flatMap(m =>
-          GraftSidecars.slices(m, rel).map { case (off, len) =>
-            FilePartition(0, Array(PartitionedFile(InternalRow.empty,
-              SparkPath.fromPathString(s"$base/${m.rel}"), off, len)))
-          }).toArray)
-    else GraftMaskedPartition(fp, masked(rel))
+    GraftSidecarPartition(fp, rel,
+      sidecars.filter(_.covers(rel)).flatMap(m =>
+        GraftSidecars.slices(m, rel).map { case (off, len) =>
+          FilePartition(0, Array(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPathString(s"$base/${m.rel}"), off, len)))
+        }).toArray)
 
-  /** Reader factory over the delete sidecars (sidecar mode only) —
-    * the masked tasks' own tombstone resolution reads ride the same
-    * vectorized parquet reader as everything else. */
+  /** Reader factory over the delete sidecars — the masked tasks' own
+    * tombstone resolution reads ride the same vectorized parquet
+    * reader as everything else. Null on a tombstone-free scan, which
+    * plans no [[GraftSidecarPartition]]. */
   private def sidecarFactory(): PartitionReaderFactory =
-    if (!useSidecars) null
+    if (sidecars.isEmpty) null
     else ParquetScanBuilder(spark,
       new GraftTxnFileIndex(spark, root, snap, GraftMetaCols.posDeleteSchema,
         Some(snap.deletes)),
@@ -454,21 +424,12 @@ class GraftPosScan(spark: SparkSession, root: String, snap: Snapshot,
       s"(${files.size}/${snap.files.size} files, mask=$maskLive)"
 }
 
-/** A whole-file partition that carries ITS OWN live tombstone ordinals
-  * (sorted): the task reads exactly the slice it needs — a table-wide
-  * delete map is never serialized into task closures. */
-case class GraftMaskedPartition(inner: FilePartition, dead: Array[Long])
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** SIDECAR-mode counterpart of [[GraftMaskedPartition]]: past the
-  * driver-resolution threshold the partition carries no ordinals at
-  * all — just its file's root-relative path and the delete sidecar
-  * files whose footer `_file` bounds cover it; the TASK reads those
-  * sidecars (filtering to its own file) and builds the dead-ordinal
-  * slice at open time. Driver memory stays file-count-scale no matter
-  * how large the tombstone debt grows. */
+/** A whole-file partition of a tombstoned data file: its root-relative
+  * path and the delete-sidecar byte ranges whose footer `_file` bounds
+  * cover it. The partition carries no ordinals; the TASK reads those
+  * ranges (filtering to its own file) and builds the dead-ordinal slice
+  * at open time ([[GraftSidecarResolve]]). Driver memory stays
+  * file-count-scale no matter how large the tombstone debt grows. */
 case class GraftSidecarPartition(inner: FilePartition, rel: String,
                                  sidecars: Array[FilePartition])
     extends InputPartition {
@@ -479,10 +440,6 @@ case class GraftSidecarPartition(inner: FilePartition, rel: String,
   * bounds, read from parquet footers only (no data pages). Sidecars
   * are immutable once committed — cached per JVM by absolute path. */
 object GraftSidecars {
-  /** Entry-count threshold above which the DSv2 scan stops resolving
-    * tombstones on the driver and ships sidecar references instead. */
-  val DriverResolveMaxKey = "spark.graft.posDeletes.driverResolveMaxEntries"
-
   /** One row group's byte range and `_file` bounds — `None` bounds
     * when the chunk lacks the statistic (the group then conservatively
     * covers every file). */
@@ -598,8 +555,7 @@ object GraftSidecars {
 /** Task-side tombstone resolution for [[GraftSidecarPartition]]s: read
   * the candidate sidecars through the shared parquet reader factory,
   * keep the ordinals of THIS file, sort and dedupe. Memory is the one
-  * file's tombstones — the same slice the exact mode would have put on
-  * the partition. */
+  * file's tombstones. */
 object GraftSidecarResolve {
   def dead(factory: PartitionReaderFactory, rel: String,
            sidecars: Array[FilePartition]): Array[Long] = {
@@ -616,7 +572,7 @@ object GraftSidecarResolve {
     }
     val a = buf.result()
     java.util.Arrays.sort(a)
-    // writer-level duplicates are legal (the exact mode distinct()s)
+    // writer-level duplicates are legal (overlapping statements)
     var n = 0
     var i = 0
     while (i < a.length) {
@@ -627,22 +583,38 @@ object GraftSidecarResolve {
   }
 }
 
-/** Row-based reader factory for the ORDINAL-EXACT regime: wraps the
-  * vectorized parquet factory's row interface, counts ordinals in file
-  * order (the partition is ONE whole file and nothing was pushed into
-  * parquet, so reader order IS file order), joins the requested
-  * metadata columns, and skips the partition's OWN tombstoned ordinals
-  * ([[GraftMaskedPartition]] — the factory carries no delete state). */
+/** The one row-wise tombstone mask: reads ONE whole file in ordinal
+  * order (nothing pushed into parquet, so reader order IS file order),
+  * counts ordinals and skips the sorted `dead` ones. `pos` is the
+  * current row's file ordinal. */
+class GraftLiveRowReader(inner: PartitionReader[InternalRow], dead: Array[Long])
+    extends PartitionReader[InternalRow] {
+  private var cur = -1L
+  def pos: Long = cur
+  override def next(): Boolean = {
+    while (inner.next()) {
+      cur += 1
+      if (java.util.Arrays.binarySearch(dead, cur) < 0) return true
+    }
+    false
+  }
+  override def get(): InternalRow = inner.get()
+  override def close(): Unit = inner.close()
+}
+
+/** Row-based reader factory for the ORDINAL-EXACT regime: every
+  * partition is one whole file, read through [[GraftLiveRowReader]]
+  * (a [[GraftSidecarPartition]] resolves its dead ordinals first; a
+  * clean file has none), with the requested metadata columns joined. */
 class GraftPosReaderFactory(delegate: PartitionReaderFactory,
                             metaCols: Seq[String],
-                            sidecar: PartitionReaderFactory = null)
+                            sidecar: PartitionReaderFactory)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val (fp, dead) = partition match {
-      case GraftMaskedPartition(inner, ds) => (inner, ds)
       case GraftSidecarPartition(inner, rel, scs) =>
         (inner, GraftSidecarResolve.dead(sidecar, rel, scs))
       case p: FilePartition => (p, Array.emptyLongArray)
@@ -655,28 +627,21 @@ class GraftPosReaderFactory(delegate: PartitionReaderFactory,
       .map(_.group(1)).getOrElse(
         throw new IllegalStateException(s"not a staged data path: $abs"))
     val relU = UTF8String.fromString(rel)
-    val inner = delegate.createReader(fp)
+    val rows = new GraftLiveRowReader(delegate.createReader(fp), dead)
     val meta = new GenericInternalRow(metaCols.length)
     val joined = new JoinedRow
     new PartitionReader[InternalRow] {
-      private var pos = -1L
-      override def next(): Boolean = {
-        while (inner.next()) {
-          pos += 1
-          if (java.util.Arrays.binarySearch(dead, pos) < 0) return true
-        }
-        false
-      }
+      override def next(): Boolean = rows.next()
       override def get(): InternalRow = {
         var i = 0
         while (i < metaCols.length) {
           meta.update(i,
-            if (metaCols(i) == GraftMetaCols.File) relU else pos)
+            if (metaCols(i) == GraftMetaCols.File) relU else rows.pos)
           i += 1
         }
-        joined(inner.get(), meta)
+        joined(rows.get(), meta)
       }
-      override def close(): Unit = inner.close()
+      override def close(): Unit = rows.close()
     }
   }
 }
@@ -691,7 +656,7 @@ object GraftPosReaderFactory {
 /** COLUMNAR factory for the no-metadata-columns regime: clean
   * partitions delegate straight to the vectorized parquet reader (with
   * its pushed filters — zero masking overhead on the clean majority);
-  * [[GraftMaskedPartition]]s read through the pushdown-free delegate
+  * [[GraftSidecarPartition]]s read through the pushdown-free delegate
   * (batch positions must equal file ordinals) and drop their dead
   * ordinals batch-by-batch via an index-remapping vector wrapper —
   * the whole scan stays inside Spark's columnar execution either way
@@ -700,49 +665,29 @@ object GraftPosReaderFactory {
   * row-based path for its thousand clean files). */
 class GraftMaskedColumnarFactory(clean: PartitionReaderFactory,
                                  mask: PartitionReaderFactory,
-                                 sidecar: PartitionReaderFactory = null)
+                                 sidecar: PartitionReaderFactory)
     extends PartitionReaderFactory {
 
   // partition-independent for the parquet factory (conf + schema), so
   // the all-or-nothing columnar contract holds across mixed partitions
   override def supportColumnarReads(partition: InputPartition): Boolean =
     clean.supportColumnarReads(partition match {
-      case GraftMaskedPartition(inner, _) => inner
       case GraftSidecarPartition(inner, _, _) => inner
       case p => p
     })
 
   // row fallback (vectorization off / unsupported schema): the
   // delegate's row interface still reads the file in ordinal order
-  private def rowMasked(inner: FilePartition, dead: Array[Long])
-      : PartitionReader[InternalRow] = {
-    val it = mask.createReader(inner)
-    new PartitionReader[InternalRow] {
-      private var pos = -1L
-      override def next(): Boolean = {
-        while (it.next()) {
-          pos += 1
-          if (java.util.Arrays.binarySearch(dead, pos) < 0) return true
-        }
-        false
-      }
-      override def get(): InternalRow = it.get()
-      override def close(): Unit = it.close()
-    }
-  }
-
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case GraftMaskedPartition(inner, dead) => rowMasked(inner, dead)
       case GraftSidecarPartition(inner, rel, scs) =>
-        rowMasked(inner, GraftSidecarResolve.dead(sidecar, rel, scs))
+        new GraftLiveRowReader(mask.createReader(inner),
+          GraftSidecarResolve.dead(sidecar, rel, scs))
       case p => clean.createReader(p)
     }
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] = partition match {
-    case GraftMaskedPartition(inner, dead) =>
-      new GraftMaskedBatchReader(mask.createColumnarReader(inner), dead)
     case GraftSidecarPartition(inner, rel, scs) =>
       new GraftMaskedBatchReader(mask.createColumnarReader(inner),
         GraftSidecarResolve.dead(sidecar, rel, scs))

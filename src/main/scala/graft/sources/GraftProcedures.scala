@@ -325,8 +325,6 @@ object GraftProcedures {
     if (snap.deletes.nonEmpty) {
       val metas = GraftSidecars.metas(s, base, snap.deletes)
       val entries = metas.map(_.rows).sum
-      val resolveMax = s.conf
-        .get(GraftSidecars.DriverResolveMaxKey, "5000000").toLong
       if (snap.deletes.size > 8)
         out += (("pos_delete_sidecars", "action",
           s"${snap.deletes.size} sidecar files, $entries live entries",
@@ -343,12 +341,6 @@ object GraftProcedures {
       else
         out += (("pos_delete_ratio", "ok",
           s"$entries tombstones over $rows rows", ""))
-      if (entries > resolveMax)
-        out += (("pos_delete_mode", "action",
-          s"$entries entries exceed $DriverResolveNote $resolveMax — " +
-            "scans run in sidecar mode (correct, task-side resolution)",
-          "compact_deletes in the next maintenance window restores " +
-            "driver-exact masking"))
     } else out += (("delete_debt", "ok", "no live delete files", ""))
 
     val nv = TxnTable.versions(s, root).size
@@ -368,9 +360,6 @@ object GraftProcedures {
           "commit-side, automatic)", ""))
     out.toSeq
   }
-
-  private val DriverResolveNote =
-    GraftSidecars.DriverResolveMaxKey
 
   // ---- plumbing --------------------------------------------------------
 

@@ -323,9 +323,9 @@ class GraftTxnTableV2(spark: SparkSession, val root: String, val snap: Snapshot,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // live deletes scan through the position-aware builder, which
-    // masks tombstoned ordinals in its readers (row-based — the price
-    // of exact ordinals — until compactDeletes folds the debt)
+    // live deletes scan through the position-aware builder, whose
+    // readers mask each tombstoned file's ordinals, resolved task-side
+    // from its covering sidecars, until compactDeletes folds the debt
     if (snap.deletes.nonEmpty)
       // forward the resolution context: the change-feed gate must see
       // the real options and by-name streaming must stay reachable —

@@ -20,7 +20,8 @@ import graft.sinks.TxnTable
   *    delete-file set unchanged) is an append — its new files' rows
   *    emit as written (live deletes never name an append's new
   *    files, so a stream over a MoR table sees effective content);
-  *  - a MAINTENANCE commit (`compact` / `compact-deletes` / `zorder`)
+  *  - a MAINTENANCE commit (`compact` / `compact-deletes` /
+  *    `compact-pos-deletes` / `zorder`)
   *    is content-preserving by the writer's commit contract — the op
   *    tag is this format's `dataChange = false` — and emits nothing;
   *  - anything else (overwrite, CoW/MoR delete, restore, row-level
@@ -93,50 +94,31 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
   }
 
   /** Rows one commit window added, or None for an admitted-empty
-    * window. Classification is from the two manifests alone. */
-  private def perVersion(v: Long): Option[DataFrame] = {
-    val cur = TxnTable.snapshot(s, tableRoot, v)
-    val prevFiles: Set[String] =
-      if (v == 1L) Set.empty else TxnTable.snapshot(s, tableRoot, v - 1).files.toSet
-    val prevDeletes: Set[String] =
-      if (v == 1L) Set.empty else TxnTable.snapshot(s, tableRoot, v - 1).deletes.toSet
-    val added = cur.files.filterNot(prevFiles)
-    val removed = prevFiles -- cur.files.toSet
-    val isAppend = removed.isEmpty && prevDeletes == cur.deletes.toSet
-    val maintenance = Set("compact", "compact-deletes", "compact-pos-deletes", "zorder")(cur.op)
-    if (isAppend) {
-      if (added.isEmpty) None
-      else {
-        import graft.sinks.ColumnMapping
-        val base = tableRoot.stripSuffix("/")
-        // under a column mapping (at stream start OR introduced
-        // mid-stream) the files carry frozen PHYSICAL names: read the
-        // window under the START-TIME physical schema (schema-on-read
-        // nulls columns a window's files lack), alias back to the
-        // pinned logical names last. Unmapped
-        // streams keep the exact pre-mapping path. No delete mask: live
-        // deletes address rows of files that existed at their own
-        // commit, never an append window's new files.
-        val mapped = pinnedStorage.exists(ColumnMapping.hasMapping) ||
-          cur.schema.exists(ColumnMapping.hasMapping)
-        require(!mapped || pinnedStorage.isDefined,
-          s"stream over $tableRoot pinned no schema at start but window v$v " +
-            "carries a column mapping — restart the stream to re-pin")
-        val reader =
-          if (mapped) s.read.schema(ColumnMapping.physicalSchema(pinnedStorage.get))
-          else cur.schema.fold(s.read)(s.read.schema)
-        val rows = reader.parquet(added.map(f => s"$base/$f"): _*)
-        Some(if (mapped)
-          ColumnMapping.aliasToLogical(rows, pinnedStorage.get) else rows)
-      }
-    } else if (maintenance || skipChangeCommits) None
-    else throw new IllegalStateException(
-      s"append-mode stream over $tableRoot hit a data-changing commit: " +
-        s"v$v (op '${cur.op}') removed ${removed.size} file(s) / changed the " +
-        "delete set. Read the full change feed with " +
-        "option(\"readChangeFeed\", \"true\"), or skip such commits with " +
-        "option(\"skipChangeCommits\", \"true\")")
-  }
+    * window ([[TxnStreamSource.addedFiles]] classifies it). */
+  private def perVersion(v: Long): Option[DataFrame] =
+    TxnStreamSource.addedFiles(s, tableRoot, v, skipChangeCommits).map { added =>
+      import graft.sinks.ColumnMapping
+      val cur = TxnTable.snapshot(s, tableRoot, v)
+      val base = tableRoot.stripSuffix("/")
+      // under a column mapping (at stream start OR introduced
+      // mid-stream) the files carry frozen PHYSICAL names: read the
+      // window under the START-TIME physical schema (schema-on-read
+      // nulls columns a window's files lack), alias back to the
+      // pinned logical names last. Unmapped
+      // streams keep the exact pre-mapping path. No delete mask: live
+      // deletes address rows of files that existed at their own
+      // commit, never an append window's new files.
+      val mapped = pinnedStorage.exists(ColumnMapping.hasMapping) ||
+        cur.schema.exists(ColumnMapping.hasMapping)
+      require(!mapped || pinnedStorage.isDefined,
+        s"stream over $tableRoot pinned no schema at start but window v$v " +
+          "carries a column mapping — restart the stream to re-pin")
+      val reader =
+        if (mapped) s.read.schema(ColumnMapping.physicalSchema(pinnedStorage.get))
+        else cur.schema.fold(s.read)(s.read.schema)
+      val rows = reader.parquet(added.map(f => s"$base/$f"): _*)
+      if (mapped) ColumnMapping.aliasToLogical(rows, pinnedStorage.get) else rows
+    }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val v1 = start.map(ver).getOrElse(startV)
@@ -157,6 +139,35 @@ class TxnStreamSource(s: SparkSession, tableRoot: String,
 }
 
 object TxnStreamSource {
+  /** Content-preserving ops: the writer's commit contract makes the op
+    * tag this format's `dataChange = false`. */
+  private val MaintenanceOps =
+    Set("compact", "compact-deletes", "compact-pos-deletes", "zorder")
+
+  /** The data files commit window `v` added, classified from the two
+    * manifests alone (the one classification both append-mode sources
+    * share): an append (no file removed, delete set unchanged) yields
+    * its added files, None when it added none; a maintenance commit, or
+    * any commit under `skipChangeCommits`, yields None; any other
+    * commit changed visible rows and refuses loud. */
+  def addedFiles(s: SparkSession, root: String, v: Long,
+                 skipChangeCommits: Boolean): Option[Seq[String]] = {
+    val cur = TxnTable.snapshot(s, root, v)
+    val prev = if (v == 1L) None else Some(TxnTable.snapshot(s, root, v - 1))
+    val prevFiles = prev.fold(Set.empty[String])(_.files.toSet)
+    val prevDeletes = prev.fold(Set.empty[String])(_.deletes.toSet)
+    val removed = prevFiles -- cur.files
+    if (removed.isEmpty && prevDeletes == cur.deletes.toSet)
+      Some(cur.files.filterNot(prevFiles)).filter(_.nonEmpty)
+    else if (MaintenanceOps(cur.op) || skipChangeCommits) None
+    else throw new IllegalStateException(
+      s"append-mode stream over $root hit a data-changing commit: " +
+        s"v$v (op '${cur.op}') removed ${removed.size} file(s) / changed the " +
+        "delete set. Read the full change feed with " +
+        "option(\"readChangeFeed\", \"true\"), or skip such commits with " +
+        "option(\"skipChangeCommits\", \"true\")")
+  }
+
   /** Stream schema: the table's columns pinned from the latest snapshot
     * at stream start, everything nullable (schema-on-read: older files
     * may lack late columns). */

@@ -39,6 +39,20 @@ class QuerySmokeSpec extends AnyFunSuite {
     assert(missing === rowsOnly, s"unexpected oracle coverage diff: $missing")
   }
 
+  // q130 tests partial compaction under LIVE deletes: its key delete
+  // must match rows at this scale too, and compact_where must leave
+  // files carried for those deletes to mask
+  test("q130's sf0.001 build commits its delete and carries files " +
+      "through the partial compaction") {
+    val root = graft.queries.Txn.ensurePartialCompacted(spark, sfDir)
+    val head = graft.sinks.TxnTable.latest(spark, root).get
+    val deleted = graft.sinks.TxnTable.snapshot(spark, root, head.version - 1)
+    assert(head.op === "compact" && deleted.op === "delete-mor")
+    assert(head.deletes.nonEmpty, "q130's key delete matched no row")
+    assert(head.files.exists(deleted.files.contains),
+      "compact_where rewrote every file: no carried region left to mask")
+  }
+
   test("entry() flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -14,8 +14,10 @@ import graft.SparkTestSession
   * (MoR) / compactDeletes / compactTxn / mid-sequence vacuum against a
   * merge-on-read catalog table, tracking an exact in-memory MODEL of
   * (id -> v); after EVERY op, both read surfaces — the Scala merge path
-  * (`TxnTable.read`) and the SQL-by-name DSv2 position-aware scan —
-  * must equal the model exactly, and every MoR statement must leave the
+  * (`TxnTable.read`) and the SQL-by-name DSv2 position-aware scan,
+  * whose tasks resolve tombstones from the delete sidecars
+  * ([[graft.sources.GraftSidecarPartition]]; the UPDATE/DELETE rewrite
+  * scans mid-sequence included) — must equal the model exactly, and every MoR statement must leave the
   * prior data files untouched BY PATH (the zero-rewrite contract).
   * Vacuum mid-sequence pins that position-delete files count as
   * referenced data (a reclaimed tombstone would resurrect rows — the
@@ -68,21 +70,21 @@ object PosDeltaLawsProps extends Properties("graft.txn.posdelta.laws") {
 
   property("read surfaces equal the model after every op; MoR statements " +
       "never rewrite data files") =
-    Prop.forAll(caseGen)(runCase)
+    Prop.forAll(caseGen)(runCase(_, foldTarget = 0))
 
-  /** The SAME laws with driver-side tombstone resolution disabled
-    * (threshold 0): every pos-delete-live DSv2 scan — including the
-    * UPDATE/DELETE rewrite scans mid-sequence — resolves ordinals
-    * task-side from the sidecars ([[graft.sources.GraftSidecarPartition]]).
-    * The two modes must be indistinguishable on every surface. */
+  /** The SAME laws with every sidecar consolidation range-split into
+    * three files (`compactPosDeletes(targetFiles = 3)`): one data file's
+    * tombstones can then straddle two consolidated sidecars, so a masked
+    * task — a by-name read or a mid-sequence UPDATE/DELETE rewrite scan
+    * alike — resolves its ordinals from the union of several sidecar
+    * slices ([[graft.sources.GraftSidecarPartition]]). Every surface
+    * must still equal the model exactly. */
   property("the laws hold identically under sidecar-mode resolution") =
-    Prop.forAll(caseGen) { ops =>
-      spark.conf.set(graft.sources.GraftSidecars.DriverResolveMaxKey, "0")
-      try runCase(ops)
-      finally spark.conf.unset(graft.sources.GraftSidecars.DriverResolveMaxKey)
-    }
+    Prop.forAll(caseGen)(runCase(_, foldTarget = 3))
 
-  private def runCase(ops: List[Op]): Prop = {
+  /** `foldTarget` is [[TxnTable.compactPosDeletes]]' `targetFiles`
+    * (0 = auto-size: one consolidated sidecar at fuzz scale). */
+  private def runCase(ops: List[Op], foldTarget: Int): Prop = {
       val s = spark
       import s.implicits._
       val name = s"fuzz${tableSeq.incrementAndGet()}"
@@ -138,7 +140,7 @@ object PosDeltaLawsProps extends Properties("graft.txn.posdelta.laws") {
           case FoldSidecars =>
             // sidecar-only consolidation: content must be invariant and
             // data files must carry by path
-            val after = TxnTable.compactPosDeletes(spark, root)
+            val after = TxnTable.compactPosDeletes(spark, root, foldTarget)
             checks += ((after.files.toSet == before.files.toSet) :|
               "compactPosDeletes changed the data file set")
           case Compact =>

@@ -13,8 +13,9 @@ import graft.sources.{GraftCatalog, GraftSidecars}
   * `rewrite_position_delete_files`): many per-statement sidecars merge
   * into few consolidated, `(_file,_pos)`-clustered ones; dangling
   * entries (their data file left the snapshot via partial compaction)
-  * drop; visible content is unchanged on every read surface in BOTH
-  * resolution modes; the commit classifies as maintenance (streams
+  * drop; visible content is unchanged under BOTH tombstone
+  * resolutions (the DSv2 scan's task-side mask and `TxnTable.read`'s
+  * anti-join); the commit classifies as maintenance (streams
   * skip it, the change feed nets empty). */
 class TxnPosCompactSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.isolated() // mutates session confs
@@ -63,10 +64,7 @@ class TxnPosCompactSpec extends AnyFunSuite {
     assert(after.stats === before.stats)
     assert(after.rowCounts === before.rowCounts)
     assert(content("c1") === want)
-    spark.conf.set(GraftSidecars.DriverResolveMaxKey, "0")
-    try assert(content("c1") === want)
-    finally spark.conf.unset(GraftSidecars.DriverResolveMaxKey)
-    // Scala merge path agrees too
+    // the Scala merge path agrees too
     assert(TxnTable.read(spark, root).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
     // the consolidated sidecar is sorted, so its footer `_file` bounds

@@ -15,8 +15,8 @@ import graft.sinks.TxnTable
   * a terabyte scan. Contract under test: on a mixed table the ONE
   * physical scan plans BOTH shapes — clean files on split-and-packed
   * vectorized-columnar partitions, tombstoned files on whole-file
-  * [[GraftMaskedPartition]]s carrying exactly their own ordinal slice
-  * — the whole scan stays columnar, metadata-column reads keep the
+  * [[GraftSidecarPartition]]s carrying exactly their own sidecar slice
+  * (each task resolves its own ordinals) — the whole scan stays columnar, metadata-column reads keep the
   * ordinal-exact row regime, and the pos-live table's streaming /
   * change-feed surfaces behave like a clean table's (the resolution
   * context forwards — the silent-full-table readChangeFeed hole and
@@ -64,14 +64,17 @@ class GraftPosColumnarSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT id, v, s FROM $cat.db.mix1")
     val scan = posScan(df)
     val parts = scan.planInputPartitions().toSeq
-    val masked = parts.collect { case m: GraftMaskedPartition => m }
+    val masked = parts.collect { case m: GraftSidecarPartition => m }
     val clean = parts.collect { case f: FilePartition => f }
     // exactly ONE file carries tombstones (ids 7..8 are co-located)
     assert(masked.size === 1)
     assert(masked.head.inner.files.length === 1 &&
       masked.head.inner.files.head.start === 0L)
     // the slice is exactly that file's two dead ordinals — nothing else
-    assert(masked.head.dead.length === 2)
+    assert(masked.head.sidecars.length === 1)
+    assert(spark.read
+      .parquet(masked.head.sidecars.head.files.head.urlEncodedPath)
+      .where(col(GraftMetaCols.File) === masked.head.rel).count() === 2L)
     // the 3 clean files ride plain FilePartitions through Spark's own
     // split-and-pack (getFilePartitions decides fan-out from openCost /
     // parallelism — tiny test files legitimately spread; what matters
@@ -98,7 +101,7 @@ class GraftPosColumnarSpec extends AnyFunSuite {
     val scan = posScan(df)
     val parts = scan.planInputPartitions().toSeq
     assert(parts.size === TxnTable.latest(spark, root).get.files.size)
-    assert(parts.count(_.isInstanceOf[GraftMaskedPartition]) === 1)
+    assert(parts.count(_.isInstanceOf[GraftSidecarPartition]) === 1)
     val factory = scan.createReaderFactory()
     assert(factory.isInstanceOf[GraftPosReaderFactory])
     assert(!factory.supportColumnarReads(parts.head))

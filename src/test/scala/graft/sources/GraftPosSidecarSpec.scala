@@ -11,17 +11,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.sinks.TxnTable
 
-/** SIDECAR-mode tombstone resolution ([[GraftSidecarPartition]]): past
-  * `spark.graft.posDeletes.driverResolveMaxEntries` the driver
-  * materializes NO positions — tombstoned files' partitions carry the
-  * delete sidecars whose footer `_file` bounds cover them, and each
-  * TASK resolves its own file's ordinals. Contract under test: the two
-  * modes are result-identical on every read surface (columnar batch
-  * read, metadata-column row regime, the SQL UPDATE rewrite scan),
-  * footer-bound pruning routes each file to its own sidecar, and a
-  * bound-ambiguous sidecar (one file referencing several data files)
-  * still masks exactly. The old tombstone-scale refuse-loud driver cap
-  * is gone — this is what replaces it. */
+/** Task-side tombstone resolution ([[GraftSidecarPartition]]): the
+  * driver materializes NO positions — tombstoned files' partitions
+  * carry the delete-sidecar slices whose footer `_file` bounds cover
+  * them, and each TASK resolves its own file's ordinals. Contract under
+  * test: planning over sidecars that each pin one data file launches no
+  * Spark job, every read surface (columnar batch read, metadata-column
+  * row regime, the SQL UPDATE rewrite scan) is value-identical to an
+  * exact reference, footer-bound pruning routes each file to its own
+  * sidecar, a bound-ambiguous sidecar (one file referencing several
+  * data files) still masks exactly, and row-group routing keeps a
+  * consolidated sidecar's per-task read file-sized. */
 class GraftPosSidecarSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.isolated() // mutates session confs
 
@@ -32,14 +32,6 @@ class GraftPosSidecarSpec extends AnyFunSuite {
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
     w
-  }
-
-  /** Run `body` with the driver-resolution threshold forced to 0 —
-    * every pos-delete-live scan inside takes the sidecar mode. */
-  private def sidecarMode[A](body: => A): A = {
-    spark.conf.set(GraftSidecars.DriverResolveMaxKey, "0")
-    try body
-    finally spark.conf.unset(GraftSidecars.DriverResolveMaxKey)
   }
 
   /** id-clustered 4-file MoR table, ids 1..200, v = id*10, s nullable
@@ -63,6 +55,22 @@ class GraftPosSidecarSpec extends AnyFunSuite {
       case r: DataSourceV2ScanRelation => r.scan
     }.head.asInstanceOf[GraftPosScan]
 
+  test("planning over sidecars that each pin one data file launches no " +
+      "Spark job: the driver resolves no tombstone") {
+    val root = morTable("sc0")
+    spark.sql(s"DELETE FROM $cat.db.sc0 WHERE id IN (7, 8)")
+    val snap = TxnTable.latest(spark, root).get
+    assert(GraftSidecars.metas(spark, root, snap.deletes)
+      .forall(m => m.lo.isDefined && m.lo == m.hi))
+    val df = spark.sql(s"SELECT id FROM $cat.db.sc0")
+    val scan = posScan(df)
+    val (parts, jobs) = SparkTestSession.jobsIn(scan.planInputPartitions())
+    assert(jobs === 0, s"planning launched $jobs Spark job(s)")
+    assert(parts.count(_.isInstanceOf[GraftSidecarPartition]) === 1)
+    assert(df.collect().map(_.getLong(0)).toSet ===
+      (1L to 200L).filterNot(i => i == 7 || i == 8).toSet)
+  }
+
   test("columnar regime: sidecar mode plans GraftSidecarPartitions " +
       "pruned to their own sidecar and reads value-identically to " +
       "the exact mode") {
@@ -72,58 +80,61 @@ class GraftPosSidecarSpec extends AnyFunSuite {
     val snap = TxnTable.latest(spark, root).get
     assert(snap.deletes.size === 2 && snap.files.size === 4)
 
-    val exact = spark.sql(s"SELECT id, v, s FROM $cat.db.sc1")
+    // the exact reference: the Scala merge path masks through its
+    // (_file, _pos) anti-join, never through GraftPosScan
+    val exact = TxnTable.read(spark, root).select("id", "v", "s")
       .collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.getString(2)))).toSet
     val expect = (1L to 200L).filterNot(i => i == 7 || i == 8 || i == 120)
       .map(i => (i, i * 10, if (i % 7 == 0) None else Some(s"doc-$i"))).toSet
     assert(exact === expect)
 
-    sidecarMode {
-      val df = spark.sql(s"SELECT id, v, s FROM $cat.db.sc1")
-      val scan = posScan(df)
-      val parts = scan.planInputPartitions().toSeq
-      val side = parts.collect { case p: GraftSidecarPartition => p }
-      assert(parts.collect { case p: GraftMaskedPartition => p }.isEmpty)
-      // ids 7,8 co-locate in file 1; id 120 in file 3 — two masked files
-      assert(side.size === 2)
-      // the delta writer stages one sidecar per rewrite-scan partition
-      // (one file each), so footer bounds pin each masked file to
-      // exactly ITS sidecar — never the whole delete set
-      side.foreach(p => assert(p.sidecars.length === 1))
-      assert(side.map(_.sidecars.head.files.head.urlEncodedPath).distinct
-        .size === 2)
-      // clean files still ride plain columnar partitions
-      assert(parts.collect { case f: FilePartition => f }
-        .map(_.files.length).sum === 2)
-      val factory = scan.createReaderFactory()
-      assert(factory.isInstanceOf[GraftMaskedColumnarFactory])
-      assert(factory.supportColumnarReads(side.head))
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.getString(2)))).toSet
-      assert(got === exact)
-    }
+    val df = spark.sql(s"SELECT id, v, s FROM $cat.db.sc1")
+    val scan = posScan(df)
+    val parts = scan.planInputPartitions().toSeq
+    val side = parts.collect { case p: GraftSidecarPartition => p }
+    // ids 7,8 co-locate in file 1; id 120 in file 3 — two masked files
+    assert(side.size === 2)
+    side.foreach(p => assert(p.inner.files.length === 1 &&
+      p.inner.files.head.start === 0L))
+    // the delta writer stages one sidecar per rewrite-scan partition
+    // (one file each), so footer bounds pin each masked file to
+    // exactly ITS sidecar — never the whole delete set
+    side.foreach(p => assert(p.sidecars.length === 1))
+    assert(side.map(_.sidecars.head.files.head.urlEncodedPath).distinct
+      .size === 2)
+    // clean files still ride plain columnar partitions
+    assert(parts.collect { case f: FilePartition => f }
+      .map(_.files.length).sum === 2)
+    val factory = scan.createReaderFactory()
+    assert(factory.isInstanceOf[GraftMaskedColumnarFactory])
+    assert(factory.supportColumnarReads(side.head))
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1),
+      Option(r.getString(2)))).toSet
+    assert(got === exact)
   }
 
   test("metadata-column row regime under sidecar mode: survivors keep " +
       "their exact file ordinals") {
     val root = morTable("sc2")
-    spark.sql(s"DELETE FROM $cat.db.sc2 WHERE id IN (3, 5)")
-    val exact = spark.sql(s"SELECT id, _file, _pos FROM $cat.db.sc2")
+    // the exact reference: the clean table's (id, _file, _pos) — a MoR
+    // DELETE rewrites no data file, so every survivor keeps its row
+    val clean = spark.sql(s"SELECT id, _file, _pos FROM $cat.db.sc2")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    sidecarMode {
-      val df = spark.sql(s"SELECT id, _file, _pos FROM $cat.db.sc2")
-      val scan = posScan(df)
-      val parts = scan.planInputPartitions().toSeq
-      assert(parts.count(_.isInstanceOf[GraftSidecarPartition]) === 1)
-      assert(parts.size === TxnTable.latest(spark, root).get.files.size)
-      val got = df.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(got === exact)
-      val byId = got.map(t => t._1 -> t._3).toMap
-      assert(!byId.contains(3L) && !byId.contains(5L))
-      assert(byId(4L) === byId(2L) + 2) // 3 skipped, never renumbered
-    }
+    assert(clean.size === 200)
+    val exact = clean.filterNot(t => t._1 == 3L || t._1 == 5L)
+    spark.sql(s"DELETE FROM $cat.db.sc2 WHERE id IN (3, 5)")
+    val df = spark.sql(s"SELECT id, _file, _pos FROM $cat.db.sc2")
+    val scan = posScan(df)
+    val parts = scan.planInputPartitions().toSeq
+    assert(parts.count(_.isInstanceOf[GraftSidecarPartition]) === 1)
+    assert(parts.size === TxnTable.latest(spark, root).get.files.size)
+    val got = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(got === exact)
+    val byId = got.map(t => t._1 -> t._3).toMap
+    assert(!byId.contains(3L) && !byId.contains(5L))
+    assert(byId(4L) === byId(2L) + 2) // 3 skipped, never renumbered
   }
 
   test("a bound-ambiguous sidecar (one delete file spanning two data " +
@@ -155,25 +166,19 @@ class GraftPosSidecarSpec extends AnyFunSuite {
       "delete-mor")
 
     val expect = (1L to 200L).filterNot(i => i == loA || i == loB).toSet
-    assert(spark.sql(s"SELECT id FROM $cat.db.sc3").collect()
-      .map(_.getLong(0)).toSet === expect)
-    sidecarMode {
-      val df = spark.sql(s"SELECT id FROM $cat.db.sc3")
-      val side = posScan(df).planInputPartitions().toSeq
-        .collect { case p: GraftSidecarPartition => p }
-      assert(side.size === 2) // the one spanning sidecar covers both
-      side.foreach(p => assert(p.sidecars.length === 1))
-      assert(df.collect().map(_.getLong(0)).toSet === expect)
-    }
+    val df = spark.sql(s"SELECT id FROM $cat.db.sc3")
+    val side = posScan(df).planInputPartitions().toSeq
+      .collect { case p: GraftSidecarPartition => p }
+    assert(side.size === 2) // the one spanning sidecar covers both
+    side.foreach(p => assert(p.sidecars.length === 1))
+    assert(df.collect().map(_.getLong(0)).toSet === expect)
   }
 
   test("the SQL UPDATE rewrite scan works in sidecar mode (a second " +
       "row-level op on a tombstone-heavy table needs no driver map)") {
     val root = morTable("sc4")
     spark.sql(s"DELETE FROM $cat.db.sc4 WHERE id % 10 = 0")
-    sidecarMode {
-      spark.sql(s"UPDATE $cat.db.sc4 SET v = -1 WHERE id IN (7, 113)")
-    }
+    spark.sql(s"UPDATE $cat.db.sc4 SET v = -1 WHERE id IN (7, 113)")
     val got = spark.sql(s"SELECT id, v FROM $cat.db.sc4")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 180)
@@ -232,24 +237,22 @@ class GraftPosSidecarSpec extends AnyFunSuite {
     assert(meta.groups.length >= 8,
       s"need multiple row groups to observe pruning, got ${meta.groups.length}")
 
-    sidecarMode {
-      val df = spark.sql(s"SELECT id FROM $cat.db.sc5")
-      val side = posScan(df).planInputPartitions().toSeq
-        .collect { case p: GraftSidecarPartition => p }
-      assert(side.size === 8) // every data file is tombstoned
-      side.foreach { p =>
-        val read = p.sidecars.map(_.files.map(_.length).sum).sum
-        assert(read > 0 && read * 2 < meta.len,
-          s"task over ${p.rel} reads $read B of the ${meta.len} B sidecar" +
-            " — row-group routing is not pruning")
-      }
-      // ranges really are row-group-aligned reads, not the whole file:
-      // the per-task average must be a small fraction of the sidecar
-      val avg = side.map(p => p.sidecars.map(_.files.map(_.length).sum).sum)
-        .sum.toDouble / side.size
-      assert(avg * 3 < meta.len,
-        s"avg task sidecar read $avg B vs sidecar ${meta.len} B")
-      assert(df.collect().map(_.getLong(0)).toSet === expect)
+    val df = spark.sql(s"SELECT id FROM $cat.db.sc5")
+    val side = posScan(df).planInputPartitions().toSeq
+      .collect { case p: GraftSidecarPartition => p }
+    assert(side.size === 8) // every data file is tombstoned
+    side.foreach { p =>
+      val read = p.sidecars.map(_.files.map(_.length).sum).sum
+      assert(read > 0 && read * 2 < meta.len,
+        s"task over ${p.rel} reads $read B of the ${meta.len} B sidecar" +
+          " — row-group routing is not pruning")
     }
+    // ranges really are row-group-aligned reads, not the whole file:
+    // the per-task average must be a small fraction of the sidecar
+    val avg = side.map(p => p.sidecars.map(_.files.map(_.length).sum).sum)
+      .sum.toDouble / side.size
+    assert(avg * 3 < meta.len,
+      s"avg task sidecar read $avg B vs sidecar ${meta.len} B")
+    assert(df.collect().map(_.getLong(0)).toSet === expect)
   }
 }
