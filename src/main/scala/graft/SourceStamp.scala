@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Cheap source fingerprinting for derived artifacts, and the one
@@ -41,7 +41,11 @@ import org.apache.spark.sql.SparkSession
 object SourceStamp {
 
   /** Fingerprint of one or more source paths (files or directories):
-    * sorted `name:len:mtime` of each data file. */
+    * sorted `name:len:mtime` of each data file. A directory is walked
+    * down its subdirectories (a Hive-partitioned root's `date=D/`), a
+    * nested file named by its path below the directory, so a flat
+    * directory's lines are its file names. `_`/`.`-prefixed entries
+    * (markers, logs, checksums) are skipped at every level. */
   def stamp(s: SparkSession, paths: Seq[String]): String = {
     val lines = paths.flatMap { p =>
       val path = new Path(p)
@@ -50,14 +54,20 @@ object SourceStamp {
       else {
         val st = fs.getFileStatus(path)
         if (st.isFile) Seq(s"${path.getName}:${st.getLen}:${st.getModificationTime}")
-        else fs.listStatus(path).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+        else dataFiles(fs, path, "")
       }
     }
     lines.sorted.mkString("\n")
   }
+
+  private def dataFiles(fs: FileSystem, dir: Path, prefix: String): Seq[String] =
+    fs.listStatus(dir).toSeq.flatMap { f =>
+      val name = f.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (f.isFile) Seq(s"$prefix$name:${f.getLen}:${f.getModificationTime}")
+      else if (f.isDirectory) dataFiles(fs, f.getPath, s"$prefix$name/")
+      else Nil
+    }
 
   /** Stamp of one testdata table of `sfDir`. */
   def table(s: SparkSession, sfDir: String, name: String): String =

@@ -28,6 +28,26 @@ class SourceStampSpec extends AnyFunSuite {
     assert(a !== c, "stamp must change when the source is regenerated")
   }
 
+  test("a partitioned root stamps its date=D/ files; a flat directory stamps its file names") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("stamp_part").toString
+    Seq(("2024-01-01", 1.0), ("2024-01-02", 2.0)).toDF("date", "v")
+      .write.partitionBy("date").parquet(s"$dir/published")
+    val a = SourceStamp.stamp(spark, Seq(s"$dir/published"))
+    assert(a.split("\n").count(_.startsWith("date=2024-01-01/part-")) === 1, a)
+    Seq(("2024-01-01", 9.0), ("2024-01-01", 8.0)).toDF("date", "v").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/published/date=2024-01-01")
+    assert(SourceStamp.stamp(spark, Seq(s"$dir/published")) !== a,
+      "rewriting a file inside a partition must change the root's stamp")
+    // flat: exactly `name:len:mtime` of each visible file, as before the walk
+    val flat = new java.io.File(s"$dir/published/date=2024-01-02")
+    val want = flat.listFiles().toSeq
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("\n")
+    assert(SourceStamp.stamp(spark, Seq(flat.getPath)) === want)
+  }
+
   /** Synthetic events table (int64 nano ts — the testdata layout). */
   private def writeEvents(dir: String, rows: Seq[(Long, String, Double)]): Unit = {
     val s = spark
