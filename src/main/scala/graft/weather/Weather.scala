@@ -1,13 +1,14 @@
 package graft.weather
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The reference's core weather pipeline (reference weather_etl.py:62-90,
   * 145), re-expressed Spark-first: schema'd JSON scan (S2) → struct
   * flatten (P1/P2) → rename + timestamp cast (P3/P6) → latest-per-city
-  * via the reference's own CTE SQL shape (S3/W1/F1).
+  * in the plan of the reference's own CTE SQL (S3/W1/F1).
   *
   * Unlike the reference (per-file json.loads + O(n²) pandas concat,
   * weather_etl.py:63-83), the scan is ONE declarative `read.json` over
@@ -123,17 +124,17 @@ object Weather {
       .withColumnRenamed("name", "city")
       .withColumn("localtime", to_timestamp(col("localtime"), "yyyy-MM-dd H:mm"))
 
-  /** The reference's one real analytic query (weather_etl.py:145), same
-    * CTE shape, run through spark.sql over a temp view: latest record per
-    * city. One hash shuffle on `city` + in-partition sort — the minimal
-    * latest-per-key plan at any scale. */
-  def latestPerCity(spark: SparkSession, flat: DataFrame): DataFrame = {
-    flat.createOrReplaceTempView("weather")
-    spark.sql(
-      """WITH RankedWeather AS (
-        |  SELECT *, ROW_NUMBER() OVER
-        |    (PARTITION BY city ORDER BY localtime DESC) AS rn
-        |  FROM weather)
-        |SELECT * EXCEPT (rn) FROM RankedWeather WHERE rn = 1""".stripMargin)
-  }
+  /** The reference's one real analytic query (weather_etl.py:145):
+    * latest record per city, its CTE's `ROW_NUMBER() OVER (PARTITION BY
+    * city ORDER BY localtime DESC)` kept where it is 1, the same Window →
+    * Filter → Project plan written with the DataFrame API, so no view
+    * name enters the session catalog (a temp view `weather` would
+    * replace the caller's own view of that name and shadow a table
+    * `weather`). One hash shuffle on `city` + in-partition sort — the
+    * minimal latest-per-key plan at any scale. */
+  def latestPerCity(spark: SparkSession, flat: DataFrame): DataFrame =
+    flat.withColumn("rn", row_number().over(
+        Window.partitionBy("city").orderBy(col("localtime").desc)))
+      .filter(col("rn") === 1)
+      .drop("rn")
 }

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.NextDayTemp
@@ -17,18 +20,22 @@ class MlSpec extends AnyFunSuite {
 
   private lazy val fit = NextDayTemp.fit(flat)
 
-  test("M1 randomSplit partitions the 27 rows ~0.9/0.1") {
-    assert(fit.nTrain + fit.nTest === 27)
-    assert(fit.nTrain >= 20, s"train split too small: ${fit.nTrain}")
+  test("M1 the driver split trains on floor(0.9 n) rows: 24/3 of the 27, in any row order") {
+    assert((fit.nTrain, fit.nTest) === ((24L, 3L)))
+    val rows = NextDayTemp.collectRows(flat)
+    val (train, test) = NextDayTemp.split(rows)
+    val (trainRev, testRev) = NextDayTemp.split(rows.reverse)
+    assert(train.toSeq === trainRev.toSeq)
+    assert(test.toSeq === testRev.toSeq)
   }
 
   test("M2/M4 GBT fit reaches the R² floor on the training split") {
     assert(fit.r2Train >= 0.999, s"r2Train=${fit.r2Train}")
   }
 
-  test("M2 fit launches at most 25 Spark jobs (GBT runs one per tree level)") {
+  test("M2 fit launches exactly 1 Spark job, its collect") {
     val (_, jobs) = SparkTestSession.jobsIn(NextDayTemp.fit(flat))
-    assert(jobs <= 25, s"NextDayTemp.fit launched $jobs jobs")
+    assert(jobs === 1, s"NextDayTemp.fit launched $jobs jobs")
   }
 
   test("P10 abs-error column: non-negative, finite, |label - prediction|") {
@@ -62,13 +69,13 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
-  test("M4 fused scoring equals RegressionEvaluator(r2) and count() over the same splits") {
-    val (train, test) = NextDayTemp.split(flat)
+  test("M4 driver R² equals RegressionEvaluator(r2) over the fit's own splits") {
+    val (train, test) = MlSpec.splitFrames(flat)
     val eval = new RegressionEvaluator()
       .setLabelCol(NextDayTemp.labelCol).setPredictionCol("prediction").setMetricName("r2")
     def close(got: Double, want: Double) =
       assert(got == want || (got.isNaN && want.isNaN) || math.abs(got - want) <= 1e-9,
-        s"fused R² $got, evaluator R² $want")
+        s"driver R² $got, evaluator R² $want")
     assert(fit.nTrain === train.count())
     assert(fit.nTest === test.count())
     close(fit.r2Train, eval.evaluate(fit.model.transform(train)))
@@ -76,7 +83,7 @@ class MlSpec extends AnyFunSuite {
     else close(fit.r2Test, eval.evaluate(fit.model.transform(test)))
   }
 
-  test("M2 fit with 40 cities: maxBins covers the city index, one prediction per city") {
+  test("M2 fit with 40 cities: city_idx is one ordinal feature, one prediction per city") {
     // 9 fixture cities, each under 4 labels, plus a 5th label for 4 of them
     val noFifthLabel = flat.select("city").distinct().orderBy("city").limit(5)
       .collect().map(_.getString(0))
@@ -91,5 +98,18 @@ class MlSpec extends AnyFunSuite {
     assert(preds.length === 40)
     assert(preds.map(_.getAs[String]("city")).distinct.length === 40)
     assert(preds.forall(r => !r.getAs[Double]("predicted_temp_c").isNaN))
+  }
+}
+
+object MlSpec {
+  /** The fit's own train and test rows (`NextDayTemp.split` of its
+    * collect), as frames with the collect's schema. */
+  def splitFrames(df: DataFrame): (DataFrame, DataFrame) = {
+    val (train, test) = NextDayTemp.split(NextDayTemp.collectRows(df))
+    val schema = df.select((NextDayTemp.featureCols(df) :+ "city" :+ NextDayTemp.labelCol)
+      .map(col).toIndexedSeq: _*).schema
+    def frame(rows: Array[org.apache.spark.sql.Row]) =
+      df.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
+    (frame(train), frame(test))
   }
 }

@@ -86,6 +86,18 @@ class WeatherSpec extends AnyFunSuite {
     assert(latest.filter("date <> '2023-08-11'").count() === 0)
   }
 
+  test("W1 latest-per-city leaves the session catalog alone: a user's `weather` still reads as itself") {
+    // own temp-view registry, so no concurrently running suite sees the view
+    val s = SparkTestSession.isolated()
+    s.range(3).toDF("id").createOrReplaceTempView("weather")
+    val before = s.catalog.listTables().collect().map(_.name).sorted
+    val latest = Weather.latestPerCity(s, Weather.flatten(Weather.readRaw(s, dataDir)))
+    assert(latest.count() === 9)
+    assert(s.table("weather").columns === Array("id"))
+    assert(s.sql("SELECT count(*) FROM weather").head().getLong(0) === 3)
+    assert(s.catalog.listTables().collect().map(_.name).sorted === before)
+  }
+
   test("S2 scan keeps only docs directly under a yyyy-MM-dd directory") {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("weather_layout")
